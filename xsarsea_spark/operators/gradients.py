@@ -248,7 +248,7 @@ def local_gradients(
     out_l_max = (n_lines // 2) // 2
     out_s_max = (n_samples // 2) // 2
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         tl, ts = int(key[0]), int(key[1])
         o_l = max(tl * tile - halo, 0)
         o_s = max(ts * tile - halo, 0)
@@ -560,7 +560,7 @@ def filtering_parameters(
     out_l_max = (n_lines // 2) // 2
     out_s_max = (n_samples // 2) // 2
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         tl, ts = int(key[0]), int(key[1])
         empty = pd.DataFrame(
             {f.name: pd.Series(dtype="float64") for f in _FP_SCHEMA})

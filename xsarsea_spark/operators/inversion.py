@@ -20,6 +20,8 @@ Complex wind is represented as (re, im) double column pairs
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -36,6 +38,7 @@ _D_AZI = 2.0
 _DWSPD_FG = 2.0
 
 
+@functools.lru_cache(maxsize=4)
 def prepare_luts(
     co_model: str | None,
     cr_model: str | None,
@@ -49,6 +52,9 @@ def prepare_luts(
     Mirrors the reference's LUT preparation hoist
     (``windspeed.py:144-181``): dB conversion, coordinate vectors, and
     the per-(wspd, phi) cartesian wind components precomputed once.
+
+    Memoized (a pure function of model names and steps): callers share
+    the arrays, which are read-only so a mutation fails loudly.
     """
     out: dict = {"phi_180": False}
     if co_model:
@@ -59,30 +65,27 @@ def prepare_luts(
             axis_from_range("phi", g.phi_range[0], g.phi_range[1], phi_step),
         ]
         lut = gmf_lut_numpy(co_model, axes)
-        sig_db = 10.0 * np.log10(lut["sigma0"] + 1e-15)
+        sig_db = 10.0 * np.log10(lut["sigma0"] + 1e-15)  # (inc, wspd, phi)
         c = lut["coords"]
-        lut_db = np.ascontiguousarray(sig_db.transpose(1, 2, 0))
         with np.errstate(invalid="ignore"):
-            # per-(wspd, incidence) sigma0 band over phi, for the
-            # coarse-search lower bound (NaN cells -> NaN band ->
-            # prune-safe: an all-NaN phi slice can never win anyway)
-            band_lo = np.nanmin(lut_db, axis=1)
-            band_hi = np.nanmax(lut_db, axis=1)
+            # per-(incidence, wspd) sigma0 band over phi, for the pruned
+            # search's lower bound (NaN cells -> NaN band -> prune-safe:
+            # an all-NaN phi slice can never win anyway)
+            band_lo = np.nanmin(sig_db, axis=2)
+            band_hi = np.nanmax(sig_db, axis=2)
+        wspd_g, phi_g = np.meshgrid(c["wspd"], c["phi"], indexing="ij")
         out["co"] = {
-            # (wspd, phi, incidence) contiguous like the reference kernel
-            "lut_db": lut_db,
-            "band_lo": band_lo,  # (wspd, incidence)
+            # (wspd, incidence, phi): one pixel's phi slice is a row
+            "lut_db": np.ascontiguousarray(sig_db.transpose(1, 0, 2)),
+            "band_lo": band_lo,  # (incidence, wspd)
             "band_hi": band_hi,
             "inc": c["incidence"],
             "wspd": c["wspd"],
             "phi": c["phi"],
+            "u": wspd_g * np.cos(np.radians(phi_g)),  # antenna comp
+            "v": wspd_g * np.sin(np.radians(phi_g)),  # azimuth comp
         }
         out["phi_180"] = (180.0 - (c["phi"][-1] - c["phi"][0])) < 2.0
-        wspd_g, phi_g = np.meshgrid(c["wspd"], c["phi"], indexing="ij")
-        out["co"]["u"] = wspd_g * np.cos(np.radians(phi_g))  # antenna comp
-        out["co"]["v"] = wspd_g * np.sin(np.radians(phi_g))  # azimuth comp
-        out["co"]["wspd_grid"] = wspd_g
-        out["co"]["phi_grid"] = phi_g
     if cr_model:
         g = GMF_REGISTRY[cr_model]
         axes = [
@@ -97,6 +100,9 @@ def prepare_luts(
             "inc": lut["coords"]["incidence"],
             "wspd": lut["coords"]["wspd"],
         }
+    for part in ("co", "cr"):
+        for a in out.get(part, {}).values():
+            a.flags.writeable = False
     return out
 
 
@@ -119,122 +125,131 @@ def _nearest_idx(x: np.ndarray, x0: float, step: float, n: int) -> np.ndarray:
     return np.clip(i, 0, n - 1).astype(np.int64)
 
 
-def _copol_argmin(
-    co: dict,
-    phi_180: bool,
-    s0co: np.ndarray,
-    m_ant: np.ndarray,
-    m_azi: np.ndarray,
-    iis: np.ndarray,
-    dsig_co: float,
-    jbuf: np.ndarray,
-    tbuf: np.ndarray,
-    search: str,
-    stride: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-chunk copol cost argmin -> (wspd, phi); all inputs are
-    1-D vectors over the chunk's valid pixels.
+def _cost(u, v, sig, m_ant, m_azi, s0, dsig, j, t) -> None:
+    """``J = Jwind + Jsig`` into ``j`` (``t`` is scratch), operands
+    already broadcast to one shape. Both searches call this one
+    elementwise op order, so their costs are bit-identical whatever the
+    layout: (phi, pixel) blocks or gathered (pair, phi) rows."""
+    np.subtract(u, m_ant, out=j)
+    j /= _D_ANTENNA
+    np.multiply(j, j, out=j)
+    np.subtract(v, m_azi, out=t)
+    t /= _D_AZI
+    np.multiply(t, t, out=t)
+    j += t
+    np.subtract(sig, s0, out=t)
+    t /= dsig
+    np.multiply(t, t, out=t)
+    j += t
 
-    Two search modes producing BIT-IDENTICAL results:
 
-    - ``exhaustive``: every (wspd, phi) cell, the wspd-blocked loop.
-    - ``coarse``: the reference's restricted-search idea
-      (``windspeed.py:220-276``) done as exact branch-and-bound. A
-      strided pass establishes a per-pixel cost bound jmin1; a wspd
-      is then skipped when, for EVERY pixel of the chunk, an analytic
-      lower bound on its cost exceeds jmin1. The bound sums two
-      terms, each a true lower bound of the evaluated cost:
-
-      * wind prior: ``((w - |anc|)/D)^2 <= Jwind(w, phi)`` for every
-        grid phi (the continuous-circle minimum);
-      * sigma0 band: per (w, incidence) the LUT's [min, max] over phi
-        is precomputed; if the pixel's s0 falls outside the band,
-        ``((nearest band edge - s0)/dsig)^2 <= Jsig(w, phi)``. With
-        the reference's dsig_co = 0.1 this cuts sharply: wspds whose
-        backscatter band can't reach the observed sigma0 cost
-        hundreds, and the surviving band of wspds is narrow.
-
-      Skipping is per-w over the whole chunk (union of per-pixel
-      live sets), never per-pixel — measured: per-w fancy indexing
-      cost more than it pruned. The caller sorts pixels by
-      (incidence index, s0) before chunking so per-pixel live sets
-      inside a chunk overlap tightly. A skipped wspd has J strictly
-      above the global minimum for every pixel, so it can neither
-      win nor steal the first-minimum tie-break; evaluating extra
-      wspds is exhaustive-identical by construction — the ascending
-      loop reproduces the exhaustive selection exactly (golden-tested
-      in tests/test_inversion_search.py). The 1e-9 relative margin
-      only UNDER-prunes (float slack), never changes results.
-    """
-    n_w, n_phi = co["lut_db"].shape[0], co["lut_db"].shape[1]
+def _copol_exhaustive(co, s0co, m_ant, m_azi, iis, dsig_co):
+    """Reference search: every (wspd, phi) cell, one wspd slice at a
+    time over (n_phi, chunk) blocks; a later wspd wins only when
+    strictly lower, so ties keep the first (wspd, phi) in grid order
+    and a NaN anywhere in a slice drops that slice."""
     b = len(s0co)
-    rows = np.arange(b)
-
-    def eval_w(w: int, sub: np.ndarray):
-        # one wspd slice over the pixel subset ``sub``; in-place passes
-        # over the preallocated (n_phi, chunk) buffers with the same
-        # elementwise op order in both modes -> bit-identical values
-        m = len(sub)
-        j = jbuf[:, :m]
-        t = tbuf[:, :m]
-        np.subtract(co["u"][w][:, None], m_ant[sub][None, :], out=j)
-        j /= _D_ANTENNA
-        np.multiply(j, j, out=j)
-        np.subtract(co["v"][w][:, None], m_azi[sub][None, :], out=t)
-        t /= _D_AZI
-        np.multiply(t, t, out=t)
-        j += t
-        np.take(co["lut_db"][w], iis[sub], axis=1, out=t)
-        t -= s0co[sub][None, :]
-        t /= dsig_co
-        np.multiply(t, t, out=t)
-        j += t
-        p = np.argmin(j, axis=0)
-        return p, j[p, np.arange(m)]
-
-    # NaN-init: if a pixel's cost is NaN for EVERY wspd (a NaN
-    # anywhere in lut_db propagates through argmin), no update fires
+    n_phi = co["lut_db"].shape[2]
+    j = np.empty((n_phi, b))
+    t = np.empty((n_phi, b))
     jmin = np.full(b, np.inf)
     wspd_co = np.full(b, np.nan)
     phi_co = np.full(b, np.nan)
-
-    use_coarse = (
-        search == "coarse"
-        and _D_ANTENNA == _D_AZI  # the circle bound needs one D
-        and n_w > 2 * stride
-    )
-    if use_coarse:
-        # lower-bound matrix (n_w, b): wind prior + sigma0-band terms
-        mm = np.hypot(m_ant, m_azi)
-        lb = (co["wspd"][:, None] - mm[None, :]) / _D_ANTENNA
-        np.multiply(lb, lb, out=lb)
-        blo = co["band_lo"][:, iis]          # (n_w, b)
-        bhi = co["band_hi"][:, iis]
-        s0 = s0co[None, :]
-        gap = np.where(s0 < blo, blo - s0, np.where(s0 > bhi, s0 - bhi, 0.0))
-        gap /= dsig_co
-        np.multiply(gap, gap, out=gap)
-        lb += gap                             # NaN band -> NaN lb -> not live
-        jmin1 = np.full(b, np.inf)
-        for w in range(0, n_w, stride):
-            _, vmin = eval_w(w, rows)
-            np.fmin(jmin1, vmin, out=jmin1)  # fmin: NaN never lowers
-        thr = jmin1 * (1.0 + 1e-9) + 1e-12  # inf stays inf: no prune
-        # a wspd survives if ANY pixel's bound admits it; the winner
-        # for each pixel always survives (its lb <= its J <= jmin1 <
-        # thr), and an all-NaN-cost pixel (thr=inf) keeps every
-        # finite-bound wspd alive
-        live_w = np.flatnonzero((lb <= thr).any(axis=1))
-    else:
-        live_w = range(n_w)
-
-    for w in live_w:
-        p, vmin = eval_w(w, rows)
+    cols = np.arange(b)
+    for w in range(co["lut_db"].shape[0]):
+        _cost(co["u"][w][:, None], co["v"][w][:, None],
+              co["lut_db"][w][iis].T, m_ant[None, :], m_azi[None, :],
+              s0co[None, :], dsig_co, j, t)
+        p = np.argmin(j, axis=0)
+        vmin = j[p, cols]
         upd = vmin < jmin
-        if upd.any():
-            jmin[upd] = vmin[upd]
-            wspd_co[upd] = co["wspd"][w]
-            phi_co[upd] = co["phi"][p[upd]]
+        jmin[upd] = vmin[upd]
+        wspd_co[upd] = co["wspd"][w]
+        phi_co[upd] = co["phi"][p[upd]]
+    return wspd_co, phi_co
+
+
+def _copol_pruned(co, s0co, m_ant, m_azi, iis, dsig_co):
+    """Exact per-pixel pruning of the exhaustive search: the
+    reference's restricted-search idea (``windspeed.py:220-276``) as a
+    branch-and-bound that returns exhaustive's BIT-identical answer.
+
+    1. Lower bound ``lb`` (pixel, wspd), the sum of two true lower
+       bounds of the cost over every phi of that wspd:
+
+       * wind prior: ``((w - |anc|)/D)^2 <= Jwind(w, phi)`` (distance
+         to the circle of radius w; needs ``_D_ANTENNA == _D_AZI``);
+       * sigma0 band: per (incidence, wspd) the LUT's [min, max] over
+         phi; a pixel whose s0 falls outside it costs at least
+         ``((nearest band edge - s0)/dsig)^2``. With the reference's
+         dsig_co = 0.1 this cuts sharply.
+
+    2. Upper bound: the cost at each pixel's ``argmin lb`` wspd and
+       its two neighbours (NaN costs count as +inf).
+    3. Live pairs: the (pixel, wspd) pairs with ``lb <= thr``, all
+       evaluated in one gathered (pair, phi) pass. Every wspd that
+       reaches a pixel's minimum is live, ties included, so none of
+       them can be missed; the 1e-9 relative margin only under-prunes.
+    4. Per pixel, the first live pair (ascending wspd) reaching the
+       minimum wins, its phi the first minimum of the slice: the
+       exhaustive tie-break. A slice holding a NaN never wins, as in
+       the exhaustive loop.
+
+    Work and memory scale with the live pairs: about 17 of 250 wspds
+    per pixel on a GMF-consistent scene at the default LUT steps. A
+    pixel with no finite upper bound keeps every wspd of finite bound
+    alive, so the chunk caps the worst case at chunk x n_wspd rows.
+    """
+    b = len(s0co)
+    n_w, n_inc, n_phi = co["lut_db"].shape
+    lut_rows = co["lut_db"].reshape(n_w * n_inc, n_phi)
+
+    def evaluate(pix, w):
+        # (pair, phi) costs -> per pair first-min phi and its cost,
+        # NaN (any NaN in the slice) mapped to +inf
+        j = np.empty((len(pix), n_phi))
+        t = np.empty_like(j)
+        _cost(co["u"][w], co["v"][w], lut_rows[w * n_inc + iis[pix]],
+              m_ant[pix][:, None], m_azi[pix][:, None],
+              s0co[pix][:, None], dsig_co, j, t)
+        p = np.argmin(j, axis=1)
+        vmin = j[np.arange(len(pix)), p]
+        vmin[np.isnan(vmin)] = np.inf
+        return p, vmin
+
+    # 1. lower bound (b, n_w); a NaN band gives NaN lb: never live
+    lb = (co["wspd"][None, :] - np.hypot(m_ant, m_azi)[:, None]) / _D_ANTENNA
+    np.multiply(lb, lb, out=lb)
+    blo = co["band_lo"][iis]
+    bhi = co["band_hi"][iis]
+    s0 = s0co[:, None]
+    gap = np.where(s0 < blo, blo - s0, np.where(s0 > bhi, s0 - bhi, 0.0))
+    gap /= dsig_co
+    np.multiply(gap, gap, out=gap)
+    lb += gap
+
+    # 2. per-pixel upper bound at argmin lb and its neighbours
+    w0 = np.argmin(np.where(np.isnan(lb), np.inf, lb), axis=1)
+    w3 = np.clip(w0[None, :] + np.array([[-1], [0], [1]]), 0, n_w - 1)
+    _, v3 = evaluate(np.tile(np.arange(b), 3), w3.ravel())
+    thr = v3.reshape(3, b).min(axis=0)
+    thr = thr * (1.0 + 1e-9) + 1e-12        # inf stays inf: no prune
+
+    # 3. live pairs, pixel-major with ascending wspd
+    pix, w = np.nonzero(lb <= thr[:, None])
+    p, vmin = evaluate(pix, w)
+
+    # 4. first pair reaching each pixel's minimum
+    wspd_co = np.full(b, np.nan)
+    phi_co = np.full(b, np.nan)
+    if len(pix):
+        starts = np.flatnonzero(np.r_[True, pix[1:] != pix[:-1]])
+        best = np.minimum.reduceat(vmin, starts)
+        hit = np.flatnonzero((vmin == np.repeat(best, np.diff(
+            np.r_[starts, len(pix)]))) & (vmin < np.inf))
+        first = hit[np.r_[True, pix[hit][1:] != pix[hit][:-1]]]
+        wspd_co[pix[first]] = co["wspd"][w[first]]
+        phi_co[pix[first]] = co["phi"][p[first]]
     return wspd_co, phi_co
 
 
@@ -245,11 +260,11 @@ def _invert_batch(
     cols: dict,
     chunk: int | None = None,
     search: str = "coarse",
-    stride: int = 16,
 ) -> pd.DataFrame:
-    # measured sweet spots (tests/test_inversion_search.py + PLANS.md):
-    # coarse wants small chunks (tighter per-chunk live-wspd unions),
-    # exhaustive wants big ones (amortize the per-wspd python loop)
+    # pruned: chunk bounds the (pixel, wspd) bound matrix and the
+    # (pair, phi) cost rows, which stay cache-sized at 256 (measured
+    # 128-256 flat, 1024 1.6x slower); exhaustive amortizes its
+    # per-wspd loop over big chunks
     if chunk is None:
         chunk = 256 if search == "coarse" else 1024
     n = len(pdf)
@@ -267,36 +282,19 @@ def _invert_batch(
             + 1j * pdf[cols["anc_im"]].to_numpy(np.float64, na_value=np.nan)
         )
         co = luts["co"]
+        argmin = _copol_pruned if search == "coarse" else _copol_exhaustive
         ii = _nearest_idx(inc, co["inc"][0],
                           co["inc"][1] - co["inc"][0], len(co["inc"]))
         valid = ~np.isnan(inc) & ~np.isnan(s0co) & ~np.isnan(np.abs(anc))
         idx = np.flatnonzero(valid)
-        if search == "coarse":
-            # sort pixels by (incidence index, s0) so the per-pixel
-            # live wspd sets inside each chunk overlap tightly
-            # (per-pixel results are order-independent; outputs
-            # scatter back through sel)
-            idx = idx[np.lexsort((s0co[idx], ii[idx]))]
-        # wspd-blocked argmin (see _copol_argmin): iterating the wspd
-        # axis keeps every temporary at (n_phi, chunk) — cache-resident
-        # — instead of materializing the full (n_wspd, n_phi, chunk)
-        # cost cube (~18 MB per 128 px at reference LUT steps, which
-        # made the kernel DRAM-bandwidth-bound at ~10x the compute
-        # cost). Identical arithmetic order and first-minimum
-        # tie-break, so results are bit-equal to the cube form.
-        n_phi = co["lut_db"].shape[1]
-        jbuf = np.empty((n_phi, chunk))
-        tbuf = np.empty((n_phi, chunk))
         for s in range(0, len(idx), chunk):
             sel = idx[s: s + chunk]
             m_ant = np.real(anc[sel])
             m_azi = np.imag(anc[sel])
             if luts["phi_180"]:
                 m_azi = np.abs(m_azi)
-            wspd_co, phi_co = _copol_argmin(
-                co, luts["phi_180"], s0co[sel], m_ant, m_azi, ii[sel],
-                dsig_co, jbuf, tbuf, search, stride,
-            )
+            wspd_co, phi_co = argmin(co, s0co[sel], m_ant, m_azi, ii[sel],
+                                     dsig_co)
             sol = wspd_co * np.exp(1j * np.radians(phi_co))
             if luts["phi_180"]:
                 sol2 = wspd_co * np.exp(-1j * np.radians(phi_co))
@@ -343,7 +341,7 @@ def _invert_batch(
                 np.subtract(cr["wspd"][:, None], wco[None, :], out=tcb)
                 tcb /= _DWSPD_FG
                 np.multiply(tcb, tcb, out=tcb)
-                jcb[:, fg] += tcb[:, fg]
+                np.add(jcb, tcb, out=jcb, where=fg[None, :])
             amin = np.argmin(jcb, axis=0)
             wspd_dual = cr["wspd"][amin]
             phi_dual = np.where(fg, np.angle(out_co[sel]), 0.0)
@@ -387,17 +385,17 @@ def invert_from_model(
     1e-15 clamp) happens inside the plan before the kernel.
 
     ``search`` picks the copol argmin strategy: ``"coarse"`` (default;
-    exact branch-and-bound, bit-identical to exhaustive — see
-    ``_copol_argmin``) or ``"exhaustive"``. Defaults from
-    ``spark.xsarsea.inversion.search``; the coarse stride from
-    ``spark.xsarsea.inversion.coarseStride`` (8).
+    exact per-pixel pruning, bit-identical to exhaustive — see
+    ``_copol_pruned``) or ``"exhaustive"`` (every LUT cell, the
+    reference the pruned search is tested against). Defaults from
+    ``spark.xsarsea.inversion.search``. LUTs come from the memoized
+    :func:`prepare_luts`, so repeated calls skip the driver-side fold.
     """
-    from xsarsea_spark.engine import get_conf, get_conf_int
+    from xsarsea_spark.engine import get_conf
 
     spark = px.sparkSession
     if search is None:
         search = get_conf(spark, "spark.xsarsea.inversion.search", "coarse")
-    stride = get_conf_int(spark, "spark.xsarsea.inversion.coarseStride", 8)
     luts = prepare_luts(
         co_model,
         cr_model,
@@ -440,6 +438,6 @@ def invert_from_model(
     def gen(batches):
         for pdf in batches:
             yield _invert_batch(pdf, b_luts.value, dsig_co, cols,
-                                search=search, stride=stride)
+                                search=search)
 
     return work.mapInPandas(gen, schema=schema)

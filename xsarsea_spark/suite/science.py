@@ -83,10 +83,13 @@ _SCENE_COLS = {
 
 def scene_df(spark: SparkSession, cols: list[str],
              n_lines: int = N_LINES, n_samples: int = N_SAMPLES) -> DataFrame:
-    """Spark-side synthetic scene with the requested derived columns."""
-    lines = spark.range(n_lines).select(F.col("id").alias("line"))
-    samples = spark.range(n_samples).select(F.col("id").alias("sample"))
-    px = lines.crossJoin(samples)
+    """Spark-side synthetic scene with the requested derived columns.
+
+    One ``range`` split into (line, sample): a cross join of two ranges
+    would put a BroadcastExchange into every plan built on the scene.
+    """
+    px = spark.range(n_lines * n_samples).selectExpr(
+        f"id div {n_samples} AS line", f"id % {n_samples} AS sample")
     return px.selectExpr(
         "line", "sample", *[f"{_SCENE_COLS[c]} AS {c}" for c in cols]
     )
