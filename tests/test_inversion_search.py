@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 from xsarsea_spark.functions.gmfs import gmf_numpy
+from xsarsea_spark.operators import inversion
 from xsarsea_spark.operators.inversion import (
     _invert_batch,
     invert_from_model,
@@ -177,6 +178,54 @@ def test_prepare_luts_is_memoized_and_read_only(luts):
     for part in ("co", "cr"):
         with pytest.raises(ValueError):
             luts[part]["lut_db"][0] = 0.0
+
+
+def test_lut_broadcast_once_per_context(spark, monkeypatch):
+    """Two inversions in one session ship the LUTs in one broadcast,
+    and both read the same values through it."""
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "_xsarsea_lut_broadcasts", {}, raising=False)
+    made = []
+
+    def counting(value):
+        made.append(type(sc).broadcast(sc, value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", counting)
+    lin = _pixels(64, 5, with_nans=False)
+    lin["sigma0"] = 10.0 ** (lin.pop("s0co_db") / 10.0)
+    df = spark.createDataFrame(lin[["pid", "incidence", "sigma0",
+                                    "anc_re", "anc_im"]])
+
+    def run():
+        return invert_from_model(
+            df, co_model="gmf_cmod5n", sigma0_co_col="sigma0",
+            anc_re_col="anc_re", anc_im_col="anc_im", keep_cols=["pid"],
+        ).orderBy("pid").toPandas()
+
+    a, b = run(), run()
+    assert len(made) == 1
+    pd.testing.assert_frame_equal(a, b)
+
+
+def test_lut_broadcast_is_fresh_for_a_new_context(monkeypatch):
+    """A new SparkContext gets its own broadcast, and a stopped one is
+    refused rather than handing back its dead broadcast. Stand-in
+    contexts: the test session's context is shared by every module."""
+    class Context:
+        _jsc = object()
+
+        def broadcast(self, value):
+            return object()
+
+    key = ("gmf_cmod5n", None, 1.0, 0.2, 2.5, 0.1)
+    old, new = Context(), Context()
+    first = inversion._lut_broadcast(old, key)
+    assert inversion._lut_broadcast(old, key) is first
+    old._jsc = None
+    with pytest.raises(RuntimeError):
+        inversion._lut_broadcast(old, key)
+    assert inversion._lut_broadcast(new, key) is not first
 
 
 def test_coarse_bitequal_on_exact_ties_and_nan_slices():

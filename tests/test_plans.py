@@ -6,6 +6,8 @@ is the driver-OOM-at-100TB anti-pattern round 1 was dinged for."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -1431,3 +1433,45 @@ def test_ks_and_mannwhitney_plans_are_scale_safe(audit_spark):
                     saw_docs = True
             assert saw_agg or not saw_docs, \
                 f"{name}: raw documents under broadcast: {ln}"
+
+
+def _plan_nodes(plan: str) -> list[str]:
+    """Operator names of a physical plan string, one per node line."""
+    return [m.group(1) for m in (
+        re.match(r"[\s:+\-]*(?:\*\(\d+\)\s*)?(\w+)", ln)
+        for ln in plan.splitlines()) if m]
+
+
+def test_streaks_full_one_kernel_pass_per_scale(spark):
+    """streaks_full: the tile kernel runs once per scale (the window
+    median reads the exploded pixels once, where a median join read
+    them twice), no join anywhere (the circular taps are a literal
+    array, not a broadcast cross join), and 7 exchanges: per scale the
+    halo tiles and the histogram window, plus the ds-2 downscale, the
+    stack mean and the window-key repartition of streak_direction."""
+    from xsarsea_spark.suite import REGISTRY
+
+    nodes = _plan_nodes(REGISTRY["streaks_full"].spark(spark, SF)
+                        ._jdf.queryExecution().executedPlan().toString())
+    assert nodes.count("FlatMapGroupsInPandas") == 2
+    assert not [n for n in nodes if "Join" in n]
+    assert sum("Exchange" in n for n in nodes) <= 7
+
+
+def test_gradient_histogram_is_one_exchange_no_join(spark):
+    """gradient_histogram over a join-free field: the per-window median
+    and count are window aggregates, and the (window, bin) sum reuses
+    their hash partitioning — one exchange, no join, no broadcast."""
+    from xsarsea_spark.operators.gradients import gradient_histogram
+
+    lg = spark.range(64 * 64).selectExpr(
+        "id div 64 AS line4", "id % 64 AS sample4",
+        "sin(id * 1e0) AS g2_re", "cos(id * 3e0) AS g2_im",
+        "0.5e0 AS c")
+    for step in (8, 4):                 # non-overlapping and overlapping
+        nodes = _plan_nodes(gradient_histogram(lg, window=8, step=step)
+                            ._jdf.queryExecution().executedPlan()
+                            .toString())
+        assert not [n for n in nodes if "Join" in n], step
+        assert [n for n in nodes if "Exchange" in n] == ["Exchange"], step
+        assert "Window" in nodes, step

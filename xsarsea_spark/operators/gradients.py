@@ -19,12 +19,17 @@ Spark-first physical design (SURVEY.md §2.5):
   tile is shipped with ``halo`` extra pixels per side, the whole
   NumPy chain runs per tile, and only interior output pixels are
   emitted. One shuffle per scene regardless of pyramid depth.
-- The windowed histogram is a pure built-in two-pass aggregation:
-  ``percentile(|G2|, 0.5)`` per window, then an exact-DECIMAL weighted
-  bin sum — no UDF.
+- The windowed histogram is pure built-ins over ONE exchange: the
+  per-window ``percentile(|G2|, 0.5)`` and valid count are window
+  aggregates ``OVER (PARTITION BY window)``, and the exact-DECIMAL
+  weighted bin sum groups by (window, bin) on that same hash
+  partitioning — no join, so the tile kernel upstream runs once.
 - ``circ_smooth`` composes the four reference kernels into a single
   31-tap circular kernel (convolution is associative) and applies it
-  as one modular self-join — pure built-ins.
+  by exploding each bin over the taps, written as a literal array
+  (``inline``), then one modular-bin sum — no join, no broadcast.
+  ``streak_direction`` hash-partitions by window once, so that sum and
+  the top-1 window share one exchange.
 
 Determinism: all convolution weights are dyadic rationals (exactly
 representable), accumulation is in fixed tap order, so results are
@@ -186,20 +191,18 @@ def _with_halo_tiles(px: DataFrame, line_col: str, sample_col: str,
                      tile: int, halo: int) -> DataFrame:
     """Replicate each pixel into every tile whose halo region covers it
     (at most 4 copies for halo < tile) — the shuffle that implements
-    halo exchange."""
+    halo exchange. One projection per dimension: the candidate tiles
+    (own, previous if in the low halo, next if in the high halo) are
+    filtered by a SQL lambda and exploded."""
     out = px
     for dim, col in (("l", line_col), ("s", sample_col)):
-        t0 = F.floor(F.col(col) / tile)
-        in_lo = (F.col(col) % tile) < halo
-        in_hi = (F.col(col) % tile) >= (tile - halo)
-        opts = F.array(
-            t0.cast("long"),
-            F.when(in_lo, (t0 - 1).cast("long")),
-            F.when(in_hi, (t0 + 1).cast("long")),
-        )
-        out = out.withColumn(
-            f"__t{dim}", F.explode(F.filter(opts, lambda x: x.isNotNull()))
-        ).filter(F.col(f"__t{dim}") >= 0)
+        t0 = f"CAST(FLOOR(`{col}` / {tile}) AS BIGINT)"
+        m = f"(`{col}` % {tile})"
+        opts = (f"array({t0}, CASE WHEN {m} < {halo} THEN {t0} - 1 END, "
+                f"CASE WHEN {m} >= {tile - halo} THEN {t0} + 1 END)")
+        out = out.selectExpr(
+            "*", f"explode(filter({opts}, x -> x IS NOT NULL AND x >= 0))"
+                 f" AS __t{dim}")
     return out
 
 
@@ -288,8 +291,15 @@ def local_gradients(
 
 
 # ----------------------------------------------------------------------
-# Windowed weighted direction histogram (pure built-ins, two-pass)
+# Windowed weighted direction histogram (pure built-ins, one exchange)
 # ----------------------------------------------------------------------
+
+def _bin_axis(n_angles: int) -> tuple[str, str]:
+    """SQL literals of the first bin centre and the bin width of
+    ``n_angles`` direction bins over [-pi/2, pi/2)."""
+    bstep = np.pi / n_angles
+    return _dlit(-np.pi / 2 + bstep / 2.0), _dlit(bstep)
+
 
 def gradient_histogram(
     lg: DataFrame,
@@ -307,73 +317,56 @@ def gradient_histogram(
     pixel to all covering windows (<= ceil(window/step)^2 copies) and
     aggregating by window key — no materialized rolling dimension.
 
+    The per-window median and valid count are window aggregates over
+    ``PARTITION BY (window)``; the bin sum groups by (window, bin), so
+    it reuses that hash partitioning: one exchange, and the upstream
+    plan runs once.
+
     Returns (win_line, win_sample, angle, weight, used_ratio): weight
     is the median-normalized quality-weighted bin sum divided by the
     window pixel count; used_ratio the valid-pixel fraction.
     """
-    step = step or window
-    ncand = -(-window // step)          # ceil
-    cand = F.array(*[F.lit(i) for i in range(ncand)])
-
-    # explode once per dim: pixel -> every covering window
-    w = lg.withColumn("__kl", F.explode(cand)).withColumn(
-        "__wl", (F.floor(F.col(line_col) / step) - F.col("__kl")).cast("long")
-    ).filter(
-        (F.col("__wl") >= 0)
-        & (F.col(line_col) < F.col("__wl") * step + window)
-    )
-    w = w.withColumn("__ks", F.explode(cand)).withColumn(
-        "__ws",
-        (F.floor(F.col(sample_col) / step) - F.col("__ks")).cast("long"),
-    ).filter(
-        (F.col("__ws") >= 0)
-        & (F.col(sample_col) < F.col("__ws") * step + window)
-    )
-
-    w = w.withColumn(
-        "__abs_g2",
-        F.expr("sqrt(g2_re * g2_re + g2_im * g2_im)"),
-    ).withColumn(
-        "__valid",
-        F.expr("NOT isnan(__abs_g2) AND __abs_g2 > 0e0"),
-    ).withColumn("__angle", F.expr("atan2(g2_im, g2_re)"))
-
-    meds = (
-        w.filter("__valid")
-        .groupBy("__wl", "__ws")
-        .agg(F.expr("percentile(__abs_g2, 0.5e0)").alias("__med"),
-             F.count(F.lit(1)).alias("__nvalid"))
-    )
-    window_pixels = float(window * window)
-    start = float(-np.pi / 2 + (np.pi / n_angles) / 2.0)
-    bstep = float(np.pi / n_angles)
-
-    binned = (
-        w.filter("__valid")
-        .join(meds, on=["__wl", "__ws"], how="inner")
-        .withColumn(
-            "__k",
-            F.expr(
-                f"CAST(LEAST(GREATEST(FLOOR((__angle - ({_dlit(start)}))"
-                f" / ({_dlit(bstep)}) + 5e-1), 0), {n_angles - 1}) AS INT)"
-            ),
-        )
-        .withColumn(
-            "__w", F.expr("(__abs_g2 / (__abs_g2 + __med)) * c")
-        )
-    )
     from xsarsea_spark.suite.base import DSUM
 
-    hist = binned.groupBy("__wl", "__ws", "__k").agg(
+    step = step or window
+    ncand = -(-window // step)          # ceil
+    offsets = ", ".join(f"named_struct('__kl', {i}, '__ks', {j})"
+                        for i in range(ncand) for j in range(ncand))
+    wpx = _dlit(float(window * window))
+    start, bstep = _bin_axis(n_angles)
+    part = "OVER (PARTITION BY __wl, __ws)"
+
+    # pixel -> every covering window, valid pixels only
+    w = lg.selectExpr(
+        f"`{line_col}` AS __l", f"`{sample_col}` AS __s", "c",
+        "sqrt(g2_re * g2_re + g2_im * g2_im) AS __abs_g2",
+        "atan2(g2_im, g2_re) AS __angle",
+        f"inline(array({offsets}))",
+    ).selectExpr(
+        "*",
+        f"CAST(FLOOR(__l / {step}) - __kl AS BIGINT) AS __wl",
+        f"CAST(FLOOR(__s / {step}) - __ks AS BIGINT) AS __ws",
+    ).where(
+        f"__wl >= 0 AND __l < __wl * {step} + {window}"
+        f" AND __ws >= 0 AND __s < __ws * {step} + {window}"
+        " AND NOT isnan(__abs_g2) AND __abs_g2 > 0e0"
+    )
+    binned = w.selectExpr(
+        "__wl", "__ws",
+        f"CAST(LEAST(GREATEST(FLOOR((__angle - ({start}))"
+        f" / ({bstep}) + 5e-1), 0), {n_angles - 1}) AS INT) AS __k",
+        f"(__abs_g2 / (__abs_g2 + percentile(__abs_g2, 0.5e0) {part}))"
+        " * c AS __w",
+        f"count(1) {part} AS __nvalid",
+    )
+    return binned.groupBy("__wl", "__ws", "__k").agg(
         F.expr(DSUM("__w", 9)).alias("__wsum"),
         F.first("__nvalid").alias("__nvalid"),
-    )
-    return hist.select(
-        F.col("__wl").alias("win_line"),
-        F.col("__ws").alias("win_sample"),
-        (F.lit(start) + F.col("__k") * F.lit(bstep)).alias("angle"),
-        (F.col("__wsum") / F.lit(window_pixels)).alias("weight"),
-        (F.col("__nvalid") / F.lit(window_pixels)).alias("used_ratio"),
+    ).selectExpr(
+        "__wl AS win_line", "__ws AS win_sample",
+        f"{start} + __k * {bstep} AS angle",
+        f"__wsum / {wpx} AS weight",
+        f"__nvalid / {wpx} AS used_ratio",
     )
 
 
@@ -381,28 +374,32 @@ def circ_smooth(hist: DataFrame, n_angles: int = 72,
                 key_cols: tuple = ("win_line", "win_sample"),
                 bin_col: str = "angle_idx",
                 weight_col: str = "weight") -> DataFrame:
-    """Circular histogram smoothing (gradients.py:882-923) as ONE
-    modular self-join with the composed 31-tap kernel.
+    """Circular histogram smoothing (gradients.py:882-923) with the
+    composed 31-tap kernel: each bin is exploded to the bins its
+    non-zero taps (a literal array) reach, then summed per (keys, bin).
 
     ``hist`` must carry an integer bin column ``bin_col`` in
     [0, n_angles); missing bins are treated as weight 0 (dense input
-    recommended). Returns the same keys + bin with smoothed weight.
+    recommended), and a bin no tap reaches gets no row. Returns the
+    same keys + bin with smoothed weight.
     """
-    taps = [(i - len(CIRC_KERNEL) // 2, float(wv))
-            for i, wv in enumerate(CIRC_KERNEL) if wv != 0.0]
-    tap_df = hist.sparkSession.createDataFrame(
-        [(d, wv) for d, wv in taps], schema="__d INT, __tapw DOUBLE"
-    )
     from xsarsea_spark.suite.base import DSUM
 
-    j = hist.crossJoin(F.broadcast(tap_df)).withColumn(
-        "__dst",
-        ((F.col(bin_col) + F.col("__d")) % n_angles + n_angles) % n_angles,
+    half = len(CIRC_KERNEL) // 2
+    taps = ", ".join(
+        f"named_struct('__d', {i - half}, '__tapw', {_dlit(float(wv))})"
+        for i, wv in enumerate(CIRC_KERNEL) if wv != 0.0)
+    keys = [f"`{k}`" for k in key_cols]
+    j = hist.selectExpr(
+        *keys, f"`{bin_col}` AS __bin", f"`{weight_col}` AS __wt",
+        f"inline(array({taps}))",
+    ).selectExpr(
+        *keys, "__wt", "__tapw",
+        f"((__bin + __d) % {n_angles} + {n_angles}) % {n_angles} AS __dst",
     )
-    out = j.groupBy(*key_cols, "__dst").agg(
-        F.expr(DSUM(f"{weight_col} * __tapw", 9)).alias(weight_col)
-    )
-    return out.withColumnRenamed("__dst", bin_col)
+    return j.groupBy(*key_cols, "__dst").agg(
+        F.expr(DSUM("__wt * __tapw", 9)).alias(weight_col)
+    ).withColumnRenamed("__dst", bin_col)
 
 
 def streak_direction(hist: DataFrame, n_angles: int = 72,
@@ -410,25 +407,22 @@ def streak_direction(hist: DataFrame, n_angles: int = 72,
                      bin_col: str = "angle_idx",
                      weight_col: str = "weight") -> DataFrame:
     """Histogram peak per window (argmax over bins — gradients.py:421-424)
-    after circular smoothing; deterministic tie-break on bin index."""
-    sm = circ_smooth(hist, n_angles=n_angles, key_cols=key_cols,
-                     bin_col=bin_col, weight_col=weight_col)
-    from pyspark.sql.window import Window
+    after circular smoothing; deterministic tie-break on bin index.
 
-    win = Window.partitionBy(*key_cols).orderBy(
-        F.col(weight_col).desc(), F.col(bin_col).asc()
-    )
-    start = float(-np.pi / 2 + (np.pi / n_angles) / 2.0)
-    bstep = float(np.pi / n_angles)
-    return (
-        sm.withColumn("__rn", F.row_number().over(win))
-        .filter(F.col("__rn") == 1)
-        .select(
-            *key_cols,
-            (F.lit(start) + F.col(bin_col) * F.lit(bstep)).alias(
-                "streak_angle"),
-            F.col(weight_col).alias("peak_weight"),
-        )
+    The input is hash-partitioned by the window keys once, so the
+    smoothing aggregation and the top-1 window share that exchange."""
+    sm = circ_smooth(hist.repartition(*key_cols), n_angles=n_angles,
+                     key_cols=key_cols, bin_col=bin_col,
+                     weight_col=weight_col)
+    keys = [f"`{k}`" for k in key_cols]
+    start, bstep = _bin_axis(n_angles)
+    return sm.selectExpr(
+        "*", f"row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY "
+             f"`{weight_col}` DESC, `{bin_col}` ASC) AS __rn",
+    ).where("__rn = 1").selectExpr(
+        *keys,
+        f"{start} + `{bin_col}` * {bstep} AS streak_angle",
+        f"`{weight_col}` AS peak_weight",
     )
 
 

@@ -106,6 +106,25 @@ def prepare_luts(
     return out
 
 
+def _lut_broadcast(sc, key: tuple):
+    """The broadcast of ``prepare_luts(*key)`` on ``sc``, made once per
+    context: a second inversion ships no new 8 MB pickle, and Python
+    workers keep the arrays they already read under the same broadcast
+    id. The broadcasts live on the context object, so a new context
+    starts with none and a stopped one is refused. ``prepare_luts``
+    (memoized) is still called every time, so tracing it sees each
+    inversion."""
+    if sc._jsc is None:
+        raise RuntimeError("SparkContext is stopped")
+    luts = prepare_luts(*key)
+    if not hasattr(sc, "_xsarsea_lut_broadcasts"):
+        sc._xsarsea_lut_broadcasts = {}
+    made = sc._xsarsea_lut_broadcasts
+    if key not in made:
+        made[key] = sc.broadcast(luts)
+    return made[key]
+
+
 def crosspol_wspd_lut_db(cr_model: str, inc_step: float = 1.0,
                          wspd_step: float = 0.1) -> dict:
     """Crosspol LUT alone (for the SQL-checkable crosspol inversion)."""
@@ -389,22 +408,17 @@ def invert_from_model(
     ``_copol_pruned``) or ``"exhaustive"`` (every LUT cell, the
     reference the pruned search is tested against). Defaults from
     ``spark.xsarsea.inversion.search``. LUTs come from the memoized
-    :func:`prepare_luts`, so repeated calls skip the driver-side fold.
+    :func:`prepare_luts` and are broadcast once per SparkContext, so
+    repeated calls skip both the driver-side fold and the shipping.
     """
     from xsarsea_spark.engine import get_conf
 
     spark = px.sparkSession
     if search is None:
         search = get_conf(spark, "spark.xsarsea.inversion.search", "coarse")
-    luts = prepare_luts(
-        co_model,
-        cr_model,
-        inc_step=lut_inc_step,
-        wspd_step=lut_wspd_step,
-        phi_step=lut_phi_step,
-        cr_wspd_step=lut_cr_wspd_step,
-    )
-    b_luts = spark.sparkContext.broadcast(luts)
+    b_luts = _lut_broadcast(spark.sparkContext, (
+        co_model, cr_model, lut_inc_step, lut_wspd_step, lut_phi_step,
+        lut_cr_wspd_step))
 
     keep_cols = list(keep_cols or [])
     work = px
