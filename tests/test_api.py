@@ -78,24 +78,6 @@ def test_get_dsig_modes():
     assert v[0] == pytest.approx(1.0 / np.sqrt(10.0 ** 8))
 
 
-def test_tws_profile_gated_or_runs(spark):
-    """transformWithStateInPandas operator: runs where protobuf
-    exists, raises the documented gate error where it doesn't."""
-    import pytest
-
-    from xsarsea_spark.streaming.events import stream_user_profile_tws
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stream_user_profile_tws(spark, "/root/testdata/sf0.001")
-        return
-    df = stream_user_profile_tws(spark, "/root/testdata/sf0.001")
-    assert df.count() > 0
-    assert "top1" in df.columns
-
-
 def test_scd2_collapses_and_closes(spark):
     from xsarsea_spark.operators.scd import scd2_history
 

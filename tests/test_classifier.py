@@ -126,13 +126,12 @@ def test_sgd_step_replay_is_idempotent(spark, tmp_path):
     # The rebuild must read the version STRICTLY BELOW the batch id
     # (v{N-1}) even though its own v{N} now exists — replaying twice
     # yields bit-identical weights, never compounding.
-    import os
-
     from xsarsea_spark.pipeline.classifier import (N_FEATURES,
                                                    doc_features,
                                                    gd_step,
                                                    load_weights,
                                                    save_weights)
+    from xsarsea_spark.streaming.harness import version_below
 
     docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
     xy0 = doc_features(docs.filter("doc_id % 3 = 0"))
@@ -141,9 +140,9 @@ def test_sgd_step_replay_is_idempotent(spark, tmp_path):
                  str(tmp_path / "v0"))
 
     def replay_batch_1():
-        vers = sorted(int(v[1:]) for v in os.listdir(tmp_path))
-        prev = [v for v in vers if v < 1]
-        w = load_weights(spark, str(tmp_path / f"v{prev[-1]}"))
+        prev = version_below(spark, str(tmp_path), 1)
+        assert prev == str(tmp_path / "v0")
+        w = load_weights(spark, prev)
         w2 = gd_step(xy1, w)
         save_weights(spark, w2, str(tmp_path / "v1"))
         return w2

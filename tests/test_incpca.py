@@ -95,22 +95,16 @@ def test_stream_absorb_versioning_is_replay_safe(spark, tmp_path):
     import os
 
     from xsarsea_spark.pipeline.incpca import moment_merge, moment_state
+    from xsarsea_spark.streaming.harness import version_below
 
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
     state_dir = str(tmp_path / "state")
 
     def absorb(df, batch_id):
         part = moment_state(df, d=64)
-        vers = ([int(v[1:]) for v in os.listdir(state_dir)]
-                if os.path.isdir(state_dir) else [])
-        prev = [v for v in sorted(vers) if v < batch_id]
-        if prev:
-            cur = moment_merge([
-                spark.read.parquet(
-                    os.path.join(state_dir, f"v{prev[-1]}")),
-                part])
-        else:
-            cur = part
+        prev = version_below(spark, state_dir, batch_id)
+        cur = (moment_merge([spark.read.parquet(prev), part])
+               if prev else part)
         cur.repartition(1).write.mode("overwrite").parquet(
             os.path.join(state_dir, f"v{batch_id}"))
 
@@ -118,9 +112,11 @@ def test_stream_absorb_versioning_is_replay_safe(spark, tmp_path):
     b1 = emb.filter("vec_id % 2 = 1")
     absorb(b0, 0)
     absorb(b1, 1)
+    first = _state_rows(spark.read.parquet(os.path.join(state_dir, "v1")))
     absorb(b1, 1)    # crash-replay of batch 1: must be a no-op rebuild
 
     final = spark.read.parquet(os.path.join(state_dir, "v1"))
+    assert _state_rows(final) == first
     oneshot = moment_state(emb, d=64)
     assert _state_rows(final) == _state_rows(oneshot)
 

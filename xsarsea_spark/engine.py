@@ -111,11 +111,13 @@ def scratch_path(spark: SparkSession, name: str, key: str) -> str:
     (``pipeline/ingest.py``: file inventories, sync markers) and the
     versioned KB-state helpers below go through the Hadoop FS API and
     accept DFS URIs (``hdfs://``, ``s3a://``) — tested with a
-    ``file://`` URI root. The SUITE's arrival staging (the bench's
-    simulation of file arrivals: ``shutil.copy`` into watch dirs,
-    ``rmtree`` cleanup) is test scaffolding and still assumes a local
-    root; on a cluster, point the root at a shared mount or a DFS URI
-    for the operator state and keep the simulated spool local.
+    ``file://`` URI root, and so does the versioned-state lookup in
+    ``streaming/harness.py``. The suite's arrival staging
+    (``harness.stage_arrival``, which simulates file arrivals with
+    ``shutil.copy`` into watch dirs, and the ``rmtree`` cleanup) is
+    local-only scaffolding; on a cluster, point the root at a shared
+    mount or a DFS URI for the operator state and keep the simulated
+    spool local.
     ``key`` (usually the dataset directory) is hashed into the leaf so
     runs against different datasets never collide even under the
     default shared root.
@@ -151,7 +153,13 @@ def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
     """Write ``text`` to one file through the Hadoop FS API (local
     paths AND DFS URIs). Crash-safe: write to ``path.tmp`` then
     rename over ``path`` — a crash leaves either the old file or no
-    file, never a torn one."""
+    file, never a torn one.
+
+    The file may be briefly absent between delete and rename; every
+    consumer must be able to rebuild it. The versioned stream state
+    does (``streaming/harness.py``): a replayed batch N rebuilds a
+    missing ``v{N}`` from the version strictly below and ignores the
+    leftover ``v{N}.tmp``."""
     fs, hpath = _hadoop_fs(spark, path)
     tmp = spark._jvm.org.apache.hadoop.fs.Path(path + ".tmp")
     out = fs.create(tmp, True)

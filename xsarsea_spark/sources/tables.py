@@ -65,9 +65,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.read.parquet(f"{sf_dir}/{name}.parquet")
         )
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views (for spark.sql entry points)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -15,6 +15,7 @@ design.
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +24,6 @@ from pyspark.sql import types as T
 __all__ = ["events_stream", "stream_hourly_counts",
            "stream_attribution",
            "stream_hourly_to_parquet", "read_latest_batch",
-           "stream_user_profile_tws",
            "stream_minute_dedup", "stream_sessionize",
            "stream_interval_join", "stream_user_stats",
            "stream_user_growth"]
@@ -53,35 +53,40 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_to_memory(stream_df: DataFrame, output_mode: str,
-                   state_partitions: int | None = 8) -> DataFrame:
-    """Run an availableNow stream into a memory sink.
+_STATE_PARTITIONS = 8
+
+
+@contextmanager
+def _state_partitions(spark: SparkSession):
+    """Run the enclosed stream start with ``_STATE_PARTITIONS`` shuffle
+    partitions, restoring the session value afterwards.
 
     Stateful operators allocate one state-store instance per shuffle
     partition, and instance setup dominates when per-partition state
     is small — at the session default of 32 partitions the three
     suite streams spend 2.6-11 s on state plumbing vs ~1-2 s at 8.
-    ``state_partitions`` sizes that explicitly for the run (state
-    sizing is a deliberate per-stream choice at scale, not something
-    to inherit from the batch session); pass None to keep the session
-    setting. The session value is restored afterwards."""
-    spark = stream_df.sparkSession
-    name = "mem_" + uuid.uuid4().hex[:12]
+    State sizing is a deliberate per-stream choice at scale, not
+    something to inherit from the batch session."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(state_partitions))
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(_STATE_PARTITIONS))
+        yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Run an availableNow stream into a memory sink."""
+    spark = stream_df.sparkSession
+    name = "mem_" + uuid.uuid4().hex[:12]
+    with _state_partitions(spark):
+        (stream_df.writeStream.format("memory")
+         .queryName(name)
+         .outputMode(output_mode)
+         .trigger(availableNow=True)
+         .start()
+         .awaitTermination())
     return spark.table(name)
 
 
@@ -150,19 +155,13 @@ def stream_hourly_to_parquet(spark: SparkSession, sf_dir: str,
         df.write.mode("overwrite").parquet(dest)
         with open(marker, "w"):
             pass
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            agg.writeStream.foreachBatch(write_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with _state_partitions(spark):
+        (agg.writeStream.foreachBatch(write_batch)
+         .outputMode("complete")
+         .option("checkpointLocation", checkpoint_dir)
+         .trigger(availableNow=True)
+         .start()
+         .awaitTermination())
     return out_dir
 
 
@@ -336,114 +335,6 @@ def stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         fn, out_schema, state_schema, "update",
         GroupStateTimeout.NoTimeout)
     return _run_to_memory(agg, "update")
-
-
-def stream_user_profile_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user profile via ``transformWithStateInPandas`` — the
-    Spark 4 typed-state streaming API (ValueState + MapState +
-    ListState over the RocksDB provider), the successor to
-    applyInPandasWithState.
-
-    State per user: a ValueState row counter, a MapState of
-    event_type -> count, and a ListState holding the top-3 (value,
-    event_id) pairs ordered (value DESC, event_id ASC) — the
-    bounded-state form of a streaming top-k. Batches fold in
-    ascending event_id order so emitted rows are arrival-order
-    independent and SQL-oracle exact.
-
-    Gated: the transformWithState Python<->JVM state protocol speaks
-    protobuf, which this environment does not ship — the operator
-    raises a clear NotImplementedError there and runs anywhere
-    protobuf is installed. (Semantics twin: stream_user_stats covers
-    the custom-stateful surface un-gated via applyInPandasWithState.)
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(the typed-state server protocol); this environment "
-            "does not ship it — use stream_user_stats "
-            "(applyInPandasWithState) for the same stateful surface"
-        ) from e
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    ev = (
-        events_stream(spark, sf_dir)
-        .withWatermark("event_time", "1 hour")
-        .select("user_id", "event_id", "event_type", "value")
-    )
-    out_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("n_types", T.LongType()),
-        T.StructField("n_errors", T.LongType()),
-        T.StructField("top1", T.DoubleType()),
-        T.StructField("top2", T.DoubleType()),
-        T.StructField("top3", T.DoubleType()),
-    ])
-
-    class Profile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n", "n bigint")
-            self._types = handle.getMapState(
-                "types", "t string", "c bigint")
-            self._top = handle.getListState(
-                "top", "v double, eid bigint")
-
-        def handleInputRows(self, key, rows, timer_values):
-            df = pd.concat(list(rows)).sort_values("event_id")
-            n = self._n.get()[0] if self._n.exists() else 0
-            top = [tuple(t) for t in self._top.get()] \
-                if self._top.exists() else []
-            for r in df.itertuples():
-                n += 1
-                t = r.event_type
-                prev = (self._types.getValue((t,))[0]
-                        if self._types.containsKey((t,)) else 0)
-                self._types.updateValue((t,), (prev + 1,))
-                top.append((float(r.value), int(r.event_id)))
-                top.sort(key=lambda p: (-p[0], p[1]))
-                top = top[:3]
-            self._n.update((n,))
-            self._top.put(top)
-            counts = {k[0]: v[0] for k, v in self._types.iterator()}
-            pad = top + [(None, None)] * (3 - len(top))
-            yield pd.DataFrame([{
-                "user_id": int(key[0]), "n_events": n,
-                "n_types": len(counts),
-                "n_errors": counts.get("error", 0),
-                "top1": pad[0][0], "top2": pad[1][0],
-                "top3": pad[2][0],
-            }])
-
-        def close(self) -> None:
-            pass
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider")
-    try:
-        agg = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=Profile(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-        return _run_to_memory(agg, "update")
-    finally:
-        if prev_provider is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                prev_provider)
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
 
 
 def stream_cohort_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:

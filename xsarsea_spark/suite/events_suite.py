@@ -19,6 +19,10 @@ from pyspark.sql.window import Window
 
 from xsarsea_spark.engine import materialize
 from xsarsea_spark.sources.tables import load
+from xsarsea_spark.streaming.harness import (latest_version,
+                                             run_available_now,
+                                             stage_arrival,
+                                             version_below)
 from xsarsea_spark.suite.base import DAVG, DSUM, QTRUNC, spec
 
 _US_SPARK = "(ts DIV 1000)"
@@ -3639,8 +3643,7 @@ def q_stream_elo_train(spark: SparkSession,
     import os
     import shutil
 
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      materialize, save_kv_json,
+    from xsarsea_spark.engine import (load_kv_json, save_kv_json,
                                       scratch_path)
     from xsarsea_spark.pipeline.preference import (
         elo_step, period_preference_matrix)
@@ -3663,47 +3666,20 @@ def q_stream_elo_train(spark: SparkSession,
     schema = pm.schema
 
     def step(df, batch_id: int) -> None:
-        # versioned KB-sized rating state via the Hadoop-FS JSON
-        # helper (round 15): each tiny-parquet save/load was a full
-        # Spark job (plan + schedule + commit) per micro-batch —
-        # ~0.5 s of fixed driver work per batch for a KB of state.
-        # Same persisted-state semantics (exact float round-trip,
-        # crash-safe rename, DFS-capable paths).
-        vers = sorted(int(v[1:]) for v in fs_list_names(spark, state)
-                      if not v.endswith(".tmp"))
-        prev = [v for v in vers if v < batch_id]
-        ratings = (dict(load_kv_json(
-            spark, os.path.join(state, f"v{prev[-1]}")))
-            if prev else {})
+        prev = version_below(spark, state, batch_id)
+        ratings = dict(load_kv_json(spark, prev)) if prev else {}
         r2 = elo_step(df, ratings)
         save_kv_json(spark, sorted(r2.items()),
                      os.path.join(state, f"v{batch_id}"))
 
-    def run_stream() -> None:
-        src = spark.readStream.schema(schema).parquet(watch)
-        q = (src.writeStream.foreachBatch(step)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
+    src = spark.readStream.schema(schema).parquet(watch)
     for p in range(_ELO_STREAM_PERIODS):
-        adir = os.path.join(base, f"arrival_{p}")
-        for fn in os.listdir(adir):
-            if fn.endswith(".parquet"):
-                shutil.copy(os.path.join(adir, fn),
-                            os.path.join(watch, f"a{p}_{fn}"))
-        run_stream()
-    run_stream()   # no new files -> no-op (exactly-once)
+        stage_arrival(os.path.join(base, f"arrival_{p}"), watch, f"a{p}")
+        run_available_now(src, step, ckpt)
+    run_available_now(src, step, ckpt)   # no new files: no-op
 
-    vers = sorted(int(v[1:]) for v in fs_list_names(spark, state)
-                  if not v.endswith(".tmp"))
-    if len(vers) != _ELO_STREAM_PERIODS:   # -O strips bare asserts
-        raise RuntimeError(
-            f"expected {_ELO_STREAM_PERIODS} rating versions, got "
-            f"{vers} — an arrival batch was skipped or duplicated")
-    ratings = dict(load_kv_json(spark, os.path.join(state,
-                                                    f"v{vers[-1]}")))
+    ratings = dict(load_kv_json(spark, latest_version(
+        spark, state, expect=_ELO_STREAM_PERIODS)))
     arms = sorted(ratings)
     rating_case = "CASE arm " + " ".join(
         f"WHEN '{a}' THEN CAST({ratings[a]!r} AS DOUBLE)"
@@ -4496,10 +4472,9 @@ def q_stream_kmv_union(spark: SparkSession,
     os.makedirs(watch)
 
     ev = load(spark, sf_dir, "events")
-    # ONE corpus pass via partitionBy (round 15): the per-slice
-    # filter+write loop scanned events once per arrival; the
-    # partition column is dropped from the data files, so each
-    # __a={k} directory holds exactly the old arrival_{k} rows
+    # ONE corpus pass via partitionBy; the partition column is
+    # dropped from the data files, so each __a={k} directory holds
+    # exactly arrival k's rows
     (ev.withColumn("__a", F.expr(f"event_id % {_SKMV_ARRIVALS}"))
      .repartition(_SKMV_ARRIVALS, "__a")
      .write.partitionBy("__a")
@@ -4512,38 +4487,22 @@ def q_stream_kmv_union(spark: SparkSession,
         sk = kmv_sketch(df, ["event_type"],
                         _KMV_VAL.replace("VARCHAR", "STRING"),
                         k=_KMV_K)
-        vers = (sorted(int(v[1:]) for v in os.listdir(state))
-                if os.path.isdir(state) else [])
-        prev = [v for v in vers if v < batch_id]
+        prev = version_below(spark, state, batch_id)
         if prev:
-            old = spark.read.parquet(
-                os.path.join(state, f"v{prev[-1]}"))
-            sk = kmv_merge(old, sk, ["event_type"], k=_KMV_K)
+            sk = kmv_merge(spark.read.parquet(prev), sk,
+                           ["event_type"], k=_KMV_K)
         (sk.repartition(1).write.mode("overwrite")
          .parquet(os.path.join(state, f"v{batch_id}")))
 
-    def run_stream() -> None:
-        src = spark.readStream.schema(schema).parquet(watch)
-        q = (src.writeStream.foreachBatch(step)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
+    src = spark.readStream.schema(schema).parquet(watch)
     for a in range(_SKMV_ARRIVALS):
-        adir = os.path.join(base, "arrivals", f"__a={a}")
-        for fn in os.listdir(adir):
-            if fn.endswith(".parquet"):
-                shutil.copy(os.path.join(adir, fn),
-                            os.path.join(watch, f"a{a}_{fn}"))
-        run_stream()
-    run_stream()   # no new files -> no-op (exactly-once)
+        stage_arrival(os.path.join(base, "arrivals", f"__a={a}"),
+                      watch, f"a{a}")
+        run_available_now(src, step, ckpt)
+    run_available_now(src, step, ckpt)   # no new files: no-op
 
-    vers = sorted(int(v[1:]) for v in os.listdir(state))
-    if len(vers) != _SKMV_ARRIVALS:   # -O strips bare asserts
-        raise RuntimeError(
-            f"expected {_SKMV_ARRIVALS} sketch versions, got {vers}")
-    final = spark.read.parquet(os.path.join(state, f"v{vers[-1]}"))
+    final = spark.read.parquet(
+        latest_version(spark, state, expect=_SKMV_ARRIVALS))
     est = kmv_estimate(final, ["event_type"], k=_KMV_K)
     true = ev.groupBy("event_type").agg(
         F.expr(f"COUNT(DISTINCT"

@@ -13,15 +13,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xsarsea_spark.engine import materialize, scratch_path
+from xsarsea_spark.engine import (load_kv_json, materialize,
+                                  save_kv_json, scratch_path)
 from xsarsea_spark.pipeline.clustering import KM_SCALE
 from xsarsea_spark.pipeline.dedup import MINHASH_P, _BAND_MULT, _perm_params
 from xsarsea_spark.sources.tables import load
+from xsarsea_spark.streaming.harness import (latest_version,
+                                             run_available_now,
+                                             stage_arrival,
+                                             version_below)
 from xsarsea_spark.suite.base import QTRUNC, spec
 
 # DuckDB spelling of pipeline.text.HASH40_SQL (same value)
 _H40_DUCK = "CAST('0x' || substr(md5({x}), 1, 10) AS BIGINT)"
 _H40_SPARK = "CAST(conv(substring(md5({x}), 1, 10), 16, 10) AS BIGINT)"
+
+
+def _file_stream(spark: SparkSession, sf_dir: str, table: str,
+                 schema) -> DataFrame:
+    """Streaming file source over ``{table}.parquet`` in ``sf_dir``."""
+    return (spark.readStream.schema(schema)
+            .option("pathGlobFilter", f"{table}.parquet")
+            .parquet(sf_dir))
 
 
 # ----------------------------------------------------------------------
@@ -2798,16 +2811,11 @@ def q_stream_dsir_ingest(spark: SparkSession,
                                              dsir_fit_terms,
                                              dsir_score,
                                              dsir_threshold)
-    from xsarsea_spark.pipeline.ingest import ingest_curated_batch
 
     base = scratch_path(spark, "stream_dsir", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     terms_path = os.path.join(base, "terms.parquet")
     thr_path = os.path.join(base, "thr.parquet")
-    table_dir = os.path.join(base, "table")
-    bloom_path = os.path.join(base, "bloom.parquet")
-    marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
 
     docs_b = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bad = _DQB_BAD.format(nt="size(split(text, ' '))")
@@ -2874,27 +2882,8 @@ def q_stream_dsir_ingest(spark: SparkSession,
                 .selectExpr("doc_id", "source", "n_chars", "logw",
                             "md5(text) AS digest"))
 
-    def ingest(df: DataFrame, batch_id: int) -> None:
-        ingest_curated_batch(
-            spark, df, table_dir, bloom_path, marker_path,
-            min_chars=0, zcols=["n_chars", "doc_id"],
-            zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS,
-            k=_ING_BLOOM_K, prep=dsir_prep)
-
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op
-
-    back = spark.read.parquet(table_dir)
+    back = _ingest_docs_stream(spark, sf_dir, schema, base,
+                               prep=dsir_prep)
     return back.groupBy("source").agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_docs"),
         F.min("doc_id").alias("min_doc"),
@@ -2908,10 +2897,10 @@ def q_stream_dsir_ingest(spark: SparkSession,
 # water-filled per-language caps fitted OFFLINE on the historical
 # slice (an L-row persisted artifact), then every micro-batch
 # language-IDs its docs, ranks them in hash-priority order and
-# admits until the language's REMAINING budget (persisted per-batch
-# consumed-token counters, overwritten by batch id so a retried
-# batch never double-counts) before the exactly-once bloom/anti-join
-# dedup core. Double availableNow run over one checkpoint; oracle is
+# admits until the language's REMAINING budget (cumulative consumed-
+# token counters, versioned by batch id and rebuilt from the version
+# strictly below, so a retried batch never double-counts) before the
+# exactly-once bloom/anti-join dedup core. Double availableNow run over one checkpoint; oracle is
 # the one-shot replay (fit caps on history, enforce over the full
 # stream at consumed = 0 — value-equal because availableNow over the
 # single source file is one batch; multi-batch runs enforce the same
@@ -2975,8 +2964,8 @@ FROM uniq GROUP BY lang"""
                 "per-language caps fitted offline on the history "
                 "slice (L-row artifact), each micro-batch language-"
                 "IDed, hash-priority ranked and admitted against "
-                "the remaining budget (per-batch consumed counters, "
-                "retry-idempotent) before the exactly-once "
+                "the remaining budget (versioned cumulative consumed "
+                "counters, retry-idempotent) before the exactly-once "
                 "bloom/anti-join dedup core; double availableNow "
                 "run, final table value-equal to the one-shot replay",
     tags=("pipeline", "streaming", "sampling", "sink"),
@@ -3021,29 +3010,13 @@ def q_stream_unimax_ingest(spark: SparkSession,
 
     schema = docs_b.schema
 
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      save_kv_json)
-
-    def _consumed_before(batch_id: int):
-        # per-batch consumed counters as JSON KV files (round 15):
-        # the read-parquet + agg per batch was a Spark job for an
-        # L-row table; summing driver-side is the same exact BIGINT
-        # addition, and a retried batch still overwrites its OWN file
-        parts = [d for d in fs_list_names(spark, counters_dir)
-                 if d.startswith("batch=") and not d.endswith(".tmp")
-                 and int(d.split("=", 1)[1]) < batch_id]
-        if not parts:
-            return None
-        tot: dict[str, int] = {}
-        for d in sorted(parts):
-            for lang, used in load_kv_json(
-                    spark, os.path.join(counters_dir, d)):
-                tot[lang] = tot.get(lang, 0) + int(used)
-        return spark.createDataFrame(
-            sorted(tot.items()), "lang string, used bigint")
-
     def ingest(df: DataFrame, batch_id: int) -> None:
         caps = spark.read.parquet(caps_path)
+        # v{N} holds the tokens consumed by batches 0..N: a replayed
+        # batch rebuilds it from the version strictly below, so it
+        # never double-counts
+        prev = version_below(spark, counters_dir, batch_id)
+        before = dict(load_kv_json(spark, prev)) if prev else None
         x = df.filter("text IS NOT NULL")
         pdd = language_id(x).selectExpr(
             "doc_id", "text", "pred_lang AS lang",
@@ -3054,8 +3027,11 @@ def q_stream_unimax_ingest(spark: SparkSession,
         # (filter commutes with the inner doc_id join — kept is
         # decided entirely on the enforce side)
         enforced = materialize(
-            unimax_enforce(pdd.drop("text"), caps,
-                           consumed=_consumed_before(batch_id))
+            unimax_enforce(
+                pdd.drop("text"), caps,
+                consumed=None if before is None else
+                spark.createDataFrame(sorted(before.items()),
+                                      "lang string, used bigint"))
             .filter("kept")
             .join(pdd.select("doc_id", "text"), on="doc_id")
             .selectExpr("doc_id", "lang", "n_tokens", "lang_cap",
@@ -3065,28 +3041,17 @@ def q_stream_unimax_ingest(spark: SparkSession,
             min_chars=0, zcols=["n_tokens", "doc_id"],
             zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS,
             k=_ING_BLOOM_K, prep=lambda _raw: enforced)
-        # retry-idempotent consumed counters: batch N overwrites its
-        # OWN file, so a replayed batch never double-counts
-        save_kv_json(
-            spark,
-            sorted((r["lang"], int(r["used"]))
-                   for r in enforced.groupBy("lang").agg(
-                       F.expr("CAST(SUM(n_tokens) AS BIGINT)")
-                       .alias("used")).collect()),
-            os.path.join(counters_dir, f"batch={batch_id}"))
+        tot = dict(before or {})
+        for r in enforced.groupBy("lang").agg(
+                F.expr("CAST(SUM(n_tokens) AS BIGINT)")
+                .alias("used")).collect():
+            tot[r["lang"]] = tot.get(r["lang"], 0) + int(r["used"])
+        save_kv_json(spark, sorted(tot.items()),
+                     os.path.join(counters_dir, f"v{batch_id}"))
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op
+    src = _file_stream(spark, sf_dir, "documents", schema)
+    run_available_now(src, ingest, ckpt_dir)
+    run_available_now(src, ingest, ckpt_dir)   # zero new files: no-op
 
     back = spark.read.parquet(table_dir)
     return back.groupBy("lang").agg(
@@ -5414,12 +5379,9 @@ FROM w{rf}, acc, (SELECT unnest(range(1, {nf + 1})) AS i)""")
 )
 def q_stream_classifier_train(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      save_kv_json)
     from xsarsea_spark.pipeline.classifier import (N_FEATURES,
                                                    doc_features,
                                                    gd_step,
@@ -5433,11 +5395,9 @@ def q_stream_classifier_train(spark: SparkSession,
     os.makedirs(watch)
 
     docs = load(spark, sf_dir, "documents")
-    # stage the arrival slices OUTSIDE the watched directory — ONE
-    # corpus pass via partitionBy (round 15): the per-slice
-    # filter+write loop scanned the corpus once per arrival; the
-    # partition column is dropped from the data files, so each
-    # __a={k} directory holds exactly the old arrival_{k} rows
+    # stage the arrival slices OUTSIDE the watched directory in ONE
+    # corpus pass; partitionBy drops the column from the data files,
+    # so each __a={k} directory holds exactly arrival k's rows
     (docs.withColumn("__a", F.expr(f"doc_id % {_SGD_ARRIVALS}"))
      .repartition(_SGD_ARRIVALS, "__a")
      .write.partitionBy("__a")
@@ -5446,45 +5406,21 @@ def q_stream_classifier_train(spark: SparkSession,
         f"{sf_dir}/documents.parquet").schema
 
     def step(df: DataFrame, batch_id: int) -> None:
-        # versioned KB-sized weight state via the Hadoop-FS JSON
-        # helper (round 15): the tiny-parquet save/load per
-        # micro-batch was a full Spark job each way (~0.5 s fixed);
-        # same persisted-state semantics (exact float round-trip,
-        # crash-safe rename, DFS-capable)
-        vers = sorted(int(v[1:]) for v in fs_list_names(spark, state)
-                      if not v.endswith(".tmp"))
-        prev = [v for v in vers if v < batch_id]
-        w = (list(load_kv_json(
-            spark, os.path.join(state, f"v{prev[-1]}")))
-            if prev else [0.0] * N_FEATURES)
+        prev = version_below(spark, state, batch_id)
+        w = list(load_kv_json(spark, prev)) if prev else [0.0] * N_FEATURES
         w2 = gd_step(doc_features(df), w, lr=_LOGREG_LR,
                      qk=_LOGREG_QK, scale=_LOGREG_SCALE)
         save_kv_json(spark, w2, os.path.join(state, f"v{batch_id}"))
 
-    def run_stream() -> None:
-        src = spark.readStream.schema(schema).parquet(watch)
-        q = (src.writeStream.foreachBatch(step)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
+    src = spark.readStream.schema(schema).parquet(watch)
     for k in range(_SGD_ARRIVALS):
-        adir = os.path.join(base, "arrivals", f"__a={k}")
-        for fn in os.listdir(adir):
-            if fn.endswith(".parquet"):
-                shutil.copy(os.path.join(adir, fn),
-                            os.path.join(watch, f"a{k}_{fn}"))
-        run_stream()
-    run_stream()   # no new files -> no-op (exactly-once)
+        stage_arrival(os.path.join(base, "arrivals", f"__a={k}"),
+                      watch, f"a{k}")
+        run_available_now(src, step, ckpt)
+    run_available_now(src, step, ckpt)   # no new files: no-op
 
-    vers = sorted(int(v[1:]) for v in fs_list_names(spark, state)
-                  if not v.endswith(".tmp"))
-    if len(vers) != _SGD_ARRIVALS:   # not a bare assert: -O strips it
-        raise RuntimeError(
-            f"expected {_SGD_ARRIVALS} weight versions, got {vers} — "
-            f"an arrival batch was skipped or duplicated")
-    w = list(load_kv_json(spark, os.path.join(state, f"v{vers[-1]}")))
+    w = list(load_kv_json(
+        spark, latest_version(spark, state, expect=_SGD_ARRIVALS)))
     acc = (doc_features(docs)
            .select("y", F.expr(z_expr(w)).alias("z"))
            .agg(F.expr("CAST(SUM(CASE WHEN (z >= CAST(0.0 AS"
@@ -6769,12 +6705,9 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "streaming", "similarity", "incremental"),
 )
 def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      save_kv_json)
     from xsarsea_spark.pipeline.incpca import (drift_report,
                                                moment_state)
 
@@ -6792,26 +6725,16 @@ def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
 
     def absorb(df: DataFrame, batch_id: int) -> None:
-        # merge onto the latest state version STRICTLY BELOW this
-        # batch id: a crash-replay of batch N rebuilds v{N} from
-        # v{N-1} + its own rows, never from its own partial output.
-        # State is the bounded (d^2 + d)-row int64 moment table,
-        # persisted as a JSON KV file (round 15): the per-batch
-        # read+moment_merge+write was 3 Spark jobs; the batch's own
-        # moment aggregation is the only job left, and the merge is
-        # the SAME pure int64 addition driver-side (moment_merge's
-        # documented contract).
+        # State is the bounded (d^2 + d)-row int64 moment table; the
+        # merge onto the version strictly below is the SAME pure
+        # int64 addition as moment_merge, done driver-side.
         part = {(int(r["i"]), int(r["j"])):
                 (int(r["q"]), int(r["r"]), int(r["n"]))
                 for r in moment_state(
                     df.filter("vec_id % 3 = 2"), d=_PCA_D).collect()}
-        vers = sorted(int(v[1:])
-                      for v in fs_list_names(spark, state_dir)
-                      if not v.endswith(".tmp"))
-        prev = [v for v in vers if v < batch_id]
+        prev = version_below(spark, state_dir, batch_id)
         if prev:
-            for (i, j, q, r, n) in load_kv_json(
-                    spark, os.path.join(state_dir, f"v{prev[-1]}")):
+            for (i, j, q, r, n) in load_kv_json(spark, prev):
                 old = part.get((int(i), int(j)), (0, 0, 0))
                 part[(int(i), int(j))] = (old[0] + int(q),
                                           old[1] + int(r),
@@ -6822,25 +6745,14 @@ def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
              for (i, j), (q, r, n) in sorted(part.items())],
             os.path.join(state_dir, f"v{batch_id}"))
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "embeddings.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(absorb)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    src = _file_stream(spark, sf_dir, "embeddings", schema)
+    run_available_now(src, absorb, ckpt_dir)
+    run_available_now(src, absorb, ckpt_dir)   # zero new files: no-op
 
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op (exactly-once)
-
-    vers = sorted(int(v[1:]) for v in fs_list_names(spark, state_dir)
-                  if not v.endswith(".tmp"))
     final = spark.createDataFrame(
         [(int(i), int(j), int(q), int(r), int(n))
          for i, j, q, r, n in load_kv_json(
-             spark, os.path.join(state_dir, f"v{vers[-1]}"))],
+             spark, latest_version(spark, state_dir))],
         "i int, j int, q long, r long, n long")
     return drift_report(spark.read.parquet(hist_path), final)
 
@@ -6905,10 +6817,6 @@ def q_stream_mixture_monitor(spark: SparkSession,
     import os
     import shutil
 
-    from xsarsea_spark.engine import (fs_list_names, load_kv_json,
-                                      save_kv_json)
-    from xsarsea_spark.suite.base import QTRUNC
-
     base = scratch_path(spark, "stream_mixshare", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     hist_path = os.path.join(base, "hist")
@@ -6927,45 +6835,27 @@ def q_stream_mixture_monitor(spark: SparkSession,
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
     def absorb(df: DataFrame, batch_id: int) -> None:
-        # versioned per-source BIGINT state via the Hadoop-FS JSON
-        # helpers (round 15): the per-batch read+union+agg+write was
-        # 3 Spark jobs for a source-count-sized table; the batch agg
-        # is the only job left, the strictly-below merge is exact
-        # int64 addition driver-side (same NULL-groups-merge
-        # semantics as the old groupBy)
+        # per-source BIGINT state; the merge onto the version strictly
+        # below is exact int64 addition (a NULL source is one group,
+        # as in a groupBy)
         part = {r["source"]: int(r["n_tokens"])
                 for r in counts(df.filter("doc_id % 3 = 2")).collect()}
-        vers = sorted(int(v[1:])
-                      for v in fs_list_names(spark, state_dir)
-                      if not v.endswith(".tmp"))
-        prev = [v for v in vers if v < batch_id]
+        prev = version_below(spark, state_dir, batch_id)
         if prev:
-            for src, n in load_kv_json(
-                    spark, os.path.join(state_dir, f"v{prev[-1]}")):
-                part[src] = part.get(src, 0) + int(n)
+            for source, n in load_kv_json(spark, prev):
+                part[source] = part.get(source, 0) + int(n)
         save_kv_json(spark,
                      sorted(part.items(),
                             key=lambda kv: (kv[0] is None, kv[0])),
                      os.path.join(state_dir, f"v{batch_id}"))
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(absorb)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    src = _file_stream(spark, sf_dir, "documents", schema)
+    run_available_now(src, absorb, ckpt_dir)
+    run_available_now(src, absorb, ckpt_dir)   # zero new files: no-op
 
-    run_stream()
-    run_stream()    # zero new files -> no-op (exactly-once)
-
-    vers = sorted(int(v[1:]) for v in fs_list_names(spark, state_dir)
-                  if not v.endswith(".tmp"))
     batch = spark.createDataFrame(
         [(s, int(n)) for s, n in load_kv_json(
-            spark, os.path.join(state_dir, f"v{vers[-1]}"))],
+            spark, latest_version(spark, state_dir))],
         "source string, n_tokens bigint")
     hist = spark.read.parquet(hist_path)
     s = (hist.selectExpr("source", "n_tokens AS nh")
@@ -8763,6 +8653,43 @@ def q_curated_table_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ING_BLOOM_BITS, _ING_BLOOM_K = 1 << 17, 5
 
 
+def _ingest_docs_stream(spark: SparkSession, sf_dir: str, schema,
+                        base: str, prep=None,
+                        min_chars: int = 0) -> DataFrame:
+    """Stream the documents file twice over one checkpoint through the
+    exactly-once ingest core into ``{base}/table`` (the second run
+    reads no new files: a no-op) and return the table."""
+    import os
+
+    from xsarsea_spark.pipeline.ingest import ingest_curated_batch
+
+    table_dir = os.path.join(base, "table")
+
+    def ingest(df: DataFrame, batch_id: int) -> None:
+        ingest_curated_batch(
+            spark, df, table_dir, os.path.join(base, "bloom.parquet"),
+            os.path.join(base, "bloom_sync.txt"),
+            min_chars=min_chars, zcols=["n_chars", "doc_id"],
+            zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS,
+            k=_ING_BLOOM_K, prep=prep)
+
+    src = _file_stream(spark, sf_dir, "documents", schema)
+    ckpt_dir = os.path.join(base, "ckpt")
+    run_available_now(src, ingest, ckpt_dir)
+    run_available_now(src, ingest, ckpt_dir)   # zero new files: no-op
+    return spark.read.parquet(table_dir)
+
+
+def _ingest_rollup(table: DataFrame, key: str, n_name: str) -> DataFrame:
+    """Per-``key`` row count, doc_id range and char total of an
+    ingested table."""
+    return table.groupBy(key).agg(
+        F.count(F.lit(1)).alias(n_name),
+        F.min("doc_id").alias("min_doc"),
+        F.max("doc_id").alias("max_doc"),
+        F.expr("CAST(SUM(n_chars) AS BIGINT)").alias("sum_chars"))
+
+
 def _stream_ingest_oracle() -> str:
     return f"""
 WITH curated AS (
@@ -8791,47 +8718,14 @@ FROM curated GROUP BY lang
     tags=("pipeline", "streaming", "sink", "layout"),
 )
 def q_stream_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
     import shutil
-
-    from xsarsea_spark.pipeline.ingest import ingest_curated_batch
 
     base = scratch_path(spark, "stream_curated", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    table_dir = os.path.join(base, "table")
-    bloom_path = os.path.join(base, "bloom.parquet")
-    marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-
-    def ingest(df: DataFrame, batch_id: int) -> None:
-        ingest_curated_batch(
-            spark, df, table_dir, bloom_path, marker_path,
-            min_chars=_CUR_MINCHARS, zcols=["n_chars", "doc_id"],
-            zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS, k=_ING_BLOOM_K)
-
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op (exactly-once)
-
-    back = spark.read.parquet(table_dir)
-    return back.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-        F.expr("CAST(SUM(n_chars) AS BIGINT)").alias("sum_chars"),
-    )
+    back = _ingest_docs_stream(spark, sf_dir, schema, base,
+                               min_chars=_CUR_MINCHARS)
+    return _ingest_rollup(back, "lang", "n_docs")
 
 
 # ----------------------------------------------------------------------
@@ -8885,19 +8779,12 @@ FROM kept GROUP BY domain""")
     tags=("pipeline", "streaming", "dedup", "sink"),
 )
 def q_stream_url_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
-    from xsarsea_spark.pipeline.ingest import ingest_curated_batch
     from xsarsea_spark.pipeline.urls import url_norm_steps
 
     base = scratch_path(spark, "stream_url", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    table_dir = os.path.join(base, "table")
-    bloom_path = os.path.join(base, "bloom.parquet")
-    marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
     def url_prep(df: DataFrame) -> DataFrame:
@@ -8910,33 +8797,8 @@ def q_stream_url_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                             "url_norm", "domain",
                             "md5(dup_key) AS digest")
 
-    def ingest(df: DataFrame, batch_id: int) -> None:
-        ingest_curated_batch(
-            spark, df, table_dir, bloom_path, marker_path,
-            min_chars=0, zcols=["n_chars", "doc_id"],
-            zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS,
-            k=_ING_BLOOM_K, prep=url_prep)
-
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op
-
-    back = spark.read.parquet(table_dir)
-    return back.groupBy("domain").agg(
-        F.count(F.lit(1)).alias("n_urls"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-        F.expr("CAST(SUM(n_chars) AS BIGINT)").alias("sum_chars"),
-    )
+    back = _ingest_docs_stream(spark, sf_dir, schema, base, prep=url_prep)
+    return _ingest_rollup(back, "domain", "n_urls")
 
 
 # ----------------------------------------------------------------------
@@ -8978,7 +8840,6 @@ FROM kept GROUP BY lang
 )
 def q_stream_neardup_ingest(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
 
@@ -9000,26 +8861,12 @@ def q_stream_neardup_ingest(spark: SparkSession,
             seen_dir, bands_dir, marker_path,
             n=_MH_N, k=_MH_K, threshold=_MH_T)
 
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    src = _file_stream(spark, sf_dir, "documents", schema)
+    run_available_now(src, ingest, ckpt_dir)
+    run_available_now(src, ingest, ckpt_dir)   # zero new files: no-op
 
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op (exactly-once)
-
-    back = spark.read.parquet(seen_dir).filter("accepted")
-    return back.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-        F.expr("CAST(SUM(n_chars) AS BIGINT)").alias("sum_chars"),
-    )
+    return _ingest_rollup(spark.read.parquet(seen_dir).filter("accepted"),
+                          "lang", "n_docs")
 
 
 # ----------------------------------------------------------------------
@@ -10361,19 +10208,13 @@ FROM kept GROUP BY domain
 )
 def q_stream_robots_ingest(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
-    from xsarsea_spark.pipeline.ingest import ingest_curated_batch
     from xsarsea_spark.pipeline.robots import (robots_rules_df,
                                                with_robots_verdict)
 
     base = scratch_path(spark, "stream_robots", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    table_dir = os.path.join(base, "table")
-    bloom_path = os.path.join(base, "bloom.parquet")
-    marker_path = os.path.join(base, "bloom_sync.txt")
-    ckpt_dir = os.path.join(base, "ckpt")
 
     # offline artifact: rules compiled once from the historical
     # corpus (domains are source-cardinality; one robots.txt per
@@ -10393,34 +10234,10 @@ def q_stream_robots_ingest(spark: SparkSession,
                 .withColumn("digest",
                             F.expr("md5(concat(domain, path))")))
 
-    def ingest(df: DataFrame, batch_id: int) -> None:
-        ingest_curated_batch(
-            spark, df, table_dir, bloom_path, marker_path,
-            min_chars=0, zcols=["n_chars", "doc_id"],
-            zbits=_CUR_BITS, m_bits=_ING_BLOOM_BITS,
-            k=_ING_BLOOM_K, prep=robots_prep)
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-
-    def run_stream() -> None:
-        src = (spark.readStream.schema(schema)
-               .option("pathGlobFilter", "documents.parquet")
-               .parquet(sf_dir))
-        q = (src.writeStream.foreachBatch(ingest)
-             .option("checkpointLocation", ckpt_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run_stream()
-    run_stream()    # second run: zero new files -> no-op
-
-    back = spark.read.parquet(table_dir)
-    return back.groupBy("domain").agg(
-        F.count(F.lit(1)).alias("n_urls"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-        F.expr("CAST(SUM(n_chars) AS BIGINT)").alias("sum_chars"))
+    back = _ingest_docs_stream(spark, sf_dir, schema, base,
+                               prep=robots_prep)
+    return _ingest_rollup(back, "domain", "n_urls")
 
 
 # ----------------------------------------------------------------------
