@@ -363,7 +363,7 @@ def test_sample_frac_one_is_exact(spark):
 def test_sample_frac_conf_and_round1_exact(spark):
     """Sampled training is deterministic (seeded per round), keeps the
     merge-table schema, and round 1 always matches the exact top pair
-    (it is never sampled). The conf knob routes the same path."""
+    (it is never sampled)."""
     from xsarsea_spark.pipeline.bpe import bpe_train
 
     docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
@@ -377,11 +377,3 @@ def test_sample_frac_conf_and_round1_exact(spark):
     assert tuple(s1[0])[:3] == tuple(exact[0])[:3]  # round 1 exact
     assert {f for f in s1[0].asDict()} == {
         "merge_rank", "lhs", "rhs", "pair_count"}
-
-    spark.conf.set("spark.xsarsea.bpe.sampleFrac", "0.5")
-    try:
-        via_conf = sorted(bpe_train(docs, n_merges=3).collect(),
-                          key=lambda r: r["merge_rank"])
-    finally:
-        spark.conf.unset("spark.xsarsea.bpe.sampleFrac")
-    assert [tuple(r) for r in via_conf] == [tuple(r) for r in s1]

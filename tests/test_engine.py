@@ -10,23 +10,22 @@ contract the 100x-scale story depends on:
   ``checkpoint()`` path — and the results are value-identical;
 - an iterative operator (dup_components) produces the same labeling
   both ways;
-- ``spark.xsarsea.*`` tunables default to the historical literals and
-  are overridable at runtime without code edits.
+- the package reads only the deployment keys of the ``spark.xsarsea.*``
+  namespace; operator tuning is keyword arguments.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import re
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from xsarsea_spark.engine import (
-    CONF_CHECKPOINT_DIR,
-    get_conf_int,
-    materialize,
-)
+from xsarsea_spark.engine import CONF_CHECKPOINT_DIR, materialize
 
 
 @pytest.fixture()
@@ -72,60 +71,14 @@ def test_iterative_operator_identical_both_ways(spark, ckpt_dir):
     )
     # force the distributed label-propagation path so materialize is
     # actually in the loop (driver union-find would bypass it)
-    spark.conf.set("spark.xsarsea.components.localThreshold", "0")
-    try:
-        local = sorted(
-            tuple(r) for r in dup_components(pairs).collect())
-        spark.conf.set(CONF_CHECKPOINT_DIR, ckpt_dir)
-        reliable = sorted(
-            tuple(r) for r in dup_components(pairs).collect())
-    finally:
-        spark.conf.unset("spark.xsarsea.components.localThreshold")
+    local = sorted(tuple(r) for r in
+                   dup_components(pairs, local_threshold=0).collect())
+    spark.conf.set(CONF_CHECKPOINT_DIR, ckpt_dir)
+    reliable = sorted(tuple(r) for r in
+                      dup_components(pairs, local_threshold=0).collect())
     assert local == reliable
     assert local == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
                      (20, 20), (21, 20), (22, 20)]
-
-
-def test_conf_defaults_match_literals(spark):
-    # defaults must equal the historical literals so behavior is
-    # unchanged on deployments that set nothing
-    assert get_conf_int(
-        spark, "spark.xsarsea.components.localThreshold", 2_000_000
-    ) == 2_000_000
-    assert get_conf_int(spark, "spark.xsarsea.gradients.tile", 512) == 512
-    assert get_conf_int(spark, "spark.xsarsea.gradients.halo", 32) == 32
-    spark.conf.set("spark.xsarsea.gradients.tile", "256")
-    try:
-        assert get_conf_int(
-            spark, "spark.xsarsea.gradients.tile", 512) == 256
-    finally:
-        spark.conf.unset("spark.xsarsea.gradients.tile")
-
-
-def test_gradients_tile_conf_round_trip(spark):
-    """local_gradients with conf-set tile == explicit-kwarg tile."""
-    import numpy as np
-
-    from xsarsea_spark.operators.gradients import local_gradients
-
-    rng = np.random.default_rng(7)
-    n = 64
-    vals = rng.uniform(0.01, 1.0, size=(n, n))
-    rows = [(int(i), int(j), float(vals[i, j]))
-            for i in range(n) for j in range(n)]
-    px = spark.createDataFrame(rows, "line int, sample int, sigma0 double")
-
-    want = local_gradients(px, n, n, tile=32, halo=20).orderBy(
-        "line4", "sample4").collect()
-    spark.conf.set("spark.xsarsea.gradients.tile", "32")
-    spark.conf.set("spark.xsarsea.gradients.halo", "20")
-    try:
-        got = local_gradients(px, n, n).orderBy(
-            "line4", "sample4").collect()
-    finally:
-        spark.conf.unset("spark.xsarsea.gradients.tile")
-        spark.conf.unset("spark.xsarsea.gradients.halo")
-    assert got == want
 
 
 def test_scratch_path_respects_conf_and_isolates_keys(spark):
@@ -141,3 +94,25 @@ def test_scratch_path_respects_conf_and_isolates_keys(spark):
         assert moved.rsplit("_", 1)[1] == default.rsplit("_", 1)[1]
     finally:
         spark.conf.unset("spark.xsarsea.scratch.dir")
+
+
+def test_package_reads_only_deployment_conf_keys():
+    """Operator tuning is keyword arguments: the only ``spark.xsarsea.*``
+    keys the package names are the deployment settings and the contract
+    check switch. A string constant that is a key (no whitespace, so not
+    prose) or a bare key prefix for building one counts as a read."""
+    import xsarsea_spark
+
+    allowed = {"spark.xsarsea.scratch.dir", "spark.xsarsea.checkpoint.dir",
+               "spark.xsarsea.psl.path", "spark.xsarsea.debug.checks"}
+    key = re.compile(r"spark\.xsarsea\.\S*")
+    root = pathlib.Path(xsarsea_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and key.fullmatch(node.value)):
+                found.add((node.value, str(path.relative_to(root))))
+    assert {k for k, _ in found} == allowed, sorted(
+        (k, f) for k, f in found if k not in allowed)

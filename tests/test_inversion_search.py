@@ -139,8 +139,8 @@ def test_coarse_bitequal_on_gmf_consistent_pixels(luts):
 
 
 def test_spark_end_to_end_flag(spark, luts):
-    """invert_from_model honors the conf flag and both modes agree
-    through the full mapInPandas plan."""
+    """invert_from_model honors the ``search`` keyword and both modes
+    agree through the full mapInPandas plan."""
     pdf = _pixels(800, 3)
     lin = pdf.copy()
     # invert_from_model takes LINEAR sigma0 and does its own dB inside

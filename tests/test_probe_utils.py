@@ -62,11 +62,11 @@ def test_timing_logs(caplog):
 
 def test_load_config_defaults_and_override(tmp_path):
     cfg = load_config(str(tmp_path / "none.json"))
-    assert cfg["lut_broadcast_row_limit"] == 1_000_000
+    assert cfg["data_dir"] == "/tmp/xsarsea_spark_data"
     p = tmp_path / "c.json"
-    p.write_text(json.dumps({"default_tile": 128}))
+    p.write_text(json.dumps({"data_dir": "/data/luts"}))
     cfg = load_config(str(p))
-    assert cfg["default_tile"] == 128
+    assert cfg["data_dir"] == "/data/luts"
 
 
 def test_export_all_luts(spark, tmp_path):

@@ -1,0 +1,57 @@
+"""Spark-side string literals built from data keep their exact value.
+
+Spark's SQL parser reads backslash escapes inside quotes, so a literal
+that only doubles ``'`` turns ``a\\b`` into ``a<backspace>``, ``\\n``
+into a newline, and fails to parse a value that ends in a backslash.
+Each case below is checked through ``expr.spark_str_lit`` and through
+the operators that inline data values as SQL literals (BPE merge
+pairs, grouped-classifier group keys).
+"""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from xsarsea_spark.expr import spark_str_lit
+
+ADVERSARIAL = [
+    "a\\b",            # backslash escape
+    "tail\\",          # trailing backslash
+    "it's",            # quote
+    "l1\nl2",          # newline
+    "é\\n中",          # non-ASCII around a backslash-n pair
+]
+
+
+@pytest.mark.parametrize("s", ADVERSARIAL)
+def test_spark_str_lit_round_trips(spark, s):
+    assert spark.sql(f"SELECT {spark_str_lit(s)} AS v").first()["v"] == s
+
+
+def test_merge_expr_matches_adversarial_tokens(spark):
+    from xsarsea_spark.pipeline.bpe import apply_merge_expr
+
+    rows = [([s, "x", s, "x"],) for s in ADVERSARIAL]
+    df = spark.createDataFrame(rows, "t array<string>")
+    for s in ADVERSARIAL:
+        got = [list(r["m"]) for r in df.select(
+            F.expr(apply_merge_expr("t", s, "x")).alias("m")).collect()]
+        assert [s + " x", s + " x"] in got, s
+
+
+def test_grouped_train_adversarial_group_keys(spark):
+    from xsarsea_spark.pipeline.classifier import (N_FEATURES,
+                                                   train_logreg,
+                                                   train_logreg_grouped)
+
+    rows = [(g, [1.0] + [float((i + k) % 3)
+                         for k in range(1, N_FEATURES)], float(i % 2))
+            for i, g in enumerate(ADVERSARIAL * 2)]
+    xy = spark.createDataFrame(rows,
+                               "lang string, x array<double>, y double")
+    wmap = train_logreg_grouped(xy, "lang", rounds=1)
+    assert sorted(wmap) == sorted(ADVERSARIAL)
+    for g in ADVERSARIAL:
+        solo = train_logreg(xy.filter(F.col("lang") == g), rounds=1)
+        assert wmap[g] == solo, g

@@ -144,12 +144,7 @@ def test_ladder_cache_reuse_and_invalidation(spark, monkeypatch,
             assert sorted(map(tuple, got.collect())) \
                 == sorted(map(tuple, want.collect()))
         assert len(t1) == len(t2) == 5
-        # conf off routes straight to the uncached builder
-        spark.conf.set("spark.xsarsea.suffix.cache", "false")
-        sfx.suffix_rank_tables_cached(docs, 4)
-        assert calls["n"] == 4
     finally:
-        spark.conf.unset("spark.xsarsea.suffix.cache")
         spark.conf.unset("spark.xsarsea.scratch.dir")
 
 

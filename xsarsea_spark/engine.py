@@ -17,18 +17,19 @@ Two concerns every iterative operator in this engine shares:
    (correct and fastest for single-node test runs).  Results are
    identical either way — only the fault-tolerance story changes.
 
-2. **Tunables without code edits.** Thresholds that a 100×-scale
-   operator would want to turn (driver union-find cutoff, tile/halo
-   sizes) read from the ``spark.xsarsea.*`` conf namespace with the
-   current literals as defaults, so behavior is unchanged unless a
-   deployment overrides them.
+2. **Deployment settings without code edits.** The durable
+   checkpoint directory, the scratch root for persisted operator
+   state, the suffix-list file and the contract-check switch read from
+   the ``spark.xsarsea.*`` conf namespace (see ``get_conf``). Operator
+   tuning (tile and halo sizes, partition counts, thresholds, search
+   strategy) is passed as keyword arguments, not read from the conf.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["materialize", "get_conf", "get_conf_int", "CONF_CHECKPOINT_DIR",
+__all__ = ["materialize", "get_conf", "CONF_CHECKPOINT_DIR",
            "scratch_path", "CONF_SCRATCH_DIR",
            "save_kv_json", "load_kv_json", "fs_list_names",
            "fs_write_text", "fs_read_text", "fs_exists"]
@@ -39,19 +40,17 @@ CONF_CHECKPOINT_DIR = "spark.xsarsea.checkpoint.dir"
 def get_conf(spark: SparkSession, key: str, default: str) -> str:
     """Read ``key`` from the session conf, falling back to ``default``.
 
-    All engine tunables live under the ``spark.xsarsea.`` prefix; they
-    are runtime-settable (plain conf entries, not SQL confs), so a
-    cluster operator can tune them per-job with ``--conf``.
+    The package reads four keys, all plain runtime conf entries a
+    deployment sets with ``--conf``: the directories
+    ``spark.xsarsea.checkpoint.dir`` and ``spark.xsarsea.scratch.dir``,
+    the ``spark.xsarsea.psl.path`` suffix-list file, and the
+    ``spark.xsarsea.debug.checks`` switch for operator contract checks.
     """
     try:
         v = spark.conf.get(key, None)
     except Exception:
         v = None
     return default if v is None else v
-
-
-def get_conf_int(spark: SparkSession, key: str, default: int) -> int:
-    return int(get_conf(spark, key, str(default)))
 
 
 def _reliable_dir(spark: SparkSession) -> str | None:

@@ -34,6 +34,8 @@ __all__ = [
     "Expr",
     "var",
     "lit",
+    "double_lit",
+    "spark_str_lit",
     "where",
     "exp",
     "ln",
@@ -46,15 +48,18 @@ __all__ = [
     "atan2",
     "radians",
     "degrees",
-    "absval",
     "floor",
     "least",
     "greatest",
 ]
 
 
-def _fmt_float(v: float) -> str:
-    """Format a float literal so both Spark and DuckDB parse it as DOUBLE."""
+def double_lit(v: float) -> str:
+    """SQL text for ``v`` that both Spark and DuckDB parse as DOUBLE.
+
+    Finite values keep ``repr``'s shortest round-trip digits in exponent
+    form (``0.004`` -> ``0.004e0``); NaN and +-inf get the forms that
+    both engines evaluate without an ANSI-mode error."""
     if v != v:  # NaN (CAST form: 0e0/0e0 throws under Spark ANSI mode)
         return "CAST('NaN' AS DOUBLE)"
     if math.isinf(v):
@@ -64,6 +69,16 @@ def _fmt_float(v: float) -> str:
         return r
     # '0.004' -> '0.004e0', '40.0' -> '40.0e0' : exponent => DOUBLE in both
     return r + "e0"
+
+
+def spark_str_lit(s: str) -> str:
+    """Spark SQL string literal holding exactly ``s``.
+
+    Spark's parser reads backslash escapes (``\\b``, ``\\n``,
+    ``\\u0041``) inside quotes, so ``\\`` is doubled before ``'`` is.
+    Spark-only: DuckDB reads backslashes literally, so its literals
+    double ``'`` alone."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def _as_expr(x) -> "Expr":
@@ -142,7 +157,7 @@ class Lit(Expr):
         self.is_int = is_int
 
     def sql(self) -> str:
-        return str(self.v) if self.is_int else _fmt_float(self.v)
+        return str(self.v) if self.is_int else double_lit(self.v)
 
     def ev(self, env):
         return self.v
@@ -329,10 +344,6 @@ def radians(x):
 
 def degrees(x):
     return Call("degrees", [x])
-
-
-def absval(x):
-    return Call("abs", [x])
 
 
 def floor(x):

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from xsarsea_spark.expr import double_lit
 from xsarsea_spark.functions.gmfs import GMF_REGISTRY, gmf_sql
 from xsarsea_spark.suite.base import DAVG, QTRUNC
 
@@ -51,8 +52,8 @@ def detrend_profile(
     """
     if model not in GMF_REGISTRY:
         raise KeyError(f"unknown model {model!r}")
-    wspd_lit = _dlit(wind_speed_gmf)
-    phi_lit = _dlit(wind_dir_gmf)
+    wspd_lit = double_lit(wind_speed_gmf)
+    phi_lit = double_lit(wind_dir_gmf)
     sig_sql = gmf_sql(model, inc=inc_col, wspd=wspd_lit, phi=phi_lit)
 
     # project the (large) GMF expression ONCE into a column, then
@@ -111,9 +112,3 @@ def sigma0_detrend(
         .withColumn(out_col, F.col(sigma0_col) / F.col("gmf_ratio"))
         .drop("gmf_ratio")
     )
-
-
-def _dlit(v: float) -> str:
-    """Double literal, exponent form so Spark/DuckDB parse as DOUBLE."""
-    r = repr(float(v))
-    return r if ("e" in r or "E" in r) else r + "e0"

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xsarsea_spark.expr import double_lit
+
 __all__ = [
     "local_gradients",
     "local_gradients_numpy",
@@ -56,11 +58,6 @@ __all__ = [
     "B2", "B4", "SCHARR_X", "SCHARR_Y", "CIRC_KERNEL",
 ]
 
-
-def _dlit(v: float) -> str:
-    """Double literal, exponent form (DOUBLE in Spark and DuckDB)."""
-    r = repr(float(v))
-    return r if ("e" in r or "E" in r) else r + "e0"
 
 # ----------------------------------------------------------------------
 # Kernels (all dyadic -> exact float weights)
@@ -213,8 +210,8 @@ def local_gradients(
     value_col: str = "sigma0",
     line_col: str = "line",
     sample_col: str = "sample",
-    tile: int | None = None,
-    halo: int | None = None,
+    tile: int = 512,
+    halo: int = 20,
 ) -> DataFrame:
     """Distributed local_gradients: the full stencil pyramid as ONE
     tile+halo ``applyInPandas`` pass.
@@ -230,17 +227,9 @@ def local_gradients(
     pure replication overhead (each shrinks the interior share of
     every shipped tile), and 20 measures ~20% faster than the old 32
     while remaining bit-exact (pytest-pinned vs halo=32 and the
-    whole-image NumPy twin). Defaults read from
-    ``spark.xsarsea.gradients.{tile,halo}`` (512/20) so a cluster
-    deployment can size tiles to executor memory without code edits.
+    whole-image NumPy twin). A deployment sizes tiles to executor
+    memory by passing ``tile``.
     """
-    from xsarsea_spark.engine import get_conf_int
-    if tile is None:
-        tile = get_conf_int(px.sparkSession,
-                            "spark.xsarsea.gradients.tile", 512)
-    if halo is None:
-        halo = get_conf_int(px.sparkSession,
-                            "spark.xsarsea.gradients.halo", 20)
     if tile % 4 or halo % 4:
         raise ValueError("tile and halo must be multiples of 4")
     work = _with_halo_tiles(
@@ -298,7 +287,7 @@ def _bin_axis(n_angles: int) -> tuple[str, str]:
     """SQL literals of the first bin centre and the bin width of
     ``n_angles`` direction bins over [-pi/2, pi/2)."""
     bstep = np.pi / n_angles
-    return _dlit(-np.pi / 2 + bstep / 2.0), _dlit(bstep)
+    return double_lit(-np.pi / 2 + bstep / 2.0), double_lit(bstep)
 
 
 def gradient_histogram(
@@ -332,7 +321,7 @@ def gradient_histogram(
     ncand = -(-window // step)          # ceil
     offsets = ", ".join(f"named_struct('__kl', {i}, '__ks', {j})"
                         for i in range(ncand) for j in range(ncand))
-    wpx = _dlit(float(window * window))
+    wpx = double_lit(float(window * window))
     start, bstep = _bin_axis(n_angles)
     part = "OVER (PARTITION BY __wl, __ws)"
 
@@ -387,7 +376,7 @@ def circ_smooth(hist: DataFrame, n_angles: int = 72,
 
     half = len(CIRC_KERNEL) // 2
     taps = ", ".join(
-        f"named_struct('__d', {i - half}, '__tapw', {_dlit(float(wv))})"
+        f"named_struct('__d', {i - half}, '__tapw', {double_lit(float(wv))})"
         for i, wv in enumerate(CIRC_KERNEL) if wv != 0.0)
     keys = [f"`{k}`" for k in key_cols]
     j = hist.selectExpr(
@@ -531,20 +520,12 @@ def filtering_parameters(
     value_col: str = "sigma0",
     line_col: str = "line",
     sample_col: str = "sample",
-    tile: int | None = None,
-    halo: int | None = None,
+    tile: int = 256,
+    halo: int = 48,
 ) -> DataFrame:
     """Distributed rain/texture mask: the whole Zhao-2021 chain fused
     into ONE tile+halo applyInPandas pass (halo 48 covers the deepest
-    stencil chain: R2 + Mean-of-G3 on the /4 grid). Defaults read from
-    ``spark.xsarsea.rainmask.{tile,halo}`` (256/48)."""
-    from xsarsea_spark.engine import get_conf_int
-    if tile is None:
-        tile = get_conf_int(px.sparkSession,
-                            "spark.xsarsea.rainmask.tile", 256)
-    if halo is None:
-        halo = get_conf_int(px.sparkSession,
-                            "spark.xsarsea.rainmask.halo", 48)
+    stencil chain: R2 + Mean-of-G3 on the /4 grid)."""
     if tile % 4 or halo % 4:
         raise ValueError("tile and halo must be multiples of 4")
     work = _with_halo_tiles(

@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 from xsarsea_spark.functions.gmfs import GMF_REGISTRY
 from xsarsea_spark.operators.lut import axis_from_range, gmf_lut_numpy
 
-__all__ = ["invert_from_model", "prepare_luts", "crosspol_wspd_lut_db"]
+__all__ = ["invert_from_model", "prepare_luts"]
 
 _D_ANTENNA = 2.0
 _D_AZI = 2.0
@@ -123,13 +123,6 @@ def _lut_broadcast(sc, key: tuple):
     if key not in made:
         made[key] = sc.broadcast(luts)
     return made[key]
-
-
-def crosspol_wspd_lut_db(cr_model: str, inc_step: float = 1.0,
-                         wspd_step: float = 0.1) -> dict:
-    """Crosspol LUT alone (for the SQL-checkable crosspol inversion)."""
-    return prepare_luts(None, cr_model, inc_step=inc_step,
-                        cr_wspd_step=wspd_step)["cr"]
 
 
 def _nearest_idx(x: np.ndarray, x0: float, step: float, n: int) -> np.ndarray:
@@ -396,7 +389,7 @@ def invert_from_model(
     lut_wspd_step: float = 0.2,
     lut_phi_step: float = 2.5,
     lut_cr_wspd_step: float = 0.1,
-    search: str | None = None,
+    search: str = "coarse",
 ) -> DataFrame:
     """Distributed wind inversion; returns keep_cols + wind (re, im) pairs.
 
@@ -406,16 +399,12 @@ def invert_from_model(
     ``search`` picks the copol argmin strategy: ``"coarse"`` (default;
     exact per-pixel pruning, bit-identical to exhaustive — see
     ``_copol_pruned``) or ``"exhaustive"`` (every LUT cell, the
-    reference the pruned search is tested against). Defaults from
-    ``spark.xsarsea.inversion.search``. LUTs come from the memoized
-    :func:`prepare_luts` and are broadcast once per SparkContext, so
-    repeated calls skip both the driver-side fold and the shipping.
+    reference the pruned search is tested against). LUTs come from the
+    memoized :func:`prepare_luts` and are broadcast once per
+    SparkContext, so repeated calls skip both the driver-side fold and
+    the shipping.
     """
-    from xsarsea_spark.engine import get_conf
-
     spark = px.sparkSession
-    if search is None:
-        search = get_conf(spark, "spark.xsarsea.inversion.search", "coarse")
     b_luts = _lut_broadcast(spark.sparkContext, (
         co_model, cr_model, lut_inc_step, lut_wspd_step, lut_phi_step,
         lut_cr_wspd_step))

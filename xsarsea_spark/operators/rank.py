@@ -35,12 +35,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from xsarsea_spark.engine import get_conf, get_conf_int, materialize
+from xsarsea_spark.engine import get_conf, materialize
 
 __all__ = ["global_rank", "ntile_distributed", "ntile_grouped",
            "prefix_max"]
 
-CONF_RANK_PARTITIONS = "spark.xsarsea.rank.partitions"
 CONF_DEBUG_CHECKS = "spark.xsarsea.debug.checks"
 
 
@@ -61,9 +60,8 @@ def global_rank(df: DataFrame, order_by: list[Column],
     from the single-partition window by rounding order.
     """
     spark = df.sparkSession
-    n = partitions or get_conf_int(
-        spark, CONF_RANK_PARTITIONS,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    n = partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions", "32"))
     sums = running_sums or {}
     ranged = materialize(
         df.repartitionByRange(n, *order_by)
@@ -123,9 +121,8 @@ def prefix_max(df: DataFrame, order_by: list[Column], src: str,
                 f"({chk['__n']} rows, {chk['__d']} distinct keys) — "
                 "ties straddling a range-partition boundary make the "
                 "exclusive frame ambiguous; add a tie-breaking key")
-    n = partitions or get_conf_int(
-        spark, CONF_RANK_PARTITIONS,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    n = partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions", "32"))
     ranged = materialize(
         df.repartitionByRange(n, *order_by)
         .withColumn("__pid", F.spark_partition_id()))

@@ -42,9 +42,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xsarsea_spark.engine import materialize
+from xsarsea_spark.expr import spark_str_lit
 
 __all__ = ["bpe_train", "bpe_encode", "bpe_bytelevel_encode",
-           "bytelevel_pretokens", "apply_merge_expr",
+           "apply_merge_expr",
            "GPT2_PRETOKEN_PAT", "bpe_save_merges", "bpe_load_merges",
            "bpe_apply", "bpe_apply_bytelevel", "bpe_bytelevel_train"]
 
@@ -62,10 +63,6 @@ GPT2_PRETOKEN_PAT = (r"'s|'t|'re|'ve|'m|'ll|'d"
                      r"| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+")
 
 
-def _lit(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 def apply_merge_expr(col: str, a: str, b: str) -> str:
     """Spark SQL expression: token array ``col`` with every
     greedy-leftmost (a, b) adjacency merged into one token.
@@ -74,7 +71,7 @@ def apply_merge_expr(col: str, a: str, b: str) -> str:
     each computed once per row); all 1-based array ops, ANSI-safe
     (the size<2 guard keeps ``sequence`` ascending).
     """
-    la, lb = _lit(a), _lit(b)
+    la, lb = spark_str_lit(a), spark_str_lit(b)
     occ = (f"CASE WHEN size({col}) < 2 THEN array() "
            f"ELSE filter(sequence(1, size({col}) - 1),"
            f" p -> element_at({col}, p) = {la}"
@@ -105,27 +102,23 @@ def apply_merge_expr(col: str, a: str, b: str) -> str:
 
 def _bpe_rounds(docs: DataFrame, n_merges: int, text_col: str,
                 id_col: str, apply_last: bool,
-                sample_frac: float | None = None,
+                sample_frac: float = 1.0,
                 ) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
     """Shared training loop: returns (final tokenized corpus, merge
     list). ``apply_last`` controls whether the last learned merge is
     also applied to the corpus (encode needs it; train's merge table
     does not, saving one checkpointed rebuild).
 
-    ``sample_frac`` (default: exact, or ``spark.xsarsea.bpe.sampleFrac``
-    if set) is the 100-TB knob: with ``0 < frac < 1``, pair counting
-    after the FIRST round runs on a deterministic Bernoulli sample of
-    the corpus — the shape production tokenizer trainers use, since
-    top-pair ranks stabilize after the early rounds while each exact
-    round still scans the full corpus. Round 1 always counts exactly
-    (it fixes the highest-impact merge), merge APPLICATION always
-    rewrites the full corpus (the encode output must be exact), and
-    the default path stays exact for the DuckDB oracle.
+    ``sample_frac`` (default 1.0: exact) is the 100-TB knob: with
+    ``0 < frac < 1``, pair counting after the FIRST round runs on a
+    deterministic Bernoulli sample of the corpus — the shape
+    production tokenizer trainers use, since top-pair ranks stabilize
+    after the early rounds while each exact round still scans the
+    full corpus. Round 1 always counts exactly (it fixes the
+    highest-impact merge), merge APPLICATION always rewrites the full
+    corpus (the encode output must be exact), and the default path
+    stays exact for the DuckDB oracle.
     """
-    if sample_frac is None:
-        from xsarsea_spark.engine import get_conf
-        sample_frac = float(get_conf(
-            docs.sparkSession, "spark.xsarsea.bpe.sampleFrac", "1.0"))
     cur = (
         docs.filter(F.col(text_col).isNotNull())
         .selectExpr(id_col, f"split({text_col}, ' ') AS __t")
@@ -221,7 +214,7 @@ def _merge_rounds_weighted(wf: DataFrame, n_merges: int,
 def bpe_train(docs: DataFrame, n_merges: int = 4,
               text_col: str = "text",
               id_col: str = "doc_id",
-              sample_frac: float | None = None) -> DataFrame:
+              sample_frac: float = 1.0) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns the merge table
     (merge_rank, lhs, rhs, pair_count). ``sample_frac`` < 1 counts
     pairs on a corpus sample after round 1 (see ``_bpe_rounds``)."""
@@ -236,7 +229,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 4,
 def bpe_encode(docs: DataFrame, n_merges: int = 4,
                text_col: str = "text",
                id_col: str = "doc_id",
-               sample_frac: float | None = None) -> DataFrame:
+               sample_frac: float = 1.0) -> DataFrame:
     """Train ``n_merges`` merges AND apply them all: per document the
     raw/encoded token counts, the compression ratio, and an md5
     digest of the encoded token stream (tokens joined on chr(31),
@@ -414,26 +407,11 @@ def bpe_apply_bytelevel(docs: DataFrame, merges: DataFrame,
     )
 
 
-def bytelevel_pretokens(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
-    """GPT-2-style byte-level pre-tokenization: one row per pre-token
-    with its 1-based position and the byte-symbol array.
-
-    Byte fallback: each pre-token becomes its UTF-8 bytes, one symbol
-    per byte — so NO text is ever out-of-vocabulary, the property the
-    GPT-2 byte-level design exists for. The symbol alphabet is the
-    byte's two-char uppercase hex ("E2", "80", ...) rather than
-    GPT-2's printable-unicode remap table: an equivalent injective
-    byte naming that both engines derive with ``hex(encode(tok))``
-    (bit-identical cross-engine), keeping the plumbing table-free.
-    """
-    return _bytelevel_pre(docs, text_col, id_col).selectExpr(
-        id_col, "__pt", f"{_HEX_SYMBOLS_SQL} AS __t")
-
-
 # the byte-symbol expansion of one pre-token string: its UTF-8 bytes
-# as two-char uppercase hex symbols (injective byte naming — see
-# bytelevel_pretokens). Applied to DISTINCT pre-tokens wherever
+# as two-char uppercase hex symbols ("E2", "80", ...) — byte fallback,
+# so no text is ever out-of-vocabulary. An injective byte naming both
+# engines derive with hex(encode(tok)), in place of GPT-2's
+# printable-unicode remap table. Applied to DISTINCT pre-tokens wherever
 # possible: hex() over every corpus occurrence costs corpus-scale
 # string work for a vocabulary-scale result.
 _HEX_SYMBOLS_SQL = (
@@ -477,15 +455,11 @@ def _bytelevel_vocab(pre: DataFrame) -> DataFrame:
 def bpe_bytelevel_train(docs: DataFrame, n_merges: int = 4,
                         text_col: str = "text",
                         id_col: str = "doc_id",
-                        sample_frac: float | None = None) -> DataFrame:
+                        sample_frac: float = 1.0) -> DataFrame:
     """Learn ``n_merges`` byte-level merges (GPT-2 pre-tokenization +
     byte-fallback symbols); returns the same (merge_rank, lhs, rhs,
     pair_count) artifact shape as ``bpe_train`` — persist it with
     ``bpe_save_merges`` and encode with ``bpe_apply_bytelevel``."""
-    if sample_frac is None:
-        from xsarsea_spark.engine import get_conf
-        sample_frac = float(get_conf(
-            docs.sparkSession, "spark.xsarsea.bpe.sampleFrac", "1.0"))
     pre = _bytelevel_pre(docs, text_col, id_col)
     # train on the distinct pre-token frequency table: counts (and
     # therefore merges and tie-breaks) are exactly the corpus counts
@@ -504,7 +478,7 @@ def bpe_bytelevel_train(docs: DataFrame, n_merges: int = 4,
 def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4,
                          text_col: str = "text",
                          id_col: str = "doc_id",
-                         sample_frac: float | None = None) -> DataFrame:
+                         sample_frac: float = 1.0) -> DataFrame:
     """GPT-2-style byte-level BPE: regex pre-tokenization (merges
     never cross pre-token boundaries), byte-fallback symbols, then
     the same distributed merge loop as word-level BPE — the tokenizer
@@ -526,13 +500,9 @@ def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4,
     are EXACTLY the corpus counts, so merges and tie-breaks are
     unchanged), instead of rescanning and rewriting the corpus per
     round. The final per-doc rollup is one hash agg. ``sample_frac``
-    (or ``spark.xsarsea.bpe.sampleFrac``) samples the post-round-1
+    samples the post-round-1
     counts over distinct pre-tokens (see _merge_rounds_weighted).
     """
-    if sample_frac is None:
-        from xsarsea_spark.engine import get_conf
-        sample_frac = float(get_conf(
-            docs.sparkSession, "spark.xsarsea.bpe.sampleFrac", "1.0"))
     pre = _bytelevel_pre(docs, text_col, id_col)
     vocab = materialize(_bytelevel_vocab(pre))
     wf = vocab.select("__t0", "__f", F.col("__t0").alias("__t"))

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xsarsea_spark.expr import spark_str_lit
+
 __all__ = ["doc_features", "gd_step", "train_logreg",
            "train_logreg_grouped", "score_docs", "save_weights",
            "load_weights", "GROUPED_Z_SQL", "N_FEATURES",
@@ -189,8 +191,8 @@ def train_logreg_grouped(xy: DataFrame, group_col: str = "lang",
         tin = txy.filter(F.col(group_col).isin(list(groups)))
         for _ in range(rounds):
             wcase = ("CASE " + " ".join(
-                "WHEN {c} = '{g}' THEN {arr}".format(
-                    c=group_col, g=str(g).replace("'", "''"),
+                "WHEN {c} = {g} THEN {arr}".format(
+                    c=group_col, g=spark_str_lit(str(g)),
                     arr=_w_lit(w[g]))
                 for g in groups) + " END")
             z = (f"aggregate(zip_with({wcase}, x, (a, b) -> a * b),"

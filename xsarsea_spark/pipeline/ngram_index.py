@@ -32,9 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["ngram_occurrences", "ngram_stats", "continuation_stats",
-           "backoff_longest_suffix", "sa_backoff_longest_suffix",
-           "sa_gram_counts", "sa_occurrence_positions",
+__all__ = ["ngram_occurrences", "ngram_stats", "backoff_longest_suffix",
+           "sa_backoff_longest_suffix", "sa_gram_counts",
+           "sa_occurrence_positions",
            "sa_continuation", "sa_infinigram_lm"]
 
 
@@ -75,28 +75,6 @@ def ngram_stats(occ: DataFrame,
     return (occ.groupBy("n", "gram")
             .agg(F.count(F.lit(1)).alias("cnt"),
                  F.countDistinct(id_col).alias("doc_freq")))
-
-
-def continuation_stats(occ: DataFrame,
-                       query_grams: DataFrame) -> DataFrame:
-    """(n, gram, cont_distinct, top_cont, top_cont_cnt) for the
-    grams in ``query_grams`` (n, gram) — the broadcast semi-join
-    prunes the occurrence stream before any shuffle; the top
-    continuation is the struct-order argmax (highest count, ties to
-    the lexicographically smallest token)."""
-    hits = (occ.join(F.broadcast(query_grams.select("n", "gram")),
-                     on=["n", "gram"])
-            .filter(F.col("cont").isNotNull())
-            .groupBy("n", "gram", "cont")
-            .agg(F.count(F.lit(1)).alias("__c")))
-    return (hits.groupBy("n", "gram")
-            .agg(F.count(F.lit(1)).alias("cont_distinct"),
-                 F.min(F.struct((-F.col("__c")).alias("k"),
-                                F.col("cont").alias("v")))
-                 .alias("__m"))
-            .selectExpr("n", "gram", "cont_distinct",
-                        "__m.v AS top_cont",
-                        "CAST(-__m.k AS BIGINT) AS top_cont_cnt"))
 
 
 def backoff_longest_suffix(contexts: DataFrame,

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 __all__ = ["preference_matrix", "bt_step", "train_bradley_terry",
            "period_preference_matrix", "elo_step", "elo_periods",
-           "save_ratings", "load_ratings",
            "BT_ROUNDS", "BT_LR", "BT_QK", "BT_SCALE",
            "ELO_PERIODS", "ELO_K", "ELO_INIT"]
 
@@ -256,20 +255,3 @@ def elo_periods(pm: DataFrame, periods: int = ELO_PERIODS,
         ratings = elo_step(pm.filter(F.col("p") == p), ratings,
                            k=k, init=init, qk=qk, scale=scale)
     return ratings
-
-
-def save_ratings(spark, ratings: dict[str, float],
-                 path: str) -> None:
-    """Persist an arm->rating map as a tiny parquet (exact doubles —
-    parquet round-trips IEEE 754 bit-for-bit). repartition(1), never
-    coalesce(1): coalesce of a local-relation frame stalls ~6 s in
-    task scheduling on this Spark build (the save_weights
-    precedent)."""
-    spark.createDataFrame(
-        sorted(ratings.items()), "arm string, s double"
-    ).repartition(1).write.mode("overwrite").parquet(path)
-
-
-def load_ratings(spark, path: str) -> dict[str, float]:
-    return {r["arm"]: r["s"]
-            for r in spark.read.parquet(path).collect()}

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xsarsea_spark.engine import get_conf_int, materialize
+from xsarsea_spark.engine import materialize
 from xsarsea_spark.pipeline.dedup import shingle
 
 __all__ = ["stratified_sample", "source_token_cap",
@@ -273,9 +273,6 @@ def dup_components(pairs: DataFrame, max_rounds: int = 20,
     driver-side state, like Lloyd's centroids). Both paths produce the
     identical (doc_id, min-id) labeling.
     """
-    local_threshold = get_conf_int(
-        pairs.sparkSession, "spark.xsarsea.components.localThreshold",
-        local_threshold)
     edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionAll(

@@ -59,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xsarsea_spark.engine import get_conf, materialize, scratch_path
+from xsarsea_spark.engine import materialize, scratch_path
 from xsarsea_spark.operators.rank import global_rank
 from xsarsea_spark.pipeline.text import HASH40_SQL
 
@@ -68,7 +68,6 @@ __all__ = ["suffix_rank_tables", "suffix_rank_tables_cached",
            "longest_dup_span", "cross_doc_lcp",
            "pair_rank_tables", "suffix_probe_index_cached"]
 
-CONF_SFX_CACHE = "spark.xsarsea.suffix.cache"
 # Bump when the ladder construction changes: the cache key must not
 # survive an algorithm change the content fingerprint can't see.
 _SFX_CACHE_VERSION = 2
@@ -212,9 +211,9 @@ def suffix_rank_tables_cached(docs: DataFrame, rounds: int,
     key, so invalidation is by construction; stale entries are just
     unreferenced scratch directories. Writes go to a temp directory
     renamed into place after a ``_SFX_DONE`` marker lands, so a
-    crashed build is never read back as complete. Disable with
-    ``spark.xsarsea.suffix.cache=false`` (the uncached path is
-    byte-identical — the tables are all-integer and deterministic).
+    crashed build is never read back as complete. A cache hit is
+    byte-identical to :func:`suffix_rank_tables` (the tables are
+    all-integer and deterministic).
 
     Cache hits also skip the builder's eager max-token guard: the
     persisted ladder already passed it at build time for this exact
@@ -224,10 +223,6 @@ def suffix_rank_tables_cached(docs: DataFrame, rounds: int,
     import shutil
 
     spark = docs.sparkSession
-    if get_conf(spark, CONF_SFX_CACHE, "true").strip().lower() \
-            != "true":
-        return suffix_rank_tables(docs, rounds, text_col=text_col,
-                                  id_col=id_col)
     # fingerprint = four independent statistics of the per-row hash
     # stream (count, sum of 32-bit murmur3, sum of xxhash64, min of
     # xxhash64): a silent collision — two different corpus slices
@@ -504,15 +499,6 @@ def suffix_probe_index_cached(docs: DataFrame, rounds: int,
     import shutil
 
     spark = docs.sparkSession
-    if get_conf(spark, CONF_SFX_CACHE, "true").strip().lower() \
-            != "true":
-        tables = suffix_rank_tables_cached(docs, rounds,
-                                           text_col=text_col,
-                                           id_col=id_col)
-        pairs = pair_rank_tables(tables, id_col=id_col)
-        if max_level is not None:
-            return tables[:max_level + 1], pairs[:max_level]
-        return tables, pairs
     key = _sfx_cache_key(docs, rounds, text_col, id_col)
     root = scratch_path(spark, "sfx_pairs", key)
     marker = os.path.join(root, "_SFX_DONE")

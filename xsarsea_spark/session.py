@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "stop_session"]
+__all__ = ["get_session"]
 
 
 def get_session(
@@ -51,9 +51,3 @@ def get_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def stop_session() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

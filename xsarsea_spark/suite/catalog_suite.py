@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xsarsea_spark.expr import double_lit
 from xsarsea_spark.sources.registry import default_catalog
 from xsarsea_spark.sources.tables import load
 from xsarsea_spark.suite.base import spec
@@ -63,17 +64,12 @@ _AXES = (("incidence", 16.0, 2.5, 21), ("wspd", 3.0, 1.6, 30),
          ("phi", 0.0, 12.0, 16))
 
 
-def _dlit(v: float) -> str:
-    r = repr(float(v))
-    return r if ("e" in r or "E" in r) else r + "e0"
-
-
 def _axis_union_sql() -> str:
     parts = []
     for name, x0, step, n in _AXES:
         parts.append(
             f"SELECT '{name}' AS axis,"
-            f" {_dlit(x0)} + range * {_dlit(step)} AS x"
+            f" {double_lit(x0)} + range * {double_lit(step)} AS x"
             f" FROM range({n})"
         )
     return " UNION ALL ".join(parts)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from xsarsea_spark.engine import (load_kv_json, materialize,
                                   save_kv_json, scratch_path)
+from xsarsea_spark.expr import spark_str_lit
 from xsarsea_spark.pipeline.clustering import KM_SCALE
 from xsarsea_spark.pipeline.dedup import MINHASH_P, _BAND_MULT, _perm_params
 from xsarsea_spark.sources.tables import load
@@ -11422,14 +11423,11 @@ def q_doc_infinigram_counts(spark: SparkSession,
     for r in qrows:
         by_n.setdefault(int(r["n"]), []).append(r["gram"])
 
-    def _lit(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
     if not by_n:   # empty corpus -> no query grams; 0-row hits with
         # the generator's schema (the old join shape, trivially empty)
         by_n = {1: [""]}
     entries = ", ".join(
-        f"{nn}L, array({', '.join(_lit(g) for g in gs)})"
+        f"{nn}L, array({', '.join(spark_str_lit(g) for g in gs)})"
         for nn, gs in sorted(by_n.items()))
     ns_arr = "array(" + ", ".join(str(nn) for nn in sorted(by_n)) + ")"
     hits = materialize(

@@ -19,14 +19,10 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xsarsea_spark.expr import double_lit
 from xsarsea_spark.operators.gradients import CIRC_KERNEL
 from xsarsea_spark.suite.base import DSUM, QTRUNC, spec
 from xsarsea_spark.suite.science import scene_df, scene_sql
-
-
-def _dlit(v: float) -> str:
-    r = repr(float(v))
-    return r if ("e" in r or "E" in r) else r + "e0"
 
 
 # ----------------------------------------------------------------------
@@ -70,7 +66,7 @@ _GH_BSTEP = float(np.pi / _GH_NANG)
 
 
 def _gh_oracle() -> str:
-    wpx = _dlit(float(_GH_WINDOW * _GH_WINDOW))
+    wpx = double_lit(float(_GH_WINDOW * _GH_WINDOW))
     return f"""
 WITH lg AS ({_LG_FIELD_SQL}),
 cand AS (SELECT * FROM (VALUES (0), (1)) t(k)),
@@ -91,12 +87,12 @@ meds AS (
   FROM v GROUP BY wl, ws),
 binned AS (
   SELECT v.wl, v.ws, meds.nvalid,
-    CAST(LEAST(GREATEST(FLOOR((atan2(g2_im, g2_re) - ({_dlit(_GH_START)}))
-      / ({_dlit(_GH_BSTEP)}) + 5e-1), 0), {_GH_NANG - 1}) AS INT) AS k,
+    CAST(LEAST(GREATEST(FLOOR((atan2(g2_im, g2_re) - ({double_lit(_GH_START)}))
+      / ({double_lit(_GH_BSTEP)}) + 5e-1), 0), {_GH_NANG - 1}) AS INT) AS k,
     (abs_g2 / (abs_g2 + med)) * c AS wgt
   FROM v JOIN meds ON v.wl = meds.wl AND v.ws = meds.ws)
 SELECT wl AS win_line, ws AS win_sample,
-  ({_dlit(_GH_START)}) + k * ({_dlit(_GH_BSTEP)}) AS angle,
+  ({double_lit(_GH_START)}) + k * ({double_lit(_GH_BSTEP)}) AS angle,
   {DSUM('wgt', 9)} / {wpx} AS weight,
   nvalid / {wpx} AS used_ratio
 FROM binned
@@ -145,7 +141,7 @@ def _sd_taps_values() -> str:
     half = len(CIRC_KERNEL) // 2
     for i, wv in enumerate(CIRC_KERNEL):
         if wv != 0.0:
-            rows.append(f"({i - half}, {_dlit(float(wv))})")
+            rows.append(f"({i - half}, {double_lit(float(wv))})")
     return ", ".join(rows)
 
 
@@ -161,7 +157,7 @@ sm AS (
   FROM hist CROSS JOIN taps
   GROUP BY win_line, win_sample, (((angle_idx + d) % {n}) + {n}) % {n})
 SELECT win_line, win_sample,
-  ({_dlit(_GH_START)}) + bin * ({_dlit(_GH_BSTEP)}) AS streak_angle,
+  ({double_lit(_GH_START)}) + bin * ({double_lit(_GH_BSTEP)}) AS streak_angle,
   wsm AS peak_weight
 FROM sm
 QUALIFY row_number() OVER (
@@ -288,12 +284,12 @@ def q_stacked_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIRROR_ORACLE = f"""
 WITH hist AS ({_SD_HIST_SQL})
 SELECT win_line, win_sample,
-  ({_dlit(_GH_START)}) + angle_idx * ({_dlit(_GH_BSTEP)}) AS angle,
+  ({double_lit(_GH_START)}) + angle_idx * ({double_lit(_GH_BSTEP)}) AS angle,
   weight
 FROM hist
 UNION ALL
 SELECT win_line, win_sample,
-  -(({_dlit(_GH_START)}) + angle_idx * ({_dlit(_GH_BSTEP)})) AS angle,
+  -(({double_lit(_GH_START)}) + angle_idx * ({double_lit(_GH_BSTEP)})) AS angle,
   weight
 FROM hist
 """
@@ -475,7 +471,7 @@ def _conv_cte(name, src, nl, ns, kernels: dict, mode: str) -> str:
         src_col = out_col.split(":")[1] if ":" in out_col else "v"
         out_name = out_col.split(":")[0]
         terms = " + ".join(
-            f"{_dlit(w)} * {alias[(di, dj)]}.{src_col}"
+            f"{double_lit(w)} * {alias[(di, dj)]}.{src_col}"
             for (di, dj, w) in taps)
         cols.append(f"{terms} AS {out_name}")
     return (
@@ -542,8 +538,8 @@ SELECT l AS line4, s AS sample4,
   (CASE WHEN im >= 0e0 THEN 1e0 ELSE -1e0 END)
     * sqrt(GREATEST((r - re) / 2e0, 0e0)) AS g2_im,
   ab AS g3,
-  CASE WHEN r / (ab + {_dlit(0.00001)}) <= 1e0
-       THEN r / (ab + {_dlit(0.00001)}) ELSE 0e0 END AS c
+  CASE WHEN r / (ab + {double_lit(0.00001)}) <= 1e0
+       THEN r / (ab + {double_lit(0.00001)}) ELSE 0e0 END AS c
 FROM {p}fin)""",
     ]
 
@@ -580,7 +576,8 @@ REGISTRY["local_gradients_pyramid"].description = (
 
 def _sf_hist_ctes(p: str) -> list:
     k_expr = (f"CAST(LEAST(GREATEST(FLOOR((atan2(g2_im, g2_re) -"
-              f" ({_dlit(_GH_START)})) / ({_dlit(_GH_BSTEP)}) + 5e-1),"
+              f" ({double_lit(_GH_START)}))"
+              f" / ({double_lit(_GH_BSTEP)}) + 5e-1),"
               f" 0), 71) AS INT)")
     return [
         f"""{p}w AS MATERIALIZED (
@@ -621,7 +618,7 @@ def _streaks_full_oracle() -> str:
     parts += _pyramid_parts("d2_", nl2, ns2)
     parts += _sf_hist_ctes("d1_")
     parts += _sf_hist_ctes("d2_")
-    ang = f"({_dlit(_GH_START)}) + k * ({_dlit(_GH_BSTEP)})"
+    ang = f"({double_lit(_GH_START)}) + k * ({double_lit(_GH_BSTEP)})"
     parts += [
         f"""stacked AS MATERIALIZED (
   SELECT wl AS win_line, ws AS win_sample, {ang} AS angle, weight
@@ -634,7 +631,7 @@ def _streaks_full_oracle() -> str:
   FROM stacked GROUP BY 1, 2, 3)""",
         f"""dense AS MATERIALIZED (
   SELECT win_line, win_sample,
-    CAST(FLOOR((angle - ({_dlit(_GH_START)})) / ({_dlit(_GH_BSTEP)})
+    CAST(FLOOR((angle - ({double_lit(_GH_START)})) / ({double_lit(_GH_BSTEP)})
          + 5e-1) AS INT) AS angle_idx,
     weight
   FROM mh)""",
@@ -649,7 +646,7 @@ def _streaks_full_oracle() -> str:
     return (
         "WITH " + ",\n".join(parts) + f"""
 SELECT win_line, win_sample,
-  ({_dlit(_GH_START)}) + bin * ({_dlit(_GH_BSTEP)}) AS streak_angle,
+  ({double_lit(_GH_START)}) + bin * ({double_lit(_GH_BSTEP)}) AS streak_angle,
   wsm AS peak_weight
 FROM sm
 QUALIFY row_number() OVER (
@@ -711,7 +708,7 @@ def _rain_oracle() -> str:
     nl2, ns2 = nl // 2, ns // 2
     nl4, ns4 = nl2 // 2, ns2 // 2
     b2, b4, b42 = _taps(_B2K), _taps(_B4K), _taps(_B42K)
-    eps = _dlit(0.00001)
+    eps = double_lit(0.00001)
     parts = [
         f"scene AS MATERIALIZED ({scene_sql(['sigma0'])})",
         # image = sqrt(sigma0); the pyramid runs on the SAME image

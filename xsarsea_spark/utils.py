@@ -20,9 +20,6 @@ __all__ = ["timing", "load_config", "DEFAULT_CONFIG"]
 
 DEFAULT_CONFIG = {
     "data_dir": "/tmp/xsarsea_spark_data",
-    "lut_broadcast_row_limit": 1_000_000,   # interp_join vs interp_kernel
-    "default_tile": 512,
-    "default_halo": 32,
 }
 
 _CONFIG_PATH = os.path.expanduser("~/.xsarsea_spark/config.json")
