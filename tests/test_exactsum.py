@@ -1,13 +1,23 @@
 """exact_sum_agg must be bit-identical to the DSUM/DAVG DECIMAL path
 (the representation every DuckDB oracle uses) — including negatives,
-NaN guarding, and sum+avg sharing one accumulator slot."""
+NaN guarding, and sum+avg sharing one accumulator slot; the NumPy grid
+twin must round exactly like both engines' ``ROUND(x * 1e{s})``; and
+the exact-arithmetic module must load without the query suite."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
+import duckdb
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
-from xsarsea_spark.operators.exactsum import ExactSumSpec, exact_sum_agg
-from xsarsea_spark.suite.base import DAVG, DSUM
+from xsarsea_spark.operators.exactsum import (DAVG, DSUM, ExactSumSpec,
+                                              exact_sum_agg, grid,
+                                              split_qr)
 
 from .conftest import SF_DIR
 
@@ -59,3 +69,55 @@ def test_exactsum_all_nan_group_is_null(spark):
         F.lit(1).alias("k"), F.expr("double('NaN')").alias("x"))
     out = exact_sum_agg(df, ["k"], [ExactSumSpec("s", "x")]).collect()
     assert out[0]["s"] is None
+
+
+def test_engine_modules_load_without_the_suite():
+    # the helpers used to live in suite.base, so importing the public
+    # API (or a single operator) registered all 305 suite queries
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for mod in ("xsarsea_spark.api", "xsarsea_spark.operators.detrend"):
+        r = subprocess.run(
+            [sys.executable, "-c",
+             f"import sys, {mod};"
+             "print(sorted(m for m in sys.modules"
+             " if m.startswith('xsarsea_spark.suite')))"],
+            capture_output=True, text=True, cwd=root)
+        assert r.returncode == 0, r.stderr
+        assert r.stdout.strip() == "[]", (mod, r.stdout)
+
+
+def _half_points(scale: int) -> np.ndarray:
+    """(k + 0.5) / 10^s, its +-1-ulp neighbours, the negatives of all
+    of them, and zero — the inputs where a rounding convention shows."""
+    rng = np.random.default_rng(scale)
+    k = np.concatenate([np.arange(64),
+                        rng.integers(0, 10 ** 6, 1500)]).astype(np.float64)
+    x = (k + 0.5) / 10.0 ** scale
+    x = np.concatenate([x, np.nextafter(x, np.inf),
+                        np.nextafter(x, -np.inf)])
+    return np.concatenate([x, -x, [0.0, -0.0]])
+
+
+def test_grid_twin_matches_spark_and_duckdb_round(spark):
+    for scale in (6, 9):
+        xs = _half_points(scale)
+        pdf = pd.DataFrame({"i": np.arange(len(xs)), "x": xs})
+        sql = f"CAST(ROUND(x * 1e{scale}) AS BIGINT)"
+        got_spark = (
+            spark.createDataFrame(pdf)
+            .select("i", F.expr(sql).alias("v"))
+            .toPandas().sort_values("i")["v"].to_numpy())
+        con = duckdb.connect()
+        try:
+            got_duck = con.execute(
+                f"SELECT {sql} AS v FROM pdf ORDER BY i").df()["v"]
+        finally:
+            con.close()
+        twin = grid(xs, scale)
+        assert twin.dtype == np.int64
+        assert (twin == got_spark).all(), scale
+        assert (twin == got_duck.to_numpy()).all(), scale
+        # the q/r split recombines to the quanta, r in [0, 2^20)
+        q, r = split_qr(twin)
+        assert ((r >= 0) & (r < 1 << 20)).all()
+        assert (q * (1 << 20) + r == twin).all()

@@ -366,7 +366,7 @@ def test_classifier_plans_are_scale_safe(spark):
                                                    doc_features,
                                                    score_docs)
     from xsarsea_spark.suite import REGISTRY
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
+    from xsarsea_spark.operators.exactsum import DSUM, QTRUNC
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     xy = doc_features(docs)

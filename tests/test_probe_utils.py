@@ -1,15 +1,13 @@
-"""GMF probe/decorator, timing, config, batch LUT export."""
+"""GMF probe/decorator, timing, batch LUT export."""
 
 from __future__ import annotations
-
-import json
 
 import numpy as np
 import pytest
 
 from xsarsea_spark.functions.gmfs import GMF_REGISTRY
 from xsarsea_spark.functions.probe import probe_gmf, register_gmf
-from xsarsea_spark.utils import load_config, timing
+from xsarsea_spark.utils import timing
 
 
 def test_probe_copol_and_crosspol():
@@ -58,15 +56,6 @@ def test_timing_logs(caplog):
 
     assert f(1) == 2
     assert len(rec) == 1 and "timing" in rec[0]
-
-
-def test_load_config_defaults_and_override(tmp_path):
-    cfg = load_config(str(tmp_path / "none.json"))
-    assert cfg["data_dir"] == "/tmp/xsarsea_spark_data"
-    p = tmp_path / "c.json"
-    p.write_text(json.dumps({"data_dir": "/data/luts"}))
-    cfg = load_config(str(p))
-    assert cfg["data_dir"] == "/data/luts"
 
 
 def test_export_all_luts(spark, tmp_path):

@@ -45,12 +45,9 @@ def get_conf(spark: SparkSession, key: str, default: str) -> str:
     ``spark.xsarsea.checkpoint.dir`` and ``spark.xsarsea.scratch.dir``,
     the ``spark.xsarsea.psl.path`` suffix-list file, and the
     ``spark.xsarsea.debug.checks`` switch for operator contract checks.
+    A failed read (a stopped session, say) raises.
     """
-    try:
-        v = spark.conf.get(key, None)
-    except Exception:
-        v = None
-    return default if v is None else v
+    return spark.conf.get(key, default)
 
 
 def _reliable_dir(spark: SparkSession) -> str | None:
@@ -62,11 +59,7 @@ def _reliable_dir(spark: SparkSession) -> str | None:
     conf_dir = get_conf(spark, CONF_CHECKPOINT_DIR, "")
     if conf_dir:
         return conf_dir
-    try:
-        existing = spark.sparkContext.getCheckpointDir()
-    except Exception:
-        existing = None
-    return existing or None
+    return spark.sparkContext.getCheckpointDir() or None
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -87,11 +80,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     ckpt_dir = _reliable_dir(spark)
     if ckpt_dir is not None:
         sc = spark.sparkContext
-        try:
-            current = sc.getCheckpointDir()
-        except Exception:
-            current = None
-        if not current:
+        if not sc.getCheckpointDir():
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

@@ -6,16 +6,13 @@ Parity target: the reference's nearest-coordinate alignment joins —
 (gradients.py:232-244) — generalized to the classic time-series as-of
 join the events surface needs.
 
-Spark has no native ASOF JOIN. Two physical strategies:
-
-- ``asof_join_regular``: when the right side lives on a REGULAR grid,
-  nearest is closed-form integer arithmetic (floor((x-x0)/step + 0.5))
-  followed by a plain equi-join — no sort, no range scan. This is the
-  reference's own trick and the 100 TB fast path.
-- ``asof_join``: general backward as-of via union + partitioned window:
-  tag both sides, union on the ordering key, and carry the last right
-  row forward with ``last(..., ignorenulls=True)`` over a per-key
-  window. One shuffle on (key, time), no range join explosion.
+Spark has no native ASOF JOIN. ``asof_join`` is the general backward
+as-of via union + partitioned window: tag both sides, union on the
+ordering key, and carry the last right row forward with
+``last(..., ignorenulls=True)`` over a per-key window. One shuffle on
+(key, time), no range join explosion. (On a REGULAR grid nearest is
+closed-form index arithmetic instead — the inversion's
+``_nearest_idx`` and ``gradient_histogram``'s window assignment.)
 """
 
 from __future__ import annotations
@@ -24,29 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-__all__ = ["asof_join", "asof_join_regular"]
-
-
-def asof_join_regular(
-    points: DataFrame,
-    grid: DataFrame,
-    x0: float,
-    step: float,
-    n: int,
-    point_col: str,
-    grid_idx_col: str,
-) -> DataFrame:
-    """Nearest-grid-point join on a regular axis: closed-form index +
-    broadcast-friendly equi-join (gradients.py:199-205 semantics)."""
-    idx = F.expr(
-        f"CAST(LEAST(GREATEST(FLOOR(({point_col} - {x0!r}e0)"
-        f" / {step!r}e0 + 5e-1), 0), {n - 1}) AS BIGINT)"
-    )
-    pt = points.withColumn("__gi", idx)
-    return pt.join(
-        F.broadcast(grid.withColumnRenamed(grid_idx_col, "__gi")),
-        on="__gi", how="left",
-    ).drop("__gi")
+__all__ = ["asof_join"]
 
 
 def asof_join(

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from xsarsea_spark.expr import double_lit
 from xsarsea_spark.functions.gmfs import GMF_REGISTRY, gmf_sql
-from xsarsea_spark.suite.base import DAVG, QTRUNC
+from xsarsea_spark.operators.exactsum import DAVG, QTRUNC
 
 __all__ = ["sigma0_detrend", "detrend_profile"]
 
@@ -48,7 +48,7 @@ def detrend_profile(
 
     ``quantize``: reproducible mode — truncate the GMF (libm) output to
     a 1e-k decimal grid so the result is bit-identical across engines
-    and partitionings (see :func:`xsarsea_spark.suite.base.QTRUNC`).
+    and partitionings (see :func:`xsarsea_spark.operators.exactsum.QTRUNC`).
     """
     if model not in GMF_REGISTRY:
         raise KeyError(f"unknown model {model!r}")

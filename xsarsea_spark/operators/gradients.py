@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xsarsea_spark.expr import double_lit
+from xsarsea_spark.operators.exactsum import DSUM
 
 __all__ = [
     "local_gradients",
@@ -203,6 +204,66 @@ def _with_halo_tiles(px: DataFrame, line_col: str, sample_col: str,
     return out
 
 
+def _tile_apply(px: DataFrame, n_lines: int, n_samples: int,
+                value_col: str, line_col: str, sample_col: str,
+                tile: int, halo: int, stencil, schema: T.StructType
+                ) -> DataFrame:
+    """Run the whole-image NumPy ``stencil`` (array -> dict of /4-grid
+    arrays) as ONE tile+halo ``applyInPandas`` pass.
+
+    Each tile is scattered into a NaN-filled array spanning its extent
+    plus halo, the stencil runs on it, and the tile's interior block
+    of the /4 output grid is emitted as the ``schema`` columns:
+    ``line4``/``sample4`` grid indices, ``line``/``sample`` block-mean
+    coordinates (4*i + 1.5) when the schema has them, and the
+    stencil's arrays for the rest.
+    """
+    if tile % 4 or halo % 4:
+        raise ValueError("tile and halo must be multiples of 4")
+    work = _with_halo_tiles(
+        px.select(line_col, sample_col, value_col),
+        line_col, sample_col, tile, halo,
+    )
+    out_l_max = (n_lines // 2) // 2
+    out_s_max = (n_samples // 2) // 2
+    names = [f.name for f in schema]
+
+    def run(key, pdf):
+        tl, ts = int(key[0]), int(key[1])
+        empty = pd.DataFrame(
+            {n: pd.Series(dtype="float64") for n in names})
+        if tl * tile >= n_lines or ts * tile >= n_samples:
+            return empty
+        o_l = max(tl * tile - halo, 0)
+        o_s = max(ts * tile - halo, 0)
+        e_l = min((tl + 1) * tile + halo, n_lines)
+        e_s = min((ts + 1) * tile + halo, n_samples)
+        arr = np.full((e_l - o_l, e_s - o_s), np.nan)
+        li = pdf[line_col].to_numpy(dtype=np.int64) - o_l
+        si = pdf[sample_col].to_numpy(dtype=np.int64) - o_s
+        arr[li, si] = pdf[value_col].to_numpy(dtype=np.float64)
+        res = stencil(arr)
+        # interior /4-grid output range for this tile
+        lo4_l, lo4_s = (tl * tile) // 4, (ts * tile) // 4
+        hi4_l = min(((tl + 1) * tile) // 4, out_l_max)
+        hi4_s = min(((ts + 1) * tile) // 4, out_s_max)
+        if hi4_l <= lo4_l or hi4_s <= lo4_s:
+            return empty
+        # local /4 indices of the interior block
+        a_l, a_s = lo4_l - o_l // 4, lo4_s - o_s // 4
+        b_l, b_s = a_l + (hi4_l - lo4_l), a_s + (hi4_s - lo4_s)
+        l4, s4 = np.meshgrid(np.arange(lo4_l, hi4_l),
+                             np.arange(lo4_s, hi4_s), indexing="ij")
+        coords = {"line4": l4, "sample4": s4,
+                  "line": 4.0 * l4 + 1.5, "sample": 4.0 * s4 + 1.5}
+        return pd.DataFrame({
+            n: (coords[n] if n in coords
+                else res[n][a_l:b_l, a_s:b_s]).ravel()
+            for n in names})
+
+    return work.groupBy("__tl", "__ts").applyInPandas(run, schema=schema)
+
+
 def local_gradients(
     px: DataFrame,
     n_lines: int,
@@ -230,53 +291,9 @@ def local_gradients(
     whole-image NumPy twin). A deployment sizes tiles to executor
     memory by passing ``tile``.
     """
-    if tile % 4 or halo % 4:
-        raise ValueError("tile and halo must be multiples of 4")
-    work = _with_halo_tiles(
-        px.select(line_col, sample_col, value_col),
-        line_col, sample_col, tile, halo,
-    )
-
-    out_l_max = (n_lines // 2) // 2
-    out_s_max = (n_samples // 2) // 2
-
-    def run(key, pdf):
-        tl, ts = int(key[0]), int(key[1])
-        o_l = max(tl * tile - halo, 0)
-        o_s = max(ts * tile - halo, 0)
-        e_l = min((tl + 1) * tile + halo, n_lines)
-        e_s = min((ts + 1) * tile + halo, n_samples)
-        if tl * tile >= n_lines or ts * tile >= n_samples:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="float64") for f in _LG_SCHEMA})
-        arr = np.full((e_l - o_l, e_s - o_s), np.nan)
-        li = pdf[line_col].to_numpy(dtype=np.int64) - o_l
-        si = pdf[sample_col].to_numpy(dtype=np.int64) - o_s
-        arr[li, si] = pdf[value_col].to_numpy(dtype=np.float64)
-        res = local_gradients_numpy(arr)
-        # interior /4-grid output range for this tile
-        lo4_l = (tl * tile) // 4
-        lo4_s = (ts * tile) // 4
-        hi4_l = min(((tl + 1) * tile) // 4, out_l_max)
-        hi4_s = min(((ts + 1) * tile) // 4, out_s_max)
-        if hi4_l <= lo4_l or hi4_s <= lo4_s:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="float64") for f in _LG_SCHEMA})
-        # local /4 indices of the interior block
-        a_l, a_s = lo4_l - o_l // 4, lo4_s - o_s // 4
-        b_l, b_s = a_l + (hi4_l - lo4_l), a_s + (hi4_s - lo4_s)
-        l4, s4 = np.meshgrid(np.arange(lo4_l, hi4_l),
-                             np.arange(lo4_s, hi4_s), indexing="ij")
-        out = {
-            "line4": l4.ravel(), "sample4": s4.ravel(),
-            "line": (4.0 * l4 + 1.5).ravel(),
-            "sample": (4.0 * s4 + 1.5).ravel(),
-        }
-        for k in ("g2_re", "g2_im", "g3", "c"):
-            out[k] = res[k][a_l:b_l, a_s:b_s].ravel()
-        return pd.DataFrame(out)
-
-    return work.groupBy("__tl", "__ts").applyInPandas(run, schema=_LG_SCHEMA)
+    return _tile_apply(px, n_lines, n_samples, value_col, line_col,
+                       sample_col, tile, halo, local_gradients_numpy,
+                       _LG_SCHEMA)
 
 
 # ----------------------------------------------------------------------
@@ -315,7 +332,6 @@ def gradient_histogram(
     is the median-normalized quality-weighted bin sum divided by the
     window pixel count; used_ratio the valid-pixel fraction.
     """
-    from xsarsea_spark.suite.base import DSUM
 
     step = step or window
     ncand = -(-window // step)          # ceil
@@ -372,7 +388,6 @@ def circ_smooth(hist: DataFrame, n_angles: int = 72,
     recommended), and a bin no tap reaches gets no row. Returns the
     same keys + bin with smoothed weight.
     """
-    from xsarsea_spark.suite.base import DSUM
 
     half = len(CIRC_KERNEL) // 2
     taps = ", ".join(
@@ -526,42 +541,6 @@ def filtering_parameters(
     """Distributed rain/texture mask: the whole Zhao-2021 chain fused
     into ONE tile+halo applyInPandas pass (halo 48 covers the deepest
     stencil chain: R2 + Mean-of-G3 on the /4 grid)."""
-    if tile % 4 or halo % 4:
-        raise ValueError("tile and halo must be multiples of 4")
-    work = _with_halo_tiles(
-        px.select(line_col, sample_col, value_col),
-        line_col, sample_col, tile, halo,
-    )
-    out_l_max = (n_lines // 2) // 2
-    out_s_max = (n_samples // 2) // 2
-
-    def run(key, pdf):
-        tl, ts = int(key[0]), int(key[1])
-        empty = pd.DataFrame(
-            {f.name: pd.Series(dtype="float64") for f in _FP_SCHEMA})
-        if tl * tile >= n_lines or ts * tile >= n_samples:
-            return empty
-        o_l = max(tl * tile - halo, 0)
-        o_s = max(ts * tile - halo, 0)
-        e_l = min((tl + 1) * tile + halo, n_lines)
-        e_s = min((ts + 1) * tile + halo, n_samples)
-        arr = np.full((e_l - o_l, e_s - o_s), np.nan)
-        li = pdf[line_col].to_numpy(dtype=np.int64) - o_l
-        si = pdf[sample_col].to_numpy(dtype=np.int64) - o_s
-        arr[li, si] = pdf[value_col].to_numpy(dtype=np.float64)
-        res = filtering_parameters_numpy(arr)
-        lo4_l, lo4_s = (tl * tile) // 4, (ts * tile) // 4
-        hi4_l = min(((tl + 1) * tile) // 4, out_l_max)
-        hi4_s = min(((ts + 1) * tile) // 4, out_s_max)
-        if hi4_l <= lo4_l or hi4_s <= lo4_s:
-            return empty
-        a_l, a_s = lo4_l - o_l // 4, lo4_s - o_s // 4
-        b_l, b_s = a_l + (hi4_l - lo4_l), a_s + (hi4_s - lo4_s)
-        l4, s4 = np.meshgrid(np.arange(lo4_l, hi4_l),
-                             np.arange(lo4_s, hi4_s), indexing="ij")
-        out = {"line4": l4.ravel(), "sample4": s4.ravel()}
-        for k in ("f1", "f2", "f3", "f4", "F"):
-            out[k] = res[k][a_l:b_l, a_s:b_s].ravel()
-        return pd.DataFrame(out)
-
-    return work.groupBy("__tl", "__ts").applyInPandas(run, schema=_FP_SCHEMA)
+    return _tile_apply(px, n_lines, n_samples, value_col, line_col,
+                       sample_col, tile, halo, filtering_parameters_numpy,
+                       _FP_SCHEMA)

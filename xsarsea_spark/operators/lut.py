@@ -29,7 +29,6 @@ __all__ = [
     "grid_df",
     "gmf_to_lut",
     "gmf_lut_numpy",
-    "write_lut_parquet",
     "LOW_RES_STEPS",
     "HIGH_RES_STEPS",
 ]
@@ -141,8 +140,3 @@ def gmf_lut_numpy(model: str, axes: list[GridAxis]) -> dict:
         env.get("phi") if g.needs_phi else None,
     )
     return {"coords": coords, "sigma0": sig, "model": model}
-
-
-def write_lut_parquet(lut: DataFrame, path: str) -> None:
-    """Parquet sink for a LUT (the to_netcdf analog)."""
-    lut.write.mode("overwrite").parquet(path)

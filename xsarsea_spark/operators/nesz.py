@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xsarsea_spark.suite.base import DAVG, DSUM, QTRUNC
+from xsarsea_spark.operators.exactsum import DAVG, DSUM, QTRUNC
 
 __all__ = ["nesz_flattening"]
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xsarsea_spark.engine import materialize
+from xsarsea_spark.operators.exactsum import QTRUNC, decimal_sum
 
 __all__ = ["pagerank", "pagerank_contrib_expr", "triangle_counts"]
 
@@ -34,7 +35,6 @@ _Q = 12          # quantization decimals for each edge contribution
 
 def pagerank_contrib_expr(rank_col: str, deg_col: str) -> str:
     """Quantized per-edge contribution — same SQL text both engines."""
-    from xsarsea_spark.suite.base import QTRUNC
 
     return QTRUNC(f"{rank_col} / CAST({deg_col} AS DOUBLE)", _Q)
 
@@ -75,9 +75,7 @@ def pagerank(edges: DataFrame, iters: int = 5,
                     F.expr(pagerank_contrib_expr("rank", "deg"))
                     .alias("c"))
             .groupBy("node")
-            .agg(F.expr(
-                f"CAST(SUM(CAST(c AS DECIMAL(38,{_Q}))) AS DOUBLE)")
-                .alias("in_sum"))
+            .agg(F.expr(decimal_sum("c", _Q)).alias("in_sum"))
         )
         if dangling:
             ranks = nodes.join(contrib, on="node", how="left").select(

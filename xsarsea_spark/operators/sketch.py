@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xsarsea_spark.operators.exactsum import QTRUNC
 from xsarsea_spark.pipeline.text import HASH40_SQL
 
 __all__ = ["kmv_sketch", "kmv_estimate", "kmv_merge",
@@ -303,7 +304,6 @@ def hll_estimate_sql(s_col: str, c_col: str, b: int = 6,
     """
     if b != 6:
         raise ValueError("hll_estimate_sql is calibrated for b=6")
-    from xsarsea_spark.suite.base import QTRUNC
 
     m = 1 << b
     raw = (f"(709e-3 * {m}e0 * {m}e0 * {float(1 << (w + 1)):.0f}e0"
@@ -362,7 +362,6 @@ def dd_sketch(df: DataFrame, group_cols: list,
     values of ``value_sql`` (the standard positive store; route
     zeros/negatives to a separate counter if they matter). One hash
     aggregation; O(groups x log-range/log-gamma) rows out."""
-    from xsarsea_spark.suite.base import QTRUNC
 
     b = dd_bucket_sql(value_sql, QTRUNC)
     # NOT isnan: Spark orders NaN above every double (NaN > 0 is
@@ -403,8 +402,6 @@ def dd_quantiles(sketch: DataFrame, group_cols: list,
     ascending order, take the first whose cumulative count covers
     q * n. ``qs`` maps output column -> SQL quantile literal."""
     from pyspark.sql import Window
-
-    from xsarsea_spark.suite.base import QTRUNC
 
     w = (Window.partitionBy(*group_cols).orderBy("bucket")
          .rowsBetween(Window.unboundedPreceding, 0))

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xsarsea_spark.expr import spark_str_lit
+from xsarsea_spark.operators.exactsum import DSUM, QTRUNC
 
 __all__ = ["doc_features", "gd_step", "train_logreg",
            "train_logreg_grouped", "score_docs", "save_weights",
@@ -97,10 +98,6 @@ def gd_step(xy: DataFrame, w: list[float], lr: float = 1.0,
     components are exact DECIMAL-grid sums of the quantized residual
     times the feature. The batch unit of both the full-batch trainer
     (:func:`train_logreg`) and the streaming SGD ingest."""
-    # deferred: suite/__init__ imports pipeline_suite which imports
-    # this module — a top-level suite.base import would be circular
-    # whenever classifier is imported before the suite package
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     p = QTRUNC(
         f"CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
@@ -176,7 +173,6 @@ def train_logreg_grouped(xy: DataFrame, group_col: str = "lang",
     :func:`train_logreg`, so the same chained-CTE oracle ladder
     replays it with a GROUP BY.
     """
-    from xsarsea_spark.suite.base import DSUM, QTRUNC  # deferred
 
     txy = xy.select(group_col, "x", "y").persist()
     try:
@@ -249,7 +245,6 @@ def score_docs(xy: DataFrame, w: list[float], qk: int = 12,
     construction), no training jobs. Returns (id, score, prob,
     keep): score is the raw pure-IEEE dot product, prob the
     QTRUNC-quantized sigmoid, keep the 0-threshold decision."""
-    from xsarsea_spark.suite.base import QTRUNC  # deferred: circular
 
     return xy.select(
         id_col,

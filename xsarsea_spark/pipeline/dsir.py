@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xsarsea_spark.operators.exactsum import QTRUNC
 from xsarsea_spark.operators.rank import global_rank
 from xsarsea_spark.pipeline.text import HASH40_SQL
 
@@ -68,9 +69,6 @@ def dsir_term_sql(b: int = DSIR_B) -> str:
     ``ct`` (target count, NULLable), ``cr`` (raw count), ``nt``/``nr``
     (total target/raw feature counts) — QTRUNC'd so both engines land
     on the identical 9-decimal grid."""
-    # deferred import: suite.base loads the whole suite package,
-    # whose specs import this module back at registration time
-    from xsarsea_spark.suite.base import QTRUNC
 
     return QTRUNC(
         f"ln(CAST(COALESCE(ct, 0) + 1 AS DOUBLE)"

@@ -11,7 +11,8 @@ actually maintains: the persisted state is the RAW moments
     n     = row count
 
 each kept as (q, r) int64 quantum pairs exactly like
-``linalg._gram_partials`` — and int64 sums are ORDER-INDEPENDENT, so
+``operators.exactsum.exact_sum_agg`` (``linalg._moment_partials``) —
+and int64 sums are ORDER-INDEPENDENT, so
 
     state(batch_1) + ... + state(batch_k) == state(union)   bit-for-bit
 
@@ -46,75 +47,22 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xsarsea_spark.operators.exactsum import recombine_sql
 from xsarsea_spark.pipeline.linalg import (G_SCALE, MU_SCALE,
+                                           _moment_partials,
                                            _power_iter_kernel,
                                            _valid_vectors)
 
 __all__ = ["moment_state", "moment_merge", "pca_from_moments",
            "moment_stats", "drift_report"]
 
-
-def _moment_partials(d: int, mu_scale: int, g_scale: int):
-    """mapInPandas kernel: per-partition partial raw-moment sums on
-    the exact decimal grids — first moments at ``mu_scale`` (rows
-    j = 0), second moments at ``g_scale`` (rows j >= 1). HALF_UP
-    quantization via the exact-fraction comparison (no double
-    rounding), identical to ``linalg._gram_partials``.
-    """
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        m = 1 << 20
-        mul1 = float(10.0 ** mu_scale)
-        mul2 = float(10.0 ** g_scale)
-
-        def grid(y):
-            f = np.floor(y)
-            g = np.ceil(y)
-            return np.where(y >= 0,
-                            f + ((y - f) >= 0.5),
-                            g - ((g - y) >= 0.5)).astype(np.int64)
-
-        q1 = np.zeros(d, dtype=np.int64)
-        r1 = np.zeros(d, dtype=np.int64)
-        q2 = np.zeros((d, d), dtype=np.int64)
-        r2 = np.zeros((d, d), dtype=np.int64)
-        cnt = 0
-        for pdf in batches:
-            col = pdf["__c"]
-            if not len(col):
-                continue
-            c = np.stack([np.asarray(x, dtype=np.float64)
-                          for x in col])
-            for lo in range(0, len(c), 256):
-                ch = c[lo:lo + 256]
-                v = grid(ch * mul1)
-                r = ((v % m) + m) % m
-                q1 += ((v - r) // m).sum(axis=0)
-                r1 += r.sum(axis=0)
-                v = grid(np.einsum("ni,nj->nij", ch, ch) * mul2)
-                r = ((v % m) + m) % m
-                q2 += ((v - r) // m).sum(axis=0)
-                r2 += r.sum(axis=0)
-                cnt += len(ch)
-        if cnt == 0:
-            return
-        ii, jj = np.meshgrid(np.arange(1, d + 1, dtype=np.int32),
-                             np.arange(1, d + 1, dtype=np.int32),
-                             indexing="ij")
-        yield pd.DataFrame({
-            "i": np.concatenate([np.arange(1, d + 1, dtype=np.int32),
-                                 ii.ravel()]),
-            "j": np.concatenate([np.zeros(d, dtype=np.int32),
-                                 jj.ravel()]),
-            "q": np.concatenate([q1, q2.ravel()]),
-            "r": np.concatenate([r1, r2.ravel()]),
-            "n": np.full(d + d * d, cnt, dtype=np.int64),
-        })
-
-    return kernel
+# The documented grid->double recombination of a state row (the same
+# builder linalg._gram_state and exact_sum_agg use): exact integer
+# quantum total, one /10^scale, one /n — each a single
+# correctly-rounded double op, matching DuckDB's
+# CAST(SUM(DECIMAL) AS DOUBLE) / COUNT.
+_MU = recombine_sql("q", "r", MU_SCALE, "n")
+_MS2 = recombine_sql("q", "r", G_SCALE, "n")
 
 
 def moment_state(vecs: DataFrame, d: int = 64,
@@ -145,15 +93,6 @@ def moment_merge(states: list[DataFrame]) -> DataFrame:
         F.expr("SUM(n)").alias("n"))
 
 
-# The documented grid->double recombination (same shape as
-# linalg._gram_state): exact integer quantum total, one /10^scale,
-# one /n — each a single correctly-rounded double op, matching
-# DuckDB's CAST(SUM(DECIMAL) AS DOUBLE) / COUNT.
-def _recomb(scale: int) -> str:
-    return (f"((CAST(q AS DOUBLE) * {1 << 20}e0 + CAST(r AS DOUBLE))"
-            f" / 1e{scale}) / nullif(n, 0)")
-
-
 def moment_stats(state: DataFrame) -> DataFrame:
     """Per-dimension (i, mu, var, n) marginals of a raw-moment state
     — mean from the j = 0 rows, variance from the DIAGONAL second
@@ -163,9 +102,9 @@ def moment_stats(state: DataFrame) -> DataFrame:
     the bounded state table.
     """
     mu = state.filter("j = 0").select(
-        "i", F.expr(_recomb(MU_SCALE)).alias("mu"), "n")
+        "i", F.expr(_MU).alias("mu"), "n")
     diag = state.filter("j = i").select(
-        "i", F.expr(_recomb(G_SCALE)).alias("__ms2"))
+        "i", F.expr(_MS2).alias("__ms2"))
     return mu.join(diag, on="i").select(
         "i", "mu", F.expr("__ms2 - mu * mu").alias("var"), "n")
 
@@ -217,13 +156,13 @@ def pca_from_moments(state: DataFrame, d: int = 64,
     """
     mu_row = (
         state.filter("j = 0")
-        .select("i", F.expr(_recomb(MU_SCALE)).alias("__mu"))
+        .select("i", F.expr(_MU).alias("__mu"))
         .groupBy().agg(F.expr(
             "transform(array_sort(collect_list(struct(i, __mu))),"
             " s -> s.__mu)").alias("__mu"))
     )
     ms2 = state.filter("j >= 1").select(
-        "i", "j", F.expr(_recomb(G_SCALE)).alias("__ms2"))
+        "i", "j", F.expr(_MS2).alias("__ms2"))
     cov = ms2.crossJoin(F.broadcast(mu_row)).select(
         "i", "j",
         F.expr("__ms2 - element_at(__mu, i) * element_at(__mu, j)")

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xsarsea_spark.operators.exactsum import grid
 from xsarsea_spark.pipeline.similarity import _DOT, with_norm
 
 __all__ = ["train_ivf", "assign_cells", "ivf_search", "IVF_SCALE"]
@@ -65,16 +66,6 @@ def _seq_norm(v: np.ndarray) -> np.ndarray:
     for d in range(v.shape[1]):
         acc += v[:, d] * v[:, d]
     return np.sqrt(acc)
-
-
-def _quantize(p: np.ndarray) -> np.ndarray:
-    """Round half away from zero on the exact value of the double
-    ``p`` (what Spark ROUND / DuckDB's double->DECIMAL cast compute).
-    ``floor(p + 0.5)`` would be wrong within 1 ulp of half-integers —
-    the addition itself rounds; trunc/compare arithmetic is exact."""
-    t = np.trunc(p)
-    f = p - t
-    return np.where(np.abs(f) >= 0.5, t + np.copysign(1.0, p), t)
 
 
 def _sim_to(v: np.ndarray, c: np.ndarray, cn: np.ndarray) -> np.ndarray:
@@ -126,8 +117,7 @@ def train_ivf(corpus: DataFrame, n_centroids: int = 16, iters: int = 5,
                     [np.asarray(x, dtype=np.float64)
                      for x in pdf[vec_col]])
                 cell = np.argmax(_sim_to(v, c, cn), axis=1)
-                quanta = _quantize(v * 10.0 ** IVF_SCALE).astype(
-                    np.int64)
+                quanta = grid(v, IVF_SCALE)
                 rows = []
                 for cid in np.unique(cell):
                     m = cell == cid

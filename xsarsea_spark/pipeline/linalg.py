@@ -5,13 +5,13 @@ Shape (the part that must survive 100 TB):
 
 1. **Covariance accumulation is one aggregation pass.** Each task
    folds its rows into a d x d partial Gram inside an Arrow kernel
-   (``_gram_partials`` — the NumPy twin of ``operators/exactsum.py``'s
-   long-backed grid arithmetic, bit-identical by construction), so
-   the exchange moves exactly partitions * d^2 rows, not O(n * d^2)
-   — the partial-aggregate shape MLlib's
-   ``RowMatrix.computeCovariance`` relies on, at C speed. Per-dim
-   means still use exact_sum_agg itself (scale-9 grid, the k-means
-   convention).
+   (``_moment_partials``, on the NumPy grid twin in
+   ``operators/exactsum.py`` — bit-identical to its long-backed SQL
+   arithmetic by construction), so the exchange moves exactly
+   partitions * d^2 rows, not O(n * d^2) — the partial-aggregate
+   shape MLlib's ``RowMatrix.computeCovariance`` relies on, at C
+   speed. Per-dim means still use exact_sum_agg itself (scale-9
+   grid, the k-means convention).
 2. **The iteration state is d^2 + d doubles and never leaves the
    executors.** The Gram matrix is reassembled into ONE row
    (array<array<double>>) and all rounds + the Rayleigh quotient run
@@ -47,7 +47,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xsarsea_spark.operators.exactsum import ExactSumSpec, exact_sum_agg
+from xsarsea_spark.operators.exactsum import (ExactSumSpec, decimal_sum,
+                                              exact_sum_agg, grid,
+                                              recombine_sql, split_qr)
 
 __all__ = ["pca_power", "pca_state", "pca_project", "pca_topk",
            "pca_whiten", "pca_outliers",
@@ -241,28 +243,30 @@ def _gram_state(vecs: DataFrame, d: int, vec_col: str):
 
     # Per-partition partial Grams in ONE Arrow kernel, then a 4096-key
     # long sum — the map-side-combine shape, but at NumPy speed. The
-    # kernel replicates exact_sum_agg's grid arithmetic bit-for-bit
-    # (see _gram_partials), so the earlier pure-SQL formulation
-    # (explode d^2 structs per row -> exact_sum_agg) produces the
-    # identical Gram; that path cost 11.5 s at sf0.1 on interpreted
-    # HOF lambdas vs ~1 s here, and the exchange shrinks from
-    # O(rows_in_partition * d^2) pre-combine input to exactly
-    # partitions * d^2 rows by construction.
+    # moment kernel's j >= 1 rows are the grid-quantized products of
+    # the centred vectors, exact_sum_agg's arithmetic bit-for-bit, so
+    # the earlier pure-SQL formulation (explode d^2 structs per row ->
+    # exact_sum_agg) produces the identical Gram; that path cost 11.5 s
+    # at sf0.1 on interpreted HOF lambdas vs ~1 s here, and the
+    # exchange shrinks from O(rows_in_partition * d^2) pre-combine
+    # input to exactly partitions * d^2 rows by construction.
+    # j = 0 rows (first moments) are dropped inside the kernel, not by
+    # a Spark filter, so the plan stays one MapInPandas node
+    moments = _moment_partials(d, MU_SCALE, G_SCALE)
+
+    def kernel(batches):
+        for pdf in moments(batches):
+            yield pdf[pdf["j"] >= 1]
+
     partials = centered.mapInPandas(
-        _gram_partials(d, G_SCALE),
-        schema="i int, j int, q long, r long, n long")
+        kernel, schema="i int, j int, q long, r long, n long")
     sums = partials.groupBy("i", "j").agg(
         F.expr("SUM(q)").alias("__qs"),
         F.expr("SUM(r)").alias("__rs"),
         F.expr("SUM(n)").alias("__n"))
-    # identical recombination to operators/exactsum.py (avg path)
     gram = sums.select(
         "i", "j",
-        F.expr(
-            f"((CAST(__qs AS DOUBLE) * {1 << 20}e0"
-            f" + CAST(__rs AS DOUBLE)) / 1e{G_SCALE})"
-            " / nullif(__n, 0)"
-        ).alias("g"))
+        F.expr(recombine_sql("__qs", "__rs", G_SCALE, "__n")).alias("g"))
 
     grows = gram.groupBy("i").agg(F.expr(
         "transform(array_sort(collect_list(struct(j, g))),"
@@ -387,33 +391,28 @@ def pca_project(
     )
 
 
-def _gram_partials(d: int, scale: int):
-    """mapInPandas kernel: per-partition partial Gram sums on the
-    exact decimal grid — the NumPy twin of operators/exactsum.py.
+def _moment_partials(d: int, mu_scale: int, g_scale: int):
+    """mapInPandas kernel: per-partition partial raw-moment sums of
+    the ``__c`` vectors on the exact decimal grids — first moments at
+    ``mu_scale`` (rows j = 0), second moments at ``g_scale`` (rows
+    j >= 1), each as the (q, r) int64 pair ``exact_sum_agg`` sums
+    (``operators.exactsum.grid`` / ``split_qr``). Long sums are
+    order-independent, so partial accumulation per partition is exact
+    by construction.
 
-    Per element: y = fl(p * 10^scale) (the same double Spark's
-    ``(p) * 1e{scale}`` produces), then HALF_UP (half away from zero)
-    to the grid WITHOUT the ``floor(y + 0.5)`` double-rounding trap:
-    ``y - floor(y)`` is exact for |y| < 2^52, so comparing the exact
-    fraction against 0.5 reproduces BigDecimal HALF_UP semantics
-    bit-for-bit. The quantum splits into (q, r) longs exactly as the
-    SQL path does; long sums are order-independent, so partial
-    accumulation per partition is exact by construction.
-
-    Input contract: __c rows are finite (the caller filters NaN/NULL
-    vectors and the mean of finite values is finite), so the NaN
-    guard of the SQL path has nothing to do here; a partition with no
-    rows yields nothing.
+    Input contract: __c rows are finite (callers filter NaN/NULL
+    vectors), so the NaN guard of the SQL path has nothing to do
+    here; a partition with no rows yields nothing.
     """
 
     def kernel(batches):
         import numpy as np
         import pandas as pd
 
-        m = 1 << 20
-        mul = float(10.0 ** scale)
-        qsum = np.zeros((d, d), dtype=np.int64)
-        rsum = np.zeros((d, d), dtype=np.int64)
+        q1 = np.zeros(d, dtype=np.int64)
+        r1 = np.zeros(d, dtype=np.int64)
+        q2 = np.zeros((d, d), dtype=np.int64)
+        r2 = np.zeros((d, d), dtype=np.int64)
         cnt = 0
         for pdf in batches:
             col = pdf["__c"]
@@ -423,15 +422,13 @@ def _gram_partials(d: int, scale: int):
                           for x in col])
             for lo in range(0, len(c), 256):
                 ch = c[lo:lo + 256]
-                y = np.einsum("ni,nj->nij", ch, ch) * mul
-                f = np.floor(y)
-                g = np.ceil(y)
-                v = np.where(y >= 0,
-                             f + ((y - f) >= 0.5),
-                             g - ((g - y) >= 0.5)).astype(np.int64)
-                r = ((v % m) + m) % m
-                qsum += ((v - r) // m).sum(axis=0)
-                rsum += r.sum(axis=0)
+                q, r = split_qr(grid(ch, mu_scale))
+                q1 += q.sum(axis=0)
+                r1 += r.sum(axis=0)
+                q, r = split_qr(
+                    grid(np.einsum("ni,nj->nij", ch, ch), g_scale))
+                q2 += q.sum(axis=0)
+                r2 += r.sum(axis=0)
                 cnt += len(ch)
         if cnt == 0:
             return
@@ -439,9 +436,13 @@ def _gram_partials(d: int, scale: int):
                              np.arange(1, d + 1, dtype=np.int32),
                              indexing="ij")
         yield pd.DataFrame({
-            "i": ii.ravel(), "j": jj.ravel(),
-            "q": qsum.ravel(), "r": rsum.ravel(),
-            "n": np.full(d * d, cnt, dtype=np.int64),
+            "i": np.concatenate([np.arange(1, d + 1, dtype=np.int32),
+                                 ii.ravel()]),
+            "j": np.concatenate([np.zeros(d, dtype=np.int32),
+                                 jj.ravel()]),
+            "q": np.concatenate([q1, q2.ravel()]),
+            "r": np.concatenate([r1, r2.ravel()]),
+            "n": np.full(d + d * d, cnt, dtype=np.int64),
         })
 
     return kernel
@@ -567,8 +568,6 @@ def pca_outliers(
     return (
         w.select(id_col, F.expr(term).alias("__t"))
         .groupBy(id_col)
-        .agg(F.expr(
-            "CAST(SUM(CAST(__t AS DECIMAL(38,9))) AS DOUBLE)")
-            .alias("maha2"))
+        .agg(F.expr(decimal_sum("__t", 9)).alias("maha2"))
         .withColumn("is_outlier", F.col("maha2") > F.lit(threshold))
     )

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from xsarsea_spark.pipeline.ivf import _quantize
+from xsarsea_spark.operators.exactsum import grid
 
 __all__ = ["train_pq", "encode_pq", "pq_search", "PQ_SCALE"]
 
@@ -104,8 +104,7 @@ def train_pq(corpus: DataFrame, m: int = 8, k: int = 16, iters: int = 5,
                     # squared L2 to each of the k centroids; ties ->
                     # lowest cell (oracle: ORDER BY d2, cell)
                     cell = np.argmin(_seq_sqdist(vs, b[s_i]), axis=1)
-                    quanta = _quantize(
-                        vs * 10.0 ** PQ_SCALE).astype(np.int64)
+                    quanta = grid(vs, PQ_SCALE)
                     for cid in np.unique(cell):
                         msk = cell == cid
                         ssum = quanta[msk].sum(axis=0)

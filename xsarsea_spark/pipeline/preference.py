@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xsarsea_spark.operators.exactsum import DSUM, QTRUNC
+
 __all__ = ["preference_matrix", "bt_step", "train_bradley_terry",
            "period_preference_matrix", "elo_step", "elo_periods",
            "BT_ROUNDS", "BT_LR", "BT_QK", "BT_SCALE",
@@ -114,7 +116,6 @@ def bt_step(pm: DataFrame, scores: dict[str, float],
     """ONE full BT gradient step over the match matrix ``pm``: a
     signed explode of the on-grid per-pair residual, one grouped
     exact DECIMAL aggregation, an arm-count-sized collect."""
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     sa = _score_case(scores, "arm_a")
     sb = _score_case(scores, "arm_b")
@@ -210,7 +211,6 @@ def elo_step(pm_slice: DataFrame, ratings: dict[str, float],
     since untouched ratings never move). The batch unit of both the
     periodized trainer (:func:`elo_periods`) and the streaming
     ingest."""
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     # ONE job: the ELSE branch scores unseen arms at init, so the
     # batch needs no arm-discovery pass, and the grouped-agg result

@@ -58,6 +58,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xsarsea_spark.engine import get_conf
+
 __all__ = ["PSL_SNAPSHOT", "parse_psl_rules", "load_psl_lines",
            "psl_rules", "exact_two_level_suffixes",
            "with_psl_domain", "psl_oracle_ctes", "CONF_PSL_PATH"]
@@ -706,7 +708,7 @@ def load_psl_lines(spark: SparkSession) -> list[str]:
     snapshot. Driver-local read: the list is a few hundred KB of
     static data headed for a broadcast table, not a distributed
     input."""
-    path = spark.conf.get(CONF_PSL_PATH, "")
+    path = get_conf(spark, CONF_PSL_PATH, "")
     if path:
         with open(path, encoding="utf-8") as fh:
             return fh.read().splitlines()

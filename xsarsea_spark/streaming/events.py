@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xsarsea_spark.operators.exactsum import decimal_sum
+
 __all__ = ["events_stream", "stream_hourly_counts",
            "stream_attribution",
            "stream_hourly_to_parquet", "read_latest_batch",
@@ -97,9 +99,7 @@ def _hourly_agg(ev: DataFrame) -> DataFrame:
         ev.groupBy(F.window("event_time", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.expr(
-                "CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)"
-            ).alias("sum_value"),
+            F.expr(decimal_sum("value")).alias("sum_value"),
         )
         .select(
             F.expr("(unix_micros(w.start)) DIV 3600000000")
@@ -217,9 +217,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.expr(
-                "CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)"
-            ).alias("sum_value"),
+            F.expr(decimal_sum("value")).alias("sum_value"),
         )
     )
     tbl = _run_to_memory(agg, "complete")

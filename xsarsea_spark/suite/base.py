@@ -8,28 +8,19 @@ A :class:`QuerySpec` binds one engine capability to
   tables (pre-registered views), or ``None`` for ops that are not
   SQL-expressible (streaming, iterative) — those get a rows-only check.
 
-Numeric determinism conventions (so Spark and DuckDB hash-match):
-
-- floating reductions go through exact DECIMAL sums:
-  ``CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)`` — per-row casts of
-  identical doubles are deterministic, and decimal addition is exact,
-  so the reduction no longer depends on partitioning/order;
-- outputs of libm functions (exp/log/pow/trig) are rounded to 6-10
-  significant decimals at the final projection;
-- float literals are emitted in scientific notation so neither engine
-  parses them as DECIMAL (see xsarsea_spark.expr);
-- every computed column is explicitly aliased identically on both
-  sides.
+The exact-arithmetic helpers the specs use (``DSUM``, ``DAVG``,
+``QTRUNC``) and their conventions live in
+:mod:`xsarsea_spark.operators.exactsum`.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["QuerySpec", "REGISTRY", "spec", "DSUM", "DAVG", "QTRUNC"]
+__all__ = ["QuerySpec", "REGISTRY", "spec"]
 
 
 @dataclass
@@ -57,44 +48,3 @@ def spec(name: str, oracle: Optional[str], description: str = "",
 
     return deco
 
-
-def _nanguard(e: str) -> str:
-    """NaN -> NULL so SUM and COUNT agree (CAST(NaN AS DECIMAL) yields
-    NULL in Spark but errors in DuckDB; nulling first makes both
-    engines skip NaN rows identically — nanmean semantics)."""
-    return f"CASE WHEN isnan({e}) THEN NULL ELSE ({e}) END"
-
-
-def DSUM(e: str, scale: int = 6) -> str:
-    """Exact (order-independent) NaN-skipping sum of a double expression."""
-    return f"CAST(SUM(CAST(({_nanguard(e)}) AS DECIMAL(38,{scale}))) AS DOUBLE)"
-
-
-def QTRUNC(e: str, k: int) -> str:
-    """Engine-consistent quantization barrier after libm calls.
-
-    Spark's and DuckDB's exp/log/pow/trig differ by 1 ulp on ~1-10% of
-    inputs (sqrt is IEEE-exact), so any libm output that feeds a value
-    compared across engines must be truncated to a fixed decimal grid
-    first. Floor-truncation is pure arithmetic (multiply, floor,
-    divide — all exactly specified by IEEE 754), so identical inputs
-    quantize identically in every engine; inputs differing by 1 ulp
-    disagree only when they straddle a 1e-k grid line (probability
-    ~|x|*2.2e-16*1e^k per value — pick k so that is negligible).
-
-    NaN guard: Spark's FLOOR(double) returns BIGINT (NaN becomes 0)
-    while DuckDB's stays DOUBLE (NaN stays NaN) — so NaN bypasses the
-    quantizer explicitly. |e| must stay below ~9e18/1e^k (BIGINT range
-    of Spark's FLOOR).
-    """
-    q = f"(CAST(FLOOR(({e}) * 1e{k}) AS DOUBLE) / 1e{k})"
-    return f"CASE WHEN isnan({e}) THEN CAST('NaN' AS DOUBLE) ELSE {q} END"
-
-
-def DAVG(e: str, scale: int = 6) -> str:
-    """Exact-sum NaN-skipping average of a double expression."""
-    g = _nanguard(e)
-    return (
-        f"(CAST(SUM(CAST(({g}) AS DECIMAL(38,{scale}))) AS DOUBLE)"
-        f" / COUNT({g}))"
-    )

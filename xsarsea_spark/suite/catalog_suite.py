@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xsarsea_spark.expr import double_lit
+from xsarsea_spark.operators.exactsum import QTRUNC
 from xsarsea_spark.sources.registry import default_catalog
 from xsarsea_spark.sources.tables import load
 from xsarsea_spark.suite.base import spec
@@ -178,7 +179,6 @@ def _mm_oracle() -> str:
     """Byte features recomputed in SQL: the corpus is ASCII (verified
     length == octet_length for every row), so high nibbles come from
     per-character code points. Same fold orders as the UDF."""
-    from xsarsea_spark.suite.base import QTRUNC
 
     fracs = ", ".join(
         f"len(list_filter(codes, c -> c = {b}))"
@@ -222,7 +222,6 @@ FROM fr
 def q_multimodal_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.multimodal import (attach_payload,
                                                    extract_features)
-    from xsarsea_spark.suite.base import QTRUNC
 
     docs = load(spark, sf_dir, "documents")
     feats = extract_features(attach_payload(docs))

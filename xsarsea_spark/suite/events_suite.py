@@ -18,12 +18,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from xsarsea_spark.engine import materialize
+from xsarsea_spark.operators.exactsum import DAVG, DSUM, QTRUNC
 from xsarsea_spark.sources.tables import load
 from xsarsea_spark.streaming.harness import (latest_version,
                                              run_available_now,
                                              stage_arrival,
                                              version_below)
-from xsarsea_spark.suite.base import DAVG, DSUM, QTRUNC, spec
+from xsarsea_spark.suite.base import spec
 
 _US_SPARK = "(ts DIV 1000)"
 _US_DUCK = "epoch_us(ts)"
@@ -434,7 +435,6 @@ def _dd_oracle() -> str:
     from xsarsea_spark.operators.sketch import (DD_GAMMA_SQL,
                                                 dd_bucket_sql,
                                                 dd_quantile_sql)
-    from xsarsea_spark.suite.base import QTRUNC
 
     b = dd_bucket_sql("value", QTRUNC)
     picks = []
@@ -993,8 +993,6 @@ FROM c JOIN tot USING (cur)
 
 
 def _trans_prob() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     return QTRUNC("n / CAST(t AS DOUBLE)", 9)
 
 
@@ -1047,8 +1045,6 @@ FROM w WHERE k >= 3
 
 
 def _anom_z() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     mean = "(s / CAST(k AS DOUBLE))"
     var = f"(ss / CAST(k AS DOUBLE) - {mean} * {mean})"
     return QTRUNC(f"(n - {mean}) / SQRT({var} + 1e-9)", 9)
@@ -1715,8 +1711,6 @@ def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _entropy_term() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     return QTRUNC(
         "(c / CAST(n AS DOUBLE)) * log2(c / CAST(n AS DOUBLE))", 9)
 
@@ -3187,7 +3181,6 @@ def _bt_fit_parts() -> list:
     from xsarsea_spark.pipeline.preference import (BT_LR, BT_QK,
                                                    BT_ROUNDS,
                                                    BT_SCALE)
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     parts = [
         f"uv AS MATERIALIZED (SELECT user_id, event_type,"
@@ -3399,7 +3392,6 @@ def _elo_oracle(periods: int | None = None) -> str:
     from xsarsea_spark.pipeline.preference import (BT_QK, BT_SCALE,
                                                    ELO_INIT, ELO_K,
                                                    ELO_PERIODS)
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     if periods is None:
         periods = ELO_PERIODS
@@ -3972,8 +3964,6 @@ def q_events_mann_kendall(spark: SparkSession,
 
 
 def _cv_oracle() -> str:
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
-
     term = QTRUNC("(CAST(COALESCE(o.c, 0) AS DOUBLE) - e.e)"
                   " * (CAST(COALESCE(o.c, 0) AS DOUBLE) - e.e)"
                   " / e.e", 9)
@@ -4017,8 +4007,6 @@ FROM tot, dims, dimc, x2"""
 )
 def q_events_cramers_v(spark: SparkSession,
                        sf_dir: str) -> DataFrame:
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
-
     ev = load(spark, sf_dir, "events").filter("ts IS NOT NULL")
     obs = (ev.selectExpr("event_type",
                          f"(({_US_SPARK}) DIV 86400000000) % 7"

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from xsarsea_spark.engine import (load_kv_json, materialize,
                                   save_kv_json, scratch_path)
 from xsarsea_spark.expr import spark_str_lit
+from xsarsea_spark.operators.exactsum import DSUM, QTRUNC
 from xsarsea_spark.pipeline.clustering import KM_SCALE
 from xsarsea_spark.pipeline.dedup import MINHASH_P, _BAND_MULT, _perm_params
 from xsarsea_spark.sources.tables import load
@@ -23,7 +24,7 @@ from xsarsea_spark.streaming.harness import (latest_version,
                                              run_available_now,
                                              stage_arrival,
                                              version_below)
-from xsarsea_spark.suite.base import QTRUNC, spec
+from xsarsea_spark.suite.base import spec
 
 # DuckDB spelling of pipeline.text.HASH40_SQL (same value)
 _H40_DUCK = "CAST('0x' || substr(md5({x}), 1, 10) AS BIGINT)"
@@ -1522,8 +1523,6 @@ WHERE rank <= {_TFIDF_K}
 
 
 def _tfidf_expr() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     return QTRUNC("tf * ln(CAST(n_docs AS DOUBLE) / df)", 9)
 
 
@@ -1659,8 +1658,6 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bigram_term() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     return QTRUNC("ln((c12 + 1) / CAST(c1 + v AS DOUBLE))", 9)
 
 
@@ -3228,8 +3225,6 @@ _KN_D = "0.75e0"      # absolute discount
 
 
 def _kn_term() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     pcont = ("(CAST(COALESCE(nc2, 0) + 1 AS DOUBLE)"
              " / CAST(nctot + vtrain AS DOUBLE))")
     full = (f"ln(greatest(CAST(COALESCE(c12, 0) AS DOUBLE)"
@@ -4416,8 +4411,6 @@ _WS_K = 50
 
 
 def _ws_priority(h40: str) -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     u = f"(({h40}) + 1e0) / {float(1 << 40)!r}"
     # weight floor of 1: an empty or NULL-length doc gets weight 1
     # instead of a 1/0 ANSI crash; COALESCE levels the engines'
@@ -4786,7 +4779,6 @@ def _logreg_train_ctes(train_where: str = "TRUE",
     different arrival slice; R = len(round_wheres) then."""
     from xsarsea_spark.pipeline.classifier import (LABEL_MIN_CHARS,
                                                    N_FEATURES)
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     nf = N_FEATURES
     ntok = "CAST(len(string_split(text, ' ')) AS DOUBLE)"
@@ -4911,8 +4903,6 @@ _CLF_BATCH_WHERE = "doc_id % 4 = 0"
 
 
 def _clf_score_oracle() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     parts, zfold = _logreg_train_ctes(_CLF_TRAIN_WHERE)
     rf = _LOGREG_ROUNDS
     parts.append(
@@ -5061,16 +5051,12 @@ def q_doc_classifier_auc(spark: SparkSession,
 
 
 def _clf_prob_sql() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     return QTRUNC(
         "CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
         " + exp(-(z)))", _LOGREG_QK)
 
 
 def _clf_calibration_oracle() -> str:
-    from xsarsea_spark.suite.base import DSUM
-
     parts, zfold = _logreg_train_ctes(_CLF_TRAIN_WHERE)
     rf = _LOGREG_ROUNDS
     parts += [
@@ -5109,7 +5095,6 @@ def q_doc_classifier_calibration(spark: SparkSession,
     from xsarsea_spark.pipeline.classifier import (doc_features,
                                                    train_logreg,
                                                    z_expr)
-    from xsarsea_spark.suite.base import DSUM
 
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs)
@@ -5149,8 +5134,6 @@ def q_doc_classifier_calibration(spark: SparkSession,
 
 
 def _clf_select_oracle() -> str:
-    from xsarsea_spark.suite.base import DSUM
-
     parts, zfold = _logreg_train_ctes(_CLF_TRAIN_WHERE)
     rf = _LOGREG_ROUNDS
     parts += [
@@ -5192,7 +5175,6 @@ def q_doc_classifier_select(spark: SparkSession,
     from xsarsea_spark.pipeline.classifier import (doc_features,
                                                    train_logreg,
                                                    z_expr)
-    from xsarsea_spark.suite.base import DSUM
 
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs)
@@ -5233,7 +5215,6 @@ def q_doc_classifier_select(spark: SparkSession,
 
 def _clf_perlang_oracle() -> str:
     from xsarsea_spark.pipeline.classifier import N_FEATURES
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     nf = N_FEATURES
     base, zfold = _logreg_train_ctes(_CLF_TRAIN_WHERE)
@@ -5898,7 +5879,6 @@ _BM25_SCORE = (
 
 def _bm25_oracle() -> str:
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     return f"""
 WITH toks AS (
@@ -5936,8 +5916,6 @@ QUALIFY ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) <= {_BM25_TOPK}
 )
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
-
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     docs = load(spark, sf_dir, "documents")
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
@@ -5992,7 +5970,6 @@ _RRF_K, _RRF_POOL, _RRF_TOPK = 60, 50, 20
 def _rrf_oracle() -> str:
     d = _CND_DIM
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     dot = (f"list_reduce(list_transform(range(1, {d + 1}),"
            f" i -> CAST(q.qv[i] AS DOUBLE)"
@@ -6062,8 +6039,6 @@ WHERE fr <= {_RRF_TOPK}"""
 )
 def q_doc_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
-
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     d = _CND_DIM
     docs = load(spark, sf_dir, "documents")
@@ -6771,8 +6746,6 @@ def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mixshare_oracle() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     lnq = QTRUNC("ln(share_batch / share_hist)", 9)
     return f"""
 WITH h AS (
@@ -7543,8 +7516,6 @@ _DRM_GRID = 12
 
 
 def _reweight_oracle() -> str:
-    from xsarsea_spark.suite.base import QTRUNC
-
     g = QTRUNC(f"exp({_DRM_ETA} * excess)", 9)
     return f"""
 WITH t AS (
@@ -7600,7 +7571,6 @@ FROM k CROSS JOIN den
 )
 def q_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.text import bigrams
-    from xsarsea_spark.suite.base import QTRUNC
 
     docs = load(spark, sf_dir, "documents")
     bg = bigrams(docs)
@@ -11075,8 +11045,6 @@ def q_doc_good_turing(spark: SparkSession,
 
 
 def _cte_oracle() -> str:
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
-
     term = QTRUNC("CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))", 9)
     lnn = QTRUNC("ln(CAST(SUM(c) AS DOUBLE))", 12)
     return f"""
@@ -11109,8 +11077,6 @@ FROM tc GROUP BY lang"""
 )
 def q_doc_char_trigram_entropy(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    from xsarsea_spark.suite.base import DSUM
-
     term = QTRUNC("CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))", 9)
     lnn = QTRUNC("ln(CAST(SUM(c) AS DOUBLE))", 12)
     docs = load(spark, sf_dir, "documents")
@@ -12114,8 +12080,6 @@ _KS_TERMS = 100
 
 
 def _ks_oracle() -> str:
-    from xsarsea_spark.suite.base import DSUM
-
     term = QTRUNC(
         "exp(CAST(-2.0 AS DOUBLE) * CAST(k * k AS DOUBLE)"
         " * lam.l * lam.l)", 12)
@@ -12180,8 +12144,6 @@ FROM sa, sb, nn, dm, ser"""
 )
 def q_doc_source_ks_test(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
-    from xsarsea_spark.suite.base import DSUM
-
     docs = load(spark, sf_dir, "documents").filter(
         "source IS NOT NULL AND n_chars IS NOT NULL")
     tc = docs.groupBy("source").agg(
@@ -12267,8 +12229,6 @@ def q_doc_source_ks_test(spark: SparkSession,
 
 
 def _mwu_oracle() -> str:
-    from xsarsea_spark.suite.base import DSUM
-
     return f"""
 WITH t AS (SELECT source, n_chars FROM documents
            WHERE source IS NOT NULL AND n_chars IS NOT NULL),
@@ -12332,8 +12292,6 @@ FROM sa, sb, st"""
 def q_doc_source_mannwhitney(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
-
-    from xsarsea_spark.suite.base import DSUM
 
     docs = load(spark, sf_dir, "documents").filter(
         "source IS NOT NULL AND n_chars IS NOT NULL")
@@ -12640,7 +12598,6 @@ def q_doc_unigram_fertility(spark: SparkSession,
 
 def _ppl_oracle() -> str:
     from xsarsea_spark.pipeline.unigram import ULM_MAXW, ULM_ROUNDS
-    from xsarsea_spark.suite.base import DSUM
 
     parts = _ulm_seed_ctes()
     for r in range(ULM_ROUNDS):
@@ -12701,7 +12658,6 @@ def q_doc_unigram_ppl_buckets(spark: SparkSession,
                                                 seed_vocab,
                                                 viterbi_segment,
                                                 word_freqs)
-    from xsarsea_spark.suite.base import DSUM
 
     docs = load(spark, sf_dir, "documents")
     wf = materialize(word_freqs(docs))
@@ -12922,7 +12878,6 @@ _BTX_NQ, _BTX_K = 20, 5
 
 
 def _bitext_oracle() -> str:
-    from xsarsea_spark.suite.base import DSUM
     fold = ("list_reduce(list_transform(range(1, len({a}) + 1),"
             " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),"
             " (x, y) -> x + y)")
@@ -12993,7 +12948,6 @@ FROM best"""
 def q_embedding_bitext_margin(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.similarity import cosine_topk
-    from xsarsea_spark.suite.base import DSUM
 
     emb = load(spark, sf_dir, "embeddings")
     sa = emb.filter("vec_id % 2 = 0")
@@ -13073,7 +13027,6 @@ m_{method} AS (
 
 
 def _rev_fill_metrics(block: str) -> str:
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
     rec = (DSUM(QTRUNC(
         "CASE WHEN n.nr IS NULL OR n.nr = 0 THEN 0e0"
         " ELSE COALESCE(h.hits, 0) / CAST(n.nr AS DOUBLE) END",
@@ -13086,8 +13039,6 @@ def _rev_fill_metrics(block: str) -> str:
 
 
 def _retrieval_eval_oracle() -> str:
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
-
     d = _CND_DIM
     qids = ", ".join(str(q) for q in _REV_Q)
     dot = (f"list_reduce(list_transform(range(1, {d + 1}),"
@@ -13188,8 +13139,6 @@ UNION ALL SELECT * FROM m_rrf"""
 def q_doc_retrieval_eval(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
-
-    from xsarsea_spark.suite.base import DSUM, QTRUNC
 
     d = _CND_DIM
     qids = ", ".join(str(q) for q in _REV_Q)

@@ -11,9 +11,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xsarsea_spark.functions.gmfs import gmf_sql
+from xsarsea_spark.operators.exactsum import QTRUNC
 from xsarsea_spark.operators.interp import GridAxis, interp_join
 from xsarsea_spark.operators.lut import grid_df
-from xsarsea_spark.suite.base import QTRUNC, spec
+from xsarsea_spark.suite.base import spec
 from xsarsea_spark.suite.science import N_LINES, N_SAMPLES, scene_df, scene_sql
 
 

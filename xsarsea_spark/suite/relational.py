@@ -2,7 +2,7 @@
 
 Spark-first plans: dimension sides broadcast, predicates placed before
 joins so Catalyst pushes them into the parquet scans, aggregates via
-exact DECIMAL sums (see suite.base) so results are order-independent
+exact DECIMAL sums (see operators.exactsum) so results are order-independent
 and hash-match the DuckDB oracle.
 """
 
@@ -11,8 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xsarsea_spark.operators.exactsum import (DAVG, DSUM, ExactSumSpec,
+                                              exact_sum_agg)
 from xsarsea_spark.sources.tables import load
-from xsarsea_spark.suite.base import DAVG, DSUM, spec
+from xsarsea_spark.suite.base import spec
 
 _REV = "l_extendedprice * (1e0 - l_discount)"
 
@@ -47,11 +49,9 @@ ORDER BY l_returnflag, l_linestatus
     tags=("relational", "agg"),
 )
 def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xsarsea_spark.operators.exactsum import ExactSumSpec, exact_sum_agg
-
     li = load(spark, sf_dir, "lineitem")
-    # exact_sum_agg: long-backed split-accumulator sums, bit-identical
-    # to the DSUM DECIMAL path the oracle uses but ~2.3x faster (no
+    # exact_sum_agg: long-backed split-accumulator sums, equal here to
+    # the DSUM DECIMAL path the oracle uses but ~2.3x faster (no
     # per-row BigDecimal). Q1 is the most aggregate-dense query in the
     # suite, so it carries the demonstration.
     out = exact_sum_agg(

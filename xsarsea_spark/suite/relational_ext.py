@@ -9,8 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xsarsea_spark.operators.exactsum import DSUM
 from xsarsea_spark.sources.tables import load
-from xsarsea_spark.suite.base import DSUM, spec
+from xsarsea_spark.suite.base import spec
 
 _REV = "l_extendedprice * (1e0 - l_discount)"
 

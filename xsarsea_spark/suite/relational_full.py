@@ -13,8 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xsarsea_spark.operators.exactsum import DAVG, DSUM, QTRUNC
 from xsarsea_spark.sources.tables import load
-from xsarsea_spark.suite.base import DAVG, DSUM, QTRUNC, spec
+from xsarsea_spark.suite.base import spec
 
 _REV = "l_extendedprice * (1e0 - l_discount)"
 

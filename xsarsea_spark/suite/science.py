@@ -6,7 +6,7 @@ generated from pure integer/rational arithmetic — the same closed-form
 expressions are evaluated by Spark and by the DuckDB oracle, so inputs
 are bit-identical in both engines (IEEE 754 +,-,*,/ and floor are
 exactly specified; only libm calls differ, and those are quantized via
-suite.base.QTRUNC — see that docstring).
+operators.exactsum.QTRUNC — see that docstring).
 
 Reference parity targets are cited per query (xsarsea file:line).
 """
@@ -28,7 +28,8 @@ from xsarsea_spark.functions.angles import (
 )
 from xsarsea_spark.functions.dsig import get_dsig_sql, get_dsig_wspd_sql
 from xsarsea_spark.functions.gmfs import gmf_sql
-from xsarsea_spark.suite.base import QTRUNC, spec
+from xsarsea_spark.operators.exactsum import QTRUNC
+from xsarsea_spark.suite.base import spec
 
 # ----------------------------------------------------------------------
 # Synthetic scene: shared closed-form column expressions.

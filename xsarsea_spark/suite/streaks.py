@@ -20,8 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xsarsea_spark.expr import double_lit
+from xsarsea_spark.operators.exactsum import DSUM
 from xsarsea_spark.operators.gradients import CIRC_KERNEL
-from xsarsea_spark.suite.base import DSUM, QTRUNC, spec
+from xsarsea_spark.suite.base import spec
 from xsarsea_spark.suite.science import scene_df, scene_sql
 
 
