@@ -1,28 +1,25 @@
 """Benchmark harness: times every registered suite query at one SF.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
-     SPARK_GRAFT_BENCH_REPS (default 3).
+     SPARK_GRAFT_BENCH_REPS (default 3),
+     SPARK_GRAFT_BENCH_BUDGET_SEC (default 900);
+the session itself reads SPARK_GRAFT_CPUS (default 32).
 Prints ONE JSON line:
   {"metric": "suite_total", "value": N, "unit": "sec",
    "queries": {...}, "sf": ...}
+and writes every per-query sample to BENCH_detail.json.
 
-Repetitions: the host shows multi-x run-to-run swings under co-tenant
-contention (docs/PLANS.md round-4 caveat), so queries are timed up to
-REPS times (rep-major order: full suite pass per rep, so one noisy
-window doesn't bias one query) and per-query MEDIANS are reported.
-``value`` is the sum of medians — the robust estimate of one suite
-pass, comparable across rounds — and ``wall_sec`` keeps the honest
-total elapsed time across all reps.
+Repeat rule: rep 0 times every query and is never cut. Each later rep
+times rep-0 failures first, then the cheapest queries by rep-0 time,
+while their summed rep-0 time fits an equal share of the budget left,
+``(budget - elapsed) / (reps - rep)``; no query of a later rep starts
+once the budget is spent. Reps run rep-major (a whole pass per rep),
+so one noisy load window does not bias one query, and each query
+reports the MEDIAN of its samples. ``value`` is the sum of those
+medians; ``wall_sec`` is the elapsed time of the whole run.
 
-Rep tiering (round 14): rep 0 covers EVERY query; repeat reps run
-only the rotating full-rep cohort — the driver correctness window
-(``__spark_entry__._PRIORITY[:FOCUS_N]``, i.e. the round's new
-queries + lineage-touched rows + the rotating stale cohort) — plus
-delta-first suspects and rep-0 failure retries. The stable majority
-runs at 1 rep and earns its fresh 3-rep medians on its rotation
-turn; ``BENCH_detail.json`` records exactly which cohort ran full
-reps (``focus_admitted``/``focus_dropped``/``slow_1rep``).
+``tools/probe.py`` times named queries with the same warm-up, release
+and loop (no budget: every rep times every query) for interleaved A/B.
 """
 
 from __future__ import annotations
@@ -32,6 +29,7 @@ import os
 import statistics
 import sys
 import time
+from itertools import accumulate
 
 
 def science_throughput(spark) -> dict[str, float]:
@@ -93,21 +91,138 @@ def science_throughput(spark) -> dict[str, float]:
     return out
 
 
+def run_query(spark, sf_dir: str, name: str) -> None:
+    """Build one registry query and drain it to a noop sink."""
+    from xsarsea_spark.suite import REGISTRY
+
+    REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode(
+        "overwrite").save()
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM, the parquet footers and the Python/Arrow workers,
+    so the timings measure the plans, not session start-up or each
+    table's first physical scan."""
+    from pyspark.sql.functions import col, pandas_udf
+
+    from xsarsea_spark.sources.tables import TABLES, load
+    from xsarsea_spark.suite import REGISTRY
+
+    for t in TABLES:
+        load(spark, sf_dir, t).count()
+    REGISTRY["q06_forecast_revenue"].spark(spark, sf_dir).collect()
+    # the interpolation-join machinery: without this the first query
+    # that uses it absorbs ~2-4 s of one-time codegen/JIT that isn't
+    # its plan's cost (measured 4.75 s first-in-loop vs 0.8 s warm)
+    run_query(spark, sf_dir, "lut_regrid")
+
+    @pandas_udf("long")
+    def _warm(s):
+        return s
+
+    spark.range(32).repartition(32).select(_warm(col("id"))).collect()
+
+
+def release(spark) -> None:
+    """Between-query hygiene, outside the timers: checkpointing
+    queries (BPE rounds, dup-components edges, semdedup assignments)
+    pin localCheckpoint blocks that would otherwise accumulate across
+    the whole registry, measured as sporadic multi-second GC stalls
+    landing on unrelated later queries. Queries are independent, so
+    dropping another query's blocks only removes interference."""
+    try:
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist(False)
+    except Exception:
+        pass
+    try:
+        spark.catalog.clearCache()
+    except Exception:
+        pass
+
+
+def median(vals: list[float]) -> float:
+    """Median of the successful samples; -1.0 when every one failed."""
+    ok = [v for v in vals if v >= 0]
+    return round(statistics.median(ok), 3) if ok else -1.0
+
+
+def time_queries(spark, sf_dir: str, names: list[str], reps: int,
+                 deadline: float | None = None, run=run_query,
+                 clock=time.perf_counter) -> dict[str, list[float]]:
+    """Rep-major timing loop: ``{name: [seconds, ...]}``, with -1.0
+    for a sample whose query raised.
+
+    Rep 0 times every query in ``names`` order. With a ``deadline`` (a
+    ``clock()`` value), each later rep times rep-0 failures first, then
+    the cheapest queries by rep-0 time, while their summed rep-0 time
+    fits ``(deadline - clock()) / (reps - rep)``, and no query of a
+    later rep starts past the deadline. Without one, every rep times
+    every query. Each query runs under the job group ``bench-{name}``
+    with the description ``{name} rep{rep}``; ``release`` follows it,
+    outside the timer."""
+    samples: dict[str, list[float]] = {n: [] for n in names}
+    sc = spark.sparkContext
+    order = list(names)
+    for rep in range(reps):
+        t_rep = clock()
+        if rep:
+            first = {n: samples[n][0] for n in names}
+            order = sorted(names, key=lambda n: (first[n] >= 0, first[n]))
+            if deadline is not None:
+                share = (deadline - t_rep) / (reps - rep)
+                # costs are >= 0, so the running sum keeps a prefix
+                cum = accumulate(max(first[n], 0.0) for n in order)
+                order = [n for n, c in zip(order, cum) if c <= share]
+            if not order:
+                print(f"bench: no query fits rep {rep}'s share of the "
+                      "budget; stopping", file=sys.stderr)
+                break
+        for name in order:
+            if rep and deadline is not None and clock() > deadline:
+                print(f"bench: budget spent during rep {rep}; stopping",
+                      file=sys.stderr)
+                return samples
+            sc.setJobGroup(f"bench-{name}", f"{name} rep{rep}")
+            t0 = clock()
+            try:
+                run(spark, sf_dir, name)
+                samples[name].append(clock() - t0)
+            except Exception as exc:  # keep timing the rest
+                print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
+                samples[name].append(-1.0)
+            release(spark)
+        print(f"bench: rep {rep}: {len(order)} queries in "
+              f"{clock() - t_rep:.1f}s", file=sys.stderr)
+    return samples
+
+
+def _throughput_sample(spark, tp_samples: list[dict[str, float]],
+                       when: str) -> None:
+    spark.sparkContext.setJobGroup("bench-throughput",
+                                   f"science_throughput {when}")
+    t0 = time.perf_counter()
+    try:
+        tp_samples.append(science_throughput(spark))
+    except Exception as exc:
+        print(f"bench: {when} throughput pass FAILED: {exc}",
+              file=sys.stderr)
+    print(f"bench: [throughput-{when}] {time.perf_counter() - t0:.1f}s",
+          file=sys.stderr)
+
+
 def _prev_medians(sf: float) -> dict[str, float]:
     """Per-query medians from the most recent bench on disk AT THE
-    SAME SF, used to rank round-over-round deltas for repeat-tier
-    admission. Prefers BENCH_detail.json (full query set); falls back
-    to the newest BENCH_r*.json (driver-captured, slowest-queries-
-    first trim). The sf match matters: a local sf0.01 verification
-    run overwrites BENCH_detail.json, and comparing an sf0.1 pass
-    against sf0.01 medians would flag everything as a ~10x suspect."""
+    SAME SF, the base of the ``rep0_hot_x`` canary. Prefers
+    BENCH_detail.json (full query set); falls back to the newest
+    BENCH_r*.json (driver-captured, slowest-queries-first trim). The
+    sf match matters: a local sf0.01 run overwrites BENCH_detail.json,
+    and an sf0.1 pass read against sf0.01 medians would look ~10x
+    hot."""
     import glob
 
-    # an unparseable CURRENT sf (the -1.0 sentinel) must disable
-    # delta admission entirely: a file that also lacks an 'sf' field
-    # would otherwise default to the same sentinel and "match",
-    # ranking suspects against medians from an unknown scale factor —
-    # the exact ~10x false-suspect mode the sf check exists to stop
+    # an unparseable current sf (-1.0) must not match a file that
+    # also lacks an 'sf' field and would default to the same sentinel
     if sf < 0:
         return {}
     here = os.path.dirname(os.path.abspath(__file__))
@@ -141,444 +256,68 @@ def _prev_medians(sf: float) -> dict[str, float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "900"))
     from xsarsea_spark.session import get_session
     from xsarsea_spark.suite import REGISTRY
 
     spark = get_session(app_name="xsarsea-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # section timers (stderr only): the wall vs suite_total gap must
-    # stay attributable — warmup, each rep, small passes, throughput
-    _t_section = time.perf_counter()
-
-    def _mark(label: str) -> None:
-        nonlocal _t_section
-        now = time.perf_counter()
-        print(f"bench: [{label}] {now - _t_section:.1f}s",
-              file=sys.stderr)
-        _t_section = now
-
-    # warm the JVM + parquet footers + Python/Arrow workers so
-    # per-query numbers measure the plans, not session startup or
-    # each table's first physical scan
-    from xsarsea_spark.sources.tables import TABLES, load
-    for t in TABLES:
-        load(spark, sf_dir, t).count()
-    REGISTRY["q06_forecast_revenue"].spark(spark, sf_dir).collect()
-    # warm the interpolation-join machinery too: the alphabetically
-    # first suite query (ancillary_wind_join) uses it, and without
-    # this it absorbs ~2-4 s of one-time codegen/JIT that isn't its
-    # plan's cost (measured 4.75 s first-in-loop vs 0.8 s warm)
-    REGISTRY["lut_regrid"].spark(spark, sf_dir).write.format(
-        "noop").mode("overwrite").save()
-    from pyspark.sql.functions import col, pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(32).repartition(32).select(_warm(col("id"))).collect()
-    _mark("warmup")
-
-    def release_query_state() -> None:
-        """Between-query hygiene, OUTSIDE the timers: checkpointing
-        queries (BPE rounds, dup-components edges, semdedup
-        assignments) pin localCheckpoint blocks that bench otherwise
-        accumulates across all 100+ queries — measured as sporadic
-        multi-second GC stalls landing on unrelated later queries.
-        Queries are independent, so dropping another query's blocks
-        only removes cross-query interference."""
-        sc = spark.sparkContext
-        try:
-            for rdd in sc._jsc.getPersistentRDDs().values():
-                rdd.unpersist(False)
-        except Exception:
-            pass
-        try:
-            spark.catalog.clearCache()
-        except Exception:
-            pass
-
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    # Rotating full-rep cohort (round-14 tiering): the driver's r13
-    # run lost a rep to the 900 s wall — repeat reps admitted as much
-    # of the suite as the budget share bought, which on a hot host is
-    # more than the wall affords. The repeat tier now mirrors the
-    # correctness window's rotation instead: the first
-    # SPARK_GRAFT_BENCH_FOCUS_N entries of the driver window
-    # (__spark_entry__._PRIORITY — by construction the round's new
-    # queries + lineage-touched rows + the rotating stale cohort) get
-    # full reps; the stable majority runs at 1 rep and earns its
-    # 3-rep medians on its rotation turn. Delta-first suspects and
-    # rep-0 failures still enter the repeat tier regardless.
-    focus_n = int(os.environ.get("SPARK_GRAFT_BENCH_FOCUS_N", "50"))
-    try:
-        from __spark_entry__ import _PRIORITY as _prio
-        focus_order = [n for n in _prio[:focus_n] if n in REGISTRY]
-    except Exception as exc:   # fall back to cheapest-first fill
-        print(f"bench: no driver window ({exc}); "
-              "repeat tier falls back to cheapest-first fill",
-              file=sys.stderr)
-        focus_order = []
-    # wall budget: stop starting new reps once the next rep would
-    # likely blow it (estimated from the last completed rep), so a
-    # driver-side timeout truncates to fewer FULL passes rather than
-    # killing bench mid-rep with no output at all
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "900"))
-    # Slow-family tiering: medians-of-2 are really minima-of-2, so
-    # regressions on the majority were unattributable once the suite
-    # outgrew budget/3 per rep. One full pass covers EVERY query;
-    # queries whose first-pass time exceeds SLOW_SEC then bench at a
-    # single rep — explicitly reported below, never silently — which
-    # buys the attributable majority its 3+ reps back. The slow
-    # family is job-count-bound iterative work (BPE rounds, k-core
-    # peeling, suffix-array doubling) whose timings are the suite's
-    # most stable to begin with.
-    slow_cut = float(os.environ.get("SPARK_GRAFT_BENCH_SLOW_SEC",
-                                    "4.5"))
+    t0 = time.perf_counter()
+    warm_up(spark, sf_dir)
+    print(f"bench: [warmup] {time.perf_counter() - t0:.1f}s",
+          file=sys.stderr)
     wall0 = time.perf_counter()
-    # First science-throughput sample RIGHT AFTER warmup: three
-    # consecutive recorded rounds landed the throughput tail in a
-    # co-tenant load window at the END of the run (driver-recorded
-    # inversion 8.66 s/Mpx vs 4.70 quiet same day), so the headline
-    # inherited the worst sample of the run. Leading with one pass
-    # pins an early-window sample; the remaining reps still run at
-    # the end and the median spans both windows. Counted against the
-    # wall budget (it is ~15-20 s of real work).
+    # Science throughput is sampled twice, right after warm-up and
+    # again at the end, so a co-tenant load window at either edge of
+    # the run cannot own the median (three recorded rounds had landed
+    # a single end-of-run sample in such a window: inversion 8.66
+    # s/Mpx vs 4.70 quiet the same day). The lead sample counts
+    # against the budget.
     tp_samples: list[dict[str, float]] = []
-    try:
-        tp_samples.append(science_throughput(spark))
-    except Exception as exc:
-        print(f"bench: leading throughput pass FAILED: {exc}",
-              file=sys.stderr)
-    _mark("throughput-lead")
-    samples: dict[str, list[float]] = {n: [] for n in REGISTRY}
-    slow_1rep: set[str] = set()
-    focus_admitted: list[str] = []
-    focus_dropped: list[str] = []
-    rep_durs: list[float] = []
-    fast_est: float | None = None   # expected cost of a TIERED rep
-    reps_done = 0
-    for rep in range(reps):
-        if rep > 0:
-            elapsed = time.perf_counter() - wall0
-            # a repeat rep runs only the fast tier — estimate THAT,
-            # not the full first pass, or a hot host loses its reps
-            est = rep_durs[-1] if fast_est is None else fast_est
-            if elapsed + est > budget:
-                print(f"bench: stopping after {rep} reps "
-                      f"({elapsed:.0f}s elapsed, est next "
-                      f"{est:.0f}s, budget {budget:.0f}s)",
-                      file=sys.stderr)
-                break
-        reps_done += 1
-        t_rep = time.perf_counter()
-        for name, qs in sorted(REGISTRY.items()):
-            if rep > 0 and name in slow_1rep:
-                continue
-            # mid-rep hard stop: the rep-start estimate is blind to
-            # load arriving DURING the rep (measured +108 s overrun
-            # when co-tenant load rose mid-pass); a partial repeat
-            # rep is harmless — medians are per-query — while an
-            # unbounded overrun risks the driver killing bench
-            # before the JSON line prints. Never cuts rep 0 (every
-            # query must get its one guaranteed sample).
-            if rep > 0 and time.perf_counter() - wall0 > budget:
-                print(f"bench: budget hit mid-rep {rep}; stopping",
-                      file=sys.stderr)
-                break
-            t0 = time.perf_counter()
-            try:
-                df = qs.spark(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # keep benching the rest
-                print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-                samples[name].append(-1.0)
-                continue
-            samples[name].append(time.perf_counter() - t0)
-            release_query_state()
-        rep_durs.append(time.perf_counter() - t_rep)
-        _mark(f"rep{rep}")
-        if rep == 0 and reps > 1:
-            # ADAPTIVE tier threshold: the static cut alone still
-            # lost a rep on hot hosts (rep 1 of a 212-query suite can
-            # eat half the budget). Size the fast set from what the
-            # REMAINING budget actually buys: admit queries cheapest-
-            # first until a repeat pass no longer fits the per-rep
-            # share (with 10% headroom), capped at slow_cut.
-            rem = budget - (time.perf_counter() - wall0)
-            per_rep = max(0.0, rem / (reps - 1) * 0.9)
-            # wall-vs-suite_total discipline: an uncapped budget
-            # share let ONE repeat rep eat ~45% of rep0 (210 s vs
-            # 464 s, round-11 section timers), pushing rep 2 over
-            # budget — the suite then reported reps=2 and skipped
-            # the small-query extra passes entirely. Capping each
-            # repeat rep keeps all `reps` reps (and the small-pass
-            # stabilizer) inside the budget; delta-first suspects
-            # still bypass the cap via their reserved share.
-            #
-            # The cap base is the estimated FAST-TIER duration, not
-            # the full rep-0 wall: rep 0 includes the slow tier
-            # (first > slow_cut) which repeat reps never run, so a
-            # rep0-based fraction overshot the intent where the slow
-            # tier dominated and under-admitted where the fast tier
-            # did (round-11 driver run: n_slow_1rep=132, half the
-            # suite at a single sample). rep_frac is the fraction of
-            # the fast tier's first-pass time a repeat rep may cost.
-            first = {n: v[0] for n, v in samples.items()
-                     if v and v[0] >= 0}
-            rep_frac = float(os.environ.get(
-                "SPARK_GRAFT_BENCH_REP_FRAC", "0.45"))
-            fast_base = rep_durs[0] - sum(
-                v for v in first.values() if v > slow_cut)
-            per_rep = min(per_rep, rep_frac * max(0.0, fast_base))
-            # Delta-first admission: queries whose first pass moved
-            # most vs the last on-disk bench medians enter the repeat
-            # tier BEFORE the cheapest-first fill and bypass the slow
-            # cap, so round-over-round suspects self-attribute with
-            # real medians instead of landing in the 1-rep tier (the
-            # r8 failure mode: stream_drift_gate 7.2x on one
-            # heavy-load sample, unattributable until a manual
-            # quiet-host probe a round later).
-            try:
-                _sf_now = float(
-                    sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-            except ValueError:
-                _sf_now = -1.0
-            prev = _prev_medians(_sf_now)
-            delta_n = int(os.environ.get(
-                "SPARK_GRAFT_BENCH_DELTA_N", "5"))
-            delta_min = float(os.environ.get(
-                "SPARK_GRAFT_BENCH_DELTA_MIN", "1.5"))
-            suspects = sorted(
-                (n for n in first
-                 if prev.get(n, 0) > 0
-                 and first[n] / prev[n] >= delta_min),
-                key=lambda n: first[n] / prev[n],
-                reverse=True)[:delta_n]
-            # suspects bypass the slow cap but get only a bounded
-            # SHARE of the repeat budget — otherwise two big jumps
-            # could eat the whole per-rep allowance and starve the
-            # other ~200 queries back down to 1 rep
-            sus_budget = per_rep * float(os.environ.get(
-                "SPARK_GRAFT_BENCH_DELTA_SHARE", "0.4"))
-            admitted: set[str] = set()
-            acc = 0.0
-            if focus_order:
-                # rotating cohort first, in window order (most
-                # important rows lead) — bypasses the slow cut (the
-                # round's own additions deserve medians even at
-                # 2-4 s each) but respects the per-rep budget; a
-                # dropped focus entry is reported, never silent
-                for n in focus_order:
-                    if n not in first:
-                        continue
-                    v = first[n]
-                    if acc + v > per_rep:
-                        focus_dropped.append(n)
-                        continue
-                    acc += v
-                    admitted.add(n)
-                    focus_admitted.append(n)
-                # delta-first suspects ride along in the remaining
-                # room (bounded by their share so two big jumps
-                # can't eat the cohort's allowance)
-                sus_room = acc + sus_budget
-                for n in suspects:
-                    if n in admitted:
-                        continue
-                    v = first[n]
-                    if acc + v > min(per_rep, sus_room):
-                        continue
-                    acc += v
-                    admitted.add(n)
-            else:
-                # no driver window available: legacy admission —
-                # suspects within their share, then cheapest-first
-                for n in suspects:
-                    v = first[n]
-                    if acc + v > sus_budget:
-                        continue
-                    acc += v
-                    admitted.add(n)
-                for n in sorted((n for n in first
-                                 if n not in admitted),
-                                key=lambda n: first[n]):
-                    v = first[n]
-                    if v > slow_cut or acc + v > per_rep:
-                        break   # the fill is time-sorted: nothing
-                        # cheaper remains past the cap
-                    acc += v
-                    admitted.add(n)
-            fast_est = acc * 1.15   # scheduler-overhead headroom
-            # rep-0 FAILURES are not consigned to the 1-rep tier:
-            # a transient failure (co-tenant OOM, scratch collision)
-            # deserves its retries, or the round reports FAILED off
-            # one bad sample (the pre-delta tiering retried them too)
-            failed = {n for n, v in samples.items()
-                      if v and v[0] < 0}
-            slow_1rep = set(samples) - admitted - failed
-            if not admitted and not failed:
-                # nothing to run in later reps (no query fit the
-                # repeat budget and no failure needs a retry): each
-                # later rep would be an empty pass that still bumps
-                # reps_done, inflating the reported rep count with no
-                # samples. When `failed` is non-empty the loop
-                # continues — transient failures (co-tenant OOM,
-                # scratch collision) get their retries even when the
-                # repeat tier is empty; the mid-rep hard stop bounds
-                # the cost.
-                print("bench: empty repeat tier and no failures to "
-                      "retry; stopping at 1 rep", file=sys.stderr)
-                break
-            if focus_admitted:
-                print(f"bench: rotating full-rep cohort "
-                      f"({len(focus_admitted)} queries, "
-                      f"{acc:.0f}s/rep est): "
-                      + " ".join(focus_admitted), file=sys.stderr)
-            if focus_dropped:
-                print("bench: focus entries over the per-rep "
-                      "budget, benched at 1 rep: "
-                      + " ".join(focus_dropped), file=sys.stderr)
-            sus_in = [n for n in suspects if n in admitted]
-            if sus_in:
-                print("bench: delta-first repeat-tier admits: "
-                      + " ".join(f"{n}({first[n] / prev[n]:.1f}x)"
-                                 for n in sus_in),
-                      file=sys.stderr)
-            sus_out = [n for n in suspects if n not in admitted]
-            if sus_out:
-                print("bench: suspects over the share budget, "
-                      "benched at 1 rep: " + " ".join(sus_out),
-                      file=sys.stderr)
-            if slow_1rep:
-                print(f"bench: {len(slow_1rep)} queries "
-                      f"(adaptive tier, cap {slow_cut:.1f}s) "
-                      f"benched at 1 rep: "
-                      + " ".join(sorted(slow_1rep)),
-                      file=sys.stderr)
+    _throughput_sample(spark, tp_samples, "lead")
+    samples = time_queries(spark, sf_dir, sorted(REGISTRY), reps,
+                           deadline=wall0 + budget)
+    for _ in range(2 - len(tp_samples)):
+        _throughput_sample(spark, tp_samples, "tail")
+    throughput = {
+        k: round(statistics.median(s[k] for s in tp_samples), 3)
+        for k in (tp_samples[0] if tp_samples else ())
+    }
 
-    def robust(vals: list[float]) -> float:
-        ok = [v for v in vals if v >= 0]
-        return round(statistics.median(ok), 3) if ok else -1.0
-
-    # sub-2s queries swing +-45% across reps on this host (the
-    # round-5 pca_topk false alarm: samples [1.81, 2.01, 1.10]), so
-    # their medians get extra passes until they rest on
-    # SPARK_GRAFT_BENCH_SMALL_REPS samples — cheap by definition,
-    # and it turns round-over-round deltas on small queries into
-    # signal instead of co-tenant noise. Budget-guarded like the
-    # main loop.
-    small_reps = max(reps, int(os.environ.get(
-        "SPARK_GRAFT_BENCH_SMALL_REPS", "5")))
-    # The stabilizer follows the tiering: only repeat-tier members
-    # (the rotating cohort + suspects) get extra passes — extending
-    # the whole sub-2s majority at 299 queries would spend the wall
-    # headroom the cohort tiering just bought. A reserve keeps the
-    # observed wall under budget by that margin (the throughput tail
-    # still has to run after this).
-    small_reserve = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_RESERVE_SEC", "120"))
-    small_pool = (set(focus_admitted) | {
-        n for n, v in samples.items() if len(v) > 1}
-    ) if focus_order else set(samples)
-    small = sorted(n for n, v in samples.items()
-                   if n in small_pool and 0 <= robust(v) < 2.0)
-    while small and reps_done > 0:
-        done = min(len(samples[n]) for n in small)
-        if done >= small_reps:
-            break
-        elapsed = time.perf_counter() - wall0
-        est = 1.5 * sum(robust(samples[n]) for n in small)
-        if elapsed + est > budget - small_reserve:
-            print(f"bench: skipping small-query extra pass "
-                  f"({elapsed:.0f}s elapsed, budget {budget:.0f}s)",
-                  file=sys.stderr)
-            break
-        for name in small:
-            if time.perf_counter() - wall0 > budget - small_reserve:
-                break   # same mid-pass hard stop as the rep loop
-            t0 = time.perf_counter()
-            try:
-                REGISTRY[name].spark(spark, sf_dir).write.format(
-                    "noop").mode("overwrite").save()
-            except Exception as exc:
-                print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-                samples[name].append(-1.0)
-                continue
-            samples[name].append(time.perf_counter() - t0)
-            release_query_state()
-
-    _mark("small-passes")
-    timings = {n: robust(v) for n, v in samples.items()}
-
-    # BASELINE.md "Engine baseline plan" throughput metrics: LUT
-    # generation, inversion sec/Mpx, gradients sec/Mpx — measured on
-    # fixed-size synthetic workloads so they are SF-independent.
-    # Median over temporally-SPREAD samples: one taken right after
-    # warmup (above), the rest here at the end, so a load window at
-    # either edge of the run can't own the median.
-    throughput: dict[str, float] = {}
-    try:
-        # two temporally-SPREAD samples (one right after warmup, one
-        # here at the end) give the median both load windows; forcing
-        # one per rep bought a third ~15-20 s pass for no extra
-        # window coverage (wall-trim, round 11)
-        while len(tp_samples) < 2:
-            tp_samples.append(science_throughput(spark))
-        throughput = {
-            k: round(statistics.median(s[k] for s in tp_samples), 3)
-            for k in tp_samples[0]
-        }
-    except Exception as exc:
-        print(f"bench: throughput section FAILED: {exc}", file=sys.stderr)
-        if tp_samples:
-            throughput = {
-                k: round(statistics.median(s[k] for s in tp_samples),
-                         3)
-                for k in tp_samples[0]
-            }
-
-    _mark("throughput-tail")
     wall_sec = round(time.perf_counter() - wall0, 3)
+    timings = {n: median(v) for n, v in samples.items()}
     total = round(sum(t for t in timings.values() if t >= 0), 3)
+    reps_done = max(map(len, samples.values()), default=0)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
 
-    # Load canaries (round 15): a co-tenant-contended window can
-    # inflate 1-rep timings 2-8x and masquerade as a sea of
-    # regressions (the r14 driver's 32-core run). Two add-only
-    # self-labeling signals:
-    # - rep0_hot_x: this run's rep-0 per-query samples summed over
-    #   the queries the last on-disk bench (same sf) also measured,
-    #   divided by the sum of those prior medians — ~1.0 on a host
-    #   comparable to the recorded base, >>1 in a hot window;
-    # - tp_spread: max over the three throughput metrics of
-    #   max_sample/min_sample across the temporally-spread
-    #   throughput passes — ~1.0 when both windows saw the same
-    #   machine, large when load arrived mid-run.
-    try:
-        _sf_f = float(sf_val) if not isinstance(sf_val, str) else -1.0
-    except (TypeError, ValueError):
-        _sf_f = -1.0
-    _prev = _prev_medians(_sf_f)
-    _common = [n for n, v in samples.items()
-               if v and v[0] >= 0 and _prev.get(n, 0) > 0]
+    # Load canaries: a co-tenant-contended window can inflate timings
+    # 2-8x and masquerade as a sea of regressions. Two self-labeling
+    # signals:
+    # - rep0_hot_x: this run's rep-0 samples summed over the queries
+    #   the last on-disk bench (same sf) also measured, divided by the
+    #   sum of those prior medians — ~1.0 on a host comparable to the
+    #   recorded base, >>1 in a hot window;
+    # - tp_spread: max over the throughput metrics of max/min sample
+    #   across the temporally-spread throughput passes — ~1.0 when both
+    #   windows saw the same machine, large when load arrived mid-run.
+    prev = _prev_medians(sf_val if isinstance(sf_val, float) else -1.0)
+    common = [n for n, v in samples.items()
+              if v and v[0] >= 0 and prev.get(n, 0) > 0]
     rep0_hot_x = (round(
-        sum(samples[n][0] for n in _common)
-        / sum(_prev[n] for n in _common), 3) if _common else None)
-    tp_spread = None
-    if tp_samples:
-        ratios = []
-        for k2 in tp_samples[0]:
-            vals = [s[k2] for s in tp_samples if k2 in s and s[k2] > 0]
-            if len(vals) >= 2:
-                ratios.append(max(vals) / min(vals))
-        if ratios:
-            tp_spread = round(max(ratios), 3)
+        sum(samples[n][0] for n in common)
+        / sum(prev[n] for n in common), 3) if common else None)
+    ratios = []
+    for k2 in throughput:
+        vals = [s[k2] for s in tp_samples if k2 in s and s[k2] > 0]
+        if len(vals) >= 2:
+            ratios.append(max(vals) / min(vals))
+    tp_spread = round(max(ratios), 3) if ratios else None
     if rep0_hot_x is not None and rep0_hot_x > 2.0:
         print(f"bench: LOAD ALERT — rep-0 pass ran {rep0_hot_x}x the "
               "last recorded medians; this window is contended and "
@@ -588,17 +327,12 @@ def main() -> None:
     # parses the JSON line out of that window (round 1+2 both lost
     # the bench signal to an oversized line). Full per-query detail
     # goes to a sidecar file; the printed line carries the total plus
-    # as many per-query timings (priority order) as fit in ~1800
-    # chars.
+    # as many per-query timings as fit in ~1800 chars.
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_detail.json"), "w") as fh:
         json.dump({"metric": "suite_total", "value": total,
                    "unit": "sec", "queries": timings, "sf": sf_val,
                    "n_queries": len(timings), "reps": reps_done,
-                   "n_slow_1rep": len(slow_1rep),
-                   "slow_1rep": sorted(slow_1rep),
-                   "focus_admitted": focus_admitted,
-                   "focus_dropped": focus_dropped,
                    "rep0_hot_x": rep0_hot_x,
                    "tp_spread": tp_spread,
                    "wall_sec": wall_sec,
@@ -607,9 +341,9 @@ def main() -> None:
                    "throughput": throughput}, fh, indent=1)
 
     # Deterministic trim: slowest queries first (ties by name), so
-    # every round's printed line is comparable to the last no matter
-    # how the driver-priority order rotates — the slow tail is the
-    # part worth watching, and BENCH_detail.json keeps the rest.
+    # every run's printed line is comparable to the last; the slow
+    # tail is the part worth watching, and BENCH_detail.json keeps
+    # the rest.
     order = sorted(timings, key=lambda n: (-timings[n], n))
 
     def line_for(k: int) -> str:
@@ -620,8 +354,6 @@ def main() -> None:
             "queries": {n: round(timings[n], 2) for n in order[:k]},
             "n_queries": len(timings),
             "reps": reps_done,
-            "n_slow_1rep": len(slow_1rep),
-            "n_focus": len(focus_admitted),
             "rep0_hot_x": rep0_hot_x,
             "tp_spread": tp_spread,
             "wall_sec": wall_sec,

@@ -8,6 +8,7 @@ import topology.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -20,11 +21,12 @@ def test_classifier_importable_standalone():
     # regression: a top-level suite.base import made
     # `import xsarsea_spark.pipeline.classifier` (before the suite
     # package) fail with a circular-import error
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     r = subprocess.run(
         [sys.executable, "-c",
          "import xsarsea_spark.pipeline.classifier as c;"
          "print(c.N_FEATURES)"],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=root)
     assert r.returncode == 0, r.stderr
     assert r.stdout.strip() == "5"
 

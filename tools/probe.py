@@ -1,22 +1,22 @@
 """Per-query quiet-median probe: times the named registry queries
-REPS times each (noop sink, same methodology as bench.py) and prints
-medians. Usage:
+REPS times each and prints medians. Usage:
 
     python tools/probe.py q1 q2 ... [--reps N] [--sf DIR]
 
-Interleaved rep-major order (rep 0 of every query, then rep 1, ...)
-so one load window cannot bias one query. Warmup mirrors bench.py.
+It runs bench.py's warm-up, release and rep-major timing loop with no
+budget (rep 0 of every query, then rep 1, ...), so one load window
+cannot bias one query; use it for interleaved A/B of named queries.
 """
 from __future__ import annotations
 
 import argparse
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
+
+from bench import median, time_queries, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -27,54 +27,13 @@ def main() -> None:
     args = ap.parse_args()
 
     from xsarsea_spark.session import get_session
-    from xsarsea_spark.suite import REGISTRY
 
     spark = get_session(app_name="xsarsea-probe")
     spark.sparkContext.setLogLevel("ERROR")
-
-    from xsarsea_spark.sources.tables import TABLES, load
-    for t in TABLES:
-        load(spark, args.sf, t).count()
-    REGISTRY["q06_forecast_revenue"].spark(spark, args.sf).collect()
-    from pyspark.sql.functions import col, pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(32).repartition(32).select(_warm(col("id"))).collect()
-
-    def release() -> None:
-        sc = spark.sparkContext
-        try:
-            for rdd in sc._jsc.getPersistentRDDs().values():
-                rdd.unpersist(False)
-        except Exception:
-            pass
-        try:
-            spark.catalog.clearCache()
-        except Exception:
-            pass
-
-    samples: dict[str, list[float]] = {n: [] for n in args.queries}
-    for rep in range(args.reps):
-        for name in args.queries:
-            spark.sparkContext.setJobDescription(f"{name} rep{rep}")
-            t0 = time.perf_counter()
-            try:
-                REGISTRY[name].spark(spark, args.sf).write.format(
-                    "noop").mode("overwrite").save()
-            except Exception as exc:
-                print(f"probe: {name} FAILED: {exc}", file=sys.stderr)
-                samples[name].append(-1.0)
-                continue
-            samples[name].append(time.perf_counter() - t0)
-            release()
-        print(f"probe: rep {rep} done", file=sys.stderr)
+    warm_up(spark, args.sf)
+    samples = time_queries(spark, args.sf, args.queries, args.reps)
     for name, vs in samples.items():
-        ok = [v for v in vs if v >= 0]
-        med = statistics.median(ok) if ok else -1.0
-        print(f"{name}: median={med:.2f}s samples="
+        print(f"{name}: median={median(vs):.2f}s samples="
               + " ".join(f"{v:.2f}" for v in vs))
     spark.stop()
 

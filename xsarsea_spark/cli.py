@@ -8,6 +8,7 @@ Usage: ``python -m xsarsea_spark.cli OUTDIR [--res low|high]``
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -23,8 +24,6 @@ def export_all_luts(spark, outdir: str, res: str = "low",
 
     from xsarsea_spark.functions.gmfs import GMF_REGISTRY
     from xsarsea_spark.operators.lut import gmf_to_lut
-    from xsarsea_spark.sources.luts import lut_arrays_to_parquet
-    from xsarsea_spark.operators.lut import gmf_lut_numpy
 
     written = {}
     for name in (models or sorted(GMF_REGISTRY)):
@@ -33,7 +32,6 @@ def export_all_luts(spark, outdir: str, res: str = "low",
         # distributed write of the long-form table
         df.write.mode("overwrite").parquet(path)
         # metadata sidecar from the axis definitions
-        lut = gmf_lut_numpy(name, axes)
         meta = {
             "model": name,
             "units": GMF_REGISTRY[name].units,
@@ -43,8 +41,6 @@ def export_all_luts(spark, outdir: str, res: str = "low",
                      for ax in axes},
             "cells": int(np.prod([ax.n for ax in axes])),
         }
-        import json
-
         with open(os.path.join(path, "_lut_meta.json"), "w") as f:
             json.dump(meta, f)
         written[name] = meta

@@ -17,7 +17,7 @@ and are 180-degree symmetric in phi; crosspol GMFs are phi-independent.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 import numpy as np

@@ -20,7 +20,7 @@ independent (and hash-match the DuckDB oracle).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xsarsea_spark.expr import double_lit

@@ -29,7 +29,6 @@ from __future__ import annotations
 from typing import Mapping, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T

@@ -325,13 +325,7 @@ def _invert_batch(
         if has_co:
             # copol requested but ancillary NaN -> dual also NaN (guard
             # parity with windspeed.py:197-207)
-            s0co_n = pdf[cols["sigma0_co_db"]].to_numpy(np.float64,
-                                                        na_value=np.nan)
-            anc_n = (
-                pdf[cols["anc_re"]].to_numpy(np.float64, na_value=np.nan)
-                + 1j * pdf[cols["anc_im"]].to_numpy(np.float64, na_value=np.nan)
-            )
-            valid &= ~(~np.isnan(s0co_n) & np.isnan(np.abs(anc_n)))
+            valid &= ~(~np.isnan(s0co) & np.isnan(np.abs(anc)))
         idx = np.flatnonzero(valid)
         n_crw = cr["lut_db"].shape[0]
         jc = np.empty((n_crw, chunk))

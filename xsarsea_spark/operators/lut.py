@@ -101,8 +101,6 @@ def gmf_to_lut(
         df = grid.withColumn("sigma0_model", F.expr(gmf_sql(model)))
         return df, axes
 
-    import pandas as pd
-
     schema = (", ".join(f"{f.name} {f.dataType.simpleString()}"
                         for f in grid.schema.fields)
               + ", sigma0_model double")

@@ -71,7 +71,6 @@ def _assign_arrow(base: DataFrame, centroids: dict[int, list[float]],
     used by tests to pin kernel/SQL bit-equality).
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     keys = sorted(centroids)

@@ -13,7 +13,7 @@ catalog is O(models) — always broadcastable.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession

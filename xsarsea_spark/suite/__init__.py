@@ -4,17 +4,14 @@ Each submodule registers (Spark, oracle-SQL) pairs into
 ``xsarsea_spark.suite.base.REGISTRY`` at import time.
 """
 
-from xsarsea_spark.suite.base import REGISTRY, QuerySpec, spec  # noqa: F401
+import importlib
+
+from xsarsea_spark.suite.base import REGISTRY, QuerySpec, spec
 
 # Import for side effect: populate REGISTRY.
-from xsarsea_spark.suite import relational  # noqa: F401,E402
-from xsarsea_spark.suite import relational_ext  # noqa: F401,E402
-from xsarsea_spark.suite import relational_full  # noqa: F401,E402
-from xsarsea_spark.suite import science  # noqa: F401,E402
-from xsarsea_spark.suite import streaks  # noqa: F401,E402
-from xsarsea_spark.suite import pipeline_suite  # noqa: F401,E402
-from xsarsea_spark.suite import events_suite  # noqa: F401,E402
-from xsarsea_spark.suite import catalog_suite  # noqa: F401,E402
-from xsarsea_spark.suite import raster  # noqa: F401,E402
+for _m in ("relational", "relational_ext", "relational_full", "science",
+           "streaks", "pipeline_suite", "events_suite", "catalog_suite",
+           "raster"):
+    importlib.import_module(f"{__name__}.{_m}")
 
 __all__ = ["REGISTRY", "QuerySpec", "spec"]

@@ -432,8 +432,7 @@ _DD_QS = {"q50": "5e-1", "q95": "95e-2", "q99": "99e-2"}
 
 
 def _dd_oracle() -> str:
-    from xsarsea_spark.operators.sketch import (DD_GAMMA_SQL,
-                                                dd_bucket_sql,
+    from xsarsea_spark.operators.sketch import (dd_bucket_sql,
                                                 dd_quantile_sql)
 
     b = dd_bucket_sql("value", QTRUNC)

@@ -15,7 +15,7 @@ from xsarsea_spark.operators.exactsum import QTRUNC
 from xsarsea_spark.operators.interp import GridAxis, interp_join
 from xsarsea_spark.operators.lut import grid_df
 from xsarsea_spark.suite.base import spec
-from xsarsea_spark.suite.science import N_LINES, N_SAMPLES, scene_df, scene_sql
+from xsarsea_spark.suite.science import scene_df, scene_sql
 
 
 # ----------------------------------------------------------------------
