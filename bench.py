@@ -6,8 +6,9 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 the session itself reads SPARK_GRAFT_CPUS (default 32).
 Prints ONE JSON line:
   {"metric": "suite_total", "value": N, "unit": "sec",
-   "queries": {...}, "sf": ...}
-and writes every per-query sample to BENCH_detail.json.
+   "queries": {...}, "sf": ..., "cpus": ...}
+and writes every per-query sample, and each labelled lead/tail
+science-throughput sample, to BENCH_detail.json.
 
 Repeat rule: rep 0 times every query and is never cut. Each later rep
 times rep-0 failures first, then the cheapest queries by rep-0 time,
@@ -30,6 +31,9 @@ import statistics
 import sys
 import time
 from itertools import accumulate
+
+# where BENCH_detail.json is written and earlier bench records are read
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def science_throughput(spark) -> dict[str, float]:
@@ -197,13 +201,14 @@ def time_queries(spark, sf_dir: str, names: list[str], reps: int,
     return samples
 
 
-def _throughput_sample(spark, tp_samples: list[dict[str, float]],
-                       when: str) -> None:
+def _throughput_sample(spark, tp_samples: list[dict], when: str) -> None:
+    """Append one labelled science_throughput sample ({"when": ...,
+    metric: value, ...}); a failed pass appends nothing."""
     spark.sparkContext.setJobGroup("bench-throughput",
                                    f"science_throughput {when}")
     t0 = time.perf_counter()
     try:
-        tp_samples.append(science_throughput(spark))
+        tp_samples.append({"when": when, **science_throughput(spark)})
     except Exception as exc:
         print(f"bench: {when} throughput pass FAILED: {exc}",
               file=sys.stderr)
@@ -211,23 +216,24 @@ def _throughput_sample(spark, tp_samples: list[dict[str, float]],
           file=sys.stderr)
 
 
-def _prev_medians(sf: float) -> dict[str, float]:
+def _prev_medians(sf: float, cpus: int) -> dict[str, float]:
     """Per-query medians from the most recent bench on disk AT THE
-    SAME SF, the base of the ``rep0_hot_x`` canary. Prefers
-    BENCH_detail.json (full query set); falls back to the newest
-    BENCH_r*.json (driver-captured, slowest-queries-first trim). The
-    sf match matters: a local sf0.01 run overwrites BENCH_detail.json,
-    and an sf0.1 pass read against sf0.01 medians would look ~10x
-    hot."""
+    SAME SF AND CPU COUNT, the base of the ``rep0_hot_x`` canary.
+    Prefers BENCH_detail.json (full query set); falls back to the
+    newest BENCH_r*.json (driver-captured, slowest-queries-first
+    trim). Both must match: a local sf0.01 run overwrites
+    BENCH_detail.json, and an sf0.1 pass read against sf0.01 medians
+    would look ~10x hot; a 4-core pass read against an 8-core base
+    reads ~1.5x hot on a quiet host. A record without ``cpus`` is
+    never a base."""
     import glob
 
     # an unparseable current sf (-1.0) must not match a file that
     # also lacks an 'sf' field and would default to the same sentinel
     if sf < 0:
         return {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = [os.path.join(here, "BENCH_detail.json")]
-    paths += sorted(glob.glob(os.path.join(here, "BENCH_r*.json")),
+    paths = [os.path.join(HERE, "BENCH_detail.json")]
+    paths += sorted(glob.glob(os.path.join(HERE, "BENCH_r*.json")),
                     reverse=True)
     for p in paths:
         try:
@@ -246,6 +252,8 @@ def _prev_medians(sf: float) -> dict[str, float]:
                 continue
         except (TypeError, ValueError):
             continue
+        if inner.get("cpus") != cpus:
+            continue
         q = inner.get("queries") or {}
         out = {k: float(v) for k, v in q.items()
                if isinstance(v, (int, float)) and v > 0}
@@ -263,6 +271,7 @@ def main() -> None:
 
     spark = get_session(app_name="xsarsea-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     t0 = time.perf_counter()
     warm_up(spark, sf_dir)
@@ -275,7 +284,7 @@ def main() -> None:
     # a single end-of-run sample in such a window: inversion 8.66
     # s/Mpx vs 4.70 quiet the same day). The lead sample counts
     # against the budget.
-    tp_samples: list[dict[str, float]] = []
+    tp_samples: list[dict] = []
     _throughput_sample(spark, tp_samples, "lead")
     samples = time_queries(spark, sf_dir, sorted(REGISTRY), reps,
                            deadline=wall0 + budget)
@@ -283,7 +292,7 @@ def main() -> None:
         _throughput_sample(spark, tp_samples, "tail")
     throughput = {
         k: round(statistics.median(s[k] for s in tp_samples), 3)
-        for k in (tp_samples[0] if tp_samples else ())
+        for k in (tp_samples[0] if tp_samples else ()) if k != "when"
     }
 
     wall_sec = round(time.perf_counter() - wall0, 3)
@@ -306,7 +315,8 @@ def main() -> None:
     # - tp_spread: max over the throughput metrics of max/min sample
     #   across the temporally-spread throughput passes — ~1.0 when both
     #   windows saw the same machine, large when load arrived mid-run.
-    prev = _prev_medians(sf_val if isinstance(sf_val, float) else -1.0)
+    prev = _prev_medians(sf_val if isinstance(sf_val, float) else -1.0,
+                         cpus)
     common = [n for n, v in samples.items()
               if v and v[0] >= 0 and prev.get(n, 0) > 0]
     rep0_hot_x = (round(
@@ -328,17 +338,18 @@ def main() -> None:
     # the bench signal to an oversized line). Full per-query detail
     # goes to a sidecar file; the printed line carries the total plus
     # as many per-query timings as fit in ~1800 chars.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_detail.json"), "w") as fh:
+    with open(os.path.join(HERE, "BENCH_detail.json"), "w") as fh:
         json.dump({"metric": "suite_total", "value": total,
                    "unit": "sec", "queries": timings, "sf": sf_val,
+                   "cpus": cpus,
                    "n_queries": len(timings), "reps": reps_done,
                    "rep0_hot_x": rep0_hot_x,
                    "tp_spread": tp_spread,
                    "wall_sec": wall_sec,
                    "samples": {n: [round(v, 3) for v in vs]
                                for n, vs in samples.items()},
-                   "throughput": throughput}, fh, indent=1)
+                   "throughput": throughput,
+                   "throughput_samples": tp_samples}, fh, indent=1)
 
     # Deterministic trim: slowest queries first (ties by name), so
     # every run's printed line is comparable to the last; the slow
@@ -359,6 +370,7 @@ def main() -> None:
             "wall_sec": wall_sec,
             "throughput": throughput,
             "sf": sf_val,
+            "cpus": cpus,
         }, separators=(",", ":"))
 
     k = len(order)

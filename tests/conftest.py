@@ -6,6 +6,7 @@ import pytest
 
 SF_DIR = os.environ.get("XSARSEA_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_DIR_SMALL = "/root/testdata/sf0.001"
+SF_DIR_LARGE = os.path.join(os.path.dirname(SF_DIR_SMALL), "sf0.1")
 
 
 @pytest.fixture(scope="session")

@@ -1,10 +1,13 @@
 """bench.time_queries, the rep loop shared by bench.py and
-tools/probe.py, driven by a fake runner and a fake clock (no Spark)."""
+tools/probe.py, driven by a fake runner and a fake clock (no Spark);
+bench._prev_medians, the rep0_hot_x base, over records in a temp dir."""
 
 from __future__ import annotations
 
+import json
 from types import SimpleNamespace
 
+import bench
 from bench import time_queries
 
 
@@ -93,3 +96,20 @@ def test_no_query_starts_after_the_budget():
     assert [c for c, _ in calls] == ["a", "b", "c", "d", "a", "b"]
     assert {n: len(v) for n, v in out.items()} == {
         "a": 2, "b": 2, "c": 1, "d": 1}
+
+
+def test_prev_medians_needs_same_sf_and_cpus(tmp_path, monkeypatch):
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+
+    def write(name, rec):
+        (tmp_path / name).write_text(json.dumps(rec))
+
+    write("BENCH_detail.json", {"sf": 0.1, "cpus": 8, "queries": {"a": 2.0}})
+    # driver-captured record: same sf, no cpus
+    write("BENCH_r01.json", {"parsed": {"sf": 0.1, "queries": {"a": 1.0}}})
+    assert bench._prev_medians(0.1, 4) == {}
+    assert bench._prev_medians(0.1, 8) == {"a": 2.0}
+    assert bench._prev_medians(0.01, 8) == {}
+    write("BENCH_r02.json", {"parsed": {"sf": 0.1, "cpus": 4,
+                                        "queries": {"a": 3.0}}})
+    assert bench._prev_medians(0.1, 4) == {"a": 3.0}

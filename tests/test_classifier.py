@@ -115,7 +115,7 @@ def test_grouped_train_matches_solo_per_group(spark):
 
     docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
     xy = doc_features(docs, extra=("lang",))
-    wmap = train_logreg_grouped(xy, "lang", rounds=3)
+    wmap = train_logreg_grouped(xy, rounds=3)
     assert len(wmap) >= 2
     for g in list(wmap)[:2]:
         solo = train_logreg(xy.filter(F.col("lang") == g), rounds=3)

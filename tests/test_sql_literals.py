@@ -50,7 +50,7 @@ def test_grouped_train_adversarial_group_keys(spark):
             for i, g in enumerate(ADVERSARIAL * 2)]
     xy = spark.createDataFrame(rows,
                                "lang string, x array<double>, y double")
-    wmap = train_logreg_grouped(xy, "lang", rounds=1)
+    wmap = train_logreg_grouped(xy, rounds=1)
     assert sorted(wmap) == sorted(ADVERSARIAL)
     for g in ADVERSARIAL:
         solo = train_logreg(xy.filter(F.col("lang") == g), rounds=1)

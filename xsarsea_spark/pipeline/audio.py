@@ -102,7 +102,6 @@ def trig_int(frame: int = AFP_FRAME, bands: int = AFP_BANDS,
     and order-independent (the dct_int precedent), so both engines
     derive identical band energies: |sum| <= frame * 2^15 * scale =
     2^28 at the defaults, squares sum below 2^57 — no overflow."""
-    import numpy as np
 
     i = np.arange(frame)
     k = np.arange(1, bands + 1)[:, None]
@@ -123,7 +122,6 @@ def audio_fingerprint(samples: "object") -> int:
     hence the fingerprint — is unchanged. The frame count is derived
     from the input (the SQL oracle derives it as _WAV_N // AFP_FRAME)
     so the two can't silently desync if the doc length changes."""
-    import numpy as np
 
     c, s = trig_int()
     v = np.asarray(samples, dtype=np.int64)

@@ -100,8 +100,7 @@ def apply_merge_expr(col: str, a: str, b: str) -> str:
             f" {rebuild}), 1)), 1)")
 
 
-def _bpe_rounds(docs: DataFrame, n_merges: int, text_col: str,
-                id_col: str, apply_last: bool,
+def _bpe_rounds(docs: DataFrame, n_merges: int, apply_last: bool,
                 sample_frac: float = 1.0,
                 ) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
     """Shared training loop: returns (final tokenized corpus, merge
@@ -120,11 +119,11 @@ def _bpe_rounds(docs: DataFrame, n_merges: int, text_col: str,
     stays exact for the DuckDB oracle.
     """
     cur = (
-        docs.filter(F.col(text_col).isNotNull())
-        .selectExpr(id_col, f"split({text_col}, ' ') AS __t")
+        docs.filter(F.col("text").isNotNull())
+        .selectExpr("doc_id", "split(text, ' ') AS __t")
         .filter("size(__t) >= 1")
     )
-    return _merge_rounds(cur, n_merges, [id_col], apply_last,
+    return _merge_rounds(cur, n_merges, ["doc_id"], apply_last,
                          sample_frac)
 
 
@@ -212,13 +211,11 @@ def _merge_rounds_weighted(wf: DataFrame, n_merges: int,
 
 
 def bpe_train(docs: DataFrame, n_merges: int = 4,
-              text_col: str = "text",
-              id_col: str = "doc_id",
               sample_frac: float = 1.0) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns the merge table
     (merge_rank, lhs, rhs, pair_count). ``sample_frac`` < 1 counts
     pairs on a corpus sample after round 1 (see ``_bpe_rounds``)."""
-    _, merges = _bpe_rounds(docs, n_merges, text_col, id_col,
+    _, merges = _bpe_rounds(docs, n_merges,
                             apply_last=False, sample_frac=sample_frac)
     return docs.sparkSession.createDataFrame(
         merges,
@@ -227,8 +224,6 @@ def bpe_train(docs: DataFrame, n_merges: int = 4,
 
 
 def bpe_encode(docs: DataFrame, n_merges: int = 4,
-               text_col: str = "text",
-               id_col: str = "doc_id",
                sample_frac: float = 1.0) -> DataFrame:
     """Train ``n_merges`` merges AND apply them all: per document the
     raw/encoded token counts, the compression ratio, and an md5
@@ -241,13 +236,13 @@ def bpe_encode(docs: DataFrame, n_merges: int = 4,
     ``localCheckpoint`` — so encode costs one extra rebuild beyond
     training, not a second pass over the merges.
     """
-    cur, _ = _bpe_rounds(docs, n_merges, text_col, id_col,
+    cur, _ = _bpe_rounds(docs, n_merges,
                          apply_last=True, sample_frac=sample_frac)
     # raw count recovered from the encoded stream itself (a merged
     # token expands to its space-separated word count) — no join back
     # to the source, no second corpus scan
     return cur.select(
-        id_col,
+        "doc_id",
         F.expr("CAST(aggregate(__t, 0L,"
                " (a, x) -> a + size(split(x, ' '))) AS BIGINT)")
         .alias("n_tokens_raw"),
@@ -256,7 +251,7 @@ def bpe_encode(docs: DataFrame, n_merges: int = 4,
     ).withColumn(
         "compression",
         F.expr("n_tokens_raw / CAST(n_tokens_encoded AS DOUBLE)"),
-    ).select(id_col, "n_tokens_raw", "n_tokens_encoded",
+    ).select("doc_id", "n_tokens_raw", "n_tokens_encoded",
              "compression", "encoded_md5")
 
 
@@ -334,9 +329,7 @@ def _apply_merges_kernel(merges: list[tuple[str, str]]):
     return kernel
 
 
-def bpe_apply(docs: DataFrame, merges: DataFrame,
-              text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
+def bpe_apply(docs: DataFrame, merges: DataFrame) -> DataFrame:
     """Encode the corpus with an already-trained (typically
     ``bpe_load_merges``-loaded) merge table — NO retraining, no pair
     counting, no per-round jobs: the merge list is collected (bounded
@@ -345,14 +338,14 @@ def bpe_apply(docs: DataFrame, merges: DataFrame,
     the same merges (tests pin digest equality on the full corpus).
     """
     cur = (
-        docs.filter(F.col(text_col).isNotNull())
-        .selectExpr(id_col, f"split({text_col}, ' ') AS __t")
+        docs.filter(F.col("text").isNotNull())
+        .selectExpr("doc_id", "split(text, ' ') AS __t")
         .filter("size(__t) >= 1")
     )
     enc = cur.mapInPandas(_apply_merges_kernel(_collect_merges(merges)),
                           schema=cur.schema)
     return enc.select(
-        id_col,
+        "doc_id",
         F.expr("CAST(aggregate(__t, 0L,"
                " (a, x) -> a + size(split(x, ' '))) AS BIGINT)")
         .alias("n_tokens_raw"),
@@ -361,13 +354,11 @@ def bpe_apply(docs: DataFrame, merges: DataFrame,
     ).withColumn(
         "compression",
         F.expr("n_tokens_raw / CAST(n_tokens_encoded AS DOUBLE)"),
-    ).select(id_col, "n_tokens_raw", "n_tokens_encoded",
+    ).select("doc_id", "n_tokens_raw", "n_tokens_encoded",
              "compression", "encoded_md5")
 
 
-def bpe_apply_bytelevel(docs: DataFrame, merges: DataFrame,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def bpe_apply_bytelevel(docs: DataFrame, merges: DataFrame) -> DataFrame:
     """Byte-level twin of ``bpe_apply``: GPT-2-style pre-tokenization
     + byte-fallback symbols, then the persisted merge list applied to
     the DISTINCT pre-token table in one Arrow pass (merges are
@@ -377,16 +368,16 @@ def bpe_apply_bytelevel(docs: DataFrame, merges: DataFrame,
     ``bpe_bytelevel_encode`` with the same merges — the Python
     boundary now carries vocabulary rows, not corpus rows.
     """
-    pre = _bytelevel_pre(docs, text_col, id_col)
+    pre = _bytelevel_pre(docs)
     vocab = (pre.select("__tok").distinct()
              .selectExpr("__tok", f"{_HEX_SYMBOLS_SQL} AS __t"))
     enc_vocab = vocab.mapInPandas(
         _apply_merges_kernel(_collect_merges(merges)),
         schema=vocab.schema)
     enc = pre.join(enc_vocab, on="__tok").select(
-        id_col, "__pt", "__t")
+        "doc_id", "__pt", "__t")
     return (
-        enc.groupBy(id_col)
+        enc.groupBy("doc_id")
         .agg(
             F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_pretokens"),
             F.expr("CAST(SUM(aggregate(__t, 0L, (a, x) ->"
@@ -402,7 +393,7 @@ def bpe_apply_bytelevel(docs: DataFrame, merges: DataFrame,
         .withColumn("compression",
                     F.expr("n_bytes / CAST(n_tokens_encoded"
                            " AS DOUBLE)"))
-        .select(id_col, "n_pretokens", "n_bytes", "n_tokens_encoded",
+        .select("doc_id", "n_pretokens", "n_bytes", "n_tokens_encoded",
                 "compression", "encoded_md5")
     )
 
@@ -420,8 +411,7 @@ _HEX_SYMBOLS_SQL = (
     " 2 * i - 1, 2))")
 
 
-def _bytelevel_pre(docs: DataFrame, text_col: str,
-                   id_col: str) -> DataFrame:
+def _bytelevel_pre(docs: DataFrame) -> DataFrame:
     """(id, __pt, __tok): GPT-2 pre-tokenization WITHOUT the byte
     expansion — the narrow occurrence frame (position + raw pre-token
     string) every byte-level path shuffles; the hex symbol arrays are
@@ -429,13 +419,13 @@ def _bytelevel_pre(docs: DataFrame, text_col: str,
     occurrence."""
     pat = F.lit(GPT2_PRETOKEN_PAT)
     return (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(id_col,
-                F.regexp_extract_all(F.col(text_col), pat, F.lit(0))
+        docs.filter(F.col("text").isNotNull())
+        .select("doc_id",
+                F.regexp_extract_all(F.col("text"), pat, F.lit(0))
                 .alias("__pts"))
-        .select(id_col, F.posexplode("__pts").alias("__pt", "__tok"))
+        .select("doc_id", F.posexplode("__pts").alias("__pt", "__tok"))
         # posexplode is 0-based; oracle lists are 1-based
-        .selectExpr(id_col, "__pt + 1 AS __pt", "__tok")
+        .selectExpr("doc_id", "__pt + 1 AS __pt", "__tok")
     )
 
 
@@ -453,14 +443,12 @@ def _bytelevel_vocab(pre: DataFrame) -> DataFrame:
 
 
 def bpe_bytelevel_train(docs: DataFrame, n_merges: int = 4,
-                        text_col: str = "text",
-                        id_col: str = "doc_id",
                         sample_frac: float = 1.0) -> DataFrame:
     """Learn ``n_merges`` byte-level merges (GPT-2 pre-tokenization +
     byte-fallback symbols); returns the same (merge_rank, lhs, rhs,
     pair_count) artifact shape as ``bpe_train`` — persist it with
     ``bpe_save_merges`` and encode with ``bpe_apply_bytelevel``."""
-    pre = _bytelevel_pre(docs, text_col, id_col)
+    pre = _bytelevel_pre(docs)
     # train on the distinct pre-token frequency table: counts (and
     # therefore merges and tie-breaks) are exactly the corpus counts
     # (__tok <-> __t0 bijection, see _bytelevel_vocab)
@@ -476,8 +464,6 @@ def bpe_bytelevel_train(docs: DataFrame, n_merges: int = 4,
 
 
 def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4,
-                         text_col: str = "text",
-                         id_col: str = "doc_id",
                          sample_frac: float = 1.0) -> DataFrame:
     """GPT-2-style byte-level BPE: regex pre-tokenization (merges
     never cross pre-token boundaries), byte-fallback symbols, then
@@ -503,7 +489,7 @@ def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4,
     samples the post-round-1
     counts over distinct pre-tokens (see _merge_rounds_weighted).
     """
-    pre = _bytelevel_pre(docs, text_col, id_col)
+    pre = _bytelevel_pre(docs)
     vocab = materialize(_bytelevel_vocab(pre))
     wf = vocab.select("__t0", "__f", F.col("__t0").alias("__t"))
     seg, _ = _merge_rounds_weighted(
@@ -520,9 +506,9 @@ def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4,
                     on="__t0")
               .select("__tok", "__tf"))
     cur = (pre.join(tokseg, on="__tok")
-           .select(id_col, "__pt", F.col("__tf").alias("__t")))
+           .select("doc_id", "__pt", F.col("__tf").alias("__t")))
     return (
-        cur.groupBy(id_col)
+        cur.groupBy("doc_id")
         .agg(
             F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_pretokens"),
             F.expr("CAST(SUM(aggregate(__t, 0L, (a, x) ->"
@@ -538,6 +524,6 @@ def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4,
         .withColumn("compression",
                     F.expr("n_bytes / CAST(n_tokens_encoded"
                            " AS DOUBLE)"))
-        .select(id_col, "n_pretokens", "n_bytes", "n_tokens_encoded",
+        .select("doc_id", "n_pretokens", "n_bytes", "n_tokens_encoded",
                 "compression", "encoded_md5")
     )

@@ -48,24 +48,22 @@ N_FEATURES = 5
 LABEL_MIN_CHARS = 300
 
 
-def doc_features(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id",
-                 extra: tuple[str, ...] = ()) -> DataFrame:
+def doc_features(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
     """(id, *extra, x array<double>, y double): the classic length/
     diversity/stopword feature block (x0 = bias), label =
     long-document gate. All features are integer counts and single
     double divisions — no libm, exactly reproducible in SQL.
     ``extra`` columns (e.g. a grouping key) pass through untouched."""
-    ntok = f"CAST(size(split({text_col}, ' ')) AS DOUBLE)"
+    ntok = "CAST(size(split(text, ' ')) AS DOUBLE)"
     return (
-        docs.filter(f"{text_col} IS NOT NULL AND n_chars IS NOT NULL")
+        docs.filter("text IS NOT NULL AND n_chars IS NOT NULL")
         .selectExpr(
-            id_col, *extra,
+            "doc_id", *extra,
             f"array(CAST(1.0 AS DOUBLE),"
             f" {ntok} / CAST(100.0 AS DOUBLE),"
-            f" CAST(size(array_distinct(split({text_col}, ' ')))"
+            f" CAST(size(array_distinct(split(text, ' ')))"
             f" AS DOUBLE) / {ntok},"
-            f" CAST(size(filter(split({text_col}, ' '),"
+            f" CAST(size(filter(split(text, ' '),"
             f" x -> x = 'a' OR x = 'the')) AS DOUBLE) / {ntok},"
             f" CAST(n_chars AS DOUBLE) / CAST(1000.0 AS DOUBLE))"
             f" AS x",
@@ -153,11 +151,10 @@ GROUPED_Z_SQL = ("aggregate(zip_with(w, x, (a, b) -> a * b),"
                  " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
 
 
-def train_logreg_grouped(xy: DataFrame, group_col: str = "lang",
-                         rounds: int = 4, lr: float = 1.0,
+def train_logreg_grouped(xy: DataFrame, rounds: int = 4, lr: float = 1.0,
                          qk: int = 12, scale: int = 12,
                          ) -> dict[str, list[float]]:
-    """Train ONE model PER GROUP in shared corpus scans — the
+    """Train ONE model PER ``lang`` GROUP in shared corpus scans — the
     per-domain/per-language filter fleet a multilingual curation
     pipeline ships, without multiplying passes: each round is a
     single grouped map-side-combined aggregation carrying every
@@ -174,22 +171,21 @@ def train_logreg_grouped(xy: DataFrame, group_col: str = "lang",
     replays it with a GROUP BY.
     """
 
-    txy = xy.select(group_col, "x", "y").persist()
+    txy = xy.select("lang", "x", "y").persist()
     try:
         groups = sorted(
-            r[0] for r in txy.select(group_col).distinct().collect()
+            r[0] for r in txy.select("lang").distinct().collect()
             if r[0] is not None)
         w = {g: [0.0] * N_FEATURES for g in groups}
         # the old inner join against the (group, w) table also
         # dropped rows whose group is absent from `groups` (only
         # possible for NULL, which distinct() above filtered) — keep
         # that row set explicit under the literal-CASE formulation
-        tin = txy.filter(F.col(group_col).isin(list(groups)))
+        tin = txy.filter(F.col("lang").isin(list(groups)))
         for _ in range(rounds):
             wcase = ("CASE " + " ".join(
-                "WHEN {c} = {g} THEN {arr}".format(
-                    c=group_col, g=spark_str_lit(str(g)),
-                    arr=_w_lit(w[g]))
+                "WHEN lang = {g} THEN {arr}".format(
+                    g=spark_str_lit(str(g)), arr=_w_lit(w[g]))
                 for g in groups) + " END")
             z = (f"aggregate(zip_with({wcase}, x, (a, b) -> a * b),"
                  f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
@@ -200,8 +196,8 @@ def train_logreg_grouped(xy: DataFrame, group_col: str = "lang",
                 tin
                 # same once-below-the-agg projection as gd_step:
                 # identical value, 1/N_FEATURES of the sigmoid work
-                .select(group_col, "y", "x", F.expr(p).alias("__p"))
-                .groupBy(group_col)
+                .select("lang", "y", "x", F.expr(p).alias("__p"))
+                .groupBy("lang")
                 .agg(*[F.expr(DSUM(QTRUNC(
                     f"(__p - y) * element_at(x, {d + 1})", scale),
                     scale)).alias(f"g{d}")
@@ -209,7 +205,7 @@ def train_logreg_grouped(xy: DataFrame, group_col: str = "lang",
                     F.count(F.lit(1)).alias("n"))
             ).collect()
             for r in rows:
-                g, n = r[group_col], r["n"]
+                g, n = r["lang"], r["n"]
                 w[g] = [w[g][d] - lr * (r[f"g{d}"] / n)
                         for d in range(N_FEATURES)]
         return w
@@ -237,8 +233,7 @@ def load_weights(spark: SparkSession, path: str) -> list[float]:
     return [r["weight"] for r in rows]
 
 
-def score_docs(xy: DataFrame, w: list[float], qk: int = 12,
-               id_col: str = "doc_id") -> DataFrame:
+def score_docs(xy: DataFrame, w: list[float], qk: int = 12) -> DataFrame:
     """O(batch) model application — the deploy half of the
     train-once/score-everywhere lifecycle: one scan, the weight
     vector inlined as exact double literals (broadcast-by-
@@ -247,10 +242,10 @@ def score_docs(xy: DataFrame, w: list[float], qk: int = 12,
     QTRUNC-quantized sigmoid, keep the 0-threshold decision."""
 
     return xy.select(
-        id_col,
+        "doc_id",
         F.expr(z_expr(w)).alias("score"),
     ).selectExpr(
-        id_col, "score",
+        "doc_id", "score",
         QTRUNC("CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
                " + exp(-(score)))", qk) + " AS prob",
         "score >= CAST(0.0 AS DOUBLE) AS keep",

@@ -31,8 +31,10 @@ standard SemDeDup pre-pass (cluster then near-dup within clusters).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from xsarsea_spark.operators.exactsum import ExactSumSpec, exact_sum_agg
 
@@ -70,8 +72,6 @@ def _assign_arrow(base: DataFrame, centroids: dict[int, list[float]],
     ``_argmin_expr`` is kept as the pure-SQL twin (plan-portable,
     used by tests to pin kernel/SQL bit-equality).
     """
-    import numpy as np
-    from pyspark.sql import types as T
 
     keys = sorted(centroids)
     cmat = np.asarray([centroids[c] for c in keys], dtype=np.float64)
@@ -159,13 +159,11 @@ def kmeans_embeddings(
     vecs: DataFrame,
     k: int = 4,
     rounds: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Returns (vec_id, cluster, dist2) after ``rounds`` Lloyd steps."""
     base = vecs.select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))")
+        F.col("vec_id"),
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
         .alias("__v"),
     )
     # Input contract: finite vectors only. A NaN coordinate poisons
@@ -175,7 +173,7 @@ def kmeans_embeddings(
     # arithmetic aligned.
     base = base.filter(
         F.expr("NOT exists(__v, x -> x IS NULL OR isnan(x))"))
-    init = base.orderBy(id_col).limit(k).collect()
+    init = base.orderBy("vec_id").limit(k).collect()
     centroids: dict[int, list[float]] = {
         i: list(r["__v"]) for i, r in enumerate(init)
     }
@@ -198,7 +196,7 @@ def kmeans_embeddings(
             assigned = work.withColumn("cluster", cl).withColumn(
                 "dist2", mincol)
         else:
-            assigned = _assign_arrow(base, centroids, id_col)
+            assigned = _assign_arrow(base, centroids, "vec_id")
         if rnd == rounds - 1:
             break  # output is the final assignment; no wasted update
         upd = (
@@ -215,4 +213,4 @@ def kmeans_embeddings(
         )
         centroids = {r["cluster"]: list(r["__cent"]) for r in upd}
 
-    return assigned.select(id_col, "cluster", "dist2")
+    return assigned.select("vec_id", "cluster", "dist2")

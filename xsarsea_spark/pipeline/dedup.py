@@ -18,7 +18,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
+from xsarsea_spark.engine import materialize
 from xsarsea_spark.pipeline.text import HASH40_SQL
 
 __all__ = [
@@ -43,8 +45,7 @@ def _perm_params(k: int) -> tuple[int, int]:
     return 97 + 31 * k, 911 + 131 * k
 
 
-def shingle(docs: DataFrame, n: int = 3, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def shingle(docs: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle).
 
     Docs with fewer than ``n`` tokens yield NO shingles (and so drop
@@ -52,15 +53,15 @@ def shingle(docs: DataFrame, n: int = 3, text_col: str = "text",
     oracle's end-exclusive ``range(len - n + 1)``. Without the
     filter, ``sequence(0, size - n)`` auto-steps DOWN for short docs
     and ``element_at`` throws INVALID_ARRAY_INDEX."""
-    toks = f"split({text_col}, ' ')"
+    toks = "split(text, ' ')"
     parts = " || ' ' || ".join(
         f"element_at(__toks, i + {j + 1})" for j in range(n)
     )
     return (
-        docs.selectExpr(id_col, f"{toks} AS __toks")
+        docs.selectExpr("doc_id", f"{toks} AS __toks")
         .filter(f"size(__toks) >= {n}")
         .selectExpr(
-            id_col,
+            "doc_id",
             f"explode(transform(sequence(0, size(__toks) - {n}),"
             f" i -> {parts})) AS shingle",
         )
@@ -68,8 +69,7 @@ def shingle(docs: DataFrame, n: int = 3, text_col: str = "text",
     )
 
 
-def minhash_signatures(sh: DataFrame, k: int = 16,
-                       id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(sh: DataFrame, k: int = 16) -> DataFrame:
     """MinHash signature rows (id, k, minh).
 
     All K permutation minima are computed as K aggregate expressions in
@@ -84,15 +84,14 @@ def minhash_signatures(sh: DataFrame, k: int = 16,
         F.expr(f"min(({a} * __h + {b}) % {MINHASH_P}) AS m{i}")
         for i, (a, b) in ((i, _perm_params(i)) for i in range(k))
     ]
-    wide = work.groupBy(id_col).agg(*aggs)
+    wide = work.groupBy("doc_id").agg(*aggs)
     stack = ", ".join(f"{i}, m{i}" for i in range(k))
     return wide.selectExpr(
-        id_col, f"stack({k}, {stack}) AS (k, minh)"
+        "doc_id", f"stack({k}, {stack}) AS (k, minh)"
     )
 
 
-def lsh_bands(sig: DataFrame, id_col: str = "doc_id",
-              rows_per_band: int = 2) -> DataFrame:
+def lsh_bands(sig: DataFrame, rows_per_band: int = 2) -> DataFrame:
     """Banded signature table (id, band, bandhash) — the persistable
     LSH state: each band hash combines the ``rows_per_band``
     signature rows of the band (the r in the (b, r) S-curve; fewer
@@ -113,13 +112,12 @@ def lsh_bands(sig: DataFrame, id_col: str = "doc_id",
         sig.withColumn("band",
                        F.expr(f"CAST(FLOOR(k / {rows_per_band}) AS INT)"))
         .withColumn("slot", F.expr(f"k % {rows_per_band}"))
-        .groupBy(id_col, "band")
+        .groupBy("doc_id", "band")
         .agg(F.expr(fold).alias("bandhash"))
     )
 
 
-def lsh_probe(batch_bands: DataFrame, state_bands: DataFrame,
-              id_col: str = "doc_id") -> DataFrame:
+def lsh_probe(batch_bands: DataFrame, state_bands: DataFrame) -> DataFrame:
     """Candidate (id_a=state, id_b=batch) pairs: the batch's band
     table probed against a persisted band table on (band, bandhash)
     equality — the incremental analog of the ``lsh_candidates``
@@ -133,44 +131,42 @@ def lsh_probe(batch_bands: DataFrame, state_bands: DataFrame,
             & (F.col("l.bandhash") == F.col("r.bandhash")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col("l.doc_id").alias("id_a"),
+            F.col("r.doc_id").alias("id_b"),
         )
         .distinct()
     )
 
 
 def lsh_candidates(sig: DataFrame, bands: int = 8,
-                   id_col: str = "doc_id",
                    rows_per_band: int = 2) -> DataFrame:
     """Banded LSH candidate pairs (id_a < id_b): band hash combines
     ``rows_per_band`` signature rows of each band; pairs come from a
     bucket self-join, never an all-pairs cross join."""
-    b = lsh_bands(sig, id_col=id_col, rows_per_band=rows_per_band)
+    b = lsh_bands(sig, rows_per_band=rows_per_band)
     l, r = b.alias("l"), b.alias("r")
     return (
         l.join(
             r,
             (F.col(f"l.band") == F.col(f"r.band"))
             & (F.col("l.bandhash") == F.col("r.bandhash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col("l.doc_id").alias("id_a"),
+            F.col("r.doc_id").alias("id_b"),
         )
         .distinct()
     )
 
 
-def jaccard_verify(cand: DataFrame, sh: DataFrame,
-                   id_col: str = "doc_id") -> DataFrame:
+def jaccard_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs only."""
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
-        cand.join(sh.withColumnRenamed(id_col, "id_a"), on="id_a")
+        cand.join(sh.withColumnRenamed("doc_id", "id_a"), on="id_a")
         .join(
-            sh.withColumnRenamed(id_col, "id_b")
+            sh.withColumnRenamed("doc_id", "id_b")
             .withColumnRenamed("shingle", "shingle_b"),
             on="id_b",
         )
@@ -181,9 +177,9 @@ def jaccard_verify(cand: DataFrame, sh: DataFrame,
     return (
         cand.join(inter, on=["id_a", "id_b"], how="left")
         .na.fill({"n_inter": 0})
-        .join(sizes.withColumnRenamed(id_col, "id_a")
+        .join(sizes.withColumnRenamed("doc_id", "id_a")
               .withColumnRenamed("n", "n_a"), on="id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b")
+        .join(sizes.withColumnRenamed("doc_id", "id_b")
               .withColumnRenamed("n", "n_b"), on="id_b")
         .withColumn(
             "jaccard",
@@ -194,9 +190,7 @@ def jaccard_verify(cand: DataFrame, sh: DataFrame,
 
 
 def minhash_lsh_dedup(docs: DataFrame, n: int = 3, k: int = 16,
-                      bands: int = 8, threshold: float = 0.5,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+                      bands: int = 8, threshold: float = 0.5) -> DataFrame:
     """Full near-dup pipeline: shingle -> minhash -> banded LSH ->
     exact Jaccard >= threshold. Returns (id_a, id_b, jaccard).
 
@@ -210,10 +204,10 @@ def minhash_lsh_dedup(docs: DataFrame, n: int = 3, k: int = 16,
     more than the shuffle re-reads it saves, and the cache barrier
     breaks whole-stage codegen pipelining.)
     """
-    sh = shingle(docs, n=n, text_col=text_col, id_col=id_col)
-    sig = minhash_signatures(sh, k=k, id_col=id_col)
-    cand = lsh_candidates(sig, bands=bands, id_col=id_col)
-    ver = jaccard_verify(cand, sh, id_col=id_col)
+    sh = shingle(docs, n=n)
+    sig = minhash_signatures(sh, k=k)
+    cand = lsh_candidates(sig, bands=bands)
+    ver = jaccard_verify(cand, sh)
     return ver.filter(F.col("jaccard") >= threshold)
 
 
@@ -221,9 +215,7 @@ def minhash_lsh_incremental(batch_docs: DataFrame,
                             state_bands: DataFrame,
                             hist_docs: DataFrame,
                             n: int = 3, k: int = 16,
-                            threshold: float = 0.5,
-                            text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
+                            threshold: float = 0.5) -> DataFrame:
     """Incremental near-dup maintenance: one NEW batch against a
     PERSISTED band table — the MinHash-LSH analog of the digest
     anti-join in exact incremental dedup.
@@ -241,28 +233,27 @@ def minhash_lsh_incremental(batch_docs: DataFrame,
     pairs whose right side is in the batch — the property the suite
     oracle certifies.
     """
-    from xsarsea_spark.engine import materialize
 
-    sh_b = shingle(batch_docs, n=n, text_col=text_col, id_col=id_col)
-    sig_b = minhash_signatures(sh_b, k=k, id_col=id_col)
+    sh_b = shingle(batch_docs, n=n)
+    sig_b = minhash_signatures(sh_b, k=k)
     # KB-per-doc band rows, consumed by BOTH the state probe and the
     # within-batch self-join: the barrier stops each consumer (and
     # everything downstream of `cand`) from re-planning the whole
     # shingle->signature->band lineage — the un-truncated plan grew
     # to ~240 Exchange nodes and paid seconds of Catalyst/AQE work
-    bands_b = materialize(lsh_bands(sig_b, id_col=id_col))
+    bands_b = materialize(lsh_bands(sig_b))
 
-    cand_hist = lsh_probe(bands_b, state_bands, id_col=id_col)
+    cand_hist = lsh_probe(bands_b, state_bands)
     l, r = bands_b.alias("l"), bands_b.alias("r")
     cand_batch = (
         l.join(
             r,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.bandhash") == F.col("r.bandhash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"))
+        .select(F.col("l.doc_id").alias("id_a"),
+                F.col("r.doc_id").alias("id_b"))
         .distinct()
     )
     # candidate pairs are output-sized (two ids per row) and feed
@@ -271,15 +262,15 @@ def minhash_lsh_incremental(batch_docs: DataFrame,
     # candidate-generation lineage
     cand = materialize(cand_hist.unionByName(cand_batch).distinct())
 
-    hist_needed = cand.select(F.col("id_a").alias(id_col)).distinct()
+    hist_needed = cand.select(F.col("id_a").alias("doc_id")).distinct()
     sh_h = shingle(
-        hist_docs.join(hist_needed, on=id_col, how="left_semi"),
-        n=n, text_col=text_col, id_col=id_col)
+        hist_docs.join(hist_needed, on="doc_id", how="left_semi"),
+        n=n)
     sh = sh_b.unionByName(sh_h)
-    ver = jaccard_verify(cand, sh, id_col=id_col)
+    ver = jaccard_verify(cand, sh)
     # plain (AQE-sized) join: batch_ids is O(batch), never forced
     # into a broadcast
-    batch_ids = batch_docs.selectExpr(f"{id_col} AS id_a",
+    batch_ids = batch_docs.selectExpr("doc_id AS id_a",
                                       "true AS __in_batch").distinct()
     return (
         ver.filter(F.col("jaccard") >= threshold)
@@ -295,9 +286,6 @@ def minhash_lsh_cross_snapshot(batch_docs: DataFrame,
                                snapshot_docs: DataFrame,
                                n: int = 3, k: int = 16,
                                threshold: float = 0.5,
-                               text_col: str = "text",
-                               id_col: str = "doc_id",
-                               snapshot_col: str = "snapshot",
                                batch_snapshot: int | None = None
                                ) -> DataFrame:
     """Cross-snapshot near-dup dedup: one NEW crawl/batch probed
@@ -306,7 +294,7 @@ def minhash_lsh_cross_snapshot(batch_docs: DataFrame,
     crawl" a production 100-TB pipeline runs weekly.
 
     ``snapshot_bands`` is the union of the N per-snapshot band tables
-    (``lsh_bands`` output) with a ``snapshot_col`` provenance tag —
+    (``lsh_bands`` output) with a ``snapshot`` provenance tag —
     on disk, one parquet root partitioned by snapshot, so a probe
     restricted to recent crawls prunes partitions for free.
     ``snapshot_docs`` is the matching union of the doc stores (only
@@ -323,31 +311,29 @@ def minhash_lsh_cross_snapshot(batch_docs: DataFrame,
     provided the snapshots partition the history — the suite oracle
     certifies exactly that.
 
-    Returns (id_a, id_b, jaccard, ``snapshot_col``).
+    Returns (id_a, id_b, jaccard, snapshot).
     """
     pairs = minhash_lsh_incremental(
         batch_docs,
-        snapshot_bands.drop(snapshot_col),
-        snapshot_docs.drop(snapshot_col),
+        snapshot_bands.drop("snapshot"),
+        snapshot_docs.drop("snapshot"),
         n=n, k=k, threshold=threshold,
-        text_col=text_col, id_col=id_col,
     )
     # provenance from the band tables' tags (already persisted state;
     # pairs are output-sized, so AQE sizes this join)
     prov = (snapshot_bands
-            .select(F.col(id_col).alias("id_a"), F.col(snapshot_col))
+            .select(F.col("doc_id").alias("id_a"), F.col("snapshot"))
             .distinct())
     return (
         pairs.join(prov, on="id_a", how="left")
-        .withColumn(snapshot_col,
-                    F.coalesce(F.col(snapshot_col),
+        .withColumn("snapshot",
+                    F.coalesce(F.col("snapshot"),
                                F.lit(batch_snapshot)))
-        .select("id_a", "id_b", "jaccard", snapshot_col)
+        .select("id_a", "id_b", "jaccard", "snapshot")
     )
 
 
-def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash fingerprint: sign of per-bit weighted sums of token
     hashes (weight = token multiplicity).
 
@@ -360,20 +346,20 @@ def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text",
     order cannot affect the result."""
     h40 = HASH40_SQL.format(x="tok")
     toks = docs.selectExpr(
-        id_col, f"explode(split({text_col}, ' ')) AS tok"
+        "doc_id", "explode(split(text, ' ')) AS tok"
     ).withColumn("__h", F.expr(h40))
     aggs = [
         F.expr(f"SUM(CASE WHEN (__h DIV {1 << j}) % 2 = 1"
                f" THEN 1 ELSE -1 END) AS __s{j}")
         for j in range(bits)
     ]
-    wide = toks.groupBy(id_col).agg(*aggs)
+    wide = toks.groupBy("doc_id").agg(*aggs)
     combine = " + ".join(
         f"(CASE WHEN __s{j} > 0 THEN {1 << j}L ELSE 0L END)"
         for j in range(bits)
     )
     return wide.selectExpr(
-        id_col, f"CAST({combine} AS BIGINT) AS simhash"
+        "doc_id", f"CAST({combine} AS BIGINT) AS simhash"
     )
 
 
@@ -447,8 +433,6 @@ def cosine_neardup(
     threshold: float = 0.98,
     n_planes: int = 32,
     bands: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int | None = None,
     seed: int = 0xC0FFEE,
 ) -> DataFrame:
@@ -470,13 +454,12 @@ def cosine_neardup(
     Parity: reference has no vector dedup; family required by the
     engine brief (embedding-cosine near-dup).
     """
-    from pyspark.sql.functions import pandas_udf
 
     r = n_planes // bands
     if r * bands != n_planes:
         raise ValueError("bands must divide n_planes")
     if dim is None:
-        dim = vecs.selectExpr(f"size({vec_col}) AS d").first()["d"]
+        dim = vecs.selectExpr("size(embedding) AS d").first()["d"]
     planes = hyperplanes(n_planes, dim, seed=seed)
     # (dim, n_planes) float64 constants — each k/1001 is one IEEE
     # division, identical to the SQL literal `{k}e0/1001e0`
@@ -509,16 +492,15 @@ def cosine_neardup(
     # self-join, and without the barrier each side re-runs the full
     # vector scan + Arrow projection kernel (the executed plan
     # carried 4 ArrowEvalPython nodes over 8 source scans)
-    from xsarsea_spark.engine import materialize
 
     sig = materialize(
-        vecs.select(F.col(id_col),
-                    buckets_udf(F.col(vec_col)).alias("__bks"))
-        .select(id_col,
+        vecs.select(F.col("vec_id"),
+                    buckets_udf(F.col("embedding")).alias("__bks"))
+        .select("vec_id",
                 F.posexplode("__bks").alias("band", "bucket")),
         eager=False)
-    a = sig.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = sig.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    a = sig.select(F.col("vec_id").alias("id_a"), "band", "bucket")
+    b = sig.select(F.col("vec_id").alias("id_b"), "band", "bucket")
     cand = (
         a.join(b, on=["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -526,15 +508,15 @@ def cosine_neardup(
         .distinct()
     )
     nrm = vecs.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__v"),
-        F.expr(norm_sql(lambda i: f"element_at({vec_col}, {i})", dim))
+        F.col("vec_id"),
+        F.col("embedding").alias("__v"),
+        F.expr(norm_sql(lambda i: f"element_at(embedding, {i})", dim))
         .alias("__n"),
     )
-    va = nrm.select(F.col(id_col).alias("id_a"),
+    va = nrm.select(F.col("vec_id").alias("id_a"),
                     F.col("__v").alias("__va"),
                     F.col("__n").alias("__na"))
-    vb = nrm.select(F.col(id_col).alias("id_b"),
+    vb = nrm.select(F.col("vec_id").alias("id_b"),
                     F.col("__v").alias("__vb"),
                     F.col("__n").alias("__nb"))
     dot = dot_sql(lambda i: f"element_at(__va, {i})",

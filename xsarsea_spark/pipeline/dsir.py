@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xsarsea_spark.engine import materialize
 from xsarsea_spark.operators.exactsum import QTRUNC
 from xsarsea_spark.operators.rank import global_rank
 from xsarsea_spark.pipeline.text import HASH40_SQL
@@ -78,7 +79,6 @@ def dsir_term_sql(b: int = DSIR_B) -> str:
 
 
 def dsir_features(docs: DataFrame, b: int = DSIR_B,
-                  text_col: str = "text", id_col: str = "doc_id",
                   target_col: str | None = "is_target") -> DataFrame:
     """(id[, is_target], bucket) hashed-feature rows: one explode of
     the unigram+bigram array, bucket = 40-bit content hash mod ``b``
@@ -86,17 +86,16 @@ def dsir_features(docs: DataFrame, b: int = DSIR_B,
     ``target_col=None`` when scoring against pre-fitted terms (no
     membership column needed)."""
     feats = _FEATS_SPARK.format(l="__l")
-    keep = [id_col] + ([target_col] if target_col else [])
+    keep = ["doc_id"] + ([target_col] if target_col else [])
     return (
-        docs.filter(F.col(text_col).isNotNull())
-        .selectExpr(*keep, f"split({text_col}, ' ') AS __l")
+        docs.filter(F.col("text").isNotNull())
+        .selectExpr(*keep, "split(text, ' ') AS __l")
         .selectExpr(*keep, f"explode({feats}) AS __f")
         .selectExpr(*keep,
                     f"{HASH40_SQL.format(x='__f')} % {b} AS bucket"))
 
 
 def dsir_fit_terms(feats: DataFrame, b: int = DSIR_B,
-                   target_col: str = "is_target",
                    count_col: str | None = None) -> DataFrame:
     """Fit the per-bucket log-ratio term table (bucket, __term
     DECIMAL(38,9)) from a feature stream carrying the target flag —
@@ -110,7 +109,7 @@ def dsir_fit_terms(feats: DataFrame, b: int = DSIR_B,
     cnt = (F.count(F.lit(1)) if count_col is None
            else F.expr(f"CAST(SUM({count_col}) AS BIGINT)"))
     cr = feats.groupBy("bucket").agg(cnt.alias("cr"))
-    ct = (feats.filter(F.col(target_col))
+    ct = (feats.filter(F.col("is_target"))
           .groupBy("bucket").agg(cnt.alias("ct")))
     tots = cr.join(ct, on="bucket", how="left").agg(
         F.expr("CAST(SUM(cr) AS BIGINT)").alias("nr"),
@@ -122,52 +121,42 @@ def dsir_fit_terms(feats: DataFrame, b: int = DSIR_B,
                         f" DECIMAL(38,9)) AS __term"))
 
 
-def dsir_score(docs: DataFrame, terms: DataFrame, b: int = DSIR_B,
-               text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def dsir_score(docs: DataFrame, terms: DataFrame,
+               b: int = DSIR_B) -> DataFrame:
     """Score docs against a PRE-FITTED terms table: (id, n_feats,
     logw DECIMAL(38,9)) — the apply-at-ingest half of DSIR. Buckets
     absent from the terms table contribute nothing (can only happen
     when the table was fitted on a different corpus; the fit emits
     every bucket its corpus has)."""
-    feats = dsir_features(docs, b=b, text_col=text_col,
-                          id_col=id_col, target_col=None)
+    feats = dsir_features(docs, b=b, target_col=None)
     return (feats.join(F.broadcast(terms), on="bucket")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_feats"),
                  F.expr("SUM(__term)").alias("logw")))
 
 
-def dsir_logweights(docs: DataFrame, b: int = DSIR_B,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    target_col: str = "is_target") -> DataFrame:
+def dsir_logweights(docs: DataFrame, b: int = DSIR_B) -> DataFrame:
     """Per-doc DSIR log importance weight: (id, n_feats,
-    logw DECIMAL(38,9)). ``target_col`` is a boolean column on
+    logw DECIMAL(38,9)). ``is_target`` is a boolean column on
     ``docs`` marking the target-domain subset. Fit and score run on
     the same corpus (the batch selection shape); use
     :func:`dsir_fit_terms` + :func:`dsir_score` to fit once and
     apply to other data."""
-    from xsarsea_spark.engine import materialize
 
     # three consumers (raw counts, target counts, the score join)
     # would each replay the explode without the barrier
-    feats = materialize(
-        dsir_features(docs, b=b, text_col=text_col,
-                      id_col=id_col, target_col=target_col))
-    terms = dsir_fit_terms(feats, b=b, target_col=target_col)
+    feats = materialize(dsir_features(docs, b=b))
+    terms = dsir_fit_terms(feats, b=b)
     return (feats.join(F.broadcast(terms), on="bucket")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_feats"),
                  F.expr("SUM(__term)").alias("logw")))
 
 
-def dsir_select(scored: DataFrame, frac: float = DSIR_FRAC,
-                id_col: str = "doc_id",
-                weight_col: str = "logw") -> DataFrame:
+def dsir_select(scored: DataFrame, frac: float = DSIR_FRAC) -> DataFrame:
     """Top-``frac`` selection by (weight DESC, id ASC) — exact
     deterministic resampling via the distributed two-pass rank; adds
     ``sel_rank`` and keeps only selected rows. k = ceil(frac * n)."""
-    from xsarsea_spark.engine import materialize
 
     # two consumers (the k-count aggregation and global_rank's
     # range-partition pass) would otherwise each replay the full
@@ -177,15 +166,13 @@ def dsir_select(scored: DataFrame, frac: float = DSIR_FRAC,
         f"CAST(CEIL(COUNT(*) * {frac!r}) AS BIGINT)").alias("__k"))
     ranked = global_rank(
         scored,
-        [F.col(weight_col).desc(), F.col(id_col).asc()],
+        [F.col("logw").desc(), F.col("doc_id").asc()],
         rank_col="sel_rank")
     return (ranked.crossJoin(F.broadcast(k))
             .filter("sel_rank <= __k").drop("__k"))
 
 
-def dsir_threshold(scored: DataFrame, frac: float = DSIR_FRAC,
-                   id_col: str = "doc_id",
-                   weight_col: str = "logw") -> DataFrame:
+def dsir_threshold(scored: DataFrame, frac: float = DSIR_FRAC) -> DataFrame:
     """1-row frame (__thr DECIMAL): the weight at rank
     ceil(frac * n) under (weight DESC, id ASC) — the acceptance
     threshold a streaming DSIR ingest applies to every incoming
@@ -198,18 +185,17 @@ def dsir_threshold(scored: DataFrame, frac: float = DSIR_FRAC,
     Without it, a crossJoin against a 0-row frame would silently
     drop every incoming micro-batch forever — the worst possible
     failure mode for an ingest gate."""
-    from xsarsea_spark.engine import materialize
 
     scored = materialize(scored)
     k = scored.agg(F.expr(
         f"CAST(CEIL(COUNT(*) * {frac!r}) AS BIGINT)").alias("__k"))
     ranked = global_rank(
         scored,
-        [F.col(weight_col).desc(), F.col(id_col).asc()],
+        [F.col("logw").desc(), F.col("doc_id").asc()],
         rank_col="__rk")
     at_k = (ranked.crossJoin(F.broadcast(k))
             .filter("__rk = __k")
-            .selectExpr(f"{weight_col} AS __thr"))
+            .selectExpr("logw AS __thr"))
     # exactly one row, always: MIN over zero rows is NULL, and a
     # NULL threshold means "no history -> admit everything"
     return at_k.agg(F.expr("MIN(__thr)").alias("__thr"))

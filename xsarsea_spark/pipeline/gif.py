@@ -24,6 +24,8 @@ import struct
 
 import numpy as np
 
+from xsarsea_spark.pipeline._codec import check_dims
+
 __all__ = ["decode_gif", "decode_gif_frames", "encode_gif",
            "sample_frames"]
 
@@ -164,7 +166,6 @@ def decode_gif_frames(payload: bytes) -> list[np.ndarray]:
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF (bad signature)")
     W, H, flags, bg, _ = struct.unpack("<HHBBB", payload[6:13])
-    from xsarsea_spark.pipeline._codec import check_dims
     check_dims("GIF", W, H)
     pos = 13
     gct = None

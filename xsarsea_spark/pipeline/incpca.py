@@ -65,15 +65,14 @@ _MU = recombine_sql("q", "r", MU_SCALE, "n")
 _MS2 = recombine_sql("q", "r", G_SCALE, "n")
 
 
-def moment_state(vecs: DataFrame, d: int = 64,
-                 vec_col: str = "embedding") -> DataFrame:
+def moment_state(vecs: DataFrame, d: int = 64) -> DataFrame:
     """Bounded (d^2 + d row) raw-moment state of a vector corpus:
     (i, j, q, r, n) — j = 0 rows are first moments on the MU_SCALE
     grid, j >= 1 rows second moments on the G_SCALE grid. One Arrow
     scan (map-side partials) + one d^2-key sum; the exchange carries
     partitions * (d^2 + d) rows by construction.
     """
-    base = _valid_vectors(vecs, d, vec_col)
+    base = _valid_vectors(vecs, d)
     parts = base.select(F.col("__v").alias("__c")).mapInPandas(
         _moment_partials(d, MU_SCALE, G_SCALE),
         schema="i int, j int, q long, r long, n long")

@@ -28,7 +28,7 @@ extension mandated by the build brief.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xsarsea_spark.engine import (fs_exists, fs_list_names,
@@ -36,6 +36,8 @@ from xsarsea_spark.engine import (fs_exists, fs_list_names,
                                   load_kv_json, materialize,
                                   save_kv_json)
 from xsarsea_spark.operators.sketch import bloom_build, bloom_mark
+from xsarsea_spark.pipeline.dedup import (jaccard_verify, lsh_bands, lsh_probe,
+                                          minhash_signatures, shingle)
 from xsarsea_spark.sources.sinks import write_zordered
 
 __all__ = ["ingest_curated_batch", "ingest_neardup_batch"]
@@ -77,7 +79,6 @@ def ingest_curated_batch(
     (length gate + md5(text)). The URL-keyed ingest passes the
     canonicalized dup-key digest here — same two-tier bloom/anti-join
     core, different identity of "duplicate"."""
-    from pyspark.sql.window import Window
 
     if prep is None:
         curated = (
@@ -205,10 +206,6 @@ def ingest_neardup_batch(
     re-shingled and appended before the batch proceeds. Replays are
     idempotent via an id anti-join against the seen table.
     """
-    from xsarsea_spark.pipeline.dedup import (jaccard_verify, lsh_bands,
-                                              lsh_probe,
-                                              minhash_signatures,
-                                              shingle)
 
     has_seen = bool(_parquet_files(spark, seen_dir))
     seen = spark.read.parquet(seen_dir) if has_seen else None

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,14 +82,13 @@ def _guarded_norms(c: np.ndarray) -> np.ndarray:
     return cn
 
 
-def train_ivf(corpus: DataFrame, n_centroids: int = 16, iters: int = 5,
-              vec_col: str = "embedding",
-              id_col: str = "vec_id") -> np.ndarray:
+def train_ivf(corpus: DataFrame, n_centroids: int = 16,
+              iters: int = 5) -> np.ndarray:
     """Deterministic Lloyd training; returns the centroid matrix."""
-    dim = len(corpus.select(vec_col).first()[0])
+    dim = len(corpus.select("embedding").first()[0])
     init = (
-        corpus.orderBy(id_col).limit(n_centroids)
-        .select(vec_col).collect()
+        corpus.orderBy("vec_id").limit(n_centroids)
+        .select("embedding").collect()
     )
     centroids = np.stack(
         [np.asarray(r[0], dtype=np.float64) for r in init])
@@ -115,7 +114,7 @@ def train_ivf(corpus: DataFrame, n_centroids: int = 16, iters: int = 5,
             for pdf in batches:
                 v = np.stack(
                     [np.asarray(x, dtype=np.float64)
-                     for x in pdf[vec_col]])
+                     for x in pdf["embedding"]])
                 cell = np.argmax(_sim_to(v, c, cn), axis=1)
                 quanta = grid(v, IVF_SCALE)
                 rows = []
@@ -130,8 +129,8 @@ def train_ivf(corpus: DataFrame, n_centroids: int = 16, iters: int = 5,
                                    columns=["cell", "i", "q", "n"])
 
         sums = (
-            corpus.select(vec_col).mapInPandas(partial_gen,
-                                               schema=part_schema)
+            corpus.select("embedding").mapInPandas(partial_gen,
+                                                   schema=part_schema)
             .groupBy("cell", "i")
             .agg(F.sum("q").alias("q"), F.sum("n").alias("n"))
             .collect()
@@ -152,9 +151,7 @@ def train_ivf(corpus: DataFrame, n_centroids: int = 16, iters: int = 5,
     return centroids
 
 
-def assign_cells(corpus: DataFrame, centroids: np.ndarray,
-                 vec_col: str = "embedding",
-                 id_col: str = "vec_id") -> DataFrame:
+def assign_cells(corpus: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Index: corpus rows tagged with their nearest-centroid cell.
 
     One passthrough kernel pass — every corpus column rides the same
@@ -164,17 +161,17 @@ def assign_cells(corpus: DataFrame, centroids: np.ndarray,
     c = np.ascontiguousarray(centroids, dtype=np.float64)
     cn = _guarded_norms(c)
     schema = T.StructType(
-        [corpus.schema[id_col]]
-        + [f for f in corpus.schema.fields if f.name != id_col]
+        [corpus.schema["vec_id"]]
+        + [f for f in corpus.schema.fields if f.name != "vec_id"]
         + [T.StructField("cell", T.IntegerType())])
-    cols = [id_col] + [n for n in corpus.columns if n != id_col]
+    cols = ["vec_id"] + [n for n in corpus.columns if n != "vec_id"]
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             v = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+                [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]])
             # cosine assignment (argmax similarity; ties -> lowest
             # cell, same as the oracle's ORDER BY sim DESC, cell)
             out = pdf[cols].copy()
@@ -191,8 +188,6 @@ def ivf_search(
     centroids: np.ndarray,
     k: int = 5,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Probe the n_probe nearest cells per query, exact cosine inside.
 
@@ -203,34 +198,34 @@ def ivf_search(
     cn = _guarded_norms(c)
 
     probe_schema = T.StructType([
-        queries.schema[id_col],
+        queries.schema["vec_id"],
         T.StructField("cell", T.IntegerType()),
     ])
 
     def probe_gen(batches):
         for pdf in batches:
             v = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+                [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]])
             sim = _sim_to(v, c, cn)
             # stable: a tie at the n_probe boundary keeps the lowest
             # cell, matching the oracle's ORDER BY sim DESC, cell
             top = np.argsort(-sim, axis=1, kind="stable")[:, :n_probe]
-            ids = np.repeat(pdf[id_col].to_numpy(), n_probe)
+            ids = np.repeat(pdf["vec_id"].to_numpy(), n_probe)
             yield pd.DataFrame({
-                id_col: ids,
+                "vec_id": ids,
                 "cell": top.ravel().astype(np.int32),
             })
 
-    probes = queries.select(id_col, vec_col).mapInPandas(
+    probes = queries.select("vec_id", "embedding").mapInPandas(
         probe_gen, schema=probe_schema
-    ).withColumnRenamed(id_col, "query_id")
+    ).withColumnRenamed("vec_id", "query_id")
 
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"),
+    q = with_norm(queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"),
         F.col("__norm").alias("__qn"))
-    cband = with_norm(indexed_corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "cell",
-        F.col(vec_col).alias("__cv"), F.col("__norm").alias("__cn"))
+    cband = with_norm(indexed_corpus).select(
+        F.col("vec_id").alias("neighbor_id"), "cell",
+        F.col("embedding").alias("__cv"), F.col("__norm").alias("__cn"))
 
     dot = _DOT.format(a="__qv", b="__cv")
     scored = (
@@ -240,7 +235,6 @@ def ivf_search(
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("cosine", F.expr(f"({dot}) / nullif(__qn * __cn, 0e0)"))
     )
-    from pyspark.sql.window import Window
 
     win = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc())

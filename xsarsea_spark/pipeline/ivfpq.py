@@ -52,8 +52,7 @@ from xsarsea_spark.pipeline.pq import _seq_sqdist, train_pq
 __all__ = ["train_ivfpq", "encode_ivfpq", "ivfpq_search"]
 
 
-def _residuals(corpus: DataFrame, coarse: np.ndarray,
-               vec_col: str, id_col: str) -> DataFrame:
+def _residuals(corpus: DataFrame, coarse: np.ndarray) -> DataFrame:
     """(id, cell, resid): coarse assignment (argmin fold-ordered L2,
     ties -> lowest cell) + exact double residual ``v - centroid`` —
     ONE narrow kernel pass. The assignment and the subtraction share
@@ -61,7 +60,7 @@ def _residuals(corpus: DataFrame, coarse: np.ndarray,
     join shape shuffled the vectors by id on both sides)."""
     co = np.ascontiguousarray(coarse, dtype=np.float64)
     schema = T.StructType([
-        corpus.schema[id_col],
+        corpus.schema["vec_id"],
         T.StructField("cell", T.IntegerType()),
         T.StructField("resid", T.ArrayType(T.DoubleType())),
     ])
@@ -71,42 +70,37 @@ def _residuals(corpus: DataFrame, coarse: np.ndarray,
             if len(pdf) == 0:
                 continue
             v = np.stack([np.asarray(x, dtype=np.float64)
-                          for x in pdf[vec_col]])
+                          for x in pdf["embedding"]])
             # same argmin as encode_pq with m=1 (ties -> lowest cell);
             # float32 -> float64 is exact, and the elementwise double
             # subtraction is the zip_with CAST(a AS DOUBLE) - b op
             cell = np.argmin(_seq_sqdist(v, co), axis=1)
             yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
+                "vec_id": pdf["vec_id"].to_numpy(),
                 "cell": cell.astype(np.int32),
                 "resid": list(v - co[cell]),
             })
 
-    return corpus.select(id_col, vec_col).mapInPandas(
+    return corpus.select("vec_id", "embedding").mapInPandas(
         gen, schema=schema)
 
 
 def train_ivfpq(corpus: DataFrame, n_cells: int = 8, m: int = 8,
-                k: int = 16, iters: int = 3,
-                vec_col: str = "embedding",
-                id_col: str = "vec_id"
+                k: int = 16, iters: int = 3
                 ) -> tuple[np.ndarray, np.ndarray]:
     """Returns (coarse centroids (n_cells, dim), residual codebooks
     (m, k, dim/m)). Coarse training is ``train_pq(m=1)``; residual
     training runs on the materialized residual frame (one subtraction
     pass, then the standard one-scan-per-round PQ Lloyd)."""
-    coarse = train_pq(corpus, m=1, k=n_cells, iters=iters,
-                      vec_col=vec_col, id_col=id_col)[0]
-    resid = materialize(
-        _residuals(corpus, coarse, vec_col, id_col))
+    coarse = train_pq(corpus, m=1, k=n_cells, iters=iters)[0]
+    resid = materialize(_residuals(corpus, coarse))
     books = train_pq(resid, m=m, k=k, iters=iters,
-                     vec_col="resid", id_col=id_col)
+                     vec_col="resid")
     return coarse, books
 
 
 def encode_ivfpq(corpus: DataFrame, coarse: np.ndarray,
-                 books: np.ndarray, vec_col: str = "embedding",
-                 id_col: str = "vec_id") -> DataFrame:
+                 books: np.ndarray) -> DataFrame:
     """The index: (id, cell, codes array<int> of length m), built in
     ONE kernel pass — coarse assign, residual subtraction and the
     residual-PQ code assignment share the batch (the staged shape
@@ -116,7 +110,7 @@ def encode_ivfpq(corpus: DataFrame, coarse: np.ndarray,
     m, _, sub = books.shape
     slices = [slice(i * sub, (i + 1) * sub) for i in range(m)]
     schema = T.StructType([
-        corpus.schema[id_col],
+        corpus.schema["vec_id"],
         T.StructField("cell", T.IntegerType()),
         T.StructField("codes", T.ArrayType(T.IntegerType())),
     ])
@@ -126,7 +120,7 @@ def encode_ivfpq(corpus: DataFrame, coarse: np.ndarray,
             if len(pdf) == 0:
                 continue
             v = np.stack([np.asarray(x, dtype=np.float64)
-                          for x in pdf[vec_col]])
+                          for x in pdf["embedding"]])
             cell = np.argmin(_seq_sqdist(v, co), axis=1)
             r = v - co[cell]
             codes = np.empty((v.shape[0], m), dtype=np.int32)
@@ -134,19 +128,18 @@ def encode_ivfpq(corpus: DataFrame, coarse: np.ndarray,
                 codes[:, s_i] = np.argmin(
                     _seq_sqdist(r[:, sl], books[s_i]), axis=1)
             yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
+                "vec_id": pdf["vec_id"].to_numpy(),
                 "cell": cell.astype(np.int32),
                 "codes": list(codes),
             })
 
-    return corpus.select(id_col, vec_col).mapInPandas(
+    return corpus.select("vec_id", "embedding").mapInPandas(
         gen, schema=schema)
 
 
 def ivfpq_search(queries: DataFrame, index: DataFrame,
                  coarse: np.ndarray, books: np.ndarray,
                  k: int = 5, n_probe: int = 3,
-                 vec_col: str = "embedding", id_col: str = "vec_id",
                  corpus: DataFrame | None = None,
                  shortlist: int | None = None,
                  broadcast_queries: bool = True) -> DataFrame:
@@ -167,13 +160,12 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
     if corpus is not None:
         r = shortlist or 10 * k
         cand = ivfpq_search(queries, index, coarse, books, k=r,
-                            n_probe=n_probe, vec_col=vec_col,
-                            id_col=id_col,
+                            n_probe=n_probe,
                             broadcast_queries=broadcast_queries)
-        qv = queries.select(F.col(id_col).alias("query_id"),
-                            F.col(vec_col).alias("__qv"))
-        cv = corpus.select(F.col(id_col).alias("neighbor_id"),
-                           F.col(vec_col).alias("__cv"))
+        qv = queries.select(F.col("vec_id").alias("query_id"),
+                            F.col("embedding").alias("__qv"))
+        cv = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                           F.col("embedding").alias("__cv"))
         # the shortlist is batch-bounded (n_q * shortlist rows):
         # broadcast it so the corpus vectors stream through the
         # refine join instead of being shuffled by neighbor_id
@@ -215,8 +207,8 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
             if len(pdf) == 0:
                 continue
             qv = np.stack([np.asarray(x, dtype=np.float64)
-                           for x in pdf[vec_col]])
-            qid = pdf[id_col].to_numpy()
+                           for x in pdf["embedding"]])
+            qid = pdf["vec_id"].to_numpy()
             d2c = _seq_sqdist(qv, co)
             # ascending stable argsort: a tie keeps the lowest cell,
             # matching the oracle's ORDER BY d2 ASC, cell ASC
@@ -237,7 +229,7 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
                 "__tab": out_t,
             })
 
-    qtab = queries.select(id_col, vec_col).mapInPandas(
+    qtab = queries.select("vec_id", "embedding").mapInPandas(
         q_tables, schema=tab_schema)
     qtab = F.broadcast(qtab) if broadcast_queries else qtab
     # equi-join on cell: a posting row meets exactly the queries that
@@ -253,7 +245,7 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
     cand = (index.withColumn("cell", F.col("cell").cast("int"))
             .join(qtab, on="cell")
             .select("query_id",
-                    F.col(id_col).alias("neighbor_id"),
+                    F.col("vec_id").alias("neighbor_id"),
                     adc.alias("adc_dist")))
     # rank <= k collapses to WindowGroupLimit: each probed partition
     # pre-selects its own top-k per query map-side (ties resolved by

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from xsarsea_spark.pipeline._codec import check_dims
+
 __all__ = ["decode_jpeg", "encode_jpeg"]
 
 # ----------------------------------------------------------------------
@@ -296,7 +298,6 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 raise NotImplementedError("only 8-bit JPEG supported")
             h = int.from_bytes(seg[1:3], "big")
             w = int.from_bytes(seg[3:5], "big")
-            from xsarsea_spark.pipeline._codec import check_dims
             check_dims("JPEG", w, h)
             nc = seg[5]
             comps = []

@@ -44,6 +44,10 @@ extension — PCA whitening / SemDeDup-adjacent embedding analysis).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -181,13 +185,13 @@ def deflate_sql(g: str, v: str, ev: str, d: int, dialect: str) -> str:
             f" - {ev} * element_at({v}, {i}) * element_at({v}, {j})))")
 
 
-def _valid_vectors(vecs: DataFrame, d: int, vec_col: str,
+def _valid_vectors(vecs: DataFrame, d: int,
                    extra: list[str] | None = None) -> DataFrame:
     """Finite fixed-width vectors as DOUBLE arrays (the input
     contract; a no-op on well-formed corpora)."""
     return vecs.select(
         *(extra or []),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))")
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
         .alias("__v"),
     ).filter(F.expr(
         f"size(__v) = {d}"
@@ -198,7 +202,6 @@ def pca_state(
     vecs: DataFrame,
     d: int = 64,
     rounds: int = 12,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ONE-row PCA state of a vector corpus: the per-dim mean vector,
     the unit dominant eigenvector of the (grid-quantized) covariance,
@@ -206,7 +209,7 @@ def pca_state(
     (__mu array<double>, __u array<double>, __ev double). This is the
     broadcast-sized artifact downstream projection joins against.
     """
-    gmat, mu_row = _gram_state(vecs, d, vec_col)
+    gmat, mu_row = _gram_state(vecs, d)
     # The iteration runs in ONE Arrow-batched kernel over the 1-row
     # Gram state — executor-side, no driver collect, no extra jobs.
     # Pure-expression alternatives fail structurally: chained
@@ -224,10 +227,10 @@ def pca_state(
         .select("__mu", "__u", "__ev")
 
 
-def _gram_state(vecs: DataFrame, d: int, vec_col: str):
+def _gram_state(vecs: DataFrame, d: int):
     """(1-row Gram matrix, 1-row mean vector) of a corpus — the
     bounded state every PCA entry point builds on."""
-    base = _valid_vectors(vecs, d, vec_col)
+    base = _valid_vectors(vecs, d)
 
     dims = base.select(F.posexplode("__v").alias("__p", "__x")) \
                .select((F.col("__p") + 1).alias("__d"), "__x")
@@ -287,7 +290,6 @@ def pca_topk(
     d: int = 64,
     rounds: int = 12,
     n_comp: int = 3,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top ``n_comp`` principal components by power iteration with
     Hotelling deflation: after each component, the working matrix
@@ -297,7 +299,7 @@ def pca_topk(
     extra exchanges. Returns (component, dim, loading, eigval), one
     row per (component, dimension).
     """
-    st, _ = _topk_state(vecs, d, rounds, n_comp, vec_col)
+    st, _ = _topk_state(vecs, d, rounds, n_comp)
     return st.select(
         "component",
         F.posexplode("__u").alias("__p", "loading"),
@@ -314,8 +316,6 @@ def pca_whiten(
     d: int = 64,
     rounds: int = 12,
     n_comp: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PCA-whitened k-dim projection: for every valid vector and
     component, score = (x - mu) . u_c and whitened = score /
@@ -325,11 +325,11 @@ def pca_whiten(
     through one order-fixed fold per (vector, component) — n * k
     output rows, no exchange on the scoring pass.
     """
-    st, mu_row = _topk_state(vecs, d, rounds, n_comp, vec_col)
+    st, mu_row = _topk_state(vecs, d, rounds, n_comp)
     state = F.broadcast(st).crossJoin(F.broadcast(mu_row))
-    base = _valid_vectors(vecs, d, vec_col, extra=[id_col])
+    base = _valid_vectors(vecs, d, extra=["vec_id"])
     return base.crossJoin(F.broadcast(state)).select(
-        F.col(id_col), "component",
+        F.col("vec_id"), "component",
         F.expr(
             "aggregate(zip_with(zip_with(__v, __mu, (x, m) -> x - m),"
             " __u, (c, u) -> c * u),"
@@ -343,7 +343,6 @@ def pca_power(
     vecs: DataFrame,
     d: int = 64,
     rounds: int = 12,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top principal component of a vector corpus.
 
@@ -352,7 +351,7 @@ def pca_power(
     (1-indexed), with the Rayleigh-quotient eigenvalue — the variance
     captured by PC1 — repeated on each row.
     """
-    state = pca_state(vecs, d=d, rounds=rounds, vec_col=vec_col)
+    state = pca_state(vecs, d=d, rounds=rounds)
     return state.select(
         F.posexplode("__u").alias("__p", "loading"),
         F.col("__ev").alias("eigval"),
@@ -366,8 +365,6 @@ def pca_project(
     vecs: DataFrame,
     d: int = 64,
     rounds: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-vector PC1 score: (x - mu) . u for every valid corpus
     vector — the column you rank/filter/bucket a corpus by after PCA.
@@ -378,10 +375,10 @@ def pca_project(
     embarrassingly parallel at any corpus size. Ops are the same
     order-fixed folds as the state computation, hence oracle-exact.
     """
-    state = pca_state(vecs, d=d, rounds=rounds, vec_col=vec_col)
-    base = _valid_vectors(vecs, d, vec_col, extra=[id_col])
+    state = pca_state(vecs, d=d, rounds=rounds)
+    base = _valid_vectors(vecs, d, extra=["vec_id"])
     return base.crossJoin(F.broadcast(state)).select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.expr(
             "aggregate(zip_with(zip_with(__v, __mu, (x, m) -> x - m),"
             " __u, (c, u) -> c * u),"
@@ -406,9 +403,6 @@ def _moment_partials(d: int, mu_scale: int, g_scale: int):
     """
 
     def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
         q1 = np.zeros(d, dtype=np.int64)
         r1 = np.zeros(d, dtype=np.int64)
         q2 = np.zeros((d, d), dtype=np.int64)
@@ -452,7 +446,6 @@ def _power_once(g: list, rounds: int) -> tuple[list, float]:
     """One power-iteration pass + Rayleigh quotient, explicit scalar
     folds only — no BLAS, no pairwise summation, so op order is
     engine-replicable (matches the *_sql generators' fold order)."""
-    import math
 
     v = [1.0] * len(g)
     for _ in range(rounds):
@@ -492,8 +485,6 @@ def _power_iter_kernel(d: int, rounds: int):
     """mapInPandas kernel: single top component (see _power_once)."""
 
     def kernel(batches):
-        import pandas as pd
-
         for g in _iter_grams(batches, d):
             u, ev = _power_once(g, rounds)
             yield pd.DataFrame({"__u": [u], "__ev": [ev]})
@@ -507,8 +498,6 @@ def _power_topk_kernel(d: int, rounds: int, n_comp: int):
     oracle's deflation CTE applies). One state row per component."""
 
     def kernel(batches):
-        import pandas as pd
-
         for g in _iter_grams(batches, d):
             comp, us, evs = [], [], []
             for c in range(n_comp):
@@ -527,10 +516,9 @@ def _power_topk_kernel(d: int, rounds: int, n_comp: int):
     return kernel
 
 
-def _topk_state(vecs: DataFrame, d: int, rounds: int, n_comp: int,
-                vec_col: str):
+def _topk_state(vecs: DataFrame, d: int, rounds: int, n_comp: int):
     """(k-row component state, 1-row mean) — both broadcast-sized."""
-    gmat, mu_row = _gram_state(vecs, d, vec_col)
+    gmat, mu_row = _gram_state(vecs, d)
     st = gmat.mapInPandas(
         _power_topk_kernel(d, rounds, n_comp),
         schema="component int, __u array<double>, __ev double")
@@ -543,8 +531,6 @@ def pca_outliers(
     rounds: int = 12,
     n_comp: int = 3,
     threshold: float = 9.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Mahalanobis-style outlier scoring in the captured PCA
     subspace: maha2 = sum over components of whitened^2 (each
@@ -558,16 +544,15 @@ def pca_outliers(
     zero-exchange projection plus a per-vector hash agg over
     ``n_comp`` rows.
     """
-    w = pca_whiten(vecs, d=d, rounds=rounds, n_comp=n_comp,
-                   id_col=id_col, vec_col=vec_col)
+    w = pca_whiten(vecs, d=d, rounds=rounds, n_comp=n_comp)
     # same floor-truncation barrier the suite's QTRUNC uses (whitened
     # is O(1), so scale 9 stays far inside the exact BIGINT range);
     # whitened^2 is never NaN for valid vectors, so no NaN branch
     term = ("(CAST(FLOOR((whitened * whitened) * 1e9) AS DOUBLE)"
             " / 1e9)")
     return (
-        w.select(id_col, F.expr(term).alias("__t"))
-        .groupBy(id_col)
+        w.select("vec_id", F.expr(term).alias("__t"))
+        .groupBy("vec_id")
         .agg(F.expr(decimal_sum("__t", 9)).alias("maha2"))
         .withColumn("is_outlier", F.col("maha2") > F.lit(threshold))
     )

@@ -26,22 +26,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xsarsea_spark.pipeline.gif import decode_gif
+from xsarsea_spark.pipeline.jpeg import _C, decode_jpeg
+from xsarsea_spark.pipeline.png import decode_png
+
 __all__ = ["attach_payload", "extract_features", "decode_image",
            "decode_ppm", "decode_bmp", "attach_image_payload",
            "decode_features", "ahash_features", "phash_features",
            "dct_int", "phash_neardup", "phash_pairs"]
 
 
-def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_payload(docs: DataFrame) -> DataFrame:
     """Wrap documents as multimodal rows: (doc_id, media_type, payload
     binary, meta struct). Real pipelines read payloads from object
     storage; here the UTF-8 text bytes stand in as the opaque blob."""
     return docs.select(
         "doc_id",
         F.lit("application/octet-stream").alias("media_type"),
-        F.col(text_col).cast("binary").alias("payload"),
+        F.col("text").cast("binary").alias("payload"),
         F.struct(
-            F.length(F.col(text_col)).alias("n_bytes"),
+            F.length(F.col("text")).alias("n_bytes"),
             F.col("source").alias("origin"),
         ).alias("meta"),
     )
@@ -120,13 +124,10 @@ def decode_image(payload: bytes) -> np.ndarray:
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:2] == b"\xff\xd8":
-        from xsarsea_spark.pipeline.jpeg import decode_jpeg
         return decode_jpeg(payload)
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        from xsarsea_spark.pipeline.png import decode_png
         return decode_png(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from xsarsea_spark.pipeline.gif import decode_gif
         return decode_gif(payload)
     raise NotImplementedError(
         f"no dependency-free decoder for magic {payload[:2]!r}; "
@@ -202,8 +203,7 @@ def _bmp_header_hex(w: int, h: int) -> str:
 _IMG_W, _IMG_H = 16, 8
 
 
-def attach_image_payload(docs: DataFrame,
-                         text_col: str = "text") -> DataFrame:
+def attach_image_payload(docs: DataFrame) -> DataFrame:
     """Wrap document text bytes into REAL image containers so the
     decoders have genuine binary inputs: doc_id % 3 == 0 -> 24-bit
     BMP (BGR, bottom-up — a true byte permutation of the source),
@@ -220,16 +220,16 @@ def attach_image_payload(docs: DataFrame,
            f" + ((i % {_IMG_W * 3}) div 3) * 3"
            f" + (2 - ((i % {_IMG_W * 3}) % 3)) + 1)")
     perm = (f"array_join(transform(sequence(0, {full - 1}),"
-            f" i -> char(ascii(substring({text_col}, {src}, 1)))), '')")
-    return docs.filter(F.length(text_col) >= full).selectExpr(
+            f" i -> char(ascii(substring(text, {src}, 1)))), '')")
+    return docs.filter(F.length("text") >= full).selectExpr(
         "doc_id",
         f"""CASE CAST(doc_id % 3 AS INT)
           WHEN 0 THEN concat(unhex('{_bmp_header_hex(_IMG_W, _IMG_H)}'),
                              CAST({perm} AS BINARY))
           WHEN 1 THEN CAST(concat('P6\\n{_IMG_W} {_IMG_H}\\n255\\n',
-                           substring({text_col}, 1, {full})) AS BINARY)
+                           substring(text, 1, {full})) AS BINARY)
           ELSE CAST(concat('P6\\n# t\\n{_IMG_W} {_IMG_H // 2}\\n255\\n',
-                    substring({text_col}, 1, {full // 2})) AS BINARY)
+                    substring(text, 1, {full // 2})) AS BINARY)
         END AS payload""",
         "CASE WHEN doc_id % 3 = 0 THEN 'image/bmp'"
         " ELSE 'image/x-portable-pixmap' END AS media_type",
@@ -399,7 +399,6 @@ def dct_int(n: int) -> np.ndarray:
     shifts (only the DC coefficient moves, and it is excluded).
     """
     if n == 8:
-        from xsarsea_spark.pipeline.jpeg import _C
         c = _C
     else:
         c = np.array([
@@ -476,8 +475,7 @@ def phash_features(mm: DataFrame, grid_w: int = 8,
 
 def phash_neardup(ph: DataFrame, n_bands: int = 4,
                   band_bits: int = 8,
-                  max_hamming: int = 3,
-                  id_col: str = "doc_id") -> DataFrame:
+                  max_hamming: int = 3) -> DataFrame:
     """Per-image near-duplicate profile from a pHash frame
     (``phash_features`` output): banded Hamming candidate join +
     exact verify — the image twin of the MinHash-LSH text path.
@@ -499,13 +497,13 @@ def phash_neardup(ph: DataFrame, n_bands: int = 4,
     probe in the engine; verification touches candidates only.
     """
     bands = ph.select(
-        id_col, "phash",
+        "doc_id", "phash",
         F.explode(F.expr(f"sequence(0, {n_bands - 1})")).alias("b"))
     k = bands.withColumn(
         "key", F.expr(f"shiftright(phash, {band_bits} * b)"
                       f" & {(1 << band_bits) - 1}"))
-    a = k.selectExpr("b", "key", f"{id_col} AS da", "phash AS pa")
-    x = k.selectExpr("b", "key", f"{id_col} AS db", "phash AS pb")
+    a = k.selectExpr("b", "key", "doc_id AS da", "phash AS pa")
+    x = k.selectExpr("b", "key", "doc_id AS db", "phash AS pb")
     cand = (a.join(x, on=["b", "key"])
             .filter("da != db")
             .select("da", "db", "pa", "pb").distinct())
@@ -516,10 +514,10 @@ def phash_neardup(ph: DataFrame, n_bands: int = 4,
         .alias("n_neardups"),
         F.expr("CAST(MIN(bit_count(pa ^ pb)) AS BIGINT)")
         .alias("min_hamming"))
-    return (ph.select(id_col, "phash")
-            .join(agg.withColumnRenamed("da", id_col),
-                  on=id_col, how="left")
-            .selectExpr(id_col, "phash",
+    return (ph.select("doc_id", "phash")
+            .join(agg.withColumnRenamed("da", "doc_id"),
+                  on="doc_id", how="left")
+            .selectExpr("doc_id", "phash",
                         "COALESCE(n_candidates, 0L) AS n_candidates",
                         "COALESCE(n_neardups, 0L) AS n_neardups",
                         "COALESCE(min_hamming, -1L) AS min_hamming"))
@@ -527,8 +525,7 @@ def phash_neardup(ph: DataFrame, n_bands: int = 4,
 
 def phash_pairs(ph: DataFrame, n_bands: int = 4,
                 band_bits: int = 8,
-                max_hamming: int = 3,
-                id_col: str = "doc_id") -> DataFrame:
+                max_hamming: int = 3) -> DataFrame:
     """Image near-duplicate PAIRS from a pHash frame: the banded
     Hamming candidate join of :func:`phash_neardup`, kept at pair
     grain — (id_a, id_b, hamming) with id_a < id_b and hamming
@@ -540,13 +537,13 @@ def phash_pairs(ph: DataFrame, n_bands: int = 4,
     (band, key) pair — the standard LSH probe shape, never all-pairs.
     """
     bands = ph.select(
-        id_col, "phash",
+        "doc_id", "phash",
         F.explode(F.expr(f"sequence(0, {n_bands - 1})")).alias("b"))
     k = bands.withColumn(
         "key", F.expr(f"shiftright(phash, {band_bits} * b)"
                       f" & {(1 << band_bits) - 1}"))
-    a = k.selectExpr("b", "key", f"{id_col} AS id_a", "phash AS pa")
-    x = k.selectExpr("b", "key", f"{id_col} AS id_b", "phash AS pb")
+    a = k.selectExpr("b", "key", "doc_id AS id_a", "phash AS pa")
+    x = k.selectExpr("b", "key", "doc_id AS id_b", "phash AS pb")
     cand = (a.join(x, on=["b", "key"])
             .filter("id_a < id_b")
             .select("id_a", "id_b", "pa", "pb").distinct())

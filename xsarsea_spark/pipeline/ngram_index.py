@@ -29,8 +29,13 @@ the engine brief mandates (tokenization / eval infrastructure).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from xsarsea_spark.engine import materialize
+from xsarsea_spark.pipeline.text import HASH40_SQL
 
 __all__ = ["ngram_occurrences", "ngram_stats", "backoff_longest_suffix",
            "sa_backoff_longest_suffix", "sa_gram_counts",
@@ -42,9 +47,7 @@ def _ns_array(ns: tuple[int, ...]) -> str:
     return "array(" + ", ".join(str(n) for n in ns) + ")"
 
 
-def ngram_occurrences(docs: DataFrame, ns: tuple[int, ...],
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def ngram_occurrences(docs: DataFrame, ns: tuple[int, ...]) -> DataFrame:
     """(id, n, gram, cont): one row per token position per n — the
     gram starting there and the token right after it (NULL when the
     gram ends the document). ONE scan, all-JVM: the position list is
@@ -52,10 +55,10 @@ def ngram_occurrences(docs: DataFrame, ns: tuple[int, ...],
     short docs — never a descending ``sequence``), and every n in
     ``ns`` unrolls inside a single ``inline(flatten(...))``."""
     return (
-        docs.filter(F.col(text_col).isNotNull())
-        .selectExpr(id_col, f"split({text_col}, ' ') AS __tk")
+        docs.filter(F.col("text").isNotNull())
+        .selectExpr("doc_id", "split(text, ' ') AS __tk")
         .selectExpr(
-            id_col,
+            "doc_id",
             f"""inline(flatten(transform({_ns_array(ns)}, nn ->
               transform(
                 slice(sequence(1, size(__tk)), 1,
@@ -68,13 +71,12 @@ def ngram_occurrences(docs: DataFrame, ns: tuple[int, ...],
                     AS cont)))))"""))
 
 
-def ngram_stats(occ: DataFrame,
-                id_col: str = "doc_id") -> DataFrame:
+def ngram_stats(occ: DataFrame) -> DataFrame:
     """(n, gram, cnt, doc_freq): total occurrences and distinct
     containing documents — one hash aggregation."""
     return (occ.groupBy("n", "gram")
             .agg(F.count(F.lit(1)).alias("cnt"),
-                 F.countDistinct(id_col).alias("doc_freq")))
+                 F.countDistinct("doc_id").alias("doc_freq")))
 
 
 def backoff_longest_suffix(contexts: DataFrame,
@@ -118,8 +120,7 @@ def _floor_log2_case(col: str, max_n: int) -> str:
 def sa_occurrence_positions(grams: DataFrame,
                             tables: list,
                             pairs: list,
-                            max_n: int,
-                            id_col: str = "doc_id") -> DataFrame:
+                            max_n: int) -> DataFrame:
     """Exact corpus occurrence POSITIONS for a BOUNDED query-gram
     set, answered from the persisted suffix-array artifact
     (``pipeline.suffix.suffix_probe_index_cached``) — the shared
@@ -152,10 +153,7 @@ def sa_occurrence_positions(grams: DataFrame,
        keys into ladder level a — at scale a bucketed-by-rank read,
        never a corpus rescan.
     """
-    from functools import reduce
 
-    from xsarsea_spark.engine import materialize
-    from xsarsea_spark.pipeline.text import HASH40_SQL
 
     levels = max_n.bit_length() - 1   # deepest window level used
     # contract guard: a gram longer than max_n has no ladder level —
@@ -212,7 +210,7 @@ def sa_occurrence_positions(grams: DataFrame,
                    for k in range(1, max_n + 1)})
     tagged = reduce(
         lambda x, y: x.unionByName(y),
-        [tables[a].selectExpr(f"{id_col} AS __id", "p", "r")
+        [tables[a].selectExpr("doc_id AS __id", "p", "r")
          .withColumn("lvl", F.lit(a).cast("int")) for a in used])
     first = tagged.selectExpr("lvl", "__id", "p", "r AS qr1")
     second = tagged.selectExpr("lvl AS __l2", "__id AS __id2",
@@ -231,7 +229,6 @@ def sa_gram_counts(grams: DataFrame,
                    tables: list,
                    pairs: list,
                    max_n: int,
-                   id_col: str = "doc_id",
                    occ: DataFrame = None) -> DataFrame:
     """Exact corpus occurrence counts for a BOUNDED query-gram set —
     the primary infini-gram operation: the
@@ -242,8 +239,7 @@ def sa_gram_counts(grams: DataFrame,
     over the SAME gram set share one (materialized) probe pass
     instead of executing the ladder probe once per consumer."""
     if occ is None:
-        occ = sa_occurrence_positions(grams, tables, pairs, max_n,
-                                      id_col=id_col)
+        occ = sa_occurrence_positions(grams, tables, pairs, max_n)
     return (occ.groupBy("gid")
             .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("cnt")))
 
@@ -253,7 +249,6 @@ def sa_continuation(grams: DataFrame,
                     pairs: list,
                     max_n: int,
                     vocab: DataFrame,
-                    id_col: str = "doc_id",
                     occ: DataFrame = None) -> DataFrame:
     """Infini-gram next-token CONTINUATION distribution over the
     persisted suffix-array artifact (the remaining Liu 2024 primary
@@ -285,12 +280,10 @@ def sa_continuation(grams: DataFrame,
 
     ``occ`` lets a caller that also runs :func:`sa_gram_counts`
     over the SAME gram set share one (materialized) probe pass."""
-    from xsarsea_spark.engine import materialize
 
     if occ is None:
-        occ = sa_occurrence_positions(grams, tables, pairs, max_n,
-                                      id_col=id_col)
-    t0 = tables[0].selectExpr(f"{id_col} AS __cid", "p AS __pn",
+        occ = sa_occurrence_positions(grams, tables, pairs, max_n)
+    t0 = tables[0].selectExpr("doc_id AS __cid", "p AS __pn",
                               "r AS __rn")
     nxt = occ.join(
         t0,
@@ -332,8 +325,7 @@ def sa_continuation(grams: DataFrame,
 def sa_backoff_longest_suffix(contexts: DataFrame,
                               tables: list,
                               pairs: list,
-                              max_n: int,
-                              id_col: str = "doc_id") -> DataFrame:
+                              max_n: int) -> DataFrame:
     """Infini-gram backoff over the persisted suffix-array artifact:
     every suffix of each context becomes a candidate gram, counts
     come from :func:`sa_gram_counts` (see there for the probe), and
@@ -356,7 +348,7 @@ def sa_backoff_longest_suffix(contexts: DataFrame,
         "gram", F.expr("array_join(toks, ' ')")).withColumn(
         "gid", F.expr("ctx_id || ':' || CAST(k AS STRING)"))
     cnts = sa_gram_counts(sfx.select("gid", "toks"), tables, pairs,
-                          max_n, id_col=id_col)
+                          max_n)
     hits = sfx.join(cnts, on="gid")
     return (hits.groupBy("ctx_id", "ctx")
             .agg(F.min(F.struct((-F.col("k")).alias("k"),
@@ -373,8 +365,7 @@ def sa_infinigram_lm(contexts: DataFrame,
                      tables: list,
                      pairs: list,
                      max_n: int,
-                     vocab: DataFrame,
-                     id_col: str = "doc_id") -> DataFrame:
+                     vocab: DataFrame) -> DataFrame:
     """The ∞-gram LM estimate (Liu 2024's headline composition):
     per context, back off to the LONGEST corpus-occurring suffix,
     then report THAT suffix's next-token continuation distribution
@@ -407,10 +398,9 @@ def sa_infinigram_lm(contexts: DataFrame,
                  AS toks)))""").withColumn(
         "gram", F.expr("array_join(toks, ' ')")).withColumn(
         "gid", F.expr("ctx_id || ':' || CAST(k AS STRING)"))
-    from xsarsea_spark.engine import materialize
 
     cnts = sa_gram_counts(sfx.select("gid", "toks"), tables, pairs,
-                          max_n, id_col=id_col)
+                          max_n)
     # materialized: the winner frame is context-sized but its
     # lineage is the whole count probe, and the plan below reads it
     # TWICE (the output join and the winner-gram recovery) — an
@@ -432,8 +422,7 @@ def sa_infinigram_lm(contexts: DataFrame,
                                   "toks"),
                    on=["ctx_id", "matched_n"])
           .selectExpr("ctx_id AS gid", "toks"))
-    cont = sa_continuation(wg, tables, pairs, max_n, vocab,
-                           id_col=id_col)
+    cont = sa_continuation(wg, tables, pairs, max_n, vocab)
     return (win.join(cont.withColumnRenamed("gid", "ctx_id"),
                      on="ctx_id", how="left")
             .selectExpr(

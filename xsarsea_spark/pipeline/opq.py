@@ -59,9 +59,7 @@ ALLOC_SCALE = 9
 ALLOC_MAX_ABS = 3e4
 
 
-def train_allocation(corpus: DataFrame, m: int,
-                     vec_col: str = "embedding",
-                     id_col: str = "vec_id") -> np.ndarray:
+def train_allocation(corpus: DataFrame, m: int) -> np.ndarray:
     """Learn the serpentine variance-balancing permutation.
 
     Returns ``perm`` of length d: output slot j (slots ordered by
@@ -71,15 +69,15 @@ def train_allocation(corpus: DataFrame, m: int,
     """
     g = 10 ** ALLOC_SCALE
     stats = (
-        corpus.filter(F.col(vec_col).isNotNull())
+        corpus.filter(F.col("embedding").isNotNull())
         # stats-input contract: finite O(1) coordinates (rows with a
         # NaN/NULL/huge coordinate are dropped from the statistics —
         # they still get encoded, the permutation just isn't steered
         # by them); keeps the per-value floor inside int64
         .filter(F.expr(
-            f"size(filter({vec_col}, x -> x IS NULL OR isnan(x)"
+            f"size(filter(embedding, x -> x IS NULL OR isnan(x)"
             f" OR abs(x) > {ALLOC_MAX_ABS}d)) = 0"))
-        .selectExpr(f"posexplode({vec_col}) AS (__d0, __xf)")
+        .selectExpr("posexplode(embedding) AS (__d0, __xf)")
         .selectExpr("__d0", "CAST(__xf AS DOUBLE) AS __x")
         .groupBy("__d0")
         .agg(F.sum(F.expr(f"CAST(floor(__x * {g}d)"
@@ -114,11 +112,10 @@ def train_allocation(corpus: DataFrame, m: int,
                     dtype=np.int64)
 
 
-def apply_allocation(df: DataFrame, perm: np.ndarray,
-                     vec_col: str = "embedding") -> DataFrame:
+def apply_allocation(df: DataFrame, perm: np.ndarray) -> DataFrame:
     """Project vectors into the allocated layout — d in-plan column
     lookups (cast to double: the permuted space is the oracle's
     DOUBLE list space), no shuffle, no Python."""
-    arr = F.array(*[F.col(vec_col)[int(i)].cast("double")
+    arr = F.array(*[F.col("embedding")[int(i)].cast("double")
                     for i in perm])
-    return df.withColumn(vec_col, arr)
+    return df.withColumn("embedding", arr)

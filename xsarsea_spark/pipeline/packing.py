@@ -20,9 +20,14 @@ the distributed result bit-identical to the one-window form.
 
 from __future__ import annotations
 
+import bisect
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from xsarsea_spark.operators.rank import global_rank
 from xsarsea_spark.pipeline.text import HASH40_SQL
 
 __all__ = ["pack_sequences", "pack_sequences_from_lengths",
@@ -30,8 +35,6 @@ __all__ = ["pack_sequences", "pack_sequences_from_lengths",
 
 
 def pack_sequences(docs: DataFrame, seq_len: int,
-                   text_col: str = "text",
-                   id_col: str = "doc_id",
                    max_span: int = 8) -> DataFrame:
     """Concat-then-chunk packing: returns one row per (document,
     sequence) intersection with the exact token spans —
@@ -41,12 +44,11 @@ def pack_sequences(docs: DataFrame, seq_len: int,
     (validate ``seq_len`` against the longest document upstream).
     """
     toks = docs.select(
-        id_col,
-        F.expr(f"size(split({text_col}, ' '))").cast("long")
+        "doc_id",
+        F.expr("size(split(text, ' '))").cast("long")
         .alias("__n"),
     )
-    return pack_sequences_from_lengths(toks, seq_len, id_col=id_col,
-                                       len_col="__n",
+    return pack_sequences_from_lengths(toks, seq_len, len_col="__n",
                                        max_span=max_span)
 
 
@@ -57,7 +59,6 @@ def pack_sequences_from_lengths(lengths: DataFrame, seq_len: int,
     """:func:`pack_sequences` over PRECOMPUTED lengths — the core
     layout arithmetic, reusable with tokenizer-derived token counts
     (e.g. BPE-encoded lengths) instead of whitespace words."""
-    from xsarsea_spark.operators.rank import global_rank
 
     docs = lengths
     toks = docs.select(
@@ -94,21 +95,18 @@ def pack_sequences_from_lengths(lengths: DataFrame, seq_len: int,
     return out
 
 
-def mixture_sample(docs: DataFrame, rate_sql: str,
-                   id_col: str = "doc_id",
-                   source_col: str = "source") -> DataFrame:
+def mixture_sample(docs: DataFrame, rate_sql: str) -> DataFrame:
     """Deterministic per-source mixture: keep a row when its md5-hash
     unit uniform falls under the source's rate. ``rate_sql`` is a SQL
     expression over the row (typically the source column) yielding a
     rate in [0, 1]. Same corpus + rates -> same sample, any engine."""
     h = HASH40_SQL.format(
-        x=f"CAST({id_col} AS STRING) || '#' || {source_col}")
+        x="CAST(doc_id AS STRING) || '#' || source")
     return docs.filter(
         F.expr(f"({h}) / 1099511627776e0 < ({rate_sql})"))
 
 
 def pack_best_fit(lengths: DataFrame, seq_len: int, n_buckets: int,
-                  id_col: str = "doc_id",
                   len_col: str = "n_tokens") -> DataFrame:
     """Best-fit-decreasing (BFD) sequence packing with document-
     boundary segments — the packing every pretraining data loader
@@ -136,10 +134,9 @@ def pack_best_fit(lengths: DataFrame, seq_len: int, n_buckets: int,
     docs: packing quality only needs a few thousand candidates per
     bin pool, and no corpus-wide state exists at any size.
     """
-    from pyspark.sql import types as T
 
     chunks = (
-        lengths.selectExpr(f"{id_col} AS doc_id",
+        lengths.selectExpr("doc_id",
                            f"CAST({len_col} AS BIGINT) AS __n")
         .filter("__n >= 1")
         .selectExpr(
@@ -164,10 +161,6 @@ def pack_best_fit(lengths: DataFrame, seq_len: int, n_buckets: int,
     ])
 
     def kernel(pdf):
-        import bisect
-
-        import pandas as pd
-
         pdf = pdf.sort_values(["seg_len", "doc_id", "chunk_id"],
                               ascending=[False, True, True])
         bucket = int(pdf["bucket"].iloc[0])

@@ -24,6 +24,8 @@ import zlib
 
 import numpy as np
 
+from xsarsea_spark.pipeline._codec import check_dims
+
 __all__ = ["decode_png", "encode_png"]
 
 _SIG = b"\x89PNG\r\n\x1a\n"
@@ -65,7 +67,6 @@ def decode_png(payload: bytes) -> np.ndarray:
     if ihdr is None or not idat:
         raise ValueError("PNG missing IHDR/IDAT")
     w, h, depth, color, comp, filt, interlace = ihdr
-    from xsarsea_spark.pipeline._codec import check_dims
     check_dims("PNG", w, h)
     if depth != 8:
         raise NotImplementedError(f"PNG bit depth {depth} unsupported")

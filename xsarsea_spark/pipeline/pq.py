@@ -68,8 +68,7 @@ def _split(dim: int, m: int) -> list:
 
 
 def train_pq(corpus: DataFrame, m: int = 8, k: int = 16, iters: int = 5,
-             vec_col: str = "embedding",
-             id_col: str = "vec_id") -> np.ndarray:
+             vec_col: str = "embedding") -> np.ndarray:
     """Deterministic per-subspace Lloyd training.
 
     Returns codebooks of shape (m, k, dim/m). All m subspaces train in
@@ -80,7 +79,7 @@ def train_pq(corpus: DataFrame, m: int = 8, k: int = 16, iters: int = 5,
     dim = len(corpus.select(vec_col).first()[0])
     slices = _split(dim, m)
     sub = dim // m
-    init = corpus.orderBy(id_col).limit(k).select(vec_col).collect()
+    init = corpus.orderBy("vec_id").limit(k).select(vec_col).collect()
     first = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
     books = np.stack([first[:, sl] for sl in slices])     # (m, k, sub)
 
@@ -130,41 +129,38 @@ def train_pq(corpus: DataFrame, m: int = 8, k: int = 16, iters: int = 5,
     return books
 
 
-def _encode_kernel(books: np.ndarray, id_col: str, vec_col: str):
+def _encode_kernel(books: np.ndarray):
     m, _, sub = books.shape
     slices = [slice(i * sub, (i + 1) * sub) for i in range(m)]
 
     def gen(batches):
         for pdf in batches:
             v = np.stack([np.asarray(x, dtype=np.float64)
-                          for x in pdf[vec_col]])
+                          for x in pdf["embedding"]])
             codes = np.empty((v.shape[0], m), dtype=np.int32)
             for s_i, sl in enumerate(slices):
                 codes[:, s_i] = np.argmin(
                     _seq_sqdist(v[:, sl], books[s_i]), axis=1)
             yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
+                "vec_id": pdf["vec_id"].to_numpy(),
                 "codes": list(codes),
             })
 
     return gen
 
 
-def encode_pq(corpus: DataFrame, books: np.ndarray,
-              vec_col: str = "embedding",
-              id_col: str = "vec_id") -> DataFrame:
+def encode_pq(corpus: DataFrame, books: np.ndarray) -> DataFrame:
     """Compress: (id, codes array<int> of length m)."""
     schema = T.StructType([
-        corpus.schema[id_col],
+        corpus.schema["vec_id"],
         T.StructField("codes", T.ArrayType(T.IntegerType())),
     ])
-    return corpus.select(id_col, vec_col).mapInPandas(
-        _encode_kernel(books, id_col, vec_col), schema=schema)
+    return corpus.select("vec_id", "embedding").mapInPandas(
+        _encode_kernel(books), schema=schema)
 
 
 def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
-              k: int = 5, vec_col: str = "embedding",
-              id_col: str = "vec_id",
+              k: int = 5,
               corpus: DataFrame | None = None,
               shortlist: int | None = None,
               broadcast_queries: bool = True) -> DataFrame:
@@ -195,13 +191,12 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
     """
     if corpus is not None:
         r = shortlist or 10 * k
-        cand = pq_search(queries, codes, books, k=r, vec_col=vec_col,
-                         id_col=id_col,
+        cand = pq_search(queries, codes, books, k=r,
                          broadcast_queries=broadcast_queries)
-        qv = queries.select(F.col(id_col).alias("query_id"),
-                            F.col(vec_col).alias("__qv"))
-        cv = corpus.select(F.col(id_col).alias("neighbor_id"),
-                           F.col(vec_col).alias("__cv"))
+        qv = queries.select(F.col("vec_id").alias("query_id"),
+                            F.col("embedding").alias("__qv"))
+        cv = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                           F.col("embedding").alias("__cv"))
         # the shortlist is batch-bounded (n_q * shortlist rows):
         # broadcast it so the corpus vectors stream through the
         # refine join instead of being shuffled by neighbor_id
@@ -237,17 +232,17 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
             if len(pdf) == 0:
                 continue
             qv = np.stack([np.asarray(x, dtype=np.float64)
-                           for x in pdf[vec_col]])
+                           for x in pdf["embedding"]])
             tabs = np.empty((len(pdf), m, kk))
             for s_i in range(m):
                 sl = slice(s_i * sub, (s_i + 1) * sub)
                 tabs[:, s_i, :] = _seq_sqdist(qv[:, sl], books[s_i])
             yield pd.DataFrame({
-                "query_id": pdf[id_col].to_numpy(),
+                "query_id": pdf["vec_id"].to_numpy(),
                 "__tab": list(tabs.reshape(len(pdf), m * kk)),
             })
 
-    qtab = queries.select(id_col, vec_col).mapInPandas(
+    qtab = queries.select("vec_id", "embedding").mapInPandas(
         q_tables, schema=tab_schema)
     qtab = F.broadcast(qtab) if broadcast_queries else qtab
     # JVM-side ADC: m table lookups folded ascending-s with a 0d
@@ -260,7 +255,7 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
         " + element_at(codes, s + 1) + 1 AS INT)))")
     cand = (codes.crossJoin(qtab)
             .select("query_id",
-                    F.col(id_col).alias("neighbor_id"),
+                    F.col("vec_id").alias("neighbor_id"),
                     adc.alias("adc_dist")))
     # rank <= k collapses to WindowGroupLimit: each scan partition
     # pre-selects its own top-k per query map-side (ties resolved by

@@ -58,10 +58,7 @@ ELO_K = 8.0
 ELO_INIT = 1000.0
 
 
-def preference_matrix(events: DataFrame,
-                      actor_col: str = "user_id",
-                      arm_col: str = "event_type",
-                      value_col: str = "value") -> DataFrame:
+def preference_matrix(events: DataFrame) -> DataFrame:
     """(arm_a, arm_b, wins_a, n_matches) with arm_a < arm_b: one
     match per (actor, unordered arm pair) where both arms appear for
     the actor; the winner is the arm with the larger exact DECIMAL
@@ -70,14 +67,14 @@ def preference_matrix(events: DataFrame,
     The per-actor sums are one hash aggregation over the corpus; the
     pair join is actor-keyed with group size bounded by the arm
     count (arms are a schema property, not data volume)."""
-    uv = (events.groupBy(actor_col, arm_col)
-          .agg(F.expr(f"SUM(CAST(CASE WHEN isnan({value_col})"
-                      f" THEN NULL ELSE {value_col} END"
-                      f" AS DECIMAL(38,6)))")
+    uv = (events.groupBy("user_id", "event_type")
+          .agg(F.expr("SUM(CAST(CASE WHEN isnan(value)"
+                      " THEN NULL ELSE value END"
+                      " AS DECIMAL(38,6)))")
                .alias("__v")))
-    a = uv.selectExpr(f"{actor_col} AS __u", f"{arm_col} AS arm_a",
+    a = uv.selectExpr("user_id AS __u", "event_type AS arm_a",
                       "__v AS __va")
-    b = uv.selectExpr(f"{actor_col} AS __u", f"{arm_col} AS arm_b",
+    b = uv.selectExpr("user_id AS __u", "event_type AS arm_b",
                       "__v AS __vb")
     return (a.join(b, on="__u")
             .filter(F.col("arm_a") < F.col("arm_b"))
@@ -158,10 +155,7 @@ def train_bradley_terry(pm: DataFrame, rounds: int = BT_ROUNDS,
 
 
 def period_preference_matrix(events: DataFrame,
-                             periods: int = ELO_PERIODS,
-                             actor_col: str = "user_id",
-                             arm_col: str = "event_type",
-                             value_col: str = "value") -> DataFrame:
+                             periods: int = ELO_PERIODS) -> DataFrame:
     """(p, arm_a, arm_b, wins_a, n_matches): the per-rating-period
     match matrix — one match per (period, actor, unordered arm pair)
     decided by exact DECIMAL value sums within the period. Periods
@@ -174,17 +168,17 @@ def period_preference_matrix(events: DataFrame,
         "MIN((ts DIV 1000) DIV 86400000000)").alias("__md"))
     uv = (base.crossJoin(F.broadcast(md))
           .selectExpr(
-              actor_col, arm_col, value_col,
+              "user_id", "event_type", "value",
               f"LEAST(CAST((((ts DIV 1000) DIV 86400000000) - __md)"
               f" DIV 7 AS BIGINT), {periods - 1}) AS p")
-          .groupBy("p", actor_col, arm_col)
-          .agg(F.expr(f"SUM(CAST(CASE WHEN isnan({value_col})"
-                      f" THEN NULL ELSE {value_col} END"
-                      f" AS DECIMAL(38,6)))").alias("__v")))
-    a = uv.selectExpr("p", f"{actor_col} AS __u",
-                      f"{arm_col} AS arm_a", "__v AS __va")
-    b = uv.selectExpr("p", f"{actor_col} AS __u",
-                      f"{arm_col} AS arm_b", "__v AS __vb")
+          .groupBy("p", "user_id", "event_type")
+          .agg(F.expr("SUM(CAST(CASE WHEN isnan(value)"
+                      " THEN NULL ELSE value END"
+                      " AS DECIMAL(38,6)))").alias("__v")))
+    a = uv.selectExpr("p", "user_id AS __u",
+                      "event_type AS arm_a", "__v AS __va")
+    b = uv.selectExpr("p", "user_id AS __u",
+                      "event_type AS arm_b", "__v AS __vb")
     return (a.join(b, on=["p", "__u"])
             .filter(F.col("arm_a") < F.col("arm_b"))
             .groupBy("p", "arm_a", "arm_b")

@@ -775,11 +775,10 @@ def _ps_case(rows: list[tuple], n_col: str, flag: str) -> str:
     return f"coalesce({e}, {longest})"
 
 
-def with_psl_domain(df: DataFrame, host_col: str,
-                    rules_df: DataFrame, rules_rows: list[tuple],
-                    out_col: str = "psl_domain") -> DataFrame:
+def with_psl_domain(df: DataFrame, host_col: str, rules_df: DataFrame,
+                    rules_rows: list[tuple]) -> DataFrame:
     """Append the PSL registrable domain of ``host_col`` (lowercase,
-    port-free hostname) as ``out_col`` (NULL when the host IS a
+    port-free hostname) as ``psl_domain`` (NULL when the host IS a
     public suffix or empty).
 
     K left BROADCAST joins (K = max rule label count, ~5) against the
@@ -809,7 +808,7 @@ def with_psl_domain(df: DataFrame, host_col: str,
     ps = _ps_case(rules_rows, "__psl_n",
                   "__psl_{kind}{k}")
     x = x.withColumn("__psl_ps", F.expr(ps))
-    x = x.withColumn(out_col, F.expr(
+    x = x.withColumn("psl_domain", F.expr(
         "CASE WHEN __psl_n > __psl_ps THEN array_join(slice("
         "__psl_ls, __psl_n - __psl_ps, __psl_ps + 1), '.') END"))
     drop = (["__psl_ls", "__psl_n", "__psl_ps"]
@@ -819,11 +818,9 @@ def with_psl_domain(df: DataFrame, host_col: str,
     return x.drop(*drop)
 
 
-def psl_oracle_ctes(select0: str, rules_rows: list[tuple],
-                    host_col: str = "host",
-                    out_col: str = "psl_domain") -> tuple:
+def psl_oracle_ctes(select0: str, rules_rows: list[tuple]) -> tuple:
     """DuckDB replay of :func:`with_psl_domain`: ``select0`` must
-    emit ``host_col``; returns ``(parts, last_name)`` for the
+    emit ``host``; returns ``(parts, last_name)`` for the
     caller's WITH clause. The rules ride a VALUES CTE built from the
     same parsed rows, so both engines consult identical data."""
     vals = ", ".join(
@@ -834,10 +831,10 @@ def psl_oracle_ctes(select0: str, rules_rows: list[tuple],
         f"pslr AS (SELECT * FROM (VALUES {vals})"
         f" AS t(suffix, labels, is_n, is_w, is_e))",
         f"ph0 AS ({select0})",
-        f"ph1 AS (SELECT *, string_split({host_col}, '.') AS"
-        f" __psl_ls, CASE WHEN {host_col} IS NULL OR {host_col} ="
-        f" '' THEN 0 ELSE len(string_split({host_col}, '.')) END"
-        f" AS __psl_n FROM ph0)",
+        "ph1 AS (SELECT *, string_split(host, '.') AS"
+        " __psl_ls, CASE WHEN host IS NULL OR host ="
+        " '' THEN 0 ELSE len(string_split(host, '.')) END"
+        " AS __psl_n FROM ph0)",
     ]
     prev = "ph1"
     for i, k in enumerate(ks):
@@ -856,8 +853,8 @@ def psl_oracle_ctes(select0: str, rules_rows: list[tuple],
     parts.append(
         f"phps AS (SELECT *, {ps} AS __psl_ps FROM {prev})")
     parts.append(
-        f"phd AS (SELECT *, CASE WHEN __psl_n > __psl_ps THEN"
-        f" array_to_string(list_slice(__psl_ls,"
-        f" __psl_n - __psl_ps, __psl_n), '.') END AS {out_col}"
-        f" FROM phps)")
+        "phd AS (SELECT *, CASE WHEN __psl_n > __psl_ps THEN"
+        " array_to_string(list_slice(__psl_ls,"
+        " __psl_n - __psl_ps, __psl_n), '.') END AS psl_domain"
+        " FROM phps)")
     return parts, "phd"

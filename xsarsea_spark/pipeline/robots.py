@@ -115,9 +115,7 @@ def robots_rules_df(spark, bodies: list[tuple[str, str]]) -> DataFrame:
 
 
 def with_robots_verdict(df: DataFrame, rules: DataFrame,
-                        agent: str,
-                        domain_col: str = "domain",
-                        path_col: str = "path") -> DataFrame:
+                        agent: str) -> DataFrame:
     """Append ``allowed`` (boolean) to a ``(domain, path)`` frame
     under RFC 9309 semantics for ``agent``.
 
@@ -144,24 +142,24 @@ def with_robots_verdict(df: DataFrame, rules: DataFrame,
             f"with_robots_verdict: input columns {bad} collide with "
             "the reserved __rb_* namespace")
     a = agent.lower()
-    grp = rules.groupBy(domain_col).agg(
+    grp = rules.groupBy("domain").agg(
         F.max(F.when(F.col("agent") == a, 1).otherwise(0))
         .alias("__rb_exact"))
     applicable = (
-        rules.join(grp, on=domain_col)
+        rules.join(grp, on="domain")
         .filter((F.col("agent") == a)
                 | ((F.col("agent") == "*")
                    & (F.col("__rb_exact") == 0)))
-        .select(F.col(domain_col),
+        .select(F.col("domain"),
                 F.col("is_allow").alias("__rb_allow"),
                 F.col("pattern").alias("__rb_pattern"),
                 F.col("spec").alias("__rb_spec")))
-    win = (f"CASE WHEN __rb_pattern IS NOT NULL"
-           f" AND {path_col} LIKE __rb_pattern ESCAPE '\\\\'"
-           f" THEN __rb_spec * 2 + __rb_allow END")
+    win = ("CASE WHEN __rb_pattern IS NOT NULL"
+           " AND path LIKE __rb_pattern ESCAPE '\\\\'"
+           " THEN __rb_spec * 2 + __rb_allow END")
     keyed = df.withColumn("__rb_rid", F.monotonically_increasing_id())
     matched = (
-        keyed.join(applicable, on=domain_col, how="left")
+        keyed.join(applicable, on="domain", how="left")
         .groupBy("__rb_rid", *df.columns)
         .agg(F.expr(f"max({win})").alias("__rb_win")))
     return matched.withColumn(

@@ -20,10 +20,11 @@ engine brief mandates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xsarsea_spark.engine import materialize
+from xsarsea_spark.operators.rank import global_rank
 from xsarsea_spark.pipeline.dedup import shingle
 
 __all__ = ["stratified_sample", "source_token_cap",
@@ -31,18 +32,15 @@ __all__ = ["stratified_sample", "source_token_cap",
            "dup_components"]
 
 
-def stratified_sample(docs: DataFrame, n_per_stratum: int,
-                      strata_cols: tuple = ("lang",),
-                      id_col: str = "doc_id") -> DataFrame:
+def stratified_sample(docs: DataFrame, n_per_stratum: int) -> DataFrame:
     """Deterministic per-stratum sample: the ``n_per_stratum`` docs
     with the smallest md5(id) per stratum. Hash order is uniform but
     fixed, so re-runs (and other engines) pick the identical sample —
     unlike RNG-based ``df.sample``. One window pass, no global sort.
     """
-    from pyspark.sql import Window
 
-    w = Window.partitionBy(*strata_cols).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col))
+    w = Window.partitionBy("lang").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
     return (
         docs.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= n_per_stratum)
@@ -50,10 +48,7 @@ def stratified_sample(docs: DataFrame, n_per_stratum: int,
     )
 
 
-def source_token_cap(docs: DataFrame, budget: int,
-                     source_col: str = "source",
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def source_token_cap(docs: DataFrame, budget: int) -> DataFrame:
     """Per-source TOKEN-budget cap — the RefinedWeb/FineWeb-style
     "no domain dominates the training mix" curation stage: within
     each source, docs are taken in deterministic hash-priority order
@@ -72,14 +67,13 @@ def source_token_cap(docs: DataFrame, budget: int,
     cumsum through ``operators.rank.global_rank`` running sums
     instead. Integer token sums, so no accumulation-order risk.
     """
-    from pyspark.sql import Window
 
-    w = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col))
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
     return (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(id_col, source_col,
-                F.expr(f"size(split({text_col}, ' '))")
+        docs.filter(F.col("text").isNotNull())
+        .select("doc_id", "source",
+                F.expr("size(split(text, ' '))")
                 .alias("n_tokens"))
         .withColumn("rk", F.row_number().over(w))
         .withColumn("cum_tokens",
@@ -91,10 +85,7 @@ def source_token_cap(docs: DataFrame, budget: int,
     )
 
 
-def unimax_language_cap(per_doc: DataFrame, budget: int,
-                        lang_col: str = "lang",
-                        token_col: str = "n_tokens",
-                        id_col: str = "doc_id") -> DataFrame:
+def unimax_language_cap(per_doc: DataFrame, budget: int) -> DataFrame:
     """UniMax per-language budget capping (Chung et al. 2023,
     arXiv:2304.09151): split a TOTAL token budget across languages by
     water-filling — every language below the water level ``v``
@@ -123,7 +114,6 @@ def unimax_language_cap(per_doc: DataFrame, budget: int,
     broadcast per-language offsets — no per-language window, so a
     10-TB single-language corpus cannot pin one task.
     """
-    from xsarsea_spark.operators.rank import global_rank
 
     # lazily checkpointed: this narrow per-doc frame feeds BOTH the
     # language-totals aggregation and the global running sum, and the
@@ -132,9 +122,9 @@ def unimax_language_cap(per_doc: DataFrame, budget: int,
     # per consumer
     pd = materialize(
         per_doc.selectExpr(
-            f"{id_col}", f"{lang_col} AS __lang",
-            f"CAST({token_col} AS BIGINT) AS __ntok",
-            f"md5(CAST({id_col} AS STRING)) AS __pr"),
+            "doc_id", "lang AS __lang",
+            "CAST(n_tokens AS BIGINT) AS __ntok",
+            "md5(CAST(doc_id AS STRING)) AS __pr"),
         eager=False)
     langs = pd.groupBy("__lang").agg(
         F.expr("CAST(SUM(__ntok) AS BIGINT)").alias("__avail"))
@@ -181,7 +171,7 @@ def unimax_language_cap(per_doc: DataFrame, budget: int,
     ranked = global_rank(
         pd,
         [F.col("__lang").asc(), F.col("__pr").asc(),
-         F.col(id_col).asc()],
+         F.col("doc_id").asc()],
         rank_col="__gr", running_sums={"__gcum": "__ntok"})
     offs = ranked.groupBy("__lang").agg(
         F.expr("CAST(MIN(__gcum - __ntok) AS BIGINT)").alias("__off"))
@@ -189,7 +179,7 @@ def unimax_language_cap(per_doc: DataFrame, budget: int,
             .join(F.broadcast(offs), on="__lang")
             .join(F.broadcast(caps), on="__lang")
             .selectExpr(
-                f"{id_col}", "__lang AS lang",
+                "doc_id", "__lang AS lang",
                 "__ntok AS n_tokens",
                 "CAST(__gcum - __off AS BIGINT) AS cum_tokens",
                 "lang_cap",
@@ -198,8 +188,7 @@ def unimax_language_cap(per_doc: DataFrame, budget: int,
 
 
 def contamination_report(docs: DataFrame, benchmark: DataFrame,
-                         n: int = 8, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+                         n: int = 8) -> DataFrame:
     """Benchmark-contamination check: fraction of each corpus
     document's word ``n``-grams that appear in ANY benchmark document.
 
@@ -208,24 +197,24 @@ def contamination_report(docs: DataFrame, benchmark: DataFrame,
     broadcast; the corpus side streams through one join + one
     aggregation — never a cross join.
     """
-    corpus_sh = shingle(docs, n=n, text_col=text_col, id_col=id_col)
+    corpus_sh = shingle(docs, n=n)
     bench_sh = (
-        shingle(benchmark, n=n, text_col=text_col, id_col=id_col)
+        shingle(benchmark, n=n)
         .select("shingle").distinct()
     )
-    totals = corpus_sh.groupBy(id_col).agg(
+    totals = corpus_sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"))
     hits = (
         corpus_sh.join(F.broadcast(bench_sh), on="shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_contaminated"))
     )
     return (
-        totals.join(hits, on=id_col)
+        totals.join(hits, on="doc_id")
         .withColumn(
             "contamination",
             F.expr("n_contaminated / CAST(n_grams AS DOUBLE)"))
-        .select(id_col, "n_grams", "n_contaminated", "contamination")
+        .select("doc_id", "n_grams", "n_contaminated", "contamination")
     )
 
 
@@ -333,10 +322,7 @@ def dup_components(pairs: DataFrame, max_rounds: int = 20,
 
 
 def unimax_enforce(per_doc: DataFrame, caps: DataFrame,
-                   consumed: DataFrame | None = None,
-                   lang_col: str = "lang",
-                   token_col: str = "n_tokens",
-                   id_col: str = "doc_id") -> DataFrame:
+                   consumed: DataFrame | None = None) -> DataFrame:
     """Enforce PERSISTED per-language UniMax caps on a batch — the
     streaming half of :func:`unimax_language_cap`: caps are fitted
     offline (an L-row artifact), every micro-batch ranks its docs in
@@ -351,32 +337,31 @@ def unimax_enforce(per_doc: DataFrame, caps: DataFrame,
     Scale: same machinery as the batch form — ONE global running sum
     (two-pass rank) + broadcast L-row offsets/caps/consumed joins.
     """
-    from xsarsea_spark.operators.rank import global_rank
 
     pd = per_doc.selectExpr(
-        f"{id_col}", f"{lang_col} AS __lang",
-        f"CAST({token_col} AS BIGINT) AS __ntok",
-        f"md5(CAST({id_col} AS STRING)) AS __pr")
+        "doc_id", "lang AS __lang",
+        "CAST(n_tokens AS BIGINT) AS __ntok",
+        "md5(CAST(doc_id AS STRING)) AS __pr")
     ranked = global_rank(
         pd,
         [F.col("__lang").asc(), F.col("__pr").asc(),
-         F.col(id_col).asc()],
+         F.col("doc_id").asc()],
         rank_col="__gr", running_sums={"__gcum": "__ntok"})
     offs = ranked.groupBy("__lang").agg(
         F.expr("CAST(MIN(__gcum - __ntok) AS BIGINT)").alias("__off"))
-    cp = caps.selectExpr(f"{lang_col} AS __lang",
+    cp = caps.selectExpr("lang AS __lang",
                          "CAST(lang_cap AS BIGINT) AS __cap")
     j = (ranked
          .join(F.broadcast(offs), on="__lang")
          .join(F.broadcast(cp), on="__lang", how="left"))
     if consumed is not None:
-        us = consumed.selectExpr(f"{lang_col} AS __lang",
+        us = consumed.selectExpr("lang AS __lang",
                                  "CAST(used AS BIGINT) AS __used")
         j = j.join(F.broadcast(us), on="__lang", how="left")
     else:
         j = j.withColumn("__used", F.lit(0).cast("long"))
     return j.selectExpr(
-        f"{id_col}", "__lang AS lang", "__ntok AS n_tokens",
+        "doc_id", "__lang AS lang", "__ntok AS n_tokens",
         "CAST(__gcum - __off AS BIGINT) AS cum_tokens",
         "CAST(COALESCE(__cap, 0) AS BIGINT) AS lang_cap",
         "COALESCE(__used, 0L) + (__gcum - __off)"

@@ -16,8 +16,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
+
+from xsarsea_spark.pipeline.dedup import hyperplanes
 
 __all__ = ["with_norm", "cosine_topk", "icp_order",
            "nearest_in_reference",
@@ -41,21 +45,19 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     Returns (query_id, rank, neighbor_id, cosine). Excludes self-match.
     """
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
+    q = with_norm(queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
         F.col("__norm").alias("__qn"),
     )
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
+    c = with_norm(corpus).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
         F.col("__norm").alias("__cn"),
     )
     dot = _DOT.format(a="__qv", b="__cv")
@@ -63,7 +65,6 @@ def cosine_topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", F.expr(f"({dot}) / nullif(__qn * __cn, 0e0)"))
     )
-    from pyspark.sql.window import Window
 
     win = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -78,8 +79,6 @@ def cosine_topk(
 def nearest_in_reference(
     corpus: DataFrame,
     reference: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Per corpus vector, THE single nearest reference vector by
     cosine — the embedding-level contamination probe (paraphrased
@@ -94,14 +93,14 @@ def nearest_in_reference(
     vectors score the -2.0 sentinel (below the valid cosine range)
     instead of NULL so the struct comparison stays total.
     """
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__cv"),
+    c = with_norm(corpus).select(
+        F.col("vec_id"),
+        F.col("embedding").alias("__cv"),
         F.col("__norm").alias("__cn"),
     )
-    r = with_norm(reference, vec_col).select(
-        F.col(id_col).alias("__rid"),
-        F.col(vec_col).alias("__rv"),
+    r = with_norm(reference).select(
+        F.col("vec_id").alias("__rid"),
+        F.col("embedding").alias("__rv"),
         F.col("__norm").alias("__rn"),
     )
     dot = _DOT.format(a="__cv", b="__rv")
@@ -129,9 +128,7 @@ _BQ_WORD = (
 )
 
 
-def binary_quantize(df: DataFrame, dim: int = 64,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id") -> DataFrame:
+def binary_quantize(df: DataFrame, dim: int = 64) -> DataFrame:
     """1-bit (sign) quantization of an embedding column — the extreme
     compression point of the quantized-retrieval family (PQ keeps m
     bytes, this keeps dim bits): component d contributes bit d iff it
@@ -144,29 +141,27 @@ def binary_quantize(df: DataFrame, dim: int = 64,
     if dim % 32 != 0:
         raise ValueError("binary_quantize requires dim % 32 == 0")
     words = [
-        F.expr(_BQ_WORD.format(v=vec_col, off=w * 32)).alias(f"w{w}")
+        F.expr(_BQ_WORD.format(v="embedding", off=w * 32)).alias(f"w{w}")
         for w in range(dim // 32)
     ]
-    return df.select(F.col(id_col), *words)
+    return df.select(F.col("vec_id"), *words)
 
 
 def hamming_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                 dim: int = 64, vec_col: str = "embedding",
-                 id_col: str = "vec_id") -> DataFrame:
+                 dim: int = 64) -> DataFrame:
     """Exact top-k by Hamming distance over sign-quantized codes:
     the query code block is broadcast, the corpus codes stream, each
     pair costs ``dim/32`` xor+popcount ops (all JVM built-ins, whole-
     stage codegen). Ties break on neighbor id ascending — fully
     deterministic. Returns (query_id, rank, neighbor_id, hamming).
     """
-    from pyspark.sql.window import Window
 
     nw = dim // 32
-    qc = binary_quantize(queries, dim, vec_col, id_col).select(
-        F.col(id_col).alias("query_id"),
+    qc = binary_quantize(queries, dim).select(
+        F.col("vec_id").alias("query_id"),
         *[F.col(f"w{w}").alias(f"q{w}") for w in range(nw)])
-    cc = binary_quantize(corpus, dim, vec_col, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
+    cc = binary_quantize(corpus, dim).select(
+        F.col("vec_id").alias("neighbor_id"),
         *[F.col(f"w{w}") for w in range(nw)])
     ham = " + ".join(
         f"CAST(bit_count(q{w} ^ w{w}) AS BIGINT)" for w in range(nw))
@@ -188,7 +183,6 @@ def _projection_matrix(dim: int, n_planes: int, seed: int):
     """(dim, n_planes) float64 hyperplane matrix — the same integer
     LCG constants as pipeline.dedup.hyperplanes, so SQL oracles can be
     generated from the identical planes."""
-    from xsarsea_spark.pipeline.dedup import hyperplanes
 
     return np.array(hyperplanes(n_planes, dim, seed=seed),
                     dtype=np.float64).T / 1001.0
@@ -205,8 +199,6 @@ def _project(emb, K, dim: int, n_planes: int):
 
 
 def _sig_udf(dim: int, n_planes: int, seed: int):
-    from pyspark.sql.functions import pandas_udf
-
     K = _projection_matrix(dim, n_planes, seed)
     w = np.array([1 << j for j in range(n_planes)], dtype=np.int64)
 
@@ -223,7 +215,6 @@ def _probe_udf(dim: int, n_planes: int, n_probe: int, seed: int):
     near-duplicate on the other side of a hyperplane would differ in.
     Ties rank by bit index (stable argsort == SQL ORDER BY margin,
     bit)."""
-    from pyspark.sql.functions import pandas_udf
 
     K = _projection_matrix(dim, n_planes, seed)
     w = np.array([1 << j for j in range(n_planes)], dtype=np.int64)
@@ -244,13 +235,13 @@ def _probe_udf(dim: int, n_planes: int, n_probe: int, seed: int):
 
 
 def _exact_topk(cand: DataFrame, queries: DataFrame, corpus: DataFrame,
-                k: int, vec_col: str, id_col: str) -> DataFrame:
+                k: int) -> DataFrame:
     """Exact cosine + per-query top-k over candidate pairs only."""
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"),
+    q = with_norm(queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"),
         F.col("__norm").alias("__qn"))
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"),
+    c = with_norm(corpus).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"),
         F.col("__norm").alias("__cn"))
     dot = _DOT.format(a="__qv", b="__cv")
     scored = (
@@ -258,7 +249,6 @@ def _exact_topk(cand: DataFrame, queries: DataFrame, corpus: DataFrame,
         .join(c, on="neighbor_id")
         .withColumn("cosine", F.expr(f"({dot}) / nullif(__qn * __cn, 0e0)"))
     )
-    from pyspark.sql.window import Window
 
     win = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -275,8 +265,6 @@ def lsh_ann(
     corpus: DataFrame,
     k: int = 5,
     n_planes: int = 12,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int | None = None,
     seed: int = 0xC0FFEE,
 ) -> DataFrame:
@@ -289,18 +277,18 @@ def lsh_ann(
     is the bucketed scale path, not the exactness baseline.
     """
     if dim is None:
-        dim = len(queries.select(vec_col).first()[0])
+        dim = len(queries.select("embedding").first()[0])
     sig = _sig_udf(dim, n_planes, seed)
-    qs = queries.select(F.col(id_col).alias("query_id"),
-                        sig(F.col(vec_col)).alias("sig"))
-    cs = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       sig(F.col(vec_col)).alias("sig"))
+    qs = queries.select(F.col("vec_id").alias("query_id"),
+                        sig(F.col("embedding")).alias("sig"))
+    cs = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                       sig(F.col("embedding")).alias("sig"))
     cand = (
         qs.join(cs, on="sig")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
     )
-    return _exact_topk(cand, queries, corpus, k, vec_col, id_col)
+    return _exact_topk(cand, queries, corpus, k)
 
 
 def lsh_ann_multiprobe(
@@ -309,8 +297,6 @@ def lsh_ann_multiprobe(
     k: int = 5,
     n_planes: int = 8,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int | None = None,
     seed: int = 0xC0FFEE,
 ) -> DataFrame:
@@ -323,28 +309,26 @@ def lsh_ann_multiprobe(
     probe explosion multiplies only the (small) query side.
     """
     if dim is None:
-        dim = len(queries.select(vec_col).first()[0])
+        dim = len(queries.select("embedding").first()[0])
     sig = _sig_udf(dim, n_planes, seed)
     probes = _probe_udf(dim, n_planes, n_probe, seed)
     qs = (
-        queries.select(F.col(id_col).alias("query_id"),
-                       probes(F.col(vec_col)).alias("__probes"))
+        queries.select(F.col("vec_id").alias("query_id"),
+                       probes(F.col("embedding")).alias("__probes"))
         .select("query_id", F.explode("__probes").alias("sig"))
     )
-    cs = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       sig(F.col(vec_col)).alias("sig"))
+    cs = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                       sig(F.col("embedding")).alias("sig"))
     cand = (
         qs.join(cs, on="sig")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_topk(cand, queries, corpus, k, vec_col, id_col)
+    return _exact_topk(cand, queries, corpus, k)
 
 
-def icp_order(emb: DataFrame, n_buckets: int,
-              id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
+def icp_order(emb: DataFrame, n_buckets: int) -> DataFrame:
     """In-context-pretraining document ordering (Shi et al. 2023,
     arXiv:2310.10638): lay related documents next to each other so
     packed training sequences hold coherent context, via the paper's
@@ -364,11 +348,10 @@ def icp_order(emb: DataFrame, n_buckets: int,
     each chain head. Downstream, packing along (bucket, chain_pos)
     order IS the ICP layout.
     """
-    from pyspark.sql import types as T
 
     items = emb.selectExpr(
-        f"{id_col} AS vec_id", f"{vec_col} AS embedding",
-        f"{id_col} % {n_buckets} AS bucket")
+        "vec_id", "embedding",
+        f"vec_id % {n_buckets} AS bucket")
 
     schema = T.StructType([
         T.StructField("bucket", T.LongType()),
@@ -378,9 +361,6 @@ def icp_order(emb: DataFrame, n_buckets: int,
     ])
 
     def kernel(pdf):
-        import numpy as np
-        import pandas as pd
-
         pdf = pdf.sort_values("vec_id")
         bucket = int(pdf["bucket"].iloc[0])
         ids = pdf["vec_id"].to_numpy()

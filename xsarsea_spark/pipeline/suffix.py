@@ -56,7 +56,10 @@ brief mandates (dedup family).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import shutil
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xsarsea_spark.engine import materialize, scratch_path
@@ -83,8 +86,6 @@ def _publish_cache_dir(tmp: str, root: str, marker: str) -> None:
     either a complete artifact or a clean miss. If a complete
     artifact appears concurrently, the staged copy is discarded
     (contents are deterministic — either copy is correct)."""
-    import os
-    import shutil
 
     if os.path.exists(marker):
         shutil.rmtree(tmp, ignore_errors=True)
@@ -123,9 +124,7 @@ def _dense_rank(df: DataFrame, keys: list[str],
     return df.join(ranked, on=keys)
 
 
-def suffix_rank_tables(docs: DataFrame, rounds: int,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> list[DataFrame]:
+def suffix_rank_tables(docs: DataFrame, rounds: int) -> list[DataFrame]:
     """Rank tables [t_0 .. t_rounds], each (id, p, r): t_k ranks
     token-suffixes by their first 2^k tokens (end-padded). Documents
     longer than 2^rounds tokens would leave ranks unrefined — the
@@ -137,11 +136,11 @@ def suffix_rank_tables(docs: DataFrame, rounds: int,
     silently desync callers' fixed-round replay oracles)."""
     h40 = HASH40_SQL.format(x="__w")
     toks = materialize(
-        docs.filter(F.col(text_col).isNotNull())
-        .selectExpr(id_col,
-                    f"posexplode(split({text_col}, ' '))"
+        docs.filter(F.col("text").isNotNull())
+        .selectExpr("doc_id",
+                    "posexplode(split(text, ' '))"
                     " AS (__p0, __w)")
-        .selectExpr(id_col, "__p0 + 1 AS p", f"{h40} AS r"))
+        .selectExpr("doc_id", "__p0 + 1 AS p", f"{h40} AS r"))
     row = toks.groupBy().agg(F.max("p").alias("__mx")).first()
     max_p = (row["__mx"] or 0) if row is not None else 0
     if (1 << rounds) < max_p:
@@ -157,28 +156,27 @@ def suffix_rank_tables(docs: DataFrame, rounds: int,
         h = 1 << (k - 1)
         nxt = (
             cur
-            .join(cur.selectExpr(f"{id_col}", f"p - {h} AS p",
+            .join(cur.selectExpr("doc_id", f"p - {h} AS p",
                                  "r AS __r2"),
-                  on=[id_col, "p"], how="left")
-            .selectExpr(id_col, "p", "r AS __r1",
+                  on=["doc_id", "p"], how="left")
+            .selectExpr("doc_id", "p", "r AS __r1",
                         "coalesce(__r2, 0) AS __r2")
         )
         cur = materialize(
             _dense_rank(nxt, ["__r1", "__r2"], "r")
-            .select(id_col, "p", "r"))
+            .select("doc_id", "p", "r"))
         tables.append(cur)
     return tables
 
 
-def _sfx_cache_key(docs: DataFrame, rounds: int,
-                   text_col: str, id_col: str) -> str:
+def _sfx_cache_key(docs: DataFrame, rounds: int) -> str:
     """The content-fingerprint cache key shared by the ladder and
     pair-table caches: (algorithm version, rounds, columns, corpus
     fingerprint), the fingerprint being four independent statistics
     of the per-row (id, text) hash stream — one aggregation job."""
-    h32 = F.hash(F.col(id_col), F.col(text_col)).cast("long")
-    h64 = F.xxhash64(F.col(id_col), F.col(text_col))
-    fp = (docs.filter(F.col(text_col).isNotNull())
+    h32 = F.hash(F.col("doc_id"), F.col("text")).cast("long")
+    h64 = F.xxhash64(F.col("doc_id"), F.col("text"))
+    fp = (docs.filter(F.col("text").isNotNull())
           .agg(F.count("*").alias("__c"),
                F.sum(h32).alias("__s"),
                # full-width 64-bit values: sum on the DECIMAL(38,0)
@@ -186,13 +184,11 @@ def _sfx_cache_key(docs: DataFrame, rounds: int,
                F.sum(h64.cast("decimal(38,0)")).alias("__x"),
                F.min(h64).alias("__m"))
           .first())
-    return (f"v{_SFX_CACHE_VERSION}_r{rounds}_{id_col}_{text_col}"
+    return (f"v{_SFX_CACHE_VERSION}_r{rounds}_doc_id_text"
             f"_{fp['__c']}_{fp['__s']}_{fp['__x']}_{fp['__m']}")
 
 
 def suffix_rank_tables_cached(docs: DataFrame, rounds: int,
-                              text_col: str = "text",
-                              id_col: str = "doc_id",
                               key: str | None = None
                               ) -> list[DataFrame]:
     """:func:`suffix_rank_tables` behind a content-keyed persisted
@@ -219,8 +215,6 @@ def suffix_rank_tables_cached(docs: DataFrame, rounds: int,
     persisted ladder already passed it at build time for this exact
     corpus + rounds.
     """
-    import os
-    import shutil
 
     spark = docs.sparkSession
     # fingerprint = four independent statistics of the per-row hash
@@ -233,12 +227,11 @@ def suffix_rank_tables_cached(docs: DataFrame, rounds: int,
     # (the probe index) pass the precomputed ``key`` so the
     # fingerprint job runs once.
     if key is None:
-        key = _sfx_cache_key(docs, rounds, text_col, id_col)
+        key = _sfx_cache_key(docs, rounds)
     root = scratch_path(spark, "sfx_ladder", key)
     marker = os.path.join(root, "_SFX_DONE")
     if not os.path.exists(marker):
-        tables = suffix_rank_tables(docs, rounds, text_col=text_col,
-                                    id_col=id_col)
+        tables = suffix_rank_tables(docs, rounds)
         # per-process staging dir: two sessions sharing one scratch
         # root (a supported config) may race on a cold key — each
         # builds in its own tmp, and whoever renames first wins; the
@@ -258,8 +251,7 @@ def suffix_rank_tables_cached(docs: DataFrame, rounds: int,
             for k in range(rounds + 1)]
 
 
-def sa_adjacent_pairs(final_ranks: DataFrame,
-                      id_col: str = "doc_id") -> DataFrame:
+def sa_adjacent_pairs(final_ranks: DataFrame) -> DataFrame:
     """SA-adjacent position pairs (da, pa, db, pb): the total suffix
     order is (rank, id, p) — unique — ranked by global_rank; pair row
     n with row n+1."""
@@ -268,17 +260,16 @@ def sa_adjacent_pairs(final_ranks: DataFrame,
     # twice — the ordered table is position-rows of (id, p, __n) only
     ordered = materialize(global_rank(
         final_ranks,
-        [F.col("r").asc(), F.col(id_col).asc(), F.col("p").asc()],
+        [F.col("r").asc(), F.col("doc_id").asc(), F.col("p").asc()],
         rank_col="__n"))
-    a = ordered.selectExpr(f"{id_col} AS da", "p AS pa",
+    a = ordered.selectExpr("doc_id AS da", "p AS pa",
                            "__n + 1 AS __n")
-    b = ordered.selectExpr(f"{id_col} AS db", "p AS pb", "__n")
+    b = ordered.selectExpr("doc_id AS db", "p AS pb", "__n")
     return a.join(b, on="__n").drop("__n")
 
 
 def adjacent_lcp(pairs: DataFrame, tables: list[DataFrame],
-                 doc_lens: DataFrame,
-                 id_col: str = "doc_id") -> DataFrame:
+                 doc_lens: DataFrame) -> DataFrame:
     """(da, pa, db, pb, lcp): rank-table walk from the highest round
     down — one linear join chain over the materialized tables (no
     barrier needed) — then clamp to the remaining suffix lengths."""
@@ -286,9 +277,9 @@ def adjacent_lcp(pairs: DataFrame, tables: list[DataFrame],
     for k in range(len(tables) - 1, -1, -1):
         h = 1 << k
         tk = tables[k]
-        ta = tk.selectExpr(f"{id_col} AS da", "p AS __qa",
+        ta = tk.selectExpr("doc_id AS da", "p AS __qa",
                            "r AS __ra")
-        tb = tk.selectExpr(f"{id_col} AS db", "p AS __qb",
+        tb = tk.selectExpr("doc_id AS db", "p AS __qb",
                            "r AS __rb")
         cur = (
             cur.withColumn("__qa", F.expr("pa + l"))
@@ -301,8 +292,8 @@ def adjacent_lcp(pairs: DataFrame, tables: list[DataFrame],
                        f" NULL AND __ra = __rb THEN l + {h}"
                        " ELSE l END"))
             .drop("__qa", "__qb", "__ra", "__rb"))
-    la = doc_lens.selectExpr(f"{id_col} AS da", "__len AS __la")
-    lb = doc_lens.selectExpr(f"{id_col} AS db", "__len AS __lb")
+    la = doc_lens.selectExpr("doc_id AS da", "__len AS __la")
+    lb = doc_lens.selectExpr("doc_id AS db", "__len AS __lb")
     return (
         cur.join(la, on="da").join(lb, on="db")
         .withColumn("lcp", F.expr(
@@ -312,8 +303,6 @@ def adjacent_lcp(pairs: DataFrame, tables: list[DataFrame],
 
 
 def longest_dup_span(docs: DataFrame, rounds: int = 7,
-                     text_col: str = "text",
-                     id_col: str = "doc_id",
                      cached: bool = False) -> DataFrame:
     """Per document: the token length and text of the longest token
     span that also occurs elsewhere in the corpus (any other
@@ -321,40 +310,36 @@ def longest_dup_span(docs: DataFrame, rounds: int = 7,
     the smallest starting position. Docs whose every position has
     LCP 0 report (0, ''). ``cached=True`` routes the rank-table
     build through the content-keyed persisted ladder cache."""
-    from pyspark.sql.window import Window
 
-    lens = docs.filter(F.col(text_col).isNotNull()).selectExpr(
-        id_col, f"size(split({text_col}, ' ')) AS __len")
+    lens = docs.filter(F.col("text").isNotNull()).selectExpr(
+        "doc_id", "size(split(text, ' ')) AS __len")
     build = suffix_rank_tables_cached if cached \
         else suffix_rank_tables
-    tables = build(docs, rounds, text_col=text_col, id_col=id_col)
-    pairs = sa_adjacent_pairs(tables[-1], id_col=id_col)
+    tables = build(docs, rounds)
+    pairs = sa_adjacent_pairs(tables[-1])
     # consumed twice below (one union branch per pair side): without
     # the barrier the whole 2*(rounds+1)-join ladder walk runs twice
-    lcps = materialize(adjacent_lcp(pairs, tables, lens,
-                                    id_col=id_col))
+    lcps = materialize(adjacent_lcp(pairs, tables, lens))
     contrib = (
-        lcps.selectExpr(f"da AS {id_col}", "pa AS pos", "lcp")
+        lcps.selectExpr("da AS doc_id", "pa AS pos", "lcp")
         .unionByName(
-            lcps.selectExpr(f"db AS {id_col}", "pb AS pos", "lcp"))
+            lcps.selectExpr("db AS doc_id", "pb AS pos", "lcp"))
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("lcp").desc(), F.col("pos").asc())
     best = (contrib.withColumn("__rn", F.row_number().over(w))
             .filter("__rn = 1").drop("__rn"))
     return (
-        best.join(docs.select(id_col, text_col), on=id_col)
+        best.join(docs.select("doc_id", "text"), on="doc_id")
         .selectExpr(
-            id_col,
+            "doc_id",
             "CAST(lcp AS BIGINT) AS longest_dup_tokens",
-            f"array_join(slice(split({text_col}, ' '), CAST(pos AS"
+            "array_join(slice(split(text, ' '), CAST(pos AS"
             " INT), CAST(lcp AS INT)), ' ') AS dup_text")
     )
 
 
 def cross_doc_lcp(docs: DataFrame, rounds: int,
-                  text_col: str = "text",
-                  id_col: str = "doc_id",
                   cached: bool = False) -> DataFrame:
     """(id, pos, cross_lcp): for EVERY token position, the EXACT
     length of the longest prefix its suffix shares with a suffix of
@@ -385,37 +370,35 @@ def cross_doc_lcp(docs: DataFrame, rounds: int,
     relies on. Everything is integer, so the DuckDB oracle replays
     it bit-exactly.
     """
-    from pyspark.sql.window import Window
 
-    lens = docs.filter(F.col(text_col).isNotNull()).selectExpr(
-        id_col, f"size(split({text_col}, ' ')) AS __len")
+    lens = docs.filter(F.col("text").isNotNull()).selectExpr(
+        "doc_id", "size(split(text, ' ')) AS __len")
     build = suffix_rank_tables_cached if cached \
         else suffix_rank_tables
-    tables = build(docs, rounds, text_col=text_col, id_col=id_col)
+    tables = build(docs, rounds)
     # ordered feeds three consumers (both pair sides + the entry
     # table) and lcps two (prev/next attach): barriers keep the
     # two-pass rank and the 2*(rounds+1)-join ladder walk at ONE
     # execution each instead of 3x / 2x
     ordered = materialize(global_rank(
         tables[-1],
-        [F.col("r").asc(), F.col(id_col).asc(), F.col("p").asc()],
+        [F.col("r").asc(), F.col("doc_id").asc(), F.col("p").asc()],
         rank_col="__n"))
     # pair j spans SA entries (j, j+1); __n rides through the walk
-    a = ordered.selectExpr(f"{id_col} AS da", "p AS pa", "__n")
-    b = ordered.selectExpr(f"{id_col} AS db", "p AS pb",
+    a = ordered.selectExpr("doc_id AS da", "p AS pa", "__n")
+    b = ordered.selectExpr("doc_id AS db", "p AS pb",
                            "__n - 1 AS __n")
-    lcps = materialize(adjacent_lcp(a.join(b, on="__n"), tables, lens,
-                                    id_col=id_col))
+    lcps = materialize(adjacent_lcp(a.join(b, on="__n"), tables, lens))
     prev = lcps.selectExpr("__n + 1 AS __n", "da AS __prev_doc",
                            "lcp AS __lcp_prev")
     nxt = lcps.selectExpr("__n", "lcp AS __lcp_next")
     ent = (
-        ordered.select(id_col, "p", "__n")
+        ordered.select("doc_id", "p", "__n")
         .join(prev, on="__n", how="left")
         .join(nxt, on="__n", how="left")
         .withColumn("__chg", F.expr(
             "CASE WHEN __prev_doc IS NULL"
-            f" OR __prev_doc != {id_col} THEN 1 ELSE 0 END"))
+            " OR __prev_doc != doc_id THEN 1 ELSE 0 END"))
     )
     ent = global_rank(ent, [F.col("__n").asc()], rank_col="__nn",
                       running_sums={"__run": "__chg"})
@@ -429,14 +412,13 @@ def cross_doc_lcp(docs: DataFrame, rounds: int,
                     .over(wb))
         .withColumn("__f", F.min(F.expr("coalesce(__lcp_next, -1L)"))
                     .over(wf))
-        .selectExpr(id_col, "p AS pos",
+        .selectExpr("doc_id", "p AS pos",
                     "CAST(greatest(__b, __f, 0L) AS BIGINT)"
                     " AS cross_lcp")
     )
 
 
-def pair_rank_tables(tables: list[DataFrame],
-                     id_col: str = "doc_id") -> list[DataFrame]:
+def pair_rank_tables(tables: list[DataFrame]) -> list[DataFrame]:
     """pair_k for k = 1..rounds: the DISTINCT (r1, r2, r) rank-merge
     lookup of doubling round k — r is the round-k dense rank assigned
     to the key (rank_{k-1}(p), rank_{k-1}(p + 2^(k-1)) or 0). Derived
@@ -458,20 +440,18 @@ def pair_rank_tables(tables: list[DataFrame],
     for k in range(1, len(tables)):
         h = 1 << (k - 1)
         prev = tables[k - 1]
-        shifted = prev.selectExpr(id_col, f"p - {h} AS p",
+        shifted = prev.selectExpr("doc_id", f"p - {h} AS p",
                                   "r AS __r2")
-        keyed = (prev.join(shifted, on=[id_col, "p"], how="left")
-                 .selectExpr(id_col, "p", "r AS r1",
+        keyed = (prev.join(shifted, on=["doc_id", "p"], how="left")
+                 .selectExpr("doc_id", "p", "r AS r1",
                              "coalesce(__r2, 0) AS r2"))
         out.append(
-            keyed.join(tables[k], on=[id_col, "p"])
+            keyed.join(tables[k], on=["doc_id", "p"])
             .select("r1", "r2", "r").distinct())
     return out
 
 
 def suffix_probe_index_cached(docs: DataFrame, rounds: int,
-                              text_col: str = "text",
-                              id_col: str = "doc_id",
                               max_level: int | None = None
                               ) -> tuple[list[DataFrame],
                                          list[DataFrame]]:
@@ -495,11 +475,9 @@ def suffix_probe_index_cached(docs: DataFrame, rounds: int,
     higher levels, so skipping their reads saves one schema-load job
     each. The ONE fingerprint job keys both caches.
     """
-    import os
-    import shutil
 
     spark = docs.sparkSession
-    key = _sfx_cache_key(docs, rounds, text_col, id_col)
+    key = _sfx_cache_key(docs, rounds)
     root = scratch_path(spark, "sfx_pairs", key)
     marker = os.path.join(root, "_SFX_DONE")
     lroot = scratch_path(spark, "sfx_ladder", key)
@@ -512,11 +490,9 @@ def suffix_probe_index_cached(docs: DataFrame, rounds: int,
         pairs = [spark.read.parquet(os.path.join(root, f"p{k}"))
                  for k in range(1, n_t + 1)]
         return tables, pairs
-    tables = suffix_rank_tables_cached(docs, rounds,
-                                       text_col=text_col,
-                                       id_col=id_col, key=key)
+    tables = suffix_rank_tables_cached(docs, rounds, key=key)
     if not os.path.exists(marker):
-        pairs = pair_rank_tables(tables, id_col=id_col)
+        pairs = pair_rank_tables(tables)
         tmp = f"{root}.tmp.{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
         for k, t in enumerate(pairs):

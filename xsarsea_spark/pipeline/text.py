@@ -13,7 +13,7 @@ exact dedup is a single hash aggregation on the content digest.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -38,10 +38,10 @@ HASH40_SQL = "CAST(conv(substring(md5({x}), 1, 10), 16, 10) AS BIGINT)"
 STOPWORDS = ("a", "the")
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Per-document token statistics: counts, distinct ratio, average
     token length, stopword ratio, digit/space character ratios."""
-    t = docs.withColumn("__toks", F.split(F.col(text_col), " "))
+    t = docs.withColumn("__toks", F.split(F.col("text"), " "))
     sw = ", ".join(f"'{w}'" for w in STOPWORDS)
     return (
         t.withColumn("n_tokens", F.size("__toks"))
@@ -64,8 +64,8 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn(
             "space_ratio",
             F.expr(
-                f"(length({text_col}) - length(replace({text_col}, ' ', '')))"
-                f" / CAST(length({text_col}) AS DOUBLE)"
+                "(length(text) - length(replace(text, ' ', '')))"
+                " / CAST(length(text) AS DOUBLE)"
             ),
         )
         .drop("__toks")
@@ -84,11 +84,11 @@ LANG_MARKERS = {
 }
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Marker-frequency language classifier: score = marker hits /
     token count per language, prediction = argmax (deterministic
     alphabetical tie-break)."""
-    t = docs.withColumn("__toks", F.split(F.col(text_col), " "))
+    t = docs.withColumn("__toks", F.split(F.col("text"), " "))
     score_cols = []
     for lang in sorted(LANG_MARKERS):
         marks = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
@@ -110,10 +110,10 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return t.withColumn("pred_lang", pred).drop("__toks")
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality score in [0, 1]: length band + vocabulary
     diversity + stopword sanity (the usual pretraining-filter shape)."""
-    t = token_stats(docs, text_col=text_col)
+    t = token_stats(docs)
     return t.withColumn(
         "quality",
         F.expr(
@@ -126,33 +126,32 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact content dedup: one hash aggregation on md5(text); keeps
     the minimum id per digest (deterministic keeper)."""
-    h = HASH40_SQL.format(x=text_col)
+    h = HASH40_SQL.format(x="text")
     return (
-        docs.withColumn("__h", F.expr(f"md5({text_col})"))
+        docs.withColumn("__h", F.expr("md5(text)"))
         .groupBy("__h")
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
         .select("keeper_id", "dup_count")
     )
 
 
-def doc_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """40-bit content fingerprint (md5-derived) + per-doc token-set
     hash: order-insensitive combination of token hashes (sum mod p)."""
     p = (1 << 61) - 1
     tok_h = HASH40_SQL.format(x="x")
     return docs.withColumn(
-        "fingerprint", F.expr(HASH40_SQL.format(x=text_col))
+        "fingerprint", F.expr(HASH40_SQL.format(x="text"))
     ).withColumn(
         "tokenset_hash",
         F.expr(
-            f"aggregate(array_distinct(split({text_col}, ' ')),"
+            f"aggregate(array_distinct(split(text, ' ')),"
             f" 0L, (a, x) -> (a + ({tok_h})) % {p})"
         ),
     )
@@ -161,19 +160,19 @@ def doc_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
-def token_count_bpe(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count_bpe(docs: DataFrame) -> DataFrame:
     """BPE-ish token counting: whitespace tokens + a regex tokenizer
     (letter runs / digit runs / single punctuation) — the usual
     pretraining budget estimator; pure JVM regexp, no UDF."""
     return docs.select(
         "doc_id",
-        F.expr(f"size(split({text_col}, ' '))").alias("ws_tokens"),
+        F.expr("size(split(text, ' '))").alias("ws_tokens"),
         F.expr(
-            f"size(regexp_extract_all({text_col},"
+            f"size(regexp_extract_all(text,"
             f" '{BPE_ISH_PATTERN}', 0))"
         ).alias("bpe_ish_tokens"),
-        F.expr(f"CAST(length({text_col}) AS DOUBLE)"
-               f" / size(regexp_extract_all({text_col},"
+        F.expr(f"CAST(length(text) AS DOUBLE)"
+               f" / size(regexp_extract_all(text,"
                f" '{BPE_ISH_PATTERN}', 0))").alias("chars_per_token"),
     )
 
@@ -183,7 +182,7 @@ ROLLING_B = 1000003
 ROLLING_P = 4398046511093
 
 
-def rolling_hash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def rolling_hash(docs: DataFrame) -> DataFrame:
     """Order-SENSITIVE polynomial rolling hash over the token stream:
     acc = (acc * B + h40(tok)) mod p, as a sequential JVM-side fold —
     the content fingerprint that distinguishes permuted documents
@@ -192,7 +191,7 @@ def rolling_hash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(
         "doc_id",
         F.expr(
-            f"aggregate(split({text_col}, ' '), 0L,"
+            f"aggregate(split(text, ' '), 0L,"
             f" (a, x) -> (a * {ROLLING_B} + ({tok_h})) % {ROLLING_P})"
         ).alias("rolling_hash"),
     )
@@ -209,7 +208,7 @@ PII_PATTERNS = {
 }
 
 
-def pii_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_signals(docs: DataFrame) -> DataFrame:
     """PII detection + redaction signals per document: match counts
     for emails / IPv4 addresses / phone numbers, a has_pii flag, and
     the redacted text (``<EMAIL>``/``<IP>``/``<PHONE>`` placeholders
@@ -224,7 +223,7 @@ def pii_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     value-oracle-checkable end to end.
     """
     t = docs
-    text = F.col(text_col)
+    text = F.col("text")
     for name, pat in PII_PATTERNS.items():
         t = t.withColumn(f"n_{name}",
                          F.regexp_count(text, F.lit(pat)).cast("long"))
@@ -240,8 +239,7 @@ def pii_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def line_dedup(docs: DataFrame, line_words: int = 10,
-               min_count: int = 3, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+               min_count: int = 3) -> DataFrame:
     """C4-style line-level dedup: any line occurring at least
     ``min_count`` times ACROSS THE CORPUS (within-doc repeats count)
     is removed from every document — the boilerplate-removal stage of
@@ -264,10 +262,10 @@ def line_dedup(docs: DataFrame, line_words: int = 10,
     w = line_words
     h40 = HASH40_SQL.format(x="line")
     lines = (
-        docs.filter(F.col(text_col).isNotNull())
-        .selectExpr(id_col, f"split({text_col}, ' ') AS __l")
+        docs.filter(F.col("text").isNotNull())
+        .selectExpr("doc_id", "split(text, ' ') AS __l")
         .selectExpr(
-            id_col,
+            "doc_id",
             f"posexplode(transform(sequence(0, (size(__l) - 1)"
             f" div {w}), j -> array_join(slice(__l, j * {w} + 1,"
             f" {w}), ' '))) AS (line_no, line)")
@@ -286,28 +284,26 @@ def line_dedup(docs: DataFrame, line_words: int = 10,
     )
 
 
-def bigrams(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def bigrams(docs: DataFrame) -> DataFrame:
     """Token bigram rows (id, w1, w2), duplicates kept — the raw
     material for n-gram language-model statistics. One explode, no
     self-join: positions come from a ``transform(sequence(...))``
     over the token array."""
     return (
-        docs.selectExpr(id_col, f"split({text_col}, ' ') AS __l")
+        docs.selectExpr("doc_id", "split(text, ' ') AS __l")
         .filter("size(__l) >= 2")
         .selectExpr(
-            id_col,
+            "doc_id",
             "explode(transform(sequence(1, size(__l) - 1),"
             " i -> named_struct('w1', element_at(__l, i),"
             " 'w2', element_at(__l, i + 1)))) AS __bg",
         )
-        .selectExpr(id_col, "__bg.w1 AS w1", "__bg.w2 AS w2")
+        .selectExpr("doc_id", "__bg.w1 AS w1", "__bg.w2 AS w2")
     )
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
-                    stride: int = 48, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    stride: int = 48) -> DataFrame:
     """RAG-style overlapping chunking: fixed ``chunk_tokens``-token
     windows every ``stride`` tokens (overlap = chunk - stride), plus
     a tail chunk for the remainder. Pure array SQL (sequence ->
@@ -317,9 +313,9 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
     chunk boundaries are pure integer arithmetic on the token array.
     """
     return (
-        docs.selectExpr(id_col, f"split({text_col}, ' ') AS __l")
+        docs.selectExpr("doc_id", "split(text, ' ') AS __l")
         .selectExpr(
-            id_col, "__l",
+            "doc_id", "__l",
             # number of stride starts: ceil(max(size-chunk, 0)/stride)
             # + 1 covers the tail
             f"sequence(0, CAST(CEIL(CAST(GREATEST("
@@ -327,23 +323,21 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
             f" / {stride}) AS INT)) AS __starts",
         )
         .selectExpr(
-            id_col,
+            "doc_id",
             f"posexplode(transform(__starts,"
             f" s -> slice(__l, s * {stride} + 1, {chunk_tokens})))"
             " AS (chunk_id, __chunk)",
         )
         .filter(F.expr("size(__chunk) > 0"))
         .selectExpr(
-            id_col, "chunk_id",
+            "doc_id", "chunk_id",
             "size(__chunk) AS n_tokens",
             "array_join(__chunk, ' ') AS chunk_text",
         )
     )
 
 
-def chunk_dedup(docs: DataFrame, chunk_tokens: int = 64,
-                text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def chunk_dedup(docs: DataFrame, chunk_tokens: int = 64) -> DataFrame:
     """Chunk-level exact dedup — the RAG-index ingest step: cut every
     document into NON-overlapping fixed-token chunks, hash each
     chunk's content, and keep one canonical copy per hash (lowest
@@ -355,16 +349,14 @@ def chunk_dedup(docs: DataFrame, chunk_tokens: int = 64,
     (bounded by per-hash duplicate multiplicity, never corpus-wide)
     + one per-doc hash agg. No pairwise work anywhere.
     """
-    from pyspark.sql.window import Window
 
     ch = chunk_documents(docs, chunk_tokens=chunk_tokens,
-                         stride=chunk_tokens, text_col=text_col,
-                         id_col=id_col)
-    h = ch.select(id_col, "chunk_id",
+                         stride=chunk_tokens)
+    h = ch.select("doc_id", "chunk_id",
                   F.md5(F.col("chunk_text")).alias("__h"))
-    w = Window.partitionBy("__h").orderBy(id_col, "chunk_id")
+    w = Window.partitionBy("__h").orderBy("doc_id", "chunk_id")
     flagged = h.withColumn("__rn", F.row_number().over(w))
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_chunks"),
         F.expr("CAST(SUM(CASE WHEN __rn > 1 THEN 1 ELSE 0 END)"
                " AS BIGINT)").alias("n_dup_chunks"),
@@ -374,7 +366,7 @@ def chunk_dedup(docs: DataFrame, chunk_tokens: int = 64,
     )
 
 
-def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_quality(docs: DataFrame) -> DataFrame:
     """Gopher/C4-style repetition quality signals, adapted to the
     whitespace-token corpus: top-unigram fraction, top-bigram
     fraction, duplicated-trigram fraction, mean token length, plus
@@ -436,7 +428,7 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
              " element_at(tk, i + 2))) END")
 
     def tk_let(body: str) -> str:
-        return (f"transform(array(split({text_col}, ' ')),"
+        return (f"transform(array(split(text, ' ')),"
                 f" tk -> {body})[0]")
 
     # One MINIMAL let-bound expression per metric. The earlier
@@ -469,14 +461,12 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
             "top_unigram_frac <= 0.30 AND top_bigram_frac <= 0.18"
             " AND dup_trigram_frac <= 0.30"
             " AND mean_token_len >= 3.0 AND mean_token_len <= 10.0"
-            f" AND size(split({text_col}, ' ')) >= 50"
+            " AND size(split(text, ' ')) >= 50"
         ),
     )
 
 
-def crossdoc_ngram_dup(docs: DataFrame, n: int = 8,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def crossdoc_ngram_dup(docs: DataFrame, n: int = 8) -> DataFrame:
     """Cross-document n-gram duplication: for each document, the
     fraction of its n-gram positions whose n-gram also occurs in at
     least one OTHER document (the boilerplate/contamination signal
@@ -493,9 +483,9 @@ def crossdoc_ngram_dup(docs: DataFrame, n: int = 8,
         f" i -> {HASH40_SQL.format(x=_GRAM_CONCAT)})"
     )
     grams = (
-        docs.withColumn("__toks", F.split(F.col(text_col), " "))
+        docs.withColumn("__toks", F.split(F.col("text"), " "))
         .filter(F.expr(f"size(__toks) >= {n}"))
-        .select(id_col, F.explode(F.expr(gram.format(n=n))).alias("__h"))
+        .select("doc_id", F.explode(F.expr(gram.format(n=n))).alias("__h"))
     )
     # collapse the raw position stream to (hash, doc) occurrence
     # counts FIRST: the distinct-doc count per hash and the per-doc
@@ -503,13 +493,13 @@ def crossdoc_ngram_dup(docs: DataFrame, n: int = 8,
     # corpus explode runs once and the full gram stream is shuffled
     # once (the old shape aggregated and joined the raw stream
     # separately — two explodes, two full-stream shuffles)
-    per = grams.groupBy("__h", id_col).agg(
+    per = grams.groupBy("__h", "doc_id").agg(
         F.count(F.lit(1)).alias("__c"))
     docs_per_gram = per.groupBy("__h").agg(
         F.count(F.lit(1)).alias("__nd"))
     return (
         per.join(docs_per_gram, on="__h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.expr("CAST(SUM(__c) AS BIGINT)").alias("n_grams"),
             F.expr("SUM(CASE WHEN __nd >= 2 THEN __c ELSE 0 END)")
@@ -525,9 +515,7 @@ def crossdoc_ngram_dup(docs: DataFrame, n: int = 8,
 _GRAM_CONCAT = ("array_join(slice(__toks, i, {n}), ' ')")
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     the MOSS algorithm): hash every k-token gram, slide a w-hash
     window, select each window's RIGHTMOST minimal hash — the
@@ -552,18 +540,17 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
     never corpus-wide; output is DISTINCT decoded fingerprints.
     Returns (id, pos, fp_hash).
     """
-    from pyspark.sql.window import Window
 
     B = 1 << 20
     gram_h = HASH40_SQL.format(
         x=f"array_join(slice(__toks, p + 1, {k}), ' ')")
     g = (
-        docs.withColumn("__toks", F.split(F.col(text_col), " "))
+        docs.withColumn("__toks", F.split(F.col("text"), " "))
         .filter(F.expr(f"size(__toks) >= {k}"))
-        .select(id_col, "__toks",
+        .select("doc_id", "__toks",
                 F.explode(F.expr(
                     f"sequence(0, size(__toks) - {k})")).alias("p"))
-        .select(id_col, "p",
+        .select("doc_id", "p",
                 F.expr(f"CASE WHEN size(__toks) < {B}"
                        f" THEN ({gram_h}) * {B}L"
                        f" + ({B} - 1 - p)"
@@ -572,13 +559,13 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
                        " position-encoding cap; pre-chunk oversize"
                        " documents') END").alias("__key"))
     )
-    win = Window.partitionBy(id_col).orderBy("p") \
+    win = Window.partitionBy("doc_id").orderBy("p") \
         .rowsBetween(-(w - 1), 0)
     sel = (
         g.withColumn("__fp", F.min("__key").over(win))
         .filter(F.col("p") >= w - 1)
         .select(
-            id_col,
+            "doc_id",
             F.expr(f"CAST({B} - 1 - (__fp % {B}) AS BIGINT)")
             .alias("pos"),
             F.expr(f"__fp div {B}").alias("fp_hash"),
@@ -588,9 +575,8 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
     return sel
 
 
-def duplicate_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def duplicate_spans(docs: DataFrame, n: int = 8,
+                    min_docs: int = 2) -> DataFrame:
     """Maximal cross-document duplicated token spans — the exact
     substring-dedup primitive of Lee et al. 2021 ("Deduplicating
     Training Data Makes Language Models Better"), re-expressed
@@ -621,27 +607,26 @@ def duplicate_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
         f" i -> {HASH40_SQL.format(x=_GRAM_CONCAT.format(n=n))})"
     )
     grams = (
-        docs.withColumn("__toks", F.split(F.col(text_col), " "))
+        docs.withColumn("__toks", F.split(F.col("text"), " "))
         .filter(F.expr(f"size(__toks) >= {n}"))
-        .select(id_col,
+        .select("doc_id",
                 F.posexplode(F.expr(gram)).alias("__p", "__h"))
     )
     dup = (
         grams.groupBy("__h")
-        .agg(F.countDistinct(id_col).alias("__nd"))
+        .agg(F.countDistinct("doc_id").alias("__nd"))
         .filter(F.col("__nd") >= min_docs)
         .select("__h")
     )
-    from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy("__p")
+    w = Window.partitionBy("doc_id").orderBy("__p")
     islands = (
         grams.join(dup, on="__h")
-        .select(id_col, "__p")
+        .select("doc_id", "__p")
         .withColumn("__grp", F.col("__p") - F.row_number().over(w))
     )
     return (
-        islands.groupBy(id_col, "__grp")
+        islands.groupBy("doc_id", "__grp")
         .agg(
             F.min("__p").cast("bigint").alias("span_start"),
             (F.max("__p") + F.lit(n - 1)).cast("bigint")
@@ -658,9 +643,7 @@ def duplicate_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
 
 
 def duplicate_spans_maximal(docs: DataFrame, n: int = 8,
-                            min_count: int = 2,
-                            text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
+                            min_count: int = 2) -> DataFrame:
     """FULL Lee et al. 2021 maximal-match span semantics: maximal
     contiguous token ranges covered by some duplicated substring of
     length >= ``n`` tokens, where "duplicated" counts TOTAL corpus
@@ -689,9 +672,9 @@ def duplicate_spans_maximal(docs: DataFrame, n: int = 8,
         f" i -> {HASH40_SQL.format(x=_GRAM_CONCAT.format(n=n))})"
     )
     grams = (
-        docs.withColumn("__toks", F.split(F.col(text_col), " "))
+        docs.withColumn("__toks", F.split(F.col("text"), " "))
         .filter(F.expr(f"size(__toks) >= {n}"))
-        .select(id_col,
+        .select("doc_id",
                 F.posexplode(F.expr(gram)).alias("__p", "__h"))
     )
     dup = (
@@ -700,10 +683,9 @@ def duplicate_spans_maximal(docs: DataFrame, n: int = 8,
         .filter(F.col("__nc") >= min_count)
         .select("__h")
     )
-    from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy("__p")
-    hits = grams.join(dup, on="__h").select(id_col, "__p")
+    w = Window.partitionBy("doc_id").orderBy("__p")
+    hits = grams.join(dup, on="__h").select("doc_id", "__p")
     marked = hits.withColumn(
         "__new",
         F.when(F.lag("__p").over(w).isNull()
@@ -714,7 +696,7 @@ def duplicate_spans_maximal(docs: DataFrame, n: int = 8,
         F.sum("__new").over(
             w.rowsBetween(Window.unboundedPreceding, 0)))
     return (
-        grp.groupBy(id_col, "__grp")
+        grp.groupBy("doc_id", "__grp")
         .agg(
             F.min("__p").cast("bigint").alias("span_start"),
             (F.max("__p") + F.lit(n - 1)).cast("bigint")
@@ -742,8 +724,7 @@ GOPHER_REP_THRESHOLDS = {
 }
 
 
-def repetition_signals(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """The FULL Gopher repetition battery (Rae et al. 2021 §A1.1 /
     Table A1) in CHARACTER fractions — the paper-faithful upgrade of
     :func:`gopher_quality`'s token-count ratios:
@@ -775,7 +756,6 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
     with a position range predicate (per-doc cardinality). Only
     (doc, n, position, hash) tuples shuffle, never gram strings, for
     the dup family."""
-    from pyspark.sql import Window
 
     # deliberately NO materialize barrier: the three consumers
     # (top-gram frames, dup-gram frames, token length table) each
@@ -783,10 +763,10 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
     # re-split plans at a stable 5.2 s vs 5.7-11.8 s with a
     # localCheckpoint of the token arrays — storing exploded arrays
     # costs more than recomputing a cheap split over a cached scan
-    toks = (docs.filter(F.col(text_col).isNotNull())
-            .selectExpr(id_col, f"split({text_col}, ' ') AS __l",
-                        f"length({text_col}) AS n_chars"))
-    base = toks.selectExpr(id_col, "n_chars",
+    toks = (docs.filter(F.col("text").isNotNull())
+            .selectExpr("doc_id", "split(text, ' ') AS __l",
+                        "length(text) AS n_chars"))
+    base = toks.selectExpr("doc_id", "n_chars",
                            "size(__l) AS n_tokens")
 
     def gram_frame(ns: list[int], keep_gram: bool):
@@ -795,16 +775,16 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
             g = (f"transform(sequence(1, size(__l) - {n - 1}),"
                  f" i -> array_join(slice(__l, i, {n}), ' '))")
             sel = (toks.filter(F.expr(f"size(__l) >= {n}"))
-                   .select(id_col, F.lit(n).alias("__n"),
+                   .select("doc_id", F.lit(n).alias("__n"),
                            F.posexplode(F.expr(g))
                            .alias("__p", "__g")))
             if keep_gram:
                 parts.append(sel.selectExpr(
-                    id_col, "__n", "__p", "__g",
+                    "doc_id", "__n", "__p", "__g",
                     "length(__g) AS __glen"))
             else:
                 parts.append(sel.selectExpr(
-                    id_col, "__n", "__p",
+                    "doc_id", "__n", "__p",
                     f"{HASH40_SQL.format(x='__g')} AS __h"))
         out = parts[0]
         for p in parts[1:]:
@@ -813,13 +793,13 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
 
     # top family (n = 2..4): count per gram string, per-doc argmax
     gt = gram_frame([2, 3, 4], keep_gram=True)
-    cnt = gt.groupBy(id_col, "__n", "__g", "__glen").agg(
+    cnt = gt.groupBy("doc_id", "__n", "__g", "__glen").agg(
         F.count(F.lit(1)).alias("__c"))
-    wtop = Window.partitionBy(id_col, "__n").orderBy(
+    wtop = Window.partitionBy("doc_id", "__n").orderBy(
         F.col("__c").desc(), F.col("__g").asc())
     top = (cnt.withColumn("__rk", F.row_number().over(wtop))
            .filter("__rk = 1")
-           .selectExpr(id_col, "__n",
+           .selectExpr("doc_id", "__n",
                        "CAST(__c * __glen AS BIGINT) AS __topchars"))
     # conditional-aggregation pivot: ONE hash agg attaches every n at
     # once. The per-n join loop this replaces ran 3 joins whose
@@ -827,11 +807,11 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
     # frame — same values (top has at most one row per (doc, n), so
     # MAX(CASE WHEN __n = n ...) is exactly that row's value, NULL
     # when absent, as the old left join produced)
-    top_w = base.select(id_col).join(
-        top.groupBy(id_col).agg(*[
+    top_w = base.select("doc_id").join(
+        top.groupBy("doc_id").agg(*[
             F.max(F.when(F.col("__n") == n, F.col("__topchars")))
             .alias(f"__top{n}") for n in (2, 3, 4)]),
-        on=id_col, how="left")
+        on="doc_id", how="left")
 
     # dup family (n = 5..10): duplicated-gram span union -> covered
     # characters via a position-range join against the token table
@@ -842,11 +822,11 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
     # grams (hits = every occurrence position of a gram seen >= 2
     # times in the doc; position order is irrelevant - the islands
     # window re-sorts by __p)
-    hits = (gd.groupBy(id_col, "__n", "__h")
+    hits = (gd.groupBy("doc_id", "__n", "__h")
             .agg(F.collect_list("__p").alias("__ps"))
             .filter("size(__ps) >= 2")
-            .select(id_col, "__n", F.explode("__ps").alias("__p")))
-    wisl = Window.partitionBy(id_col, "__n").orderBy("__p")
+            .select("doc_id", "__n", F.explode("__ps").alias("__p")))
+    wisl = Window.partitionBy("doc_id", "__n").orderBy("__p")
     marked = hits.withColumn(
         "__new",
         F.when(F.lag("__p").over(wisl).isNull()
@@ -855,34 +835,34 @@ def repetition_signals(docs: DataFrame, text_col: str = "text",
     spans = (marked.withColumn(
         "__grp", F.sum("__new").over(
             wisl.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy(id_col, "__n", "__grp")
+        .groupBy("doc_id", "__n", "__grp")
         .agg(F.min("__p").alias("__a"),
              (F.max("__p") + F.col("__n") - 1).alias("__b"))
         .drop("__grp"))
     tklen = toks.select(
-        id_col,
+        "doc_id",
         F.posexplode(F.expr("transform(__l, x -> length(x))"))
         .alias("__i", "__wlen"))
     # span chars = sum of covered token lengths + internal separators
-    cov = (spans.join(tklen, on=id_col)
+    cov = (spans.join(tklen, on="doc_id")
            .filter("__i >= __a AND __i <= __b")
-           .groupBy(id_col, "__n", "__a", "__b")
+           .groupBy("doc_id", "__n", "__a", "__b")
            .agg(F.expr("CAST(SUM(__wlen) + MAX(__b) - MAX(__a)"
                        " AS BIGINT)").alias("__spanchars"))
-           .groupBy(id_col, "__n")
+           .groupBy("doc_id", "__n")
            .agg(F.expr("CAST(SUM(__spanchars) AS BIGINT)")
                 .alias("__covchars")))
     # same pivot shape as top_w: 6 per-n left joins (each replaying
     # the islands-window/span lineage) collapse to ONE hash agg +
     # ONE left join; cov has one row per (doc, n), so values match
-    dup_w = base.select(id_col).join(
-        cov.groupBy(id_col).agg(*[
+    dup_w = base.select("doc_id").join(
+        cov.groupBy("doc_id").agg(*[
             F.max(F.when(F.col("__n") == n, F.col("__covchars")))
             .alias(f"__dup{n}") for n in range(5, 11)]),
-        on=id_col, how="left")
+        on="doc_id", how="left")
 
-    out = base.join(top_w, on=id_col).join(dup_w, on=id_col)
-    cols = [id_col, "n_chars", "n_tokens"]
+    out = base.join(top_w, on="doc_id").join(dup_w, on="doc_id")
+    cols = ["doc_id", "n_chars", "n_tokens"]
     gates = []
     # outer COALESCE: an EMPTY doc (n_chars = 0) has no repeated
     # content — fractions are 0 and the battery PASSES; without it
@@ -915,8 +895,7 @@ NORM_DUCK_SQL = ("trim(regexp_replace(regexp_replace(lower({x}),"
                  " '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))")
 
 
-def normalize_text(docs: DataFrame, text_col: str = "text",
-                   out_col: str = "norm_text") -> DataFrame:
+def normalize_text(docs: DataFrame, out_col: str = "norm_text") -> DataFrame:
     """C4-style text normalization: lowercase, non-[a-z0-9 ] to
     space, whitespace collapse, trim — the canonical form exact
     dedup and shingling run on when the raw corpus carries
@@ -931,4 +910,4 @@ def normalize_text(docs: DataFrame, text_col: str = "text",
     doubled spaces, empties).
     """
     return docs.withColumn(out_col,
-                           F.expr(NORM_SPARK_SQL.format(x=text_col)))
+                           F.expr(NORM_SPARK_SQL.format(x="text")))

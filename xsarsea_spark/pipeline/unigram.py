@@ -36,8 +36,12 @@ the engine brief mandates (tokenization), next to BPE.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from xsarsea_spark.engine import materialize
 
 __all__ = ["word_freqs", "seed_vocab", "piece_costs",
            "viterbi_segment", "em_round", "train_unigram",
@@ -49,13 +53,12 @@ ULM_ROUNDS = 2    # EM rounds
 ULM_MAXW = 12     # word-length contract (oracle DP chain depth)
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text",
-               max_len: int = ULM_MAXW) -> DataFrame:
+def word_freqs(docs: DataFrame, max_len: int = ULM_MAXW) -> DataFrame:
     """(w, f): corpus word frequencies over words of length <=
     ``max_len`` (the DP-depth contract, applied identically in the
     oracle) — one hash aggregation, output is vocabulary-scale."""
-    return (docs.filter(F.col(text_col).isNotNull())
-            .selectExpr(f"explode(split({text_col}, ' ')) AS w")
+    return (docs.filter(F.col("text").isNotNull())
+            .selectExpr("explode(split(text, ' ')) AS w")
             .filter(F.length("w").between(1, max_len))
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("f")))
@@ -107,7 +110,6 @@ def viterbi_segment(wf: DataFrame,
     (total int-cost, space-joined piece path); the argmin tuple
     compare (int, ASCII str) is byte-identical to the oracle's
     struct order. Arrow-batched, per-row independent, no shuffle."""
-    from pyspark.sql import types as T
 
     schema = T.StructType([
         T.StructField("w", T.StringType()),
@@ -119,7 +121,6 @@ def viterbi_segment(wf: DataFrame,
     ik = dict(costs)
 
     def gen(batches):
-        import pandas as pd
         for pdf in batches:
             out = []
             for w, f in zip(pdf["w"], pdf["f"]):
@@ -172,7 +173,6 @@ def train_unigram(docs: DataFrame, rounds: int = ULM_ROUNDS,
     """Full train: returns (wf, seed, final vocab counts, final
     segmentation DataFrame) after ``rounds`` EM rounds. Each stage
     is materialized by the caller as needed."""
-    from xsarsea_spark.engine import materialize
 
     wf = materialize(word_freqs(docs, max_len=max_len))
     vocab = materialize(seed_vocab(wf, max_piece=max_piece, k=k))

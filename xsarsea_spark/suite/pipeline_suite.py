@@ -1340,8 +1340,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.sampling import stratified_sample
 
     docs = load(spark, sf_dir, "documents")
-    return stratified_sample(docs, n_per_stratum=_SAMPLE_N,
-                             strata_cols=("lang",)).select(
+    return stratified_sample(docs, n_per_stratum=_SAMPLE_N).select(
         "doc_id", "lang", "source")
 
 
@@ -5284,7 +5283,7 @@ def q_doc_classifier_perlang(spark: SparkSession,
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs, extra=("lang",))
     wmap = train_logreg_grouped(
-        xy.filter(_CLF_TRAIN_WHERE), "lang",
+        xy.filter(_CLF_TRAIN_WHERE),
         rounds=_LOGREG_ROUNDS, lr=_LOGREG_LR,
         qk=_LOGREG_QK, scale=_LOGREG_SCALE)
     groups = sorted(wmap)
@@ -8158,10 +8157,13 @@ def q_doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(SUM(CASE WHEN removed THEN 0"
                    " ELSE size(split(line, ' ')) END) AS BIGINT)")
             .alias("retained_tokens"),
-            F.expr("md5(array_join(transform(array_sort("
+            # NULL when every line is removed, as the oracle's
+            # FILTERed list() over no rows
+            F.expr("CASE WHEN bool_or(NOT removed) THEN"
+                   " md5(array_join(transform(array_sort("
                    "collect_list(CASE WHEN NOT removed THEN"
                    " named_struct('j', line_no, 's', line) END)),"
-                   " e -> e.s), char(30)))").alias("retained_digest"),
+                   " e -> e.s), char(30))) END").alias("retained_digest"),
         )
     )
 
@@ -9882,7 +9884,7 @@ def q_embedding_hard_negatives(spark: SparkSession,
     from xsarsea_spark.pipeline.similarity import with_norm
 
     emb = load(spark, sf_dir, "embeddings")
-    e = with_norm(emb, "embedding")
+    e = with_norm(emb)
     q = (e.filter(F.col("vec_id") < _KNN_NQ)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("label").alias("__ql"),
@@ -11040,14 +11042,19 @@ def q_doc_good_turing(spark: SparkSession,
 # (lang, trigram) hash agg; the c*ln(c) terms are QTRUNC'd onto the
 # 1e-9 grid before the exact DECIMAL sum (c*ln(c) stays far inside
 # the 2^53 grid bound at any graded scale), and ln(N) sits behind
-# its own barrier. Windowless.
+# its own barrier. The entropy itself is QTRUNC'd onto the 1e-9 grid:
+# the DECIMAL(38,12) -> DOUBLE cast of the sum is not correctly
+# rounded in DuckDB, so the unquantized value can differ by an ulp.
+# Windowless.
 # ----------------------------------------------------------------------
 
+_CTE_ENTROPY = QTRUNC(
+    QTRUNC("ln(CAST(SUM(c) AS DOUBLE))", 12) + " - "
+    + DSUM(QTRUNC("CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))", 9), 12)
+    + " / CAST(SUM(c) AS DOUBLE)", 9)
 
-def _cte_oracle() -> str:
-    term = QTRUNC("CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))", 9)
-    lnn = QTRUNC("ln(CAST(SUM(c) AS DOUBLE))", 12)
-    return f"""
+
+_CTE_ORACLE = f"""
 WITH tri AS (
   SELECT lang, substr(text, i, 3) AS tg FROM (
     SELECT lang, text FROM documents
@@ -11059,15 +11066,14 @@ tc AS (SELECT lang, tg, CAST(COUNT(*) AS BIGINT) AS c
 SELECT lang,
   CAST(SUM(c) AS BIGINT) AS n_trigrams,
   CAST(COUNT(*) AS BIGINT) AS distinct_trigrams,
-  {lnn} - {DSUM(term, 12)} / CAST(SUM(c) AS DOUBLE)
-    AS entropy_nats,
+  {_CTE_ENTROPY} AS entropy_nats,
   CAST(MAX(c) AS DOUBLE) / CAST(SUM(c) AS DOUBLE) AS top_share
 FROM tc GROUP BY lang"""
 
 
 @spec(
     "doc_char_trigram_entropy",
-    _cte_oracle(),
+    _CTE_ORACLE,
     description="Per-language character-trigram Shannon entropy "
                 "(the n-gram language-ID signal as a corpus "
                 "statistic): one all-JVM substring-explode scan, "
@@ -11077,8 +11083,6 @@ FROM tc GROUP BY lang"""
 )
 def q_doc_char_trigram_entropy(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    term = QTRUNC("CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))", 9)
-    lnn = QTRUNC("ln(CAST(SUM(c) AS DOUBLE))", 12)
     docs = load(spark, sf_dir, "documents")
     tri = (docs.filter("text IS NOT NULL AND lang IS NOT NULL"
                        " AND length(text) >= 3")
@@ -11091,8 +11095,7 @@ def q_doc_char_trigram_entropy(spark: SparkSession,
     return (tc.groupBy("lang").agg(
         F.expr("CAST(SUM(c) AS BIGINT)").alias("n_trigrams"),
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("distinct_trigrams"),
-        F.expr(f"{lnn} - {DSUM(term, 12)}"
-               " / CAST(SUM(c) AS DOUBLE)").alias("entropy_nats"),
+        F.expr(_CTE_ENTROPY).alias("entropy_nats"),
         F.expr("CAST(MAX(c) AS DOUBLE) / CAST(SUM(c) AS DOUBLE)")
         .alias("top_share")))
 

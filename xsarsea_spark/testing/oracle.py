@@ -16,7 +16,8 @@ import pandas as pd
 
 from xsarsea_spark.sources.tables import TABLES
 
-__all__ = ["compare", "oracle_connection", "CompareResult"]
+__all__ = ["compare", "compare_frames", "oracle_connection",
+           "CompareResult"]
 
 
 def oracle_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":
@@ -67,7 +68,12 @@ def compare(spark_df, oracle_sql: str, sf_dir: str, name: str = "query",
     finally:
         if own_con:
             con.close()
+    return compare_frames(got, want, name)
 
+
+def compare_frames(got: pd.DataFrame, want: pd.DataFrame,
+                   name: str = "query") -> CompareResult:
+    """The strict check of :func:`compare` on two collected frames."""
     if sorted(got.columns) != sorted(want.columns):
         return CompareResult(
             name, False,
