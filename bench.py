@@ -109,6 +109,7 @@ def warm_up(spark, sf_dir: str) -> None:
     table's first physical scan."""
     from pyspark.sql.functions import col, pandas_udf
 
+    from xsarsea_spark.operators.lut import gmf_to_lut
     from xsarsea_spark.sources.tables import TABLES, load
     from xsarsea_spark.suite import REGISTRY
 
@@ -119,6 +120,11 @@ def warm_up(spark, sf_dir: str) -> None:
     # that uses it absorbs ~2-4 s of one-time codegen/JIT that isn't
     # its plan's cost (measured 4.75 s first-in-loop vs 0.8 s warm)
     run_query(spark, sf_dir, "lut_regrid")
+    # the LUT build science_throughput times: cold, its first call
+    # measured 1.99 s against 0.97 s warm, and that one call alone made
+    # the lead/tail tp_spread canary read ~2 on a quiet host
+    lut, _ = gmf_to_lut(spark, "gmf_cmod5n", res="low")
+    lut.write.format("noop").mode("overwrite").save()
 
     @pandas_udf("long")
     def _warm(s):

@@ -19,7 +19,7 @@ def test_packed_words_match_numpy_bitmap(spark):
 
     emb = _emb(spark).filter("vec_id < 50")
     got = {r["vec_id"]: (r["w0"], r["w1"])
-           for r in binary_quantize(emb, dim=64).collect()}
+           for r in binary_quantize(emb).collect()}
     for r in emb.select("vec_id", "embedding").collect():
         v = np.asarray(r["embedding"], dtype=np.float32)
         bits = (v > 0).astype(np.uint64)
@@ -32,7 +32,7 @@ def test_hamming_topk_matches_numpy(spark):
     from xsarsea_spark.pipeline.similarity import hamming_topk
 
     emb = _emb(spark)
-    got = hamming_topk(emb.filter("vec_id < 10"), emb, k=5).collect()
+    got = hamming_topk(emb.filter("vec_id < 10"), emb).collect()
     by_q: dict[int, list] = {}
     for r in sorted(got, key=lambda r: (r["query_id"], r["rank"])):
         by_q.setdefault(r["query_id"], []).append(

@@ -38,7 +38,7 @@ def test_train_learns_the_label_gate(spark):
 
     docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
     xy = doc_features(docs)
-    w = train_logreg(xy, rounds=8, lr=1.0)
+    w = train_logreg(xy, rounds=8)
     acc_row = (
         xy.select("y", F.expr(z_expr(w)).alias("z"))
         .agg(F.avg(F.expr(

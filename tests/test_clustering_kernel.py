@@ -43,7 +43,7 @@ def test_arrow_kernel_bitequal_sql_fold(spark):
            .select("vec_id", F.col("__am.c").alias("cluster"),
                    F.col("__am.d").alias("dist2"))
            .orderBy("vec_id").collect())
-    arrow = (_assign_arrow(base, cents, "vec_id")
+    arrow = (_assign_arrow(base, cents)
              .select("vec_id", "cluster", "dist2")
              .orderBy("vec_id").collect())
     assert [tuple(r) for r in arrow] == [tuple(r) for r in sql]
@@ -66,7 +66,7 @@ def test_arrow_kernel_bitequal_on_exact_ties(spark):
     sql = (base.withColumn("__am", F.expr(_argmin_expr("__v", cents)))
            .select("vec_id", F.col("__am.c").alias("cluster"))
            .orderBy("vec_id").collect())
-    arrow = (_assign_arrow(base, cents, "vec_id")
+    arrow = (_assign_arrow(base, cents)
              .select("vec_id", "cluster").orderBy("vec_id").collect())
     assert [tuple(r) for r in arrow] == [tuple(r) for r in sql]
     assert all(r.cluster != 5 for r in sql)  # tie broke to 2, never 5
@@ -84,10 +84,10 @@ def test_full_rounds_match_sql_fold_twin(spark, k, monkeypatch):
     got = (cl.kmeans_embeddings(df, k=k, rounds=3)
            .orderBy("vec_id").collect())
 
-    def sql_assign(base, centroids, id_col):
+    def sql_assign(base, centroids):
         return (base.withColumn(
             "__am", F.expr(cl._argmin_expr("__v", centroids)))
-            .select(id_col, "__v",
+            .select("vec_id", "__v",
                     F.col("__am.c").alias("cluster"),
                     F.col("__am.d").alias("dist2")))
 

@@ -143,7 +143,7 @@ def test_rain_mask_tile_bit_exact(spark):
     })
     px = spark.createDataFrame(pdf)
     out = (
-        filtering_parameters(px, NL, NS, tile=56, halo=48)
+        filtering_parameters(px, NL, NS, tile=56)
         .toPandas().sort_values(["line4", "sample4"]).reset_index(drop=True)
     )
     ref = filtering_parameters_numpy(img)

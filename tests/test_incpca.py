@@ -33,10 +33,10 @@ def test_eigensolve_from_merged_state_matches_oneshot(spark):
                                                pca_from_moments)
 
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
-    one = pca_from_moments(moment_state(emb, d=64), d=64, rounds=12)
+    one = pca_from_moments(moment_state(emb, d=64))
     parts = [moment_state(emb.filter(f"vec_id % 2 = {b}"), d=64)
              for b in range(2)]
-    inc = pca_from_moments(moment_merge(parts), d=64, rounds=12)
+    inc = pca_from_moments(moment_merge(parts))
     got = sorted(tuple(r) for r in inc.collect())
     want = sorted(tuple(r) for r in one.collect())
     assert got == want
@@ -48,7 +48,7 @@ def test_empty_corpus_yields_no_rows(spark):
 
     emb = spark.read.parquet(
         f"{SF_DIR_SMALL}/embeddings.parquet").filter("vec_id < 0")
-    out = pca_from_moments(moment_state(emb, d=64), d=64, rounds=12)
+    out = pca_from_moments(moment_state(emb, d=64))
     assert out.count() == 0
 
 

@@ -121,9 +121,6 @@ def test_happy_path_uses_bloom_and_stays_exact(spark, tmp_path):
     assert _digest_counts(spark, table_dir) == before
 
 
-_ND_KW = dict(n=3, k=16, threshold=0.2)     # suite _MH_N/_MH_K/_MH_T
-
-
 def _nd_paths(tmp_path):
     base = str(tmp_path)
     return (os.path.join(base, "seen"), os.path.join(base, "bands"),
@@ -141,8 +138,7 @@ def _oneshot_accept(spark):
     from xsarsea_spark.pipeline.dedup import minhash_lsh_dedup
 
     docs = _docs(spark)
-    pairs = minhash_lsh_dedup(docs, **{"n": 3, "k": 16,
-                                       "threshold": 0.2})
+    pairs = minhash_lsh_dedup(docs)
     drops = {r["id_b"] for r in pairs.select("id_b").collect()}
     return {r["doc_id"] for r in docs.select("doc_id").collect()} - drops
 
@@ -159,17 +155,14 @@ def test_neardup_ingest_batched_equals_oneshot(spark, tmp_path):
     b1 = docs.filter(f"doc_id < {cut}")
     b2 = docs.filter(f"doc_id >= {cut}")
 
-    ingest_neardup_batch(spark, b1, seen_dir, bands_dir, marker,
-                         **_ND_KW)
-    ingest_neardup_batch(spark, b2, seen_dir, bands_dir, marker,
-                         **_ND_KW)
+    ingest_neardup_batch(spark, b1, seen_dir, bands_dir, marker)
+    ingest_neardup_batch(spark, b2, seen_dir, bands_dir, marker)
     got = _accepted(spark, seen_dir)
     assert got == _oneshot_accept(spark)
 
     # replay of batch 2: id anti-join backstop makes it a no-op
     before = spark.read.parquet(seen_dir).count()
-    ingest_neardup_batch(spark, b2, seen_dir, bands_dir, marker,
-                         **_ND_KW)
+    ingest_neardup_batch(spark, b2, seen_dir, bands_dir, marker)
     assert spark.read.parquet(seen_dir).count() == before
     assert _accepted(spark, seen_dir) == got
 
@@ -187,10 +180,10 @@ def test_neardup_ingest_self_heals_lost_bands(spark, tmp_path):
     docs = _docs(spark)
     cut = int(docs.agg({"doc_id": "max"}).collect()[0][0] * 0.6)
     ingest_neardup_batch(spark, docs.filter(f"doc_id < {cut}"),
-                         seen_dir, bands_dir, marker, **_ND_KW)
+                         seen_dir, bands_dir, marker)
     # simulate the crash window: band table and marker gone, seen kept
     shutil.rmtree(bands_dir)
     os.remove(marker)
     ingest_neardup_batch(spark, docs.filter(f"doc_id >= {cut}"),
-                         seen_dir, bands_dir, marker, **_ND_KW)
+                         seen_dir, bands_dir, marker)
     assert _accepted(spark, seen_dir) == _oneshot_accept(spark)

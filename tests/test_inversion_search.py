@@ -66,7 +66,7 @@ def luts():
     # that coarse pruning actually engages
     return prepare_luts(
         "gmf_cmod5n", "gmf_rs2_v2",
-        inc_step=1.0, wspd_step=0.2, phi_step=2.5, cr_wspd_step=0.1,
+        wspd_step=0.2, phi_step=2.5, cr_wspd_step=0.1,
     )
 
 
@@ -172,7 +172,7 @@ def test_spark_end_to_end_flag(spark, luts):
 def test_prepare_luts_is_memoized_and_read_only(luts):
     again = prepare_luts(
         "gmf_cmod5n", "gmf_rs2_v2",
-        inc_step=1.0, wspd_step=0.2, phi_step=2.5, cr_wspd_step=0.1,
+        wspd_step=0.2, phi_step=2.5, cr_wspd_step=0.1,
     )
     assert again is luts
     for part in ("co", "cr"):
@@ -218,7 +218,7 @@ def test_lut_broadcast_is_fresh_for_a_new_context(monkeypatch):
         def broadcast(self, value):
             return object()
 
-    key = ("gmf_cmod5n", None, 1.0, 0.2, 2.5, 0.1)
+    key = ("gmf_cmod5n", None, 0.2, 2.5, 0.1)
     old, new = Context(), Context()
     first = inversion._lut_broadcast(old, key)
     assert inversion._lut_broadcast(old, key) is first

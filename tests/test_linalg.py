@@ -42,7 +42,7 @@ def engine_result(spark):
     from xsarsea_spark.pipeline.linalg import pca_power
 
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
-    rows = pca_power(emb, d=D, rounds=ROUNDS).collect()
+    rows = pca_power(emb).collect()
     rows.sort(key=lambda r: r["dim"])
     u = np.array([r["loading"] for r in rows])
     return u, rows[0]["eigval"]
@@ -89,7 +89,7 @@ def test_projection_matches_replica(spark, corpus, engine_result):
 
     u, _ = engine_result
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
-    rows = pca_project(emb, d=D, rounds=ROUNDS).collect()
+    rows = pca_project(emb).collect()
     scores = {r["vec_id"]: r["pc1_score"] for r in rows}
     mu = np.round(corpus * 1e9) / 1e9
     mu = mu.sum(axis=0) / len(corpus)
@@ -110,7 +110,7 @@ def test_topk_matches_replica_and_is_orthogonal(spark, corpus):
     from xsarsea_spark.pipeline.linalg import pca_topk
 
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
-    rows = pca_topk(emb, d=D, rounds=ROUNDS, n_comp=3).collect()
+    rows = pca_topk(emb).collect()
     got = {}
     for c in range(3):
         cr = sorted((r for r in rows if r["component"] == c),
@@ -144,7 +144,7 @@ def test_whiten_unit_variance(spark):
     from xsarsea_spark.pipeline.linalg import pca_whiten
 
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
-    rows = pca_whiten(emb, d=D, rounds=ROUNDS, n_comp=3).collect()
+    rows = pca_whiten(emb).collect()
     by_comp: dict[int, list[float]] = {}
     for r in rows:
         by_comp.setdefault(r["component"], []).append(r["whitened"])
@@ -169,7 +169,7 @@ def test_degenerate_corpora(spark):
 
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
     # empty corpus -> zero rows, no ANSI crash
-    assert pca_power(emb.filter("vec_id < 0"), d=D).count() == 0
+    assert pca_power(emb.filter("vec_id < 0")).count() == 0
     # wrong width / NaN rows are dropped, result still well-formed
     broken = emb.withColumn(
         "embedding",
@@ -177,6 +177,6 @@ def test_degenerate_corpora(spark):
                "WHEN vec_id % 3 = 1 THEN"
                " transform(embedding, x -> CAST('NaN' AS FLOAT))"
                " ELSE embedding END"))
-    out = pca_power(broken, d=D).collect()
+    out = pca_power(broken).collect()
     assert len(out) == D
     assert all(np.isfinite(r["loading"]) for r in out)

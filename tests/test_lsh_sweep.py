@@ -43,7 +43,7 @@ def test_phash_banding_recall_is_pigeonhole_exact(spark):
         [(i, h) for i, h in enumerate(hashes)],
         "doc_id long, phash long")
     got = {r["doc_id"]: r["n_neardups"]
-           for r in phash_neardup(ph, max_hamming=3).collect()}
+           for r in phash_neardup(ph).collect()}
     want = {i: sum(1 for j, o in enumerate(hashes)
                    if j != i and bin(h ^ o).count("1") <= 3)
             for i, h in enumerate(hashes)}

@@ -84,9 +84,9 @@ def test_interp_two_paths_bit_equal(spark):
         a = (interp_join(pts, lut, axes, value_col="v", out_col="o",
                          bounds=bounds)
              .select("pid", "o").toPandas().sort_values("pid"))
-        b = (interp_kernel(pts, grid, axes, out_col="o", bounds=bounds)
-             .select("pid", "o").toPandas().sort_values("pid"))
-        av, bv = a["o"].to_numpy(), b["o"].to_numpy()
+        b = (interp_kernel(pts, grid, axes, bounds=bounds)
+             .select("pid", "value_interp").toPandas().sort_values("pid"))
+        av, bv = a["o"].to_numpy(), b["value_interp"].to_numpy()
         both_nan = np.isnan(av) & np.isnan(bv)
         assert np.all((av == bv) | both_nan), bounds
 
@@ -157,11 +157,10 @@ def test_ivf_recall(spark):
 
     emb = load(spark, "/root/testdata/sf0.01", "embeddings")
     queries = emb.filter("vec_id < 10")
-    truth = cosine_topk(queries, emb, k=5).toPandas()
-    centroids = train_ivf(emb, n_centroids=8, iters=3)
+    truth = cosine_topk(queries, emb).toPandas()
+    centroids = train_ivf(emb, n_centroids=8)
     indexed = assign_cells(emb, centroids)
-    got = ivf_search(queries, indexed, centroids, k=5,
-                     n_probe=4).toPandas()
+    got = ivf_search(queries, indexed, centroids).toPandas()
     t = {(r.query_id, r.neighbor_id) for r in truth.itertuples()}
     g = {(r.query_id, r.neighbor_id) for r in got.itertuples()}
     recall = len(t & g) / len(t)
@@ -196,9 +195,8 @@ def test_lsh_multiprobe_recall(spark):
         " AS embedding",
     )
     nq = queries.count()
-    plain = lsh_ann(queries, emb, k=1, n_planes=8, dim=64).toPandas()
-    multi = lsh_ann_multiprobe(queries, emb, k=1, n_planes=8,
-                               n_probe=4, dim=64).toPandas()
+    plain = lsh_ann(queries, emb, k=1, n_planes=8).toPandas()
+    multi = lsh_ann_multiprobe(queries, emb, k=1).toPandas()
 
     def hits(df):
         return sum(
@@ -408,7 +406,7 @@ def test_bloom_no_false_negatives(spark):
     probe = spark.range(0, 500).selectExpr("id AS k")
     bloom = bloom_build(keys, "CAST(k AS STRING)", m_bits=256, k=3)
     passed = {r.k for r in bloom_filter(
-        probe, bloom, "CAST(k AS STRING)", m_bits=256, k=3).collect()}
+        probe, bloom, "CAST(k AS STRING)", m_bits=256).collect()}
     members = {i * 7 for i in range(40) if i * 7 < 500}
     assert members <= passed           # no false negatives
     assert len(passed) < 500           # filter actually filters

@@ -47,6 +47,9 @@ DSIG_WSPD_NAMES = {
 DSIG_NAMES = ("gmf_s1_v2", "gmf_rs2_v2", "sarwing_lut_cmodms1ahw",
               "nc_lut_cmodms1ahw")
 
+# wind speed (m/s) of the logistic high-wind drop-off
+_UMAX = 30.0
+
 # sigmoid-in-incidence exponent fit for the S1 v2 weight
 _S1V2_SIG = (1.57952257, 25.61843791, 1.46852088, 1.4058646)
 
@@ -66,7 +69,7 @@ def get_dsig_expr(name: str, inc, sigma0_cr, nesz_cr) -> Expr:
     raise ValueError(f"unknown dsig name {name!r}; compute your own dsig_cr")
 
 
-def get_dsig_wspd_expr(name: str, u_crosspol, snr_cr, umax: float = 30.0) -> Expr:
+def get_dsig_wspd_expr(name: str, u_crosspol, snr_cr) -> Expr:
     """Logistic alpha-blend weight in [0, 1] for crosspol wind speed."""
     if name not in DSIG_WSPD_NAMES:
         raise ValueError(f"unknown dsig_wspd name {name!r}")
@@ -74,7 +77,7 @@ def get_dsig_wspd_expr(name: str, u_crosspol, snr_cr, umax: float = 30.0) -> Exp
     u = _v(u_crosspol)
     c0 = lit(c0_base) - lit(gamma) * _v(snr_cr)
     alpha_core = lit(1.0) / (lit(1.0) + exp(-lit(b) * (u - c0)))
-    drop = lit(1.0) / (lit(1.0) + exp((u - lit(umax)) * lit(k)))
+    drop = lit(1.0) / (lit(1.0) + exp((u - lit(_UMAX)) * lit(k)))
     return least(greatest(alpha_core * drop, lit(0.0)), lit(1.0))
 
 
@@ -83,8 +86,7 @@ def get_dsig_sql(name: str, inc="incidence", sigma0_cr="sigma0_cr",
     return get_dsig_expr(name, inc, sigma0_cr, nesz_cr).sql()
 
 
-def get_dsig_wspd_sql(name: str, u_crosspol="u_crosspol",
-                      snr_cr="snr_cr") -> str:
+def get_dsig_wspd_sql(name: str, u_crosspol: str, snr_cr: str) -> str:
     return get_dsig_wspd_expr(name, u_crosspol, snr_cr).sql()
 
 

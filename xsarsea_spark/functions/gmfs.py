@@ -327,14 +327,13 @@ class Gmf:
 def _mk_registry() -> dict:
     reg = {}
 
-    def add(name, pol, needs_phi, wspd_range, builder, inc_range=(16.0, 66.0)):
+    def add(name, pol, needs_phi, wspd_range, builder):
         reg[name] = Gmf(
             name=name,
             pol=pol,
             units="linear",
             needs_phi=needs_phi,
             wspd_range=wspd_range,
-            inc_range=inc_range,
             phi_range=(0.0, 180.0) if needs_phi else None,
             builder=builder,
         )

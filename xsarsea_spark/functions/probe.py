@@ -48,20 +48,16 @@ def probe_gmf(name: str) -> dict:
         vals = gmf_numpy(name, inc, wspd)
         out["needs_phi"] = False
         out["phi_period"] = None
-    if g.units == "linear":
-        out["units_ok"] = bool(np.all(vals > 0) and np.all(vals < 10))
-    else:                      # dB: negative, bounded
-        out["units_ok"] = bool(np.all(vals < 0) and np.all(vals > -100))
+    out["units_ok"] = bool(np.all(vals > 0) and np.all(vals < 10))
     return out
 
 
 def register_gmf(name: str, pol: str, wspd_range=(0.2, 50.0),
-                 inc_range=(16.0, 66.0), units: str = "linear",
                  needs_phi: bool | None = None):
-    """Decorator registering a new symbolic GMF builder into
-    GMF_REGISTRY with a registration-time probe (the ``GmfModel.
-    register`` analog). The builder takes (inc, wspd[, phi]) Exprs and
-    returns an Expr."""
+    """Decorator registering a new symbolic GMF builder of linear
+    sigma0 over incidence 16-66 deg into GMF_REGISTRY with a
+    registration-time probe (the ``GmfModel.register`` analog). The
+    builder takes (inc, wspd[, phi]) Exprs and returns an Expr."""
 
     def deco(builder):
         import inspect
@@ -70,8 +66,8 @@ def register_gmf(name: str, pol: str, wspd_range=(0.2, 50.0),
         if nphi is None:
             nphi = len(inspect.signature(builder).parameters) >= 3
         GMF_REGISTRY[name] = Gmf(
-            name=name, pol=pol, units=units, needs_phi=nphi,
-            wspd_range=tuple(wspd_range), inc_range=tuple(inc_range),
+            name=name, pol=pol, units="linear", needs_phi=nphi,
+            wspd_range=tuple(wspd_range),
             phi_range=(0.0, 180.0) if nphi else None,
             builder=builder,
         )

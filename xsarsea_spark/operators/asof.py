@@ -30,10 +30,10 @@ def asof_join(
     on: str,
     by: list[str] | None = None,
     right_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Backward as-of join: for each left row, attach the most recent
-    right row with ``right.on <= left.on`` (per ``by`` keys).
+    right row with ``right.on <= left.on`` (per ``by`` keys), each
+    right column ``c`` as ``c_asof``.
 
     Implemented as union + window (one shuffle on (by, on)): right
     rows are tagged, both sides are interleaved in event order with
@@ -66,5 +66,5 @@ def asof_join(
             f"__r_{c}", F.last(f"__r_{c}", ignorenulls=True).over(w))
     out = allrows.filter(F.col("__side") == 1).drop("__side")
     for c in right_cols:
-        out = out.withColumnRenamed(f"__r_{c}", f"{c}{suffix}")
+        out = out.withColumnRenamed(f"__r_{c}", f"{c}_asof")
     return out

@@ -27,24 +27,22 @@ from xsarsea_spark.expr import double_lit
 from xsarsea_spark.functions.gmfs import GMF_REGISTRY, gmf_sql
 from xsarsea_spark.operators.exactsum import DAVG, QTRUNC
 
-__all__ = ["sigma0_detrend", "detrend_profile"]
+__all__ = ["sigma0_detrend"]
 
 
-def detrend_profile(
+def sigma0_detrend(
     px: DataFrame,
     model: str = "gmf_cmod5n",
     wind_speed_gmf: float = 10.0,
     wind_dir_gmf: float = 45.0,
     first_line: int = 0,
-    inc_col: str = "incidence",
-    line_col: str = "line",
-    sample_col: str = "sample",
     quantize: int | None = None,
 ) -> DataFrame:
-    """Per-sample GMF trend profile from the first image line.
+    """Detrended (roughness) sigma0: ``sigma0 / broadcast(profile_ratio)``.
 
-    Returns columns (sample, gmf_ratio): modeled sigma0 divided by its
-    scene mean, ready to broadcast-join onto the full pixel table.
+    The profile (sample, gmf_ratio) is the GMF sigma0 of line
+    ``first_line`` at (``wind_speed_gmf``, ``wind_dir_gmf``) divided by
+    its scene mean.
 
     ``quantize``: reproducible mode — truncate the GMF (libm) output to
     a 1e-k decimal grid so the result is bit-identical across engines
@@ -54,24 +52,24 @@ def detrend_profile(
         raise KeyError(f"unknown model {model!r}")
     wspd_lit = double_lit(wind_speed_gmf)
     phi_lit = double_lit(wind_dir_gmf)
-    sig_sql = gmf_sql(model, inc=inc_col, wspd=wspd_lit, phi=phi_lit)
+    sig_sql = gmf_sql(model, inc="incidence", wspd=wspd_lit, phi=phi_lit)
 
     # project the (large) GMF expression ONCE into a column, then
     # quantize/aggregate the column reference — keeps whole-stage
     # codegen small (QTRUNC + DAVG would otherwise inline the full
     # Fourier expansion 4x)
     first = (
-        px.filter(F.col(line_col) == first_line)
-        .select(sample_col, F.expr(sig_sql).alias("__gmf"))
+        px.filter(F.col("line") == first_line)
+        .select("sample", F.expr(sig_sql).alias("__gmf"))
     )
     g = QTRUNC("__gmf", quantize) if quantize is not None else "__gmf"
-    profile = first.groupBy(sample_col).agg(
+    profile = first.groupBy("sample").agg(
         F.expr(DAVG(g, scale=18)).alias("sigma0_gmf_sample")
     )
     # window-over-() on the tiny profile: computes the exact scalar mean
     # without a driver round-trip and keeps the plan fully lazy.
-    return profile.select(
-        sample_col,
+    profile = profile.select(
+        "sample",
         (
             F.col("sigma0_gmf_sample")
             / F.expr(
@@ -80,35 +78,8 @@ def detrend_profile(
             )
         ).alias("gmf_ratio"),
     )
-
-
-def sigma0_detrend(
-    px: DataFrame,
-    model: str = "gmf_cmod5n",
-    wind_speed_gmf: float = 10.0,
-    wind_dir_gmf: float = 45.0,
-    first_line: int = 0,
-    sigma0_col: str = "sigma0",
-    inc_col: str = "incidence",
-    line_col: str = "line",
-    sample_col: str = "sample",
-    out_col: str = "sigma0_detrend",
-    quantize: int | None = None,
-) -> DataFrame:
-    """Detrended (roughness) sigma0: ``sigma0 / broadcast(profile_ratio)``."""
-    profile = detrend_profile(
-        px,
-        model=model,
-        wind_speed_gmf=wind_speed_gmf,
-        wind_dir_gmf=wind_dir_gmf,
-        first_line=first_line,
-        inc_col=inc_col,
-        line_col=line_col,
-        sample_col=sample_col,
-        quantize=quantize,
-    )
     return (
-        px.join(F.broadcast(profile), on=sample_col, how="left")
-        .withColumn(out_col, F.col(sigma0_col) / F.col("gmf_ratio"))
+        px.join(F.broadcast(profile), on="sample", how="left")
+        .withColumn("sigma0_detrend", F.col("sigma0") / F.col("gmf_ratio"))
         .drop("gmf_ratio")
     )

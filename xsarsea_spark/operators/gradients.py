@@ -64,6 +64,10 @@ __all__ = [
 # Kernels (all dyadic -> exact float weights)
 # ----------------------------------------------------------------------
 
+# Direction bins over [-pi/2, pi/2) of the histogram and its smoothing.
+N_ANGLES = 72
+_WIN_KEYS = ("win_line", "win_sample")
+
 B2 = np.array([[1, 2, 1], [2, 4, 2], [1, 2, 1]], dtype=np.float64) / 16.0
 
 
@@ -185,15 +189,14 @@ _LG_SCHEMA = T.StructType([
 ])
 
 
-def _with_halo_tiles(px: DataFrame, line_col: str, sample_col: str,
-                     tile: int, halo: int) -> DataFrame:
+def _with_halo_tiles(px: DataFrame, tile: int, halo: int) -> DataFrame:
     """Replicate each pixel into every tile whose halo region covers it
     (at most 4 copies for halo < tile) — the shuffle that implements
     halo exchange. One projection per dimension: the candidate tiles
     (own, previous if in the low halo, next if in the high halo) are
     filtered by a SQL lambda and exploded."""
     out = px
-    for dim, col in (("l", line_col), ("s", sample_col)):
+    for dim, col in (("l", "line"), ("s", "sample")):
         t0 = f"CAST(FLOOR(`{col}` / {tile}) AS BIGINT)"
         m = f"(`{col}` % {tile})"
         opts = (f"array({t0}, CASE WHEN {m} < {halo} THEN {t0} - 1 END, "
@@ -205,9 +208,8 @@ def _with_halo_tiles(px: DataFrame, line_col: str, sample_col: str,
 
 
 def _tile_apply(px: DataFrame, n_lines: int, n_samples: int,
-                value_col: str, line_col: str, sample_col: str,
-                tile: int, halo: int, stencil, schema: T.StructType
-                ) -> DataFrame:
+                value_col: str, tile: int, halo: int, stencil,
+                schema: T.StructType) -> DataFrame:
     """Run the whole-image NumPy ``stencil`` (array -> dict of /4-grid
     arrays) as ONE tile+halo ``applyInPandas`` pass.
 
@@ -220,10 +222,8 @@ def _tile_apply(px: DataFrame, n_lines: int, n_samples: int,
     """
     if tile % 4 or halo % 4:
         raise ValueError("tile and halo must be multiples of 4")
-    work = _with_halo_tiles(
-        px.select(line_col, sample_col, value_col),
-        line_col, sample_col, tile, halo,
-    )
+    work = _with_halo_tiles(px.select("line", "sample", value_col),
+                            tile, halo)
     out_l_max = (n_lines // 2) // 2
     out_s_max = (n_samples // 2) // 2
     names = [f.name for f in schema]
@@ -239,8 +239,8 @@ def _tile_apply(px: DataFrame, n_lines: int, n_samples: int,
         e_l = min((tl + 1) * tile + halo, n_lines)
         e_s = min((ts + 1) * tile + halo, n_samples)
         arr = np.full((e_l - o_l, e_s - o_s), np.nan)
-        li = pdf[line_col].to_numpy(dtype=np.int64) - o_l
-        si = pdf[sample_col].to_numpy(dtype=np.int64) - o_s
+        li = pdf["line"].to_numpy(dtype=np.int64) - o_l
+        si = pdf["sample"].to_numpy(dtype=np.int64) - o_s
         arr[li, si] = pdf[value_col].to_numpy(dtype=np.float64)
         res = stencil(arr)
         # interior /4-grid output range for this tile
@@ -269,8 +269,6 @@ def local_gradients(
     n_lines: int,
     n_samples: int,
     value_col: str = "sigma0",
-    line_col: str = "line",
-    sample_col: str = "sample",
     tile: int = 512,
     halo: int = 20,
 ) -> DataFrame:
@@ -291,9 +289,8 @@ def local_gradients(
     whole-image NumPy twin). A deployment sizes tiles to executor
     memory by passing ``tile``.
     """
-    return _tile_apply(px, n_lines, n_samples, value_col, line_col,
-                       sample_col, tile, halo, local_gradients_numpy,
-                       _LG_SCHEMA)
+    return _tile_apply(px, n_lines, n_samples, value_col, tile, halo,
+                       local_gradients_numpy, _LG_SCHEMA)
 
 
 # ----------------------------------------------------------------------
@@ -311,7 +308,6 @@ def gradient_histogram(
     lg: DataFrame,
     window: int,
     step: int | None = None,
-    n_angles: int = 72,
     line_col: str = "line4",
     sample_col: str = "sample4",
 ) -> DataFrame:
@@ -328,7 +324,8 @@ def gradient_histogram(
     it reuses that hash partitioning: one exchange, and the upstream
     plan runs once.
 
-    Returns (win_line, win_sample, angle, weight, used_ratio): weight
+    Returns (win_line, win_sample, angle, weight, used_ratio) over
+    ``N_ANGLES`` direction bins: weight
     is the median-normalized quality-weighted bin sum divided by the
     window pixel count; used_ratio the valid-pixel fraction.
     """
@@ -338,7 +335,7 @@ def gradient_histogram(
     offsets = ", ".join(f"named_struct('__kl', {i}, '__ks', {j})"
                         for i in range(ncand) for j in range(ncand))
     wpx = double_lit(float(window * window))
-    start, bstep = _bin_axis(n_angles)
+    start, bstep = _bin_axis(N_ANGLES)
     part = "OVER (PARTITION BY __wl, __ws)"
 
     # pixel -> every covering window, valid pixels only
@@ -359,7 +356,7 @@ def gradient_histogram(
     binned = w.selectExpr(
         "__wl", "__ws",
         f"CAST(LEAST(GREATEST(FLOOR((__angle - ({start}))"
-        f" / ({bstep}) + 5e-1), 0), {n_angles - 1}) AS INT) AS __k",
+        f" / ({bstep}) + 5e-1), 0), {N_ANGLES - 1}) AS INT) AS __k",
         f"(__abs_g2 / (__abs_g2 + percentile(__abs_g2, 0.5e0) {part}))"
         " * c AS __w",
         f"count(1) {part} AS __nvalid",
@@ -375,58 +372,49 @@ def gradient_histogram(
     )
 
 
-def circ_smooth(hist: DataFrame, n_angles: int = 72,
-                key_cols: tuple = ("win_line", "win_sample"),
-                bin_col: str = "angle_idx",
-                weight_col: str = "weight") -> DataFrame:
+def circ_smooth(hist: DataFrame, n_angles: int = N_ANGLES) -> DataFrame:
     """Circular histogram smoothing (gradients.py:882-923) with the
     composed 31-tap kernel: each bin is exploded to the bins its
     non-zero taps (a literal array) reach, then summed per (keys, bin).
 
-    ``hist`` must carry an integer bin column ``bin_col`` in
-    [0, n_angles); missing bins are treated as weight 0 (dense input
-    recommended), and a bin no tap reaches gets no row. Returns the
-    same keys + bin with smoothed weight.
+    ``hist`` carries (win_line, win_sample, angle_idx, weight) with the
+    integer bin ``angle_idx`` in [0, n_angles); missing bins are treated
+    as weight 0 (dense input recommended), and a bin no tap reaches gets
+    no row. Returns the same keys + bin with smoothed weight.
     """
 
     half = len(CIRC_KERNEL) // 2
     taps = ", ".join(
         f"named_struct('__d', {i - half}, '__tapw', {double_lit(float(wv))})"
         for i, wv in enumerate(CIRC_KERNEL) if wv != 0.0)
-    keys = [f"`{k}`" for k in key_cols]
     j = hist.selectExpr(
-        *keys, f"`{bin_col}` AS __bin", f"`{weight_col}` AS __wt",
+        *_WIN_KEYS, "angle_idx AS __bin", "weight AS __wt",
         f"inline(array({taps}))",
     ).selectExpr(
-        *keys, "__wt", "__tapw",
+        *_WIN_KEYS, "__wt", "__tapw",
         f"((__bin + __d) % {n_angles} + {n_angles}) % {n_angles} AS __dst",
     )
-    return j.groupBy(*key_cols, "__dst").agg(
-        F.expr(DSUM("__wt * __tapw", 9)).alias(weight_col)
-    ).withColumnRenamed("__dst", bin_col)
+    return j.groupBy(*_WIN_KEYS, "__dst").agg(
+        F.expr(DSUM("__wt * __tapw", 9)).alias("weight")
+    ).withColumnRenamed("__dst", "angle_idx")
 
 
-def streak_direction(hist: DataFrame, n_angles: int = 72,
-                     key_cols: tuple = ("win_line", "win_sample"),
-                     bin_col: str = "angle_idx",
-                     weight_col: str = "weight") -> DataFrame:
+def streak_direction(hist: DataFrame, n_angles: int = N_ANGLES
+                     ) -> DataFrame:
     """Histogram peak per window (argmax over bins — gradients.py:421-424)
     after circular smoothing; deterministic tie-break on bin index.
 
     The input is hash-partitioned by the window keys once, so the
     smoothing aggregation and the top-1 window share that exchange."""
-    sm = circ_smooth(hist.repartition(*key_cols), n_angles=n_angles,
-                     key_cols=key_cols, bin_col=bin_col,
-                     weight_col=weight_col)
-    keys = [f"`{k}`" for k in key_cols]
+    sm = circ_smooth(hist.repartition(*_WIN_KEYS), n_angles=n_angles)
     start, bstep = _bin_axis(n_angles)
     return sm.selectExpr(
-        "*", f"row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY "
-             f"`{weight_col}` DESC, `{bin_col}` ASC) AS __rn",
+        "*", f"row_number() OVER (PARTITION BY {', '.join(_WIN_KEYS)} "
+             "ORDER BY weight DESC, angle_idx ASC) AS __rn",
     ).where("__rn = 1").selectExpr(
-        *keys,
-        f"{start} + `{bin_col}` * {bstep} AS streak_angle",
-        f"`{weight_col}` AS peak_weight",
+        *_WIN_KEYS,
+        f"{start} + angle_idx * {bstep} AS streak_angle",
+        "weight AS peak_weight",
     )
 
 
@@ -532,15 +520,10 @@ def filtering_parameters(
     px: DataFrame,
     n_lines: int,
     n_samples: int,
-    value_col: str = "sigma0",
-    line_col: str = "line",
-    sample_col: str = "sample",
-    tile: int = 256,
-    halo: int = 48,
+    tile: int = 64,
 ) -> DataFrame:
-    """Distributed rain/texture mask: the whole Zhao-2021 chain fused
-    into ONE tile+halo applyInPandas pass (halo 48 covers the deepest
-    stencil chain: R2 + Mean-of-G3 on the /4 grid)."""
-    return _tile_apply(px, n_lines, n_samples, value_col, line_col,
-                       sample_col, tile, halo, filtering_parameters_numpy,
-                       _FP_SCHEMA)
+    """Distributed rain/texture mask over ``sigma0``: the whole Zhao-2021
+    chain fused into ONE tile+halo applyInPandas pass (the halo of 48
+    covers the deepest stencil chain: R2 + Mean-of-G3 on the /4 grid)."""
+    return _tile_apply(px, n_lines, n_samples, "sigma0", tile, 48,
+                       filtering_parameters_numpy, _FP_SCHEMA)

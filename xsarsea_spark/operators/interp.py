@@ -119,7 +119,7 @@ def _index_points(
     return pt
 
 
-def _blend_expr(axes: Sequence[GridAxis], suffix: str = ""):
+def _blend_expr(axes: Sequence[GridAxis], suffix: str):
     """Fixed-corner-order multilinear blend => bit-deterministic."""
     d = len(axes)
     blend = None
@@ -208,19 +208,17 @@ def interp_kernel(
     points: DataFrame,
     lut_values: np.ndarray,
     axes: Sequence[GridAxis],
-    point_cols: Mapping[str, str] | None = None,
-    out_col: str = "value_interp",
     bounds: str = "clamp",
 ) -> DataFrame:
     """Big-LUT path: multilinear interpolation via ``mapInPandas`` with
     the LUT NumPy grid (shape = axis lengths, C order) shipped once per
     executor as a SparkContext broadcast. Same numeric result as
-    :func:`interp_join`; use when the LUT is too large to broadcast-join
+    :func:`interp_join`, read from the points' axis-named columns into
+    ``value_interp``; use when the LUT is too large to broadcast-join
     (> ~10^6 rows)."""
     if bounds not in ("clamp", "nan"):
         raise ValueError("bounds must be 'clamp' or 'nan'")
-    point_cols = dict(point_cols or {})
-    srcs = [point_cols.get(ax.name, ax.name) for ax in axes]
+    srcs = [ax.name for ax in axes]
     meta = [(ax.x0, ax.step, ax.n, ax.hi) for ax in axes]
     spark = points.sparkSession
     b_lut = spark.sparkContext.broadcast(
@@ -229,7 +227,7 @@ def interp_kernel(
     want_nan = bounds == "nan"
 
     schema = T.StructType(
-        list(points.schema) + [T.StructField(out_col, T.DoubleType())]
+        list(points.schema) + [T.StructField("value_interp", T.DoubleType())]
     )
 
     def gen(batches):
@@ -259,7 +257,7 @@ def interp_kernel(
             if want_nan:
                 acc[oob] = np.nan
             out = pdf.copy()
-            out[out_col] = acc
+            out["value_interp"] = acc
             yield out
 
     return points.mapInPandas(gen, schema=schema)

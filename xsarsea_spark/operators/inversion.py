@@ -36,13 +36,14 @@ __all__ = ["invert_from_model", "prepare_luts"]
 _D_ANTENNA = 2.0
 _D_AZI = 2.0
 _DWSPD_FG = 2.0
+# LUT incidence step (degrees)
+_INC_STEP = 1.0
 
 
 @functools.lru_cache(maxsize=4)
 def prepare_luts(
     co_model: str | None,
     cr_model: str | None,
-    inc_step: float = 1.0,
     wspd_step: float = 0.2,
     phi_step: float = 2.5,
     cr_wspd_step: float = 0.1,
@@ -60,7 +61,8 @@ def prepare_luts(
     if co_model:
         g = GMF_REGISTRY[co_model]
         axes = [
-            axis_from_range("incidence", g.inc_range[0], g.inc_range[1], inc_step),
+            axis_from_range("incidence", g.inc_range[0], g.inc_range[1],
+                            _INC_STEP),
             axis_from_range("wspd", g.wspd_range[0], g.wspd_range[1], wspd_step),
             axis_from_range("phi", g.phi_range[0], g.phi_range[1], phi_step),
         ]
@@ -89,7 +91,8 @@ def prepare_luts(
     if cr_model:
         g = GMF_REGISTRY[cr_model]
         axes = [
-            axis_from_range("incidence", g.inc_range[0], g.inc_range[1], inc_step),
+            axis_from_range("incidence", g.inc_range[0], g.inc_range[1],
+                            _INC_STEP),
             axis_from_range("wspd", g.wspd_range[0], g.wspd_range[1], cr_wspd_step),
         ]
         lut = gmf_lut_numpy(cr_model, axes)
@@ -280,7 +283,7 @@ def _invert_batch(
     if chunk is None:
         chunk = 256 if search == "coarse" else 1024
     n = len(pdf)
-    inc = pdf[cols["inc"]].to_numpy(dtype=np.float64, na_value=np.nan)
+    inc = pdf["incidence"].to_numpy(dtype=np.float64, na_value=np.nan)
     out_co = np.full(n, np.nan, dtype=np.complex128)
     out_dual = np.full(n, np.nan, dtype=np.complex128)
 
@@ -372,14 +375,12 @@ def invert_from_model(
     co_model: str | None = None,
     cr_model: str | None = None,
     dsig_co: float = 0.1,
-    inc_col: str = "incidence",
     sigma0_co_col: str | None = None,
     sigma0_cr_col: str | None = None,
     dsig_cr_col: str | None = None,
     anc_re_col: str | None = None,
     anc_im_col: str | None = None,
     keep_cols: list | None = None,
-    lut_inc_step: float = 1.0,
     lut_wspd_step: float = 0.2,
     lut_phi_step: float = 2.5,
     lut_cr_wspd_step: float = 0.1,
@@ -400,12 +401,11 @@ def invert_from_model(
     """
     spark = px.sparkSession
     b_luts = _lut_broadcast(spark.sparkContext, (
-        co_model, cr_model, lut_inc_step, lut_wspd_step, lut_phi_step,
-        lut_cr_wspd_step))
+        co_model, cr_model, lut_wspd_step, lut_phi_step, lut_cr_wspd_step))
 
     keep_cols = list(keep_cols or [])
     work = px
-    cols = {"inc": inc_col, "keep": keep_cols, "sigma0_co_db": None,
+    cols = {"keep": keep_cols, "sigma0_co_db": None,
             "sigma0_cr_db": None, "dsig_cr": None,
             "anc_re": anc_re_col, "anc_im": anc_im_col}
     if co_model and sigma0_co_col:
@@ -421,7 +421,7 @@ def invert_from_model(
         cols["dsig_cr"] = dsig_cr_col
 
     in_cols = [c for c in
-               [inc_col, cols["sigma0_co_db"], cols["sigma0_cr_db"],
+               ["incidence", cols["sigma0_co_db"], cols["sigma0_cr_db"],
                 cols["dsig_cr"], anc_re_col, anc_im_col] + keep_cols
                if c is not None]
     work = work.select(*dict.fromkeys(in_cols))

@@ -7,12 +7,11 @@ generate a gridded LUT by evaluating the analytic GMF over an
 sinks to Parquet).
 
 Grid generation is ``spark.range`` arithmetic (distributed, no driver
-materialization); the GMF is a Catalyst expression, so LUT
-construction is a single whole-stage-codegen pass. For the inversion
-kernel the bounded LUT is instead evaluated driver-side with NumPy
-(identical formula via the shared expression tree) and shipped as a
-broadcast variable — the reference's "LUTs are the broadcast side"
-design (SURVEY.md §2.3).
+materialization); the GMF's NumPy form (compiled from the same
+expression tree as its SQL form) is evaluated over it in Arrow
+batches. For the inversion kernel the bounded LUT is instead evaluated
+driver-side with NumPy and shipped as a broadcast variable — the
+reference's "LUTs are the broadcast side" design (SURVEY.md §2.3).
 """
 
 from __future__ import annotations
@@ -21,7 +20,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xsarsea_spark.functions.gmfs import GMF_REGISTRY, gmf_numpy, gmf_sql
+from xsarsea_spark.functions.gmfs import GMF_REGISTRY, gmf_numpy
 from xsarsea_spark.operators.interp import GridAxis
 
 __all__ = [
@@ -68,20 +67,15 @@ def gmf_to_lut(
     model: str,
     inc_step: float | None = None,
     wspd_step: float | None = None,
-    phi_step: float | None = None,
     res: str = "low",
-    kernel: str = "numpy",
 ) -> tuple[DataFrame, list[GridAxis]]:
     """Materialize a GMF as a gridded LUT DataFrame (+ axis metadata).
 
-    ``kernel='numpy'`` (default) evaluates the dual-compiled NumPy
-    form of the GMF in Arrow batches — bit-identical values to the
-    SQL expression form (the expression tree compiles to both; the
-    inversion oracles depend on that equivalence) at ~10x the
-    throughput of the deeply-nested codegen'd SQL on the reference's
-    high-res grids. ``kernel='sql'`` keeps the pure-expression plan
-    (useful when the LUT must stay inside one Catalyst plan, e.g.
-    the SQL-oracle suite queries).
+    Evaluates the dual-compiled NumPy form of the GMF in Arrow batches
+    — bit-identical values to the SQL expression form (the expression
+    tree compiles to both; the inversion oracles depend on that
+    equivalence) at ~10x the throughput of the deeply-nested codegen'd
+    SQL on the reference's high-res grids.
     """
     g = GMF_REGISTRY[model]
     steps = LOW_RES_STEPS if res == "low" else HIGH_RES_STEPS
@@ -92,14 +86,9 @@ def gmf_to_lut(
         axis_from_range("wspd", g.wspd_range[0], g.wspd_range[1], wspd_step),
     ]
     if g.needs_phi:
-        phi_step = phi_step or steps["phi"]
-        axes.append(
-            axis_from_range("phi", g.phi_range[0], g.phi_range[1], phi_step)
-        )
+        axes.append(axis_from_range("phi", g.phi_range[0], g.phi_range[1],
+                                    steps["phi"]))
     grid = grid_df(spark, axes)
-    if kernel == "sql":
-        df = grid.withColumn("sigma0_model", F.expr(gmf_sql(model)))
-        return df, axes
 
     schema = (", ".join(f"{f.name} {f.dataType.simpleString()}"
                         for f in grid.schema.fields)

@@ -16,8 +16,7 @@ is one shuffle join (ranks onto edge sources, partitioned by node) and
 one hash agg onto destinations — the standard Pregel schedule
 expressed relationally. Dangling nodes keep their rank mass out of
 circulation (teleport-only), matching the simple formulation; rounds
-are a fixed driver loop (bounded, like Lloyd's in pipeline.ivf), each
-round checkpointed so the lineage does not grow.
+are a fixed driver loop (bounded, like Lloyd's in pipeline.ivf).
 """
 
 from __future__ import annotations
@@ -31,6 +30,8 @@ from xsarsea_spark.operators.exactsum import QTRUNC, decimal_sum
 __all__ = ["pagerank", "pagerank_contrib_expr", "triangle_counts"]
 
 _Q = 12          # quantization decimals for each edge contribution
+ITERS = 4        # rounds
+DAMPING = "0.85"  # spelled as both engines parse it to the same double
 
 
 def pagerank_contrib_expr(rank_col: str, deg_col: str) -> str:
@@ -39,39 +40,30 @@ def pagerank_contrib_expr(rank_col: str, deg_col: str) -> str:
     return QTRUNC(f"{rank_col} / CAST({deg_col} AS DOUBLE)", _Q)
 
 
-def pagerank(edges: DataFrame, iters: int = 5,
-             damping: float = 0.85,
-             src: str = "src", dst: str = "dst",
-             dangling: bool = True,
-             checkpoint_every: int = 8) -> DataFrame:
-    """Rank nodes of a directed edge list; returns (node, rank).
-
-    ``damping`` must be exactly representable arithmetic on both
-    engines' side — pass it as it will be spelled in SQL (0.85 is
-    exact-in-double enough: both engines parse the identical literal
-    to the identical double).
+def pagerank(edges: DataFrame, dangling: bool = True) -> DataFrame:
+    """Rank nodes of a directed (src, dst) edge list over ``ITERS``
+    rounds with damping ``DAMPING``; returns (node, rank).
 
     ``dangling=False`` skips the per-round reseed join for graphs
     where every node has an in-edge (e.g. any symmetrized edge list)
     — one join per round instead of two. Rounds build ONE linear
-    lazy DAG (each rank frame feeds exactly the next round), so short
-    runs execute as a single Spark job; ``checkpoint_every`` bounds
-    lineage depth for long runs.
+    lazy DAG (each rank frame feeds exactly the next round), so the
+    run executes as a single Spark job.
     """
     nodes = materialize(
-        edges.select(F.col(src).alias("node"))
-        .unionAll(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .unionAll(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     n = nodes.count()
-    deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
-    g = materialize(edges.join(deg, on=src))
-    base = f"(1e0 - {damping}e0) / {n}e0"
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    g = materialize(edges.join(deg, on="src"))
+    base = f"(1e0 - {DAMPING}e0) / {n}e0"
     ranks = nodes.withColumn("rank", F.expr(f"1e0 / {n}e0"))
-    for i in range(iters):
+    for _ in range(ITERS):
         contrib = (
-            g.join(ranks, g[src] == ranks["node"])
-            .select(F.col(dst).alias("node"),
+            g.join(ranks, g["src"] == ranks["node"])
+            .select(F.col("dst").alias("node"),
                     F.expr(pagerank_contrib_expr("rank", "deg"))
                     .alias("c"))
             .groupBy("node")
@@ -80,15 +72,13 @@ def pagerank(edges: DataFrame, iters: int = 5,
         if dangling:
             ranks = nodes.join(contrib, on="node", how="left").select(
                 "node",
-                F.expr(f"{base} + {damping}e0"
+                F.expr(f"{base} + {DAMPING}e0"
                        " * coalesce(in_sum, 0e0)").alias("rank"))
         else:
             ranks = contrib.select(
                 "node",
-                F.expr(f"{base} + {damping}e0 * in_sum")
+                F.expr(f"{base} + {DAMPING}e0 * in_sum")
                 .alias("rank"))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            ranks = materialize(ranks)
     return ranks
 
 

@@ -88,49 +88,49 @@ def kmv_estimate(sketch: DataFrame, group_cols: list,
 # Count-min: deterministic frequency sketch
 # ----------------------------------------------------------------------
 
-def _cm_hash(value_sql: str, row: int, width: int) -> str:
-    """Row-salted 40-bit md5 hash folded to a bucket — identical text
-    in both engines modulo the md5->int spelling (HASH40_SQL)."""
-    h = HASH40_SQL.format(x=f"('{row}#' || ({value_sql}))")
-    return f"(({h}) % {width})"
+CM_DEPTH, CM_WIDTH = 4, 64   # count-min hash rows x buckets
 
 
-def countmin_sketch(df: DataFrame, value_sql: str, depth: int = 4,
-                    width: int = 64) -> DataFrame:
+def _cm_buckets(value_sql: str) -> str:
+    """The ``CM_DEPTH`` row-salted 40-bit md5 hashes folded to buckets —
+    identical text in both engines modulo the md5->int spelling
+    (HASH40_SQL)."""
+    hashes = (HASH40_SQL.format(x=f"('{row}#' || ({value_sql}))")
+              for row in range(CM_DEPTH))
+    return ", ".join(f"(({h}) % {CM_WIDTH})" for h in hashes)
+
+
+def countmin_sketch(df: DataFrame, value_sql: str) -> DataFrame:
     """Count-min sketch table (row, bucket, counter).
 
-    ``depth`` salted hash rows x ``width`` buckets of exact counters:
-    fixed O(depth*width) memory per (sub)stream no matter the
+    ``CM_DEPTH`` salted hash rows x ``CM_WIDTH`` buckets of exact
+    counters: fixed O(depth*width) memory per (sub)stream no matter the
     cardinality, mergeable by summing counters bucket-wise. Fully
     deterministic (md5 bucketing, integer counters), so estimates are
     value-exact cross-engine — unlike library sketches with
     engine-specific hashing.
 
-    Scale: built as ONE pass — each input row explodes to ``depth``
+    Scale: built as ONE pass — each input row explodes to ``CM_DEPTH``
     (row, bucket) pairs of integers (map-side combined), the shuffle
     carries at most depth*width counter rows per partition.
     """
-    buckets = ", ".join(
-        _cm_hash(value_sql, j, width) for j in range(depth))
     return (
         df.selectExpr(
-            f"posexplode(array({buckets})) AS (rw, bucket)")
+            f"posexplode(array({_cm_buckets(value_sql)})) AS (rw, bucket)")
         .groupBy("rw", "bucket")
         .agg(F.count(F.lit(1)).alias("counter"))
     )
 
 
 def countmin_estimate(items: DataFrame, sketch: DataFrame,
-                      value_sql: str, depth: int = 4,
-                      width: int = 64) -> DataFrame:
+                      value_sql: str) -> DataFrame:
     """Point-frequency estimates: min over the sketch's depth rows of
     the item's bucket counter (>= true count, with the classic
     eps = e/width overestimate bound). ``items`` keeps its columns,
     gaining ``cm_count``."""
     probes = items.selectExpr(
         "*",
-        f"posexplode(array({', '.join(_cm_hash(value_sql, j, width) for j in range(depth))}))"
-        " AS (rw, bucket)")
+        f"posexplode(array({_cm_buckets(value_sql)})) AS (rw, bucket)")
     return (
         probes.join(sketch, on=["rw", "bucket"], how="left")
         .na.fill({"counter": 0})
@@ -148,8 +148,11 @@ def _bloom_pos(value_sql: str, j: int, m_bits: int) -> str:
     return f"(({h}) % {m_bits})"
 
 
+BLOOM_K = 3   # bit probes per key of bloom_filter
+
+
 def bloom_build(keys: DataFrame, value_sql: str, m_bits: int = 4096,
-                k: int = 3) -> DataFrame:
+                k: int = BLOOM_K) -> DataFrame:
     """Bloom filter as a (word, bits) table: k md5-salted bit
     positions per key, OR-folded into 63-bit words with ``bit_or``
     (63 so no position ever shifts into the BIGINT sign bit — the
@@ -172,13 +175,13 @@ def bloom_build(keys: DataFrame, value_sql: str, m_bits: int = 4096,
 
 
 def bloom_filter(df: DataFrame, bloom: DataFrame, value_sql: str,
-                 m_bits: int = 4096, k: int = 3) -> DataFrame:
-    """Keep rows whose key passes every one of the k bit probes
+                 m_bits: int = 4096) -> DataFrame:
+    """Keep rows whose key passes every one of the ``BLOOM_K`` bit probes
     (possible false positives, never false negatives). The bloom side
     is broadcast; each probe is an equi-join on the word index plus a
     mask test — the fact side never shuffles."""
     out = df
-    for j in range(k):
+    for j in range(BLOOM_K):
         p = _bloom_pos(value_sql, j, m_bits)
         probe = (
             bloom.withColumnRenamed("word", f"__w{j}")
@@ -199,10 +202,9 @@ def bloom_filter(df: DataFrame, bloom: DataFrame, value_sql: str,
 
 
 def bloom_mark(df: DataFrame, bloom: DataFrame, value_sql: str,
-               mark_col: str = "__maybe",
-               m_bits: int = 4096, k: int = 3) -> DataFrame:
+               m_bits: int = 4096, k: int = BLOOM_K) -> DataFrame:
     """Like :func:`bloom_filter` but non-destructive: adds a boolean
-    ``mark_col`` — True when every probe hits (the key MIGHT be in
+    ``__maybe`` — True when every probe hits (the key MIGHT be in
     the set), False when any probe misses (DEFINITELY absent, the
     no-false-negative guarantee). The split form incremental ingest
     needs: definitely-new rows skip the exact dedup join entirely,
@@ -227,7 +229,7 @@ def bloom_mark(df: DataFrame, bloom: DataFrame, value_sql: str,
             .drop(f"__p{j}", f"__w{j}", f"__bits{j}")
         )
         hits.append(f"__hit{j}")
-    out = out.withColumn(mark_col, F.expr(" AND ".join(hits)))
+    out = out.withColumn("__maybe", F.expr(" AND ".join(hits)))
     return out.drop(*hits)
 
 
@@ -240,23 +242,27 @@ def bloom_mark(df: DataFrame, bloom: DataFrame, value_sql: str,
 HASH60_SQL = "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def hll_rank_sql(rest_col: str, w: int = 40) -> str:
-    """Position of the first 1-bit (from the MSB) of a ``w``-bit
+HLL_B, HLL_W = 6, 40   # register-index bits, rank-field bits
+
+
+def hll_rank_sql(rest_col: str) -> str:
+    """Position of the first 1-bit (from the MSB) of a ``HLL_W``-bit
     field, as a pure comparison ladder — no log2/bit_length, so the
     SAME text runs in Spark and DuckDB with exact integer semantics.
     Returns w+1 when the field is all zeros (HLL's rho convention)."""
+    w = HLL_W
     branches = " ".join(
         f"WHEN ({rest_col}) >= {1 << (w - i)} THEN {i}"
         for i in range(1, w + 1))
     return f"(CASE {branches} ELSE {w + 1} END)"
 
 
-def hll_sketch(df: DataFrame, group_cols: list, value_sql: str,
-               b: int = 6, w: int = 40) -> DataFrame:
+def hll_sketch(df: DataFrame, group_cols: list, value_sql: str
+               ) -> DataFrame:
     """Per-group HLL register table (group_cols..., reg, m_reg).
 
-    Register index = low ``b`` bits of a 60-bit md5 hash; rank = first
-    1-bit position of the next ``w`` bits. Everything is integer
+    Register index = low ``HLL_B`` bits of a 60-bit md5 hash; rank =
+    first 1-bit position of the next ``HLL_W`` bits. Everything is integer
     arithmetic on a deterministic hash, so — unlike library HLLs with
     engine-private hashing — the registers (and hence the estimate)
     are value-exact in any engine.
@@ -266,14 +272,14 @@ def hll_sketch(df: DataFrame, group_cols: list, value_sql: str,
     (:func:`hll_merge`) — the HLL property that makes it the standard
     distributed distinct-counter.
     """
-    m = 1 << b
+    m = 1 << HLL_B
     h = HASH60_SQL.format(x=f"({value_sql})")
-    rank = hll_rank_sql("__rest", w)
+    rank = hll_rank_sql("__rest")
     return (
         df.selectExpr(
             *group_cols,
             f"({h}) % {m} AS reg",
-            f"(({h}) DIV {m}) % {1 << w} AS __rest")
+            f"(({h}) DIV {m}) % {1 << HLL_W} AS __rest")
         .selectExpr(*group_cols, "reg", f"{rank} AS rnk")
         .groupBy(*group_cols, "reg")
         .agg(F.max("rnk").alias("m_reg"))
@@ -289,8 +295,7 @@ def hll_merge(sketch_a: DataFrame, sketch_b: DataFrame,
         F.max("m_reg").alias("m_reg"))
 
 
-def hll_estimate_sql(s_col: str, c_col: str, b: int = 6,
-                     w: int = 40) -> str:
+def hll_estimate_sql(s_col: str, c_col: str) -> str:
     """Final-estimate expression over ``s = SUM(2^(w+1-m_reg))`` and
     ``c = COUNT(registers)`` — shared verbatim by the Spark query and
     the DuckDB oracle.
@@ -299,14 +304,10 @@ def hll_estimate_sql(s_col: str, c_col: str, b: int = 6,
     (exact in both engines); the only floating ops are one division
     chain of IEEE-exact multiplies and, on the linear-counting branch,
     one ln() behind the QTRUNC barrier. alpha_64 = 0.709 (Flajolet et
-    al. 2007) — ``b`` other than 6 is rejected rather than silently
-    miscalibrated.
+    al. 2007), the constant for ``HLL_B`` = 6.
     """
-    if b != 6:
-        raise ValueError("hll_estimate_sql is calibrated for b=6")
-
-    m = 1 << b
-    raw = (f"(709e-3 * {m}e0 * {m}e0 * {float(1 << (w + 1)):.0f}e0"
+    m = 1 << HLL_B
+    raw = (f"(709e-3 * {m}e0 * {m}e0 * {float(1 << (HLL_W + 1)):.0f}e0"
            f" / CAST({s_col} AS DOUBLE))")
     lin = f"({m}e0 * ln({m}e0 / CAST({m} - {c_col} AS DOUBLE)))"
     return (
@@ -315,17 +316,15 @@ def hll_estimate_sql(s_col: str, c_col: str, b: int = 6,
     )
 
 
-def hll_estimate(sketch: DataFrame, group_cols: list, b: int = 6,
-                 w: int = 40) -> DataFrame:
+def hll_estimate(sketch: DataFrame, group_cols: list) -> DataFrame:
     """Finalize a register table into per-group estimates
     (group_cols..., hll_estimate, registers_used)."""
-    m = 1 << b
-    est = hll_estimate_sql("__s", "__c", b, w)
+    est = hll_estimate_sql("__s", "__c")
     return (
         sketch.groupBy(*group_cols)
         .agg(
             F.expr(f"SUM(SHIFTLEFT(CAST(1 AS BIGINT),"
-                   f" {w + 1} - m_reg))").alias("__s"),
+                   f" {HLL_W + 1} - m_reg))").alias("__s"),
             F.count(F.lit(1)).alias("__c"),
         )
         .selectExpr(*group_cols, f"{est} AS hll_estimate",

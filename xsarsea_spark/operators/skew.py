@@ -6,9 +6,9 @@ explicit, planner-independent treatment when a key's row count is so
 large that a single join task would dominate the stage (the classic
 power-law user in an events table).
 
-``salted_join`` splits each hot key's rows across ``n_salts``
+``salted_join`` splits each hot key's rows across ``N_SALTS``
 sub-keys and replicates only the hot keys' build-side rows
-``n_salts`` times — cold keys join exactly as before, so the overhead
+``N_SALTS`` times — cold keys join exactly as before, so the overhead
 is bounded by (hot keys) x (n_salts) build rows. The result is
 row-identical to a plain equi-join (salting only re-buckets the
 shuffle), which the suite asserts against a plain-join DuckDB oracle.
@@ -21,35 +21,31 @@ from pyspark.sql import functions as F
 
 __all__ = ["salted_join"]
 
+N_SALTS = 8          # sub-keys per hot key
+HOT_THRESHOLD = 20   # a key with more fact rows than this is hot
+
 
 def salted_join(
     facts: DataFrame,
     dim: DataFrame,
     on: str,
-    n_salts: int = 8,
-    hot_keys: DataFrame | None = None,
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """Equi-join ``facts`` with ``dim`` on column ``on``, salting the
     shuffle for hot keys.
 
-    ``hot_keys``: 1-column DataFrame of keys to salt. If None,
-    computed from ``facts`` as keys with more than ``hot_threshold``
-    rows (one aggregation; the hot-key list is assumed dim-sized and
-    is broadcast). Fact rows of hot keys get a balanced salt (hashed
+    The hot keys are the keys with more than ``HOT_THRESHOLD`` rows in
+    ``facts`` (one aggregation; the hot-key list is assumed dim-sized
+    and is broadcast). Fact rows of hot keys get a balanced salt (hashed
     row id — which salt a row lands on is partitioning-dependent, but
     the JOIN RESULT is row-identical regardless since every salt sees
     the full dim row); dim rows of hot keys are replicated across all
     salts; cold rows use salt 0 on both sides.
     """
-    if hot_keys is None:
-        if hot_threshold is None:
-            raise ValueError("pass hot_keys or hot_threshold")
-        hot_keys = (
-            facts.groupBy(on).agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > hot_threshold)
-            .select(on)
-        )
+    hot_keys = (
+        facts.groupBy(on).agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > HOT_THRESHOLD)
+        .select(on)
+    )
     hot = F.broadcast(hot_keys.withColumn("__hot", F.lit(True)))
 
     f = (
@@ -62,13 +58,13 @@ def salted_join(
                     f"CAST(conv(substring(md5(CAST({on} AS STRING) ||"
                     f" '#' || CAST(monotonically_increasing_id()"
                     f" AS STRING)), 1, 8), 16, 10) AS BIGINT)"
-                    f" % {n_salts}"
+                    f" % {N_SALTS}"
                 ).cast("int"),
             ).otherwise(F.lit(0)),
         )
         .drop("__hot")
     )
-    salts = facts.sparkSession.range(n_salts).select(
+    salts = facts.sparkSession.range(N_SALTS).select(
         F.col("id").cast("int").alias("__salt"))
     d = (
         dim.join(hot, on=on, how="left")

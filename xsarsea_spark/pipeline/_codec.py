@@ -42,10 +42,10 @@ def normalize_corrupt(fmt: str):
 MAX_PIXELS = 1 << 26
 
 
-def check_dims(fmt: str, w: int, h: int, frames: int = 1) -> None:
+def check_dims(fmt: str, w: int, h: int) -> None:
     if w <= 0 or h <= 0:
         raise ValueError(f"corrupt {fmt} stream: empty dimensions")
-    if w * h * max(frames, 1) > MAX_PIXELS:
+    if w * h > MAX_PIXELS:
         raise ValueError(
-            f"{fmt} dimensions {w}x{h}x{frames} exceed the "
+            f"{fmt} dimensions {w}x{h} exceed the "
             f"decode-bomb guard ({MAX_PIXELS} px)")

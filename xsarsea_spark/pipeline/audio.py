@@ -94,20 +94,19 @@ AFP_BANDS = 16          # DFT bins k = 1..16 -> 15 comparison bits
 AFP_SCALE = 128         # trig fixed-point scale (2^7)
 
 
-def trig_int(frame: int = AFP_FRAME, bands: int = AFP_BANDS,
-             scale: int = AFP_SCALE) -> "tuple":
+def trig_int() -> "tuple":
     """Fixed-point DFT basis: int64 matrices C[k-1, i] =
-    round(cos(2*pi*k*i/frame) * scale) and the matching sine matrix,
-    k = 1..bands. Integer matmuls against int16 samples are EXACT
-    and order-independent (the dct_int precedent), so both engines
-    derive identical band energies: |sum| <= frame * 2^15 * scale =
-    2^28 at the defaults, squares sum below 2^57 — no overflow."""
+    round(cos(2*pi*k*i/AFP_FRAME) * AFP_SCALE) and the matching sine
+    matrix, k = 1..AFP_BANDS. Integer matmuls against int16 samples are
+    EXACT and order-independent (the dct_int precedent), so both
+    engines derive identical band energies: |sum| <= frame * 2^15 *
+    scale = 2^28, squares sum below 2^57 — no overflow."""
 
-    i = np.arange(frame)
-    k = np.arange(1, bands + 1)[:, None]
-    ang = 2.0 * np.pi * k * i / frame
-    c = np.round(np.cos(ang) * scale).astype(np.int64)
-    s = np.round(np.sin(ang) * scale).astype(np.int64)
+    i = np.arange(AFP_FRAME)
+    k = np.arange(1, AFP_BANDS + 1)[:, None]
+    ang = 2.0 * np.pi * k * i / AFP_FRAME
+    c = np.round(np.cos(ang) * AFP_SCALE).astype(np.int64)
+    s = np.round(np.sin(ang) * AFP_SCALE).astype(np.int64)
     return c, s
 
 

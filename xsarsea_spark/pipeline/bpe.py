@@ -163,7 +163,7 @@ def _merge_rounds(cur: DataFrame, n_merges: int, keys: list[str],
 
 
 def _merge_rounds_weighted(wf: DataFrame, n_merges: int,
-                           apply_last: bool, sample_frac: float,
+                           apply_last: bool,
                            ) -> tuple[DataFrame,
                                       list[tuple[int, str, str, int]]]:
     """The merge loop over the DISTINCT-sequence frequency table
@@ -175,17 +175,11 @@ def _merge_rounds_weighted(wf: DataFrame, n_merges: int,
     the distinct table equals COUNT(*) over the exploded corpus
     EXACTLY — the learned merges (and every tie-break) are unchanged
     while each round's scan shrinks from corpus positions to
-    vocabulary rows. With ``0 < sample_frac < 1`` the post-round-1
-    counts sample DISTINCT sequences rather than corpus rows (the
-    same approximation knob, a different sampling unit — the exact
-    default path is what the oracle grades)."""
+    vocabulary rows."""
     merges: list[tuple[int, str, str, int]] = []
     cur = wf
     for rank in range(n_merges):
-        src = cur
-        if 0.0 < sample_frac < 1.0 and rank > 0:
-            src = cur.sample(fraction=sample_frac, seed=rank)
-        pairs = src.filter("size(__t) >= 2").select(
+        pairs = cur.filter("size(__t) >= 2").select(
             "__f",
             F.explode(F.expr(
                 "transform(sequence(1, size(__t) - 1), p ->"
@@ -223,8 +217,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 4,
                " pair_count bigint")
 
 
-def bpe_encode(docs: DataFrame, n_merges: int = 4,
-               sample_frac: float = 1.0) -> DataFrame:
+def bpe_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
     """Train ``n_merges`` merges AND apply them all: per document the
     raw/encoded token counts, the compression ratio, and an md5
     digest of the encoded token stream (tokens joined on chr(31),
@@ -236,8 +229,7 @@ def bpe_encode(docs: DataFrame, n_merges: int = 4,
     ``localCheckpoint`` — so encode costs one extra rebuild beyond
     training, not a second pass over the merges.
     """
-    cur, _ = _bpe_rounds(docs, n_merges,
-                         apply_last=True, sample_frac=sample_frac)
+    cur, _ = _bpe_rounds(docs, n_merges, apply_last=True)
     # raw count recovered from the encoded stream itself (a merged
     # token expands to its space-separated word count) — no join back
     # to the source, no second corpus scan
@@ -442,8 +434,7 @@ def _bytelevel_vocab(pre: DataFrame) -> DataFrame:
             .withColumn("__t0", F.expr(_HEX_SYMBOLS_SQL)))
 
 
-def bpe_bytelevel_train(docs: DataFrame, n_merges: int = 4,
-                        sample_frac: float = 1.0) -> DataFrame:
+def bpe_bytelevel_train(docs: DataFrame, n_merges: int) -> DataFrame:
     """Learn ``n_merges`` byte-level merges (GPT-2 pre-tokenization +
     byte-fallback symbols); returns the same (merge_rank, lhs, rhs,
     pair_count) artifact shape as ``bpe_train`` — persist it with
@@ -455,16 +446,14 @@ def bpe_bytelevel_train(docs: DataFrame, n_merges: int = 4,
     wf = materialize(
         _bytelevel_vocab(pre)
         .select("__t0", "__f", F.col("__t0").alias("__t")))
-    _, merges = _merge_rounds_weighted(
-        wf, n_merges, apply_last=False, sample_frac=sample_frac)
+    _, merges = _merge_rounds_weighted(wf, n_merges, apply_last=False)
     return docs.sparkSession.createDataFrame(
         merges,
         schema="merge_rank int, lhs string, rhs string,"
                " pair_count bigint")
 
 
-def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4,
-                         sample_frac: float = 1.0) -> DataFrame:
+def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
     """GPT-2-style byte-level BPE: regex pre-tokenization (merges
     never cross pre-token boundaries), byte-fallback symbols, then
     the same distributed merge loop as word-level BPE — the tokenizer
@@ -485,15 +474,12 @@ def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4,
     every merge round runs on the distinct table (weighted counts
     are EXACTLY the corpus counts, so merges and tie-breaks are
     unchanged), instead of rescanning and rewriting the corpus per
-    round. The final per-doc rollup is one hash agg. ``sample_frac``
-    samples the post-round-1
-    counts over distinct pre-tokens (see _merge_rounds_weighted).
+    round. The final per-doc rollup is one hash agg.
     """
     pre = _bytelevel_pre(docs)
     vocab = materialize(_bytelevel_vocab(pre))
     wf = vocab.select("__t0", "__f", F.col("__t0").alias("__t"))
-    seg, _ = _merge_rounds_weighted(
-        wf, n_merges, apply_last=True, sample_frac=sample_frac)
+    seg, _ = _merge_rounds_weighted(wf, n_merges, apply_last=True)
     # segment each corpus pre-token by joining back on the RAW
     # pre-token string (mapped to its segmentation through the
     # __tok <-> __t0 bijection) — vocabulary-scale right side, so

@@ -42,10 +42,14 @@ from xsarsea_spark.operators.exactsum import DSUM, QTRUNC
 __all__ = ["doc_features", "gd_step", "train_logreg",
            "train_logreg_grouped", "score_docs", "save_weights",
            "load_weights", "GROUPED_Z_SQL", "N_FEATURES",
-           "LABEL_MIN_CHARS"]
+           "LABEL_MIN_CHARS", "ROUNDS", "LR", "QK", "GRAD_SCALE"]
 
 N_FEATURES = 5
 LABEL_MIN_CHARS = 300
+ROUNDS = 8        # full-batch gradient steps
+LR = 1.0          # learning rate
+QK = 12           # QTRUNC decimals of the sigmoid
+GRAD_SCALE = 12   # decimals of the exact per-dim gradient sums
 
 
 def doc_features(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
@@ -89,8 +93,7 @@ def z_expr(w: list[float]) -> str:
             f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
 
 
-def gd_step(xy: DataFrame, w: list[float], lr: float = 1.0,
-            qk: int = 12, scale: int = 12) -> list[float]:
+def gd_step(xy: DataFrame, w: list[float]) -> list[float]:
     """ONE full gradient step of logistic regression over ``xy``:
     a single keyless map-side-combined aggregation whose per-dim
     components are exact DECIMAL-grid sums of the quantized residual
@@ -99,7 +102,7 @@ def gd_step(xy: DataFrame, w: list[float], lr: float = 1.0,
 
     p = QTRUNC(
         f"CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
-        f" + exp(-({z_expr(w)})))", qk)
+        f" + exp(-({z_expr(w)})))", QK)
     # QTRUNC each term BEFORE the DECIMAL cast: the raw product is
     # an arbitrary double whose decimal tail can straddle the cast's
     # rounding boundary differently across engines; the floor grid
@@ -112,8 +115,8 @@ def gd_step(xy: DataFrame, w: list[float], lr: float = 1.0,
     # value, N_FEATURES x the work)
     row = xy.select("y", "x", F.expr(p).alias("__p")).agg(
         *[F.expr(DSUM(QTRUNC(
-            f"(__p - y) * element_at(x, {d + 1})", scale),
-            scale)).alias(f"g{d}")
+            f"(__p - y) * element_at(x, {d + 1})", GRAD_SCALE),
+            GRAD_SCALE)).alias(f"g{d}")
           for d in range(N_FEATURES)],
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
@@ -125,11 +128,10 @@ def gd_step(xy: DataFrame, w: list[float], lr: float = 1.0,
         return list(w)
     # same op order as the oracle: grid-sum -> double -> / n, * lr,
     # subtract
-    return [w[d] - lr * (row[f"g{d}"] / n) for d in range(N_FEATURES)]
+    return [w[d] - LR * (row[f"g{d}"] / n) for d in range(N_FEATURES)]
 
 
-def train_logreg(xy: DataFrame, rounds: int = 4, lr: float = 1.0,
-                 qk: int = 12, scale: int = 12) -> list[float]:
+def train_logreg(xy: DataFrame, rounds: int = ROUNDS) -> list[float]:
     """Full-batch GD from w = 0. Returns the final weight vector."""
     # cache the (x, y) projection across rounds: features drop the
     # raw text, so the cached frame is a few doubles per doc (~1% of
@@ -141,7 +143,7 @@ def train_logreg(xy: DataFrame, rounds: int = 4, lr: float = 1.0,
     try:
         w = [0.0] * N_FEATURES
         for _ in range(rounds):
-            w = gd_step(txy, w, lr=lr, qk=qk, scale=scale)
+            w = gd_step(txy, w)
         return w
     finally:
         txy.unpersist()
@@ -151,8 +153,7 @@ GROUPED_Z_SQL = ("aggregate(zip_with(w, x, (a, b) -> a * b),"
                  " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
 
 
-def train_logreg_grouped(xy: DataFrame, rounds: int = 4, lr: float = 1.0,
-                         qk: int = 12, scale: int = 12,
+def train_logreg_grouped(xy: DataFrame, rounds: int = ROUNDS
                          ) -> dict[str, list[float]]:
     """Train ONE model PER ``lang`` GROUP in shared corpus scans — the
     per-domain/per-language filter fleet a multilingual curation
@@ -191,7 +192,7 @@ def train_logreg_grouped(xy: DataFrame, rounds: int = 4, lr: float = 1.0,
                  f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
             p = QTRUNC(
                 f"CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
-                f" + exp(-({z})))", qk)
+                f" + exp(-({z})))", QK)
             rows = (
                 tin
                 # same once-below-the-agg projection as gd_step:
@@ -199,14 +200,14 @@ def train_logreg_grouped(xy: DataFrame, rounds: int = 4, lr: float = 1.0,
                 .select("lang", "y", "x", F.expr(p).alias("__p"))
                 .groupBy("lang")
                 .agg(*[F.expr(DSUM(QTRUNC(
-                    f"(__p - y) * element_at(x, {d + 1})", scale),
-                    scale)).alias(f"g{d}")
+                    f"(__p - y) * element_at(x, {d + 1})", GRAD_SCALE),
+                    GRAD_SCALE)).alias(f"g{d}")
                     for d in range(N_FEATURES)],
                     F.count(F.lit(1)).alias("n"))
             ).collect()
             for r in rows:
                 g, n = r["lang"], r["n"]
-                w[g] = [w[g][d] - lr * (r[f"g{d}"] / n)
+                w[g] = [w[g][d] - LR * (r[f"g{d}"] / n)
                         for d in range(N_FEATURES)]
         return w
     finally:
@@ -233,7 +234,7 @@ def load_weights(spark: SparkSession, path: str) -> list[float]:
     return [r["weight"] for r in rows]
 
 
-def score_docs(xy: DataFrame, w: list[float], qk: int = 12) -> DataFrame:
+def score_docs(xy: DataFrame, w: list[float]) -> DataFrame:
     """O(batch) model application — the deploy half of the
     train-once/score-everywhere lifecycle: one scan, the weight
     vector inlined as exact double literals (broadcast-by-
@@ -247,6 +248,6 @@ def score_docs(xy: DataFrame, w: list[float], qk: int = 12) -> DataFrame:
     ).selectExpr(
         "doc_id", "score",
         QTRUNC("CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
-               " + exp(-(score)))", qk) + " AS prob",
+               " + exp(-(score)))", QK) + " AS prob",
         "score >= CAST(0.0 AS DOUBLE) AS keep",
     )

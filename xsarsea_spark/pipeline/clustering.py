@@ -52,10 +52,9 @@ KM_SCALE = 9
 _UNROLL_K_MAX = 8
 
 
-def _assign_arrow(base: DataFrame, centroids: dict[int, list[float]],
-                  id_col: str):
-    """Large-k assignment as an Arrow kernel, BIT-IDENTICAL to the
-    SQL fold paths:
+def _assign_arrow(base: DataFrame, centroids: dict[int, list[float]]):
+    """Large-k assignment of (vec_id, __v) rows as an Arrow kernel,
+    BIT-IDENTICAL to the SQL fold paths:
 
     - distance accumulates dimension-by-dimension left-to-right
       (``acc += (x_d - c_d)^2`` over a python loop on the dim axis),
@@ -77,7 +76,7 @@ def _assign_arrow(base: DataFrame, centroids: dict[int, list[float]],
     cmat = np.asarray([centroids[c] for c in keys], dtype=np.float64)
     kid = np.asarray(keys, dtype=np.int64)
     schema = T.StructType([
-        base.schema[id_col],
+        base.schema["vec_id"],
         T.StructField("__v", T.ArrayType(T.DoubleType())),
         T.StructField("cluster", T.IntegerType()),
         T.StructField("dist2", T.DoubleType()),
@@ -93,7 +92,7 @@ def _assign_arrow(base: DataFrame, centroids: dict[int, list[float]],
                 diff = v[:, d, None] - cmat[None, :, d]
                 acc += diff * diff
             pos = np.argmin(acc, axis=1)      # first min, ascending id
-            out = pdf[[id_col, "__v"]].copy()
+            out = pdf[["vec_id", "__v"]].copy()
             out["cluster"] = kid[pos].astype(np.int32)
             out["dist2"] = acc[np.arange(len(v)), pos]
             yield out
@@ -196,7 +195,7 @@ def kmeans_embeddings(
             assigned = work.withColumn("cluster", cl).withColumn(
                 "dist2", mincol)
         else:
-            assigned = _assign_arrow(base, centroids, "vec_id")
+            assigned = _assign_arrow(base, centroids)
         if rnd == rounds - 1:
             break  # output is the final assignment; no wasted update
         upd = (

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from xsarsea_spark.engine import materialize
+from xsarsea_spark.pipeline.linalg import EMB_DIM
 from xsarsea_spark.pipeline.text import HASH40_SQL
 
 __all__ = [
@@ -39,20 +40,28 @@ __all__ = [
 
 MINHASH_P = (1 << 40) - 87          # prime
 _BAND_MULT = 1000003
+SHINGLE_N, MINHASH_K = 3, 16        # shingle words, minhash permutations
+JACCARD_T = 0.2                     # near-dup Jaccard cut
+SIMHASH_BITS = 16
+PLANE_SEED = 0xC0FFEE               # hyperplane LCG seed
+# cosine_neardup: hyperplanes, bands (8 sign bits each), cosine cut
+COSINE_PLANES, COSINE_BANDS, COSINE_T = 32, 4, 0.95
 
 
 def _perm_params(k: int) -> tuple[int, int]:
     return 97 + 31 * k, 911 + 131 * k
 
 
-def shingle(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle).
+def shingle(docs: DataFrame) -> DataFrame:
+    """Distinct word ``SHINGLE_N``-gram shingles per document:
+    (id, shingle).
 
-    Docs with fewer than ``n`` tokens yield NO shingles (and so drop
+    Docs with fewer than n tokens yield NO shingles (and so drop
     out of signature/candidate stages) — the same semantics as the
     oracle's end-exclusive ``range(len - n + 1)``. Without the
     filter, ``sequence(0, size - n)`` auto-steps DOWN for short docs
     and ``element_at`` throws INVALID_ARRAY_INDEX."""
+    n = SHINGLE_N
     toks = "split(text, ' ')"
     parts = " || ' ' || ".join(
         f"element_at(__toks, i + {j + 1})" for j in range(n)
@@ -69,8 +78,8 @@ def shingle(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(sh: DataFrame, k: int = 16) -> DataFrame:
-    """MinHash signature rows (id, k, minh).
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """MinHash signature rows (id, k, minh), ``MINHASH_K`` per doc.
 
     All K permutation minima are computed as K aggregate expressions in
     ONE hash aggregation over the shingles (map-side partial combine),
@@ -78,6 +87,7 @@ def minhash_signatures(sh: DataFrame, k: int = 16) -> DataFrame:
     crossJoin(perms) formulation multiplies the shuffle by K, which at
     100 TB is the difference between one pass and sixteen.
     """
+    k = MINHASH_K
     h40 = HASH40_SQL.format(x="shingle")
     work = sh.withColumn("__h", F.expr(h40))
     aggs = [
@@ -138,11 +148,11 @@ def lsh_probe(batch_bands: DataFrame, state_bands: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidates(sig: DataFrame, bands: int = 8,
-                   rows_per_band: int = 2) -> DataFrame:
+def lsh_candidates(sig: DataFrame, rows_per_band: int = 2) -> DataFrame:
     """Banded LSH candidate pairs (id_a < id_b): band hash combines
-    ``rows_per_band`` signature rows of each band; pairs come from a
-    bucket self-join, never an all-pairs cross join."""
+    ``rows_per_band`` signature rows of each band (so k / r bands);
+    pairs come from a bucket self-join, never an all-pairs cross
+    join."""
     b = lsh_bands(sig, rows_per_band=rows_per_band)
     l, r = b.alias("l"), b.alias("r")
     return (
@@ -189,10 +199,9 @@ def jaccard_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_dedup(docs: DataFrame, n: int = 3, k: int = 16,
-                      bands: int = 8, threshold: float = 0.5) -> DataFrame:
+def minhash_lsh_dedup(docs: DataFrame) -> DataFrame:
     """Full near-dup pipeline: shingle -> minhash -> banded LSH ->
-    exact Jaccard >= threshold. Returns (id_a, id_b, jaccard).
+    exact Jaccard >= ``JACCARD_T``. Returns (id_a, id_b, jaccard).
 
     The shingle set feeds four consumers (signatures, the two verify
     joins, the size agg) but needs NO explicit cache: every consumer
@@ -204,21 +213,21 @@ def minhash_lsh_dedup(docs: DataFrame, n: int = 3, k: int = 16,
     more than the shuffle re-reads it saves, and the cache barrier
     breaks whole-stage codegen pipelining.)
     """
-    sh = shingle(docs, n=n)
-    sig = minhash_signatures(sh, k=k)
-    cand = lsh_candidates(sig, bands=bands)
+    sh = shingle(docs)
+    sig = minhash_signatures(sh)
+    cand = lsh_candidates(sig)
     ver = jaccard_verify(cand, sh)
-    return ver.filter(F.col("jaccard") >= threshold)
+    return ver.filter(F.col("jaccard") >= JACCARD_T)
 
 
 def minhash_lsh_incremental(batch_docs: DataFrame,
                             state_bands: DataFrame,
-                            hist_docs: DataFrame,
-                            n: int = 3, k: int = 16,
-                            threshold: float = 0.5) -> DataFrame:
+                            hist_docs: DataFrame) -> DataFrame:
     """Incremental near-dup maintenance: one NEW batch against a
-    PERSISTED band table — the MinHash-LSH analog of the digest
-    anti-join in exact incremental dedup.
+    PERSISTED band table (built with the default ``shingle`` /
+    ``minhash_signatures``) — the MinHash-LSH analog of the digest
+    anti-join in exact incremental dedup. Pairs with Jaccard >=
+    ``JACCARD_T`` are kept.
 
     Per-ingest cost is O(batch) shingling/signatures/banding, one
     equality join of the batch's bands against the state table, a
@@ -234,8 +243,8 @@ def minhash_lsh_incremental(batch_docs: DataFrame,
     oracle certifies.
     """
 
-    sh_b = shingle(batch_docs, n=n)
-    sig_b = minhash_signatures(sh_b, k=k)
+    sh_b = shingle(batch_docs)
+    sig_b = minhash_signatures(sh_b)
     # KB-per-doc band rows, consumed by BOTH the state probe and the
     # within-batch self-join: the barrier stops each consumer (and
     # everything downstream of `cand`) from re-planning the whole
@@ -264,8 +273,7 @@ def minhash_lsh_incremental(batch_docs: DataFrame,
 
     hist_needed = cand.select(F.col("id_a").alias("doc_id")).distinct()
     sh_h = shingle(
-        hist_docs.join(hist_needed, on="doc_id", how="left_semi"),
-        n=n)
+        hist_docs.join(hist_needed, on="doc_id", how="left_semi"))
     sh = sh_b.unionByName(sh_h)
     ver = jaccard_verify(cand, sh)
     # plain (AQE-sized) join: batch_ids is O(batch), never forced
@@ -273,7 +281,7 @@ def minhash_lsh_incremental(batch_docs: DataFrame,
     batch_ids = batch_docs.selectExpr("doc_id AS id_a",
                                       "true AS __in_batch").distinct()
     return (
-        ver.filter(F.col("jaccard") >= threshold)
+        ver.filter(F.col("jaccard") >= JACCARD_T)
         .join(batch_ids, on="id_a", how="left")
         .withColumn("from_history",
                     F.expr("NOT coalesce(__in_batch, false)"))
@@ -284,8 +292,6 @@ def minhash_lsh_incremental(batch_docs: DataFrame,
 def minhash_lsh_cross_snapshot(batch_docs: DataFrame,
                                snapshot_bands: DataFrame,
                                snapshot_docs: DataFrame,
-                               n: int = 3, k: int = 16,
-                               threshold: float = 0.5,
                                batch_snapshot: int | None = None
                                ) -> DataFrame:
     """Cross-snapshot near-dup dedup: one NEW crawl/batch probed
@@ -317,7 +323,6 @@ def minhash_lsh_cross_snapshot(batch_docs: DataFrame,
         batch_docs,
         snapshot_bands.drop("snapshot"),
         snapshot_docs.drop("snapshot"),
-        n=n, k=k, threshold=threshold,
     )
     # provenance from the band tables' tags (already persisted state;
     # pairs are output-sized, so AQE sizes this join)
@@ -333,15 +338,15 @@ def minhash_lsh_cross_snapshot(batch_docs: DataFrame,
     )
 
 
-def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """SimHash fingerprint: sign of per-bit weighted sums of token
-    hashes (weight = token multiplicity).
+def simhash(docs: DataFrame) -> DataFrame:
+    """``SIMHASH_BITS``-bit SimHash fingerprint: sign of per-bit
+    weighted sums of token hashes (weight = token multiplicity).
 
-    All ``bits`` per-bit sign sums are computed as aggregate
+    All per-bit sign sums are computed as aggregate
     expressions in ONE hash aggregation over the exploded tokens
     (map-side partial combine), then folded into the fingerprint in a
     tiny projection — the earlier crossJoin-with-bit-positions
-    formulation multiplied the shuffle by ``bits`` (16x at default),
+    formulation multiplied the shuffle by the bit count (16x),
     which at 100 TB is the whole job. Integer sums, so aggregation
     order cannot affect the result."""
     h40 = HASH40_SQL.format(x="tok")
@@ -351,12 +356,12 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     aggs = [
         F.expr(f"SUM(CASE WHEN (__h DIV {1 << j}) % 2 = 1"
                f" THEN 1 ELSE -1 END) AS __s{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
     wide = toks.groupBy("doc_id").agg(*aggs)
     combine = " + ".join(
         f"(CASE WHEN __s{j} > 0 THEN {1 << j}L ELSE 0L END)"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
     return wide.selectExpr(
         "doc_id", f"CAST({combine} AS BIGINT) AS simhash"
@@ -367,7 +372,7 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
 # Embedding-cosine near-dup (the vector-space dedup family)
 # ----------------------------------------------------------------------
 
-def hyperplanes(n_planes: int, dim: int, seed: int = 0xC0FFEE) -> list:
+def hyperplanes(n_planes: int, dim: int) -> list:
     """Deterministic pseudo-random hyperplane components as integers in
     [-1001, 1001], generated by a fixed 64-bit LCG at SQL-build time.
 
@@ -377,7 +382,7 @@ def hyperplanes(n_planes: int, dim: int, seed: int = 0xC0FFEE) -> list:
     consecutive planes near-parallel — 9973 = -42 mod 2003 — which
     collapsed every vector into the all-signs-equal buckets.)
     """
-    st = seed & ((1 << 64) - 1)
+    st = PLANE_SEED & ((1 << 64) - 1)
     planes = []
     for _ in range(n_planes):
         row = []
@@ -428,39 +433,29 @@ def dot_sql(ea, eb, dim: int) -> str:
     ) + ")"
 
 
-def cosine_neardup(
-    vecs: DataFrame,
-    threshold: float = 0.98,
-    n_planes: int = 32,
-    bands: int = 4,
-    dim: int | None = None,
-    seed: int = 0xC0FFEE,
-) -> DataFrame:
+def cosine_neardup(vecs: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded random-
     hyperplane LSH — never all-pairs.
 
-    Each vector gets ``n_planes`` signed projections (flat unrolled
-    multiply-adds — whole-stage codegen, deterministic order), cut into
-    ``bands`` sign-pattern buckets of ``n_planes/bands`` bits each.
-    Candidate pairs share a (band, bucket); only candidates get the
-    exact cosine, and pairs with cosine >= ``threshold`` survive.
-    Returns (id_a, id_b, cosine).
+    Each ``EMB_DIM`` vector gets ``COSINE_PLANES`` signed projections
+    (flat unrolled multiply-adds — whole-stage codegen, deterministic
+    order), cut into ``COSINE_BANDS`` sign-pattern buckets of
+    planes/bands bits each. Candidate pairs share a (band, bucket);
+    only candidates get the exact cosine, and pairs with cosine >=
+    ``COSINE_T`` survive. Returns (id_a, id_b, cosine).
 
     Scale: signatures are one projection pass over the vectors; the
-    candidate stage shuffles on (band, bucket) — with r = n_planes /
+    candidate stage shuffles on (band, bucket) — with r = planes /
     bands sign bits there are 2^r buckets per band, so cost is
-    O(n * n_planes * dim) + O(sum bucket^2), not O(n^2). Default
-    r = 8 gives 256 buckets/band.
+    O(n * planes * dim) + O(sum bucket^2), not O(n^2); r = 8 gives
+    256 buckets/band.
     Parity: reference has no vector dedup; family required by the
     engine brief (embedding-cosine near-dup).
     """
 
+    n_planes, bands, dim = COSINE_PLANES, COSINE_BANDS, EMB_DIM
     r = n_planes // bands
-    if r * bands != n_planes:
-        raise ValueError("bands must divide n_planes")
-    if dim is None:
-        dim = vecs.selectExpr("size(embedding) AS d").first()["d"]
-    planes = hyperplanes(n_planes, dim, seed=seed)
+    planes = hyperplanes(n_planes, dim)
     # (dim, n_planes) float64 constants — each k/1001 is one IEEE
     # division, identical to the SQL literal `{k}e0/1001e0`
     K = np.array(planes, dtype=np.float64).T / 1001.0
@@ -524,7 +519,7 @@ def cosine_neardup(
     out = (
         cand.join(va, on="id_a").join(vb, on="id_b")
         .withColumn("cosine", F.expr(f"{dot} / nullif(__na * __nb, 0e0)"))
-        .filter(F.col("cosine") >= F.lit(threshold))
+        .filter(F.col("cosine") >= F.lit(COSINE_T))
         .select("id_a", "id_b", "cosine")
     )
     return out

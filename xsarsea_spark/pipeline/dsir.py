@@ -64,7 +64,7 @@ _FEATS_SPARK = (
 )
 
 
-def dsir_term_sql(b: int = DSIR_B) -> str:
+def dsir_term_sql() -> str:
     """Per-bucket log-ratio term ``ln p_target - ln p_raw`` with
     add-one smoothing, as ONE expression string over columns
     ``ct`` (target count, NULLable), ``cr`` (raw count), ``nt``/``nr``
@@ -73,15 +73,16 @@ def dsir_term_sql(b: int = DSIR_B) -> str:
 
     return QTRUNC(
         f"ln(CAST(COALESCE(ct, 0) + 1 AS DOUBLE)"
-        f" / CAST(nt + {b} AS DOUBLE))"
+        f" / CAST(nt + {DSIR_B} AS DOUBLE))"
         f" - ln(CAST(cr + 1 AS DOUBLE)"
-        f" / CAST(nr + {b} AS DOUBLE))", 9)
+        f" / CAST(nr + {DSIR_B} AS DOUBLE))", 9)
 
 
-def dsir_features(docs: DataFrame, b: int = DSIR_B,
+def dsir_features(docs: DataFrame,
                   target_col: str | None = "is_target") -> DataFrame:
     """(id[, is_target], bucket) hashed-feature rows: one explode of
-    the unigram+bigram array, bucket = 40-bit content hash mod ``b``
+    the unigram+bigram array, bucket = 40-bit content hash mod
+    ``DSIR_B``
     (non-negative in both engines, so ``%`` agrees). Pass
     ``target_col=None`` when scoring against pre-fitted terms (no
     membership column needed)."""
@@ -92,10 +93,10 @@ def dsir_features(docs: DataFrame, b: int = DSIR_B,
         .selectExpr(*keep, "split(text, ' ') AS __l")
         .selectExpr(*keep, f"explode({feats}) AS __f")
         .selectExpr(*keep,
-                    f"{HASH40_SQL.format(x='__f')} % {b} AS bucket"))
+                    f"{HASH40_SQL.format(x='__f')} % {DSIR_B} AS bucket"))
 
 
-def dsir_fit_terms(feats: DataFrame, b: int = DSIR_B,
+def dsir_fit_terms(feats: DataFrame,
                    count_col: str | None = None) -> DataFrame:
     """Fit the per-bucket log-ratio term table (bucket, __term
     DECIMAL(38,9)) from a feature stream carrying the target flag —
@@ -117,25 +118,24 @@ def dsir_fit_terms(feats: DataFrame, b: int = DSIR_B,
     return (cr.join(ct, on="bucket", how="left")
             .crossJoin(F.broadcast(tots))
             .selectExpr("bucket",
-                        f"CAST({dsir_term_sql(b)} AS"
+                        f"CAST({dsir_term_sql()} AS"
                         f" DECIMAL(38,9)) AS __term"))
 
 
-def dsir_score(docs: DataFrame, terms: DataFrame,
-               b: int = DSIR_B) -> DataFrame:
+def dsir_score(docs: DataFrame, terms: DataFrame) -> DataFrame:
     """Score docs against a PRE-FITTED terms table: (id, n_feats,
     logw DECIMAL(38,9)) — the apply-at-ingest half of DSIR. Buckets
     absent from the terms table contribute nothing (can only happen
     when the table was fitted on a different corpus; the fit emits
     every bucket its corpus has)."""
-    feats = dsir_features(docs, b=b, target_col=None)
+    feats = dsir_features(docs, target_col=None)
     return (feats.join(F.broadcast(terms), on="bucket")
             .groupBy("doc_id")
             .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_feats"),
                  F.expr("SUM(__term)").alias("logw")))
 
 
-def dsir_logweights(docs: DataFrame, b: int = DSIR_B) -> DataFrame:
+def dsir_logweights(docs: DataFrame) -> DataFrame:
     """Per-doc DSIR log importance weight: (id, n_feats,
     logw DECIMAL(38,9)). ``is_target`` is a boolean column on
     ``docs`` marking the target-domain subset. Fit and score run on
@@ -145,16 +145,16 @@ def dsir_logweights(docs: DataFrame, b: int = DSIR_B) -> DataFrame:
 
     # three consumers (raw counts, target counts, the score join)
     # would each replay the explode without the barrier
-    feats = materialize(dsir_features(docs, b=b))
-    terms = dsir_fit_terms(feats, b=b)
+    feats = materialize(dsir_features(docs))
+    terms = dsir_fit_terms(feats)
     return (feats.join(F.broadcast(terms), on="bucket")
             .groupBy("doc_id")
             .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_feats"),
                  F.expr("SUM(__term)").alias("logw")))
 
 
-def dsir_select(scored: DataFrame, frac: float = DSIR_FRAC) -> DataFrame:
-    """Top-``frac`` selection by (weight DESC, id ASC) — exact
+def dsir_select(scored: DataFrame) -> DataFrame:
+    """Top-``DSIR_FRAC`` selection by (weight DESC, id ASC) — exact
     deterministic resampling via the distributed two-pass rank; adds
     ``sel_rank`` and keeps only selected rows. k = ceil(frac * n)."""
 
@@ -163,7 +163,7 @@ def dsir_select(scored: DataFrame, frac: float = DSIR_FRAC) -> DataFrame:
     # logweights lineage — a whole extra pass over the feature stream
     scored = materialize(scored)
     k = scored.agg(F.expr(
-        f"CAST(CEIL(COUNT(*) * {frac!r}) AS BIGINT)").alias("__k"))
+        f"CAST(CEIL(COUNT(*) * {DSIR_FRAC!r}) AS BIGINT)").alias("__k"))
     ranked = global_rank(
         scored,
         [F.col("logw").desc(), F.col("doc_id").asc()],
@@ -172,9 +172,9 @@ def dsir_select(scored: DataFrame, frac: float = DSIR_FRAC) -> DataFrame:
             .filter("sel_rank <= __k").drop("__k"))
 
 
-def dsir_threshold(scored: DataFrame, frac: float = DSIR_FRAC) -> DataFrame:
+def dsir_threshold(scored: DataFrame) -> DataFrame:
     """1-row frame (__thr DECIMAL): the weight at rank
-    ceil(frac * n) under (weight DESC, id ASC) — the acceptance
+    ceil(DSIR_FRAC * n) under (weight DESC, id ASC) — the acceptance
     threshold a streaming DSIR ingest applies to every incoming
     batch (>= semantics: ties AT the threshold are all admitted,
     the natural streaming relaxation of exact top-k).
@@ -188,7 +188,7 @@ def dsir_threshold(scored: DataFrame, frac: float = DSIR_FRAC) -> DataFrame:
 
     scored = materialize(scored)
     k = scored.agg(F.expr(
-        f"CAST(CEIL(COUNT(*) * {frac!r}) AS BIGINT)").alias("__k"))
+        f"CAST(CEIL(COUNT(*) * {DSIR_FRAC!r}) AS BIGINT)").alias("__k"))
     ranked = global_rank(
         scored,
         [F.col("logw").desc(), F.col("doc_id").asc()],

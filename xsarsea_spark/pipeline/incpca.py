@@ -48,8 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xsarsea_spark.operators.exactsum import recombine_sql
-from xsarsea_spark.pipeline.linalg import (G_SCALE, MU_SCALE,
-                                           _moment_partials,
+from xsarsea_spark.pipeline.linalg import (EMB_DIM, G_SCALE, MU_SCALE,
+                                           PCA_ROUNDS, _moment_partials,
                                            _power_iter_kernel,
                                            _valid_vectors)
 
@@ -147,8 +147,7 @@ def drift_report(hist_state: DataFrame,
     )
 
 
-def pca_from_moments(state: DataFrame, d: int = 64,
-                     rounds: int = 12) -> DataFrame:
+def pca_from_moments(state: DataFrame) -> DataFrame:
     """(dim, loading, eigval) of the dominant covariance eigenvector
     from a raw-moment state — ``linalg.pca_power``'s output shape,
     computed WITHOUT touching the corpus (the state is the input).
@@ -173,9 +172,9 @@ def pca_from_moments(state: DataFrame, d: int = 64,
         "transform(array_sort(collect_list(struct(i, __row))),"
         " s -> s.__row)").alias("__G"))
     gmat = gmat.select(F.expr(
-        f"CASE WHEN size(__G) = {d} THEN __G END").alias("__G"))
+        f"CASE WHEN size(__G) = {EMB_DIM} THEN __G END").alias("__G"))
     eig = gmat.mapInPandas(
-        _power_iter_kernel(d, rounds),
+        _power_iter_kernel(EMB_DIM, PCA_ROUNDS),
         schema="__u array<double>, __ev double")
     return eig.select(
         F.posexplode("__u").alias("__p", "loading"),

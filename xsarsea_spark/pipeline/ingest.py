@@ -36,7 +36,8 @@ from xsarsea_spark.engine import (fs_exists, fs_list_names,
                                   load_kv_json, materialize,
                                   save_kv_json)
 from xsarsea_spark.operators.sketch import bloom_build, bloom_mark
-from xsarsea_spark.pipeline.dedup import (jaccard_verify, lsh_bands, lsh_probe,
+from xsarsea_spark.pipeline.dedup import (JACCARD_T, jaccard_verify,
+                                          lsh_bands, lsh_probe,
                                           minhash_signatures, shingle)
 from xsarsea_spark.sources.sinks import write_zordered
 
@@ -171,14 +172,12 @@ def ingest_neardup_batch(
     seen_dir: str,
     bands_dir: str,
     marker_path: str,
-    *,
-    n: int = 3,
-    k: int = 16,
-    threshold: float = 0.5,
 ) -> None:
     """Exactly-once NEAR-DUP ingest: one micro-batch of ``documents``
-    rows deduplicated by MinHash-LSH against everything already seen,
-    with the band table as the only persisted index.
+    rows deduplicated by MinHash-LSH (default ``shingle`` /
+    ``minhash_signatures``, Jaccard >= ``JACCARD_T``) against
+    everything already seen, with the band table as the only persisted
+    index.
 
     Persisted state (both under the stream's control):
 
@@ -225,8 +224,7 @@ def ingest_neardup_batch(
             if band_ids is not None:
                 missing = missing.join(band_ids, on="doc_id",
                                        how="left_anti")
-            heal = lsh_bands(minhash_signatures(
-                shingle(missing, n=n), k=k))
+            heal = lsh_bands(minhash_signatures(shingle(missing)))
             heal = materialize(heal)
             if heal.limit(1).count():
                 heal.write.mode("append").parquet(bands_dir)
@@ -240,8 +238,8 @@ def ingest_neardup_batch(
                            how="left_anti")
     batch = materialize(batch)
 
-    sh_b = shingle(batch, n=n)
-    bands_b = lsh_bands(minhash_signatures(sh_b, k=k))
+    sh_b = shingle(batch)
+    bands_b = lsh_bands(minhash_signatures(sh_b))
 
     state_bands = (spark.read.parquet(bands_dir)
                    if _parquet_files(spark, bands_dir) else None)
@@ -267,11 +265,11 @@ def ingest_neardup_batch(
             F.col("id_a").alias("doc_id")).distinct()
         sh_h = shingle(
             seen.select("doc_id", "text")
-            .join(hist_needed, on="doc_id", how="left_semi"), n=n)
+            .join(hist_needed, on="doc_id", how="left_semi"))
         sh = sh.unionByName(sh_h)
     drops = (
         jaccard_verify(cand, sh)
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_T)
         .select(F.col("id_b").alias("doc_id")).distinct()
     )
     out = materialize(

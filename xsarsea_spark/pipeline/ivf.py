@@ -38,12 +38,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xsarsea_spark.operators.exactsum import grid
-from xsarsea_spark.pipeline.similarity import _DOT, with_norm
+from xsarsea_spark.pipeline.similarity import KNN_K, _DOT, with_norm
 
 __all__ = ["train_ivf", "assign_cells", "ivf_search", "IVF_SCALE"]
 
 # Centroid-sum quantization grid (matches the oracle's DECIMAL(38,9)).
 IVF_SCALE = 9
+IVF_ITERS = 3     # Lloyd rounds of train_ivf
+IVF_PROBE = 4     # cells ivf_search probes per query
 
 
 def _seq_matmul(v: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -82,9 +84,9 @@ def _guarded_norms(c: np.ndarray) -> np.ndarray:
     return cn
 
 
-def train_ivf(corpus: DataFrame, n_centroids: int = 16,
-              iters: int = 5) -> np.ndarray:
-    """Deterministic Lloyd training; returns the centroid matrix."""
+def train_ivf(corpus: DataFrame, n_centroids: int = 16) -> np.ndarray:
+    """Deterministic Lloyd training (``IVF_ITERS`` rounds); returns the
+    centroid matrix."""
     dim = len(corpus.select("embedding").first()[0])
     init = (
         corpus.orderBy("vec_id").limit(n_centroids)
@@ -98,7 +100,7 @@ def train_ivf(corpus: DataFrame, n_centroids: int = 16,
         T.StructField("q", T.LongType()),
         T.StructField("n", T.LongType()),
     ])
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         # The assign kernel already holds the vectors, so each Arrow
         # batch emits per-cell partial sums directly (map-side
         # combine): n_cells x dim rows per batch instead of re-joining
@@ -186,12 +188,11 @@ def ivf_search(
     queries: DataFrame,
     indexed_corpus: DataFrame,
     centroids: np.ndarray,
-    k: int = 5,
-    n_probe: int = 4,
 ) -> DataFrame:
-    """Probe the n_probe nearest cells per query, exact cosine inside.
+    """Probe the ``IVF_PROBE`` nearest cells per query, exact cosine
+    inside.
 
-    Returns (query_id, rank, neighbor_id, cosine).
+    Returns (query_id, rank, neighbor_id, cosine), ``KNN_K`` per query.
     """
     spark = queries.sparkSession
     c = np.ascontiguousarray(centroids, dtype=np.float64)
@@ -207,10 +208,10 @@ def ivf_search(
             v = np.stack(
                 [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]])
             sim = _sim_to(v, c, cn)
-            # stable: a tie at the n_probe boundary keeps the lowest
+            # stable: a tie at the IVF_PROBE boundary keeps the lowest
             # cell, matching the oracle's ORDER BY sim DESC, cell
-            top = np.argsort(-sim, axis=1, kind="stable")[:, :n_probe]
-            ids = np.repeat(pdf["vec_id"].to_numpy(), n_probe)
+            top = np.argsort(-sim, axis=1, kind="stable")[:, :IVF_PROBE]
+            ids = np.repeat(pdf["vec_id"].to_numpy(), IVF_PROBE)
             yield pd.DataFrame({
                 "vec_id": ids,
                 "cell": top.ravel().astype(np.int32),
@@ -240,6 +241,6 @@ def ivf_search(
         F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("query_id", "rank", "neighbor_id", "cosine")
     )

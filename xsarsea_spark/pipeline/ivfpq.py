@@ -141,8 +141,7 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
                  coarse: np.ndarray, books: np.ndarray,
                  k: int = 5, n_probe: int = 3,
                  corpus: DataFrame | None = None,
-                 shortlist: int | None = None,
-                 broadcast_queries: bool = True) -> DataFrame:
+                 shortlist: int | None = None) -> DataFrame:
     """Cell-probed ADC top-k over the (cell, codes) index.
 
     Per query: the ``n_probe`` nearest coarse cells (fold-ordered L2,
@@ -150,9 +149,8 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
     from the RESIDUAL query ``q - centroid[cell]``, then every code
     row in a probed cell costs m table lookups. The probe tables are
     built by a distributed O(batch) Arrow pass and equi-joined on
-    ``cell`` — the query batch never lands on the driver (set
-    ``broadcast_queries=False`` to shuffle-join a huge batch instead
-    of broadcasting the tables). With ``corpus`` given, the
+    ``cell`` — the query batch never lands on the driver, and the
+    tables are broadcast. With ``corpus`` given, the
     FAISS-style refine reranks the ``shortlist`` (default 10*k) by
     exact squared L2 on the original vectors. Returns
     (query_id, rank, neighbor_id, adc_dist).
@@ -160,8 +158,7 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
     if corpus is not None:
         r = shortlist or 10 * k
         cand = ivfpq_search(queries, index, coarse, books, k=r,
-                            n_probe=n_probe,
-                            broadcast_queries=broadcast_queries)
+                            n_probe=n_probe)
         qv = queries.select(F.col("vec_id").alias("query_id"),
                             F.col("embedding").alias("__qv"))
         cv = corpus.select(F.col("vec_id").alias("neighbor_id"),
@@ -169,7 +166,7 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
         # the shortlist is batch-bounded (n_q * shortlist rows):
         # broadcast it so the corpus vectors stream through the
         # refine join instead of being shuffled by neighbor_id
-        cand = F.broadcast(cand) if broadcast_queries else cand
+        cand = F.broadcast(cand)
         exact = (
             cand.join(cv, on="neighbor_id")
             .join(F.broadcast(qv), on="query_id")
@@ -231,7 +228,7 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
 
     qtab = queries.select("vec_id", "embedding").mapInPandas(
         q_tables, schema=tab_schema)
-    qtab = F.broadcast(qtab) if broadcast_queries else qtab
+    qtab = F.broadcast(qtab)
     # equi-join on cell: a posting row meets exactly the queries that
     # probe its cell — the IVF pruning IS the join key, so with
     # cell-partitioned postings a probe reads only its cells' files.

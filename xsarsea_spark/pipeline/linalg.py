@@ -69,6 +69,10 @@ MU_SCALE = 9
 # one notch coarser than MU_SCALE so even the adversarial 1e6-coord
 # drift vector only loses precision, never overflows the BIGINT cast.
 G_SCALE = 6
+EMB_DIM = 64               # width of the embeddings table's vectors
+PCA_ROUNDS = 12            # power-iteration rounds per component
+PCA_COMPONENTS = 3         # components of pca_topk / pca_whiten
+OUTLIER_THRESHOLD = 9.0    # pca_outliers' maha2 cut: 3.0 per component
 
 
 class _Dialect:
@@ -198,18 +202,14 @@ def _valid_vectors(vecs: DataFrame, d: int,
         " AND NOT exists(__v, e -> e IS NULL OR isnan(e))"))
 
 
-def pca_state(
-    vecs: DataFrame,
-    d: int = 64,
-    rounds: int = 12,
-) -> DataFrame:
+def pca_state(vecs: DataFrame) -> DataFrame:
     """ONE-row PCA state of a vector corpus: the per-dim mean vector,
     the unit dominant eigenvector of the (grid-quantized) covariance,
     and its Rayleigh-quotient eigenvalue — columns
     (__mu array<double>, __u array<double>, __ev double). This is the
     broadcast-sized artifact downstream projection joins against.
     """
-    gmat, mu_row = _gram_state(vecs, d)
+    gmat, mu_row = _gram_state(vecs)
     # The iteration runs in ONE Arrow-batched kernel over the 1-row
     # Gram state — executor-side, no driver collect, no extra jobs.
     # Pure-expression alternatives fail structurally: chained
@@ -221,15 +221,16 @@ def pca_state(
     # the exact op sequence the DuckDB oracle's list_reduce CTEs
     # replay, so the result stays bit-equal across engines.
     eig = gmat.mapInPandas(
-        _power_iter_kernel(d, rounds),
+        _power_iter_kernel(EMB_DIM, PCA_ROUNDS),
         schema="__u array<double>, __ev double")
     return F.broadcast(eig).crossJoin(F.broadcast(mu_row)) \
         .select("__mu", "__u", "__ev")
 
 
-def _gram_state(vecs: DataFrame, d: int):
+def _gram_state(vecs: DataFrame):
     """(1-row Gram matrix, 1-row mean vector) of a corpus — the
     bounded state every PCA entry point builds on."""
+    d = EMB_DIM
     base = _valid_vectors(vecs, d)
 
     dims = base.select(F.posexplode("__v").alias("__p", "__x")) \
@@ -285,13 +286,8 @@ def _gram_state(vecs: DataFrame, d: int):
     return gmat, mu_row
 
 
-def pca_topk(
-    vecs: DataFrame,
-    d: int = 64,
-    rounds: int = 12,
-    n_comp: int = 3,
-) -> DataFrame:
-    """Top ``n_comp`` principal components by power iteration with
+def pca_topk(vecs: DataFrame) -> DataFrame:
+    """Top ``PCA_COMPONENTS`` principal components by power iteration with
     Hotelling deflation: after each component, the working matrix
     loses its captured subspace (G <- G - ev * u u') and the next
     iteration runs on the residual — all inside the same 1-row Arrow
@@ -299,7 +295,7 @@ def pca_topk(
     extra exchanges. Returns (component, dim, loading, eigval), one
     row per (component, dimension).
     """
-    st, _ = _topk_state(vecs, d, rounds, n_comp)
+    st, _ = _topk_state(vecs)
     return st.select(
         "component",
         F.posexplode("__u").alias("__p", "loading"),
@@ -311,12 +307,7 @@ def pca_topk(
     )
 
 
-def pca_whiten(
-    vecs: DataFrame,
-    d: int = 64,
-    rounds: int = 12,
-    n_comp: int = 3,
-) -> DataFrame:
+def pca_whiten(vecs: DataFrame) -> DataFrame:
     """PCA-whitened k-dim projection: for every valid vector and
     component, score = (x - mu) . u_c and whitened = score /
     sqrt(ev_c) — unit-variance coordinates along the captured
@@ -325,9 +316,9 @@ def pca_whiten(
     through one order-fixed fold per (vector, component) — n * k
     output rows, no exchange on the scoring pass.
     """
-    st, mu_row = _topk_state(vecs, d, rounds, n_comp)
+    st, mu_row = _topk_state(vecs)
     state = F.broadcast(st).crossJoin(F.broadcast(mu_row))
-    base = _valid_vectors(vecs, d, extra=["vec_id"])
+    base = _valid_vectors(vecs, EMB_DIM, extra=["vec_id"])
     return base.crossJoin(F.broadcast(state)).select(
         F.col("vec_id"), "component",
         F.expr(
@@ -339,11 +330,7 @@ def pca_whiten(
     ).withColumn("whitened", F.expr("score / sqrt(eigval)"))
 
 
-def pca_power(
-    vecs: DataFrame,
-    d: int = 64,
-    rounds: int = 12,
-) -> DataFrame:
+def pca_power(vecs: DataFrame) -> DataFrame:
     """Top principal component of a vector corpus.
 
     Returns (dim, loading, eigval): the unit dominant eigenvector of
@@ -351,7 +338,7 @@ def pca_power(
     (1-indexed), with the Rayleigh-quotient eigenvalue — the variance
     captured by PC1 — repeated on each row.
     """
-    state = pca_state(vecs, d=d, rounds=rounds)
+    state = pca_state(vecs)
     return state.select(
         F.posexplode("__u").alias("__p", "loading"),
         F.col("__ev").alias("eigval"),
@@ -361,11 +348,7 @@ def pca_power(
     )
 
 
-def pca_project(
-    vecs: DataFrame,
-    d: int = 64,
-    rounds: int = 12,
-) -> DataFrame:
+def pca_project(vecs: DataFrame) -> DataFrame:
     """Per-vector PC1 score: (x - mu) . u for every valid corpus
     vector — the column you rank/filter/bucket a corpus by after PCA.
 
@@ -375,8 +358,8 @@ def pca_project(
     embarrassingly parallel at any corpus size. Ops are the same
     order-fixed folds as the state computation, hence oracle-exact.
     """
-    state = pca_state(vecs, d=d, rounds=rounds)
-    base = _valid_vectors(vecs, d, extra=["vec_id"])
+    state = pca_state(vecs)
+    base = _valid_vectors(vecs, EMB_DIM, extra=["vec_id"])
     return base.crossJoin(F.broadcast(state)).select(
         F.col("vec_id"),
         F.expr(
@@ -516,35 +499,29 @@ def _power_topk_kernel(d: int, rounds: int, n_comp: int):
     return kernel
 
 
-def _topk_state(vecs: DataFrame, d: int, rounds: int, n_comp: int):
+def _topk_state(vecs: DataFrame):
     """(k-row component state, 1-row mean) — both broadcast-sized."""
-    gmat, mu_row = _gram_state(vecs, d)
+    gmat, mu_row = _gram_state(vecs)
     st = gmat.mapInPandas(
-        _power_topk_kernel(d, rounds, n_comp),
+        _power_topk_kernel(EMB_DIM, PCA_ROUNDS, PCA_COMPONENTS),
         schema="component int, __u array<double>, __ev double")
     return st, mu_row
 
 
-def pca_outliers(
-    vecs: DataFrame,
-    d: int = 64,
-    rounds: int = 12,
-    n_comp: int = 3,
-    threshold: float = 9.0,
-) -> DataFrame:
+def pca_outliers(vecs: DataFrame) -> DataFrame:
     """Mahalanobis-style outlier scoring in the captured PCA
     subspace: maha2 = sum over components of whitened^2 (each
     whitened coordinate is unit-variance, so maha2 is chi^2-shaped
-    with ``n_comp`` degrees of freedom; the default threshold 9.0 is
-    3.0 per captured direction). Squared terms pass the QTRUNC
+    with ``PCA_COMPONENTS`` degrees of freedom), flagged above
+    ``OUTLIER_THRESHOLD``. Squared terms pass the QTRUNC
     barrier and accumulate in DECIMAL, so the score — and therefore
     the flag — is order-independent and engine-exact.
 
     Scale: everything downstream of the whitening state is one
     zero-exchange projection plus a per-vector hash agg over
-    ``n_comp`` rows.
+    ``PCA_COMPONENTS`` rows.
     """
-    w = pca_whiten(vecs, d=d, rounds=rounds, n_comp=n_comp)
+    w = pca_whiten(vecs)
     # same floor-truncation barrier the suite's QTRUNC uses (whitened
     # is O(1), so scale 9 stays far inside the exact BIGINT range);
     # whitened^2 is never NaN for valid vectors, so no NaN branch
@@ -554,5 +531,6 @@ def pca_outliers(
         w.select("vec_id", F.expr(term).alias("__t"))
         .groupBy("vec_id")
         .agg(F.expr(decimal_sum("__t", 9)).alias("maha2"))
-        .withColumn("is_outlier", F.col("maha2") > F.lit(threshold))
+        .withColumn("is_outlier",
+                    F.col("maha2") > F.lit(OUTLIER_THRESHOLD))
     )

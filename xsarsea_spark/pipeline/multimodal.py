@@ -35,6 +35,12 @@ __all__ = ["attach_payload", "extract_features", "decode_image",
            "decode_features", "ahash_features", "phash_features",
            "dct_int", "phash_neardup", "phash_pairs"]
 
+N_BINS = 16                    # byte-histogram bins (high nibble)
+FRAME_BYTES, FRAME_STRIDE = 256, 2   # sample_frames: frame size, step
+GRID_W, GRID_H = 8, 4          # aHash/pHash block grid
+# pHash near-dup: bands x bits per band, Hamming cut (< bands)
+PND_BANDS, PND_BITS, PND_MAX_HAMMING = 4, 8, 3
+
 
 def attach_payload(docs: DataFrame) -> DataFrame:
     """Wrap documents as multimodal rows: (doc_id, media_type, payload
@@ -146,7 +152,7 @@ _FEAT_SCHEMA = T.StructType([
 ])
 
 
-def extract_features(mm: DataFrame, n_bins: int = 16) -> DataFrame:
+def extract_features(mm: DataFrame) -> DataFrame:
     """Arrow-batched byte-level feature extraction over the binary
     payload column: length, 16-bin byte histogram (normalized), byte
     entropy, md5 digest, and deterministic fake decode dimensions
@@ -159,7 +165,7 @@ def extract_features(mm: DataFrame, n_bins: int = 16) -> DataFrame:
                 if payload is None:     # NULL text -> NULL payload
                     continue
                 b = np.frombuffer(bytes(payload), dtype=np.uint8)
-                hist = np.bincount(b >> 4, minlength=n_bins).astype(
+                hist = np.bincount(b >> 4, minlength=N_BINS).astype(
                     np.float64)
                 tot = max(len(b), 1)
                 p = hist / tot
@@ -296,11 +302,10 @@ _FRAME_SCHEMA = T.StructType([
 ])
 
 
-def sample_frames(mm: DataFrame, frame_bytes: int = 256,
-                  stride: int = 2) -> DataFrame:
+def sample_frames(mm: DataFrame) -> DataFrame:
     """Video-style frame sampling over the opaque payload: the blob is
-    treated as ``n_bytes // frame_bytes`` fixed-size frames, every
-    ``stride``-th frame is sliced out in the Arrow batch and reduced
+    treated as ``n_bytes // FRAME_BYTES`` fixed-size frames, every
+    ``FRAME_STRIDE``-th frame is sliced out in the Arrow batch and reduced
     to its md5 digest (the stand-in for a real decode+thumbnail).
 
     The kernel IS the production batch shape — binary slicing inside
@@ -317,9 +322,9 @@ def sample_frames(mm: DataFrame, frame_bytes: int = 256,
                 if payload is None:     # NULL text -> NULL payload
                     continue
                 b = bytes(payload)
-                n_frames = len(b) // frame_bytes
-                for i in range(0, n_frames, stride):
-                    fr = b[i * frame_bytes:(i + 1) * frame_bytes]
+                n_frames = len(b) // FRAME_BYTES
+                for i in range(0, n_frames, FRAME_STRIDE):
+                    fr = b[i * FRAME_BYTES:(i + 1) * FRAME_BYTES]
                     rows.append(
                         (int(doc_id), i,
                          hashlib.md5(fr).hexdigest()))
@@ -338,11 +343,22 @@ _AHASH_SCHEMA = T.StructType([
 ])
 
 
-def ahash_features(mm: DataFrame, grid_w: int = 8,
-                   grid_h: int = 4) -> DataFrame:
+def _grid_blocks(img: np.ndarray) -> np.ndarray:
+    """(GRID_H, GRID_W) int64 gray (r+g+b) block sums of an image whose
+    dims divide the grid."""
+    h, w = img.shape[:2]
+    if h % GRID_H or w % GRID_W:
+        raise ValueError(
+            f"image {w}x{h} not divisible by grid {GRID_W}x{GRID_H}")
+    g = img.astype(np.int64).sum(axis=2)
+    return g.reshape(GRID_H, h // GRID_H, GRID_W, w // GRID_W) \
+        .sum(axis=(1, 3))
+
+
+def ahash_features(mm: DataFrame) -> DataFrame:
     """Perceptual average-hash over REAL decoded images, entirely in
     integer arithmetic: per-pixel gray sums (r+g+b, int64), block
-    sums over a (grid_h x grid_w) partition, and bit k set iff block
+    sums over the (GRID_H x GRID_W) partition, and bit k set iff block
     k's mean exceeds the global mean — compared as
     ``block_sum * n_blocks > global_sum`` (exact integers, no
     division, no floats), then packed LSB-first into one BIGINT.
@@ -354,22 +370,15 @@ def ahash_features(mm: DataFrame, grid_w: int = 8,
     containers do: 16x8 and 16x4)."""
 
     def gen(batches):
-        nb = grid_h * grid_w
+        nb = GRID_H * GRID_W
         shifts = np.arange(nb, dtype=np.int64)
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 img = decode_image(bytes(payload))
                 h, w = img.shape[:2]
-                if h % grid_h or w % grid_w:
-                    raise ValueError(
-                        f"image {w}x{h} not divisible by grid "
-                        f"{grid_w}x{grid_h}")
-                g = img.astype(np.int64).sum(axis=2)
-                bh, bw = h // grid_h, w // grid_w
-                blocks = g.reshape(grid_h, bh, grid_w, bw) \
-                    .sum(axis=(1, 3)).reshape(-1)
-                total = int(g.sum())
+                blocks = _grid_blocks(img).reshape(-1)
+                total = int(blocks.sum())
                 bits = (blocks * nb > total).astype(np.int64)
                 ah = int((bits << shifts).sum())
                 rows.append((int(doc_id), int(w), int(h), ah))
@@ -417,15 +426,14 @@ _PHASH_SCHEMA = T.StructType([
 ])
 
 
-def phash_features(mm: DataFrame, grid_w: int = 8,
-                   grid_h: int = 4) -> DataFrame:
+def phash_features(mm: DataFrame) -> DataFrame:
     """DCT perceptual hash (pHash) over REAL decoded images, entirely
     in exact int64 arithmetic — the image-dedup fingerprint used at
     scale, robust where aHash is weak (uniform brightness shifts and
     positive contrast scaling leave it EXACTLY unchanged, see below).
 
-    Pipeline per image: integer gray block sums on the (grid_h x
-    grid_w) partition (as aHash), then a 2-D fixed-point DCT
+    Pipeline per image: integer gray block sums on the (GRID_H x
+    GRID_W) partition (as aHash), then a 2-D fixed-point DCT
     ``X = C_gh @ B @ C_gw.T`` (:func:`dct_int` int64 matrices —
     integer matmul, order-independent, no floats anywhere), drop the
     DC coefficient, median = the 16th-smallest of the 31 AC
@@ -442,9 +450,9 @@ def phash_features(mm: DataFrame, grid_w: int = 8,
     extends the engine-brief multimodal family next to
     :func:`ahash_features`. Same grid-divisibility contract as aHash.
     """
-    c_h = dct_int(grid_h)
-    c_w = dct_int(grid_w)
-    n_ac = grid_h * grid_w - 1
+    c_h = dct_int(GRID_H)
+    c_w = dct_int(GRID_W)
+    n_ac = GRID_H * GRID_W - 1
     shifts = np.arange(1, n_ac + 1, dtype=np.int64)
 
     def gen(batches):
@@ -453,15 +461,7 @@ def phash_features(mm: DataFrame, grid_w: int = 8,
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 img = decode_image(bytes(payload))
                 h, w = img.shape[:2]
-                if h % grid_h or w % grid_w:
-                    raise ValueError(
-                        f"image {w}x{h} not divisible by grid "
-                        f"{grid_w}x{grid_h}")
-                g = img.astype(np.int64).sum(axis=2)
-                bh, bw = h // grid_h, w // grid_w
-                blocks = g.reshape(grid_h, bh, grid_w, bw) \
-                    .sum(axis=(1, 3))
-                x = (c_h @ blocks @ c_w.T).reshape(-1)
+                x = (c_h @ _grid_blocks(img) @ c_w.T).reshape(-1)
                 ac = x[1:]
                 med = int(np.sort(ac)[n_ac // 2])
                 ph = int(((ac > med).astype(np.int64) << shifts).sum())
@@ -473,17 +473,25 @@ def phash_features(mm: DataFrame, grid_w: int = 8,
         gen, schema=_PHASH_SCHEMA)
 
 
-def phash_neardup(ph: DataFrame, n_bands: int = 4,
-                  band_bits: int = 8,
-                  max_hamming: int = 3) -> DataFrame:
+def _band_keys(ph: DataFrame) -> DataFrame:
+    """(doc_id, phash, b, key): one row per pHash band value."""
+    bands = ph.select(
+        "doc_id", "phash",
+        F.explode(F.expr(f"sequence(0, {PND_BANDS - 1})")).alias("b"))
+    return bands.withColumn(
+        "key", F.expr(f"shiftright(phash, {PND_BITS} * b)"
+                      f" & {(1 << PND_BITS) - 1}"))
+
+
+def phash_neardup(ph: DataFrame) -> DataFrame:
     """Per-image near-duplicate profile from a pHash frame
     (``phash_features`` output): banded Hamming candidate join +
     exact verify — the image twin of the MinHash-LSH text path.
 
-    The hash splits into ``n_bands`` contiguous ``band_bits``-bit
+    The hash splits into ``PND_BANDS`` contiguous ``PND_BITS``-bit
     bands; candidate pairs share at least one band VALUE (an
     equality join on (band, key) — never all-pairs). Pigeonhole
-    guarantees recall: ``max_hamming`` < n_bands differing bits
+    guarantees recall: ``PND_MAX_HAMMING`` < bands differing bits
     cannot dirty every band, so every pair within the threshold is a
     candidate. Hamming distance is ``bit_count(a ^ b)`` on the
     candidates only.
@@ -492,16 +500,11 @@ def phash_neardup(ph: DataFrame, n_bands: int = 4,
     n_neardups, min_hamming) with min_hamming = -1 when the image
     shares no band with anything — all BIGINT, bit-replicable.
 
-    Scale: the band table is n_images * n_bands rows of (band, key);
+    Scale: the band table is n_images * bands rows of (band, key);
     the join is hash-partitioned on the band key like every LSH
     probe in the engine; verification touches candidates only.
     """
-    bands = ph.select(
-        "doc_id", "phash",
-        F.explode(F.expr(f"sequence(0, {n_bands - 1})")).alias("b"))
-    k = bands.withColumn(
-        "key", F.expr(f"shiftright(phash, {band_bits} * b)"
-                      f" & {(1 << band_bits) - 1}"))
+    k = _band_keys(ph)
     a = k.selectExpr("b", "key", "doc_id AS da", "phash AS pa")
     x = k.selectExpr("b", "key", "doc_id AS db", "phash AS pb")
     cand = (a.join(x, on=["b", "key"])
@@ -510,7 +513,7 @@ def phash_neardup(ph: DataFrame, n_bands: int = 4,
     agg = cand.groupBy("da").agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_candidates"),
         F.expr(f"CAST(SUM(CASE WHEN bit_count(pa ^ pb)"
-               f" <= {max_hamming} THEN 1 ELSE 0 END) AS BIGINT)")
+               f" <= {PND_MAX_HAMMING} THEN 1 ELSE 0 END) AS BIGINT)")
         .alias("n_neardups"),
         F.expr("CAST(MIN(bit_count(pa ^ pb)) AS BIGINT)")
         .alias("min_hamming"))
@@ -523,9 +526,7 @@ def phash_neardup(ph: DataFrame, n_bands: int = 4,
                         "COALESCE(min_hamming, -1L) AS min_hamming"))
 
 
-def phash_pairs(ph: DataFrame, n_bands: int = 4,
-                band_bits: int = 8,
-                max_hamming: int = 3) -> DataFrame:
+def phash_pairs(ph: DataFrame) -> DataFrame:
     """Image near-duplicate PAIRS from a pHash frame: the banded
     Hamming candidate join of :func:`phash_neardup`, kept at pair
     grain — (id_a, id_b, hamming) with id_a < id_b and hamming
@@ -533,15 +534,10 @@ def phash_pairs(ph: DataFrame, n_bands: int = 4,
     variant; candidates dedupe BEFORE the bit_count verify so each
     pair is scored once however many bands it collides in.
 
-    Scale: band table is n_images * n_bands rows hash-joined on the
+    Scale: band table is n_images * bands rows hash-joined on the
     (band, key) pair — the standard LSH probe shape, never all-pairs.
     """
-    bands = ph.select(
-        "doc_id", "phash",
-        F.explode(F.expr(f"sequence(0, {n_bands - 1})")).alias("b"))
-    k = bands.withColumn(
-        "key", F.expr(f"shiftright(phash, {band_bits} * b)"
-                      f" & {(1 << band_bits) - 1}"))
+    k = _band_keys(ph)
     a = k.selectExpr("b", "key", "doc_id AS id_a", "phash AS pa")
     x = k.selectExpr("b", "key", "doc_id AS id_b", "phash AS pb")
     cand = (a.join(x, on=["b", "key"])
@@ -550,4 +546,4 @@ def phash_pairs(ph: DataFrame, n_bands: int = 4,
     return (cand.selectExpr(
         "id_a", "id_b",
         "CAST(bit_count(pa ^ pb) AS BIGINT) AS hamming")
-        .filter(f"hamming <= {max_hamming}"))
+        .filter(f"hamming <= {PND_MAX_HAMMING}"))

@@ -33,29 +33,28 @@ from xsarsea_spark.pipeline.text import HASH40_SQL
 __all__ = ["pack_sequences", "pack_sequences_from_lengths",
            "mixture_sample", "pack_best_fit"]
 
+# most sequences one document may cross (validate ``seq_len`` against
+# the longest document upstream)
+MAX_SPAN = 8
 
-def pack_sequences(docs: DataFrame, seq_len: int,
-                   max_span: int = 8) -> DataFrame:
+
+def pack_sequences(docs: DataFrame, seq_len: int) -> DataFrame:
     """Concat-then-chunk packing: returns one row per (document,
     sequence) intersection with the exact token spans —
-    (doc_id, seq_id, doc_offset, seq_offset, span_len).
-
-    ``max_span`` bounds how many sequences one document may cross
-    (validate ``seq_len`` against the longest document upstream).
+    (doc_id, seq_id, doc_offset, seq_offset, span_len); a document
+    crosses at most ``MAX_SPAN`` sequences.
     """
     toks = docs.select(
         "doc_id",
         F.expr("size(split(text, ' '))").cast("long")
         .alias("__n"),
     )
-    return pack_sequences_from_lengths(toks, seq_len, len_col="__n",
-                                       max_span=max_span)
+    return pack_sequences_from_lengths(toks, seq_len, len_col="__n")
 
 
 def pack_sequences_from_lengths(lengths: DataFrame, seq_len: int,
                                 id_col: str = "doc_id",
-                                len_col: str = "n_tokens",
-                                max_span: int = 8) -> DataFrame:
+                                len_col: str = "n_tokens") -> DataFrame:
     """:func:`pack_sequences` over PRECOMPUTED lengths — the core
     layout arithmetic, reusable with tokenizer-derived token counts
     (e.g. BPE-encoded lengths) instead of whitespace words."""
@@ -70,7 +69,7 @@ def pack_sequences_from_lengths(lengths: DataFrame, seq_len: int,
         running_sums={"__cum_end": "__n"},
     ).drop("__rk").withColumn(
         "__cum_before", F.col("__cum_end") - F.col("__n"))
-    spans = docs.sparkSession.range(max_span).select(
+    spans = docs.sparkSession.range(MAX_SPAN).select(
         F.col("id").cast("long").alias("__k"))
     out = (
         laid.crossJoin(F.broadcast(spans))

@@ -138,8 +138,9 @@ def _chunk(ctype: bytes, data: bytes) -> bytes:
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
 
 
-def encode_png(img: np.ndarray, level: int = 6) -> bytes:
-    """(h, w, 3) or (h, w) uint8 -> PNG bytes (filter 0, lossless)."""
+def encode_png(img: np.ndarray) -> bytes:
+    """(h, w, 3) or (h, w) uint8 -> PNG bytes (filter 0, zlib level 6,
+    lossless)."""
     gray = img.ndim == 2
     h, w = img.shape[:2]
     color = 0 if gray else 2
@@ -148,5 +149,5 @@ def encode_png(img: np.ndarray, level: int = 6) -> bytes:
     return (_SIG
             + _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color,
                                           0, 0, 0))
-            + _chunk(b"IDAT", zlib.compress(raw, level))
+            + _chunk(b"IDAT", zlib.compress(raw, 6))
             + _chunk(b"IEND", b""))

@@ -162,8 +162,7 @@ def encode_pq(corpus: DataFrame, books: np.ndarray) -> DataFrame:
 def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
               k: int = 5,
               corpus: DataFrame | None = None,
-              shortlist: int | None = None,
-              broadcast_queries: bool = True) -> DataFrame:
+              shortlist: int | None = None) -> DataFrame:
     """ADC top-k: per query one exact (m x K) subspace distance table,
     corpus distances are m integer-indexed lookups into it.
 
@@ -176,9 +175,7 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
     JVM-side ``aggregate`` fold — the corpus codes never cross into
     Python. The top-k rank filter collapses to WindowGroupLimit, so
     each scan partition ships at most k candidates per query into
-    the final exchange. For a query batch too big to broadcast, pass
-    ``broadcast_queries=False`` and the same plan runs as a shuffle
-    join.
+    the final exchange.
 
     With ``corpus`` given, runs the FAISS-style refine stage: ADC
     produces a ``shortlist`` (default 10*k) per query, the original
@@ -191,8 +188,7 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
     """
     if corpus is not None:
         r = shortlist or 10 * k
-        cand = pq_search(queries, codes, books, k=r,
-                         broadcast_queries=broadcast_queries)
+        cand = pq_search(queries, codes, books, k=r)
         qv = queries.select(F.col("vec_id").alias("query_id"),
                             F.col("embedding").alias("__qv"))
         cv = corpus.select(F.col("vec_id").alias("neighbor_id"),
@@ -200,7 +196,7 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
         # the shortlist is batch-bounded (n_q * shortlist rows):
         # broadcast it so the corpus vectors stream through the
         # refine join instead of being shuffled by neighbor_id
-        cand = F.broadcast(cand) if broadcast_queries else cand
+        cand = F.broadcast(cand)
         exact = (
             cand.join(cv, on="neighbor_id")
             .join(F.broadcast(qv), on="query_id")
@@ -244,7 +240,7 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
 
     qtab = queries.select("vec_id", "embedding").mapInPandas(
         q_tables, schema=tab_schema)
-    qtab = F.broadcast(qtab) if broadcast_queries else qtab
+    qtab = F.broadcast(qtab)
     # JVM-side ADC: m table lookups folded ascending-s with a 0d
     # init — the same add order as the oracle's list_reduce and the
     # old Arrow kernel, so values are bit-identical. The codes table

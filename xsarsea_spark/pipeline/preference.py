@@ -107,9 +107,7 @@ def _score_case(scores: dict[str, float], col: str,
     return f"CASE {col} {cases}{tail} END"
 
 
-def bt_step(pm: DataFrame, scores: dict[str, float],
-            lr: float = BT_LR, qk: int = BT_QK,
-            scale: int = BT_SCALE) -> dict[str, float]:
+def bt_step(pm: DataFrame, scores: dict[str, float]) -> dict[str, float]:
     """ONE full BT gradient step over the match matrix ``pm``: a
     signed explode of the on-grid per-pair residual, one grouped
     exact DECIMAL aggregation, an arm-count-sized collect."""
@@ -118,17 +116,17 @@ def bt_step(pm: DataFrame, scores: dict[str, float],
     sb = _score_case(scores, "arm_b")
     p = QTRUNC(
         f"CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
-        f" + exp(-(({sa}) - ({sb}))))", qk)
+        f" + exp(-(({sa}) - ({sb}))))", BT_QK)
     qc = QTRUNC(
         f"CAST(wins_a AS DOUBLE) - CAST(n_matches AS DOUBLE)"
-        f" * ({p})", scale)
+        f" * ({p})", BT_SCALE)
     signed = pm.selectExpr(
         "arm_a", "arm_b", "n_matches", f"{qc} AS __qc"
     ).selectExpr(
         "stack(2, arm_a, __qc, arm_b, -__qc) AS (arm, qc)",
         "n_matches")
     rows = (signed.groupBy("arm")
-            .agg(F.expr(DSUM("qc", scale)).alias("sg"),
+            .agg(F.expr(DSUM("qc", BT_SCALE)).alias("sg"),
                  F.expr("CAST(SUM(n_matches) AS BIGINT)")
                  .alias("nm"))
             .collect())
@@ -136,21 +134,20 @@ def bt_step(pm: DataFrame, scores: dict[str, float],
     out = dict(scores)
     for r in rows:
         # same IEEE tree as the oracle: s + lr * (sg / total)
-        out[r["arm"]] = scores[r["arm"]] + lr * (r["sg"] / total)
+        out[r["arm"]] = scores[r["arm"]] + BT_LR * (r["sg"] / total)
     return out
 
 
-def train_bradley_terry(pm: DataFrame, rounds: int = BT_ROUNDS,
-                        lr: float = BT_LR) -> dict[str, float]:
-    """Full BT fit: ``rounds`` gradient steps from zero-initialized
+def train_bradley_terry(pm: DataFrame) -> dict[str, float]:
+    """Full BT fit: ``BT_ROUNDS`` gradient steps from zero-initialized
     scores over a materialized match matrix."""
     arms = sorted({r["arm_a"] for r in pm.select("arm_a").distinct()
                    .collect()}
                   | {r["arm_b"] for r in pm.select("arm_b").distinct()
                      .collect()})
     scores = {a: 0.0 for a in arms}
-    for _ in range(rounds):
-        scores = bt_step(pm, scores, lr=lr)
+    for _ in range(BT_ROUNDS):
+        scores = bt_step(pm, scores)
     return scores
 
 
@@ -189,19 +186,17 @@ def period_preference_matrix(events: DataFrame,
             .filter(F.col("n_matches") > 0))
 
 
-def elo_step(pm_slice: DataFrame, ratings: dict[str, float],
-             k: float = ELO_K, init: float = ELO_INIT,
-             qk: int = BT_QK,
-             scale: int = BT_SCALE) -> dict[str, float]:
+def elo_step(pm_slice: DataFrame,
+             ratings: dict[str, float]) -> dict[str, float]:
     """ONE Elo rating-period update over a match-matrix slice:
 
-        E_ab = QTRUNC(1 / (1 + 10^((r_b - r_a) / 400)), qk)
-        qc   = QTRUNC(wins_a - n_ab * E_ab, scale)
-        r'_t = r_t + K * DSUM(+qc for t=a, -qc for t=b)
+        E_ab = QTRUNC(1 / (1 + 10^((r_b - r_a) / 400)), BT_QK)
+        qc   = QTRUNC(wins_a - n_ab * E_ab, BT_SCALE)
+        r'_t = r_t + ELO_K * DSUM(+qc for t=a, -qc for t=b)
 
     One grouped exact-DECIMAL aggregation, arm-count-sized collect —
     the same scale contract as :func:`bt_step`. Arms first seen in
-    this slice enter at ``init`` (identical to a full-history init,
+    this slice enter at ``ELO_INIT`` (identical to a full-history init,
     since untouched ratings never move). The batch unit of both the
     periodized trainer (:func:`elo_periods`) and the streaming
     ingest."""
@@ -209,43 +204,39 @@ def elo_step(pm_slice: DataFrame, ratings: dict[str, float],
     # ONE job: the ELSE branch scores unseen arms at init, so the
     # batch needs no arm-discovery pass, and the grouped-agg result
     # rows ARE the batch's arm set
-    ra = _score_case(ratings, "arm_a", default=init)
-    rb = _score_case(ratings, "arm_b", default=init)
+    ra = _score_case(ratings, "arm_a", default=ELO_INIT)
+    rb = _score_case(ratings, "arm_b", default=ELO_INIT)
     e = QTRUNC(
         f"CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
         f" + pow(CAST(10.0 AS DOUBLE),"
-        f" (({rb}) - ({ra})) / CAST(400.0 AS DOUBLE)))", qk)
+        f" (({rb}) - ({ra})) / CAST(400.0 AS DOUBLE)))", BT_QK)
     qc = QTRUNC(
         f"CAST(wins_a AS DOUBLE) - CAST(n_matches AS DOUBLE)"
-        f" * ({e})", scale)
+        f" * ({e})", BT_SCALE)
     rows = (pm_slice
             .selectExpr("arm_a", "arm_b", f"{qc} AS __qc")
             .selectExpr("stack(2, arm_a, __qc, arm_b, -__qc)"
                         " AS (arm, qc)")
             .groupBy("arm")
-            .agg(F.expr(DSUM("qc", scale)).alias("d"))
+            .agg(F.expr(DSUM("qc", BT_SCALE)).alias("d"))
             .collect())
     out = dict(ratings)
     for r in rows:
         # same IEEE tree as the oracle: r + K * d
-        out[r["arm"]] = out.get(r["arm"], init) + k * r["d"]
+        out[r["arm"]] = out.get(r["arm"], ELO_INIT) + ELO_K * r["d"]
     return out
 
 
-def elo_periods(pm: DataFrame, periods: int = ELO_PERIODS,
-                k: float = ELO_K, init: float = ELO_INIT,
-                qk: int = BT_QK,
-                scale: int = BT_SCALE) -> dict[str, float]:
+def elo_periods(pm: DataFrame) -> dict[str, float]:
     """Sequential rating-period Elo (the Glicko-style batch regime:
     ratings frozen within a period, updated once per period) —
-    ``periods`` chained :func:`elo_step` calls over the period
+    ``ELO_PERIODS`` chained :func:`elo_step` calls over the period
     slices of the match matrix."""
     arms = sorted(
         {r["arm_a"] for r in pm.select("arm_a").distinct().collect()}
         | {r["arm_b"] for r in
            pm.select("arm_b").distinct().collect()})
-    ratings = {a: init for a in arms}
-    for p in range(periods):
-        ratings = elo_step(pm.filter(F.col("p") == p), ratings,
-                           k=k, init=init, qk=qk, scale=scale)
+    ratings = {a: ELO_INIT for a in arms}
+    for p in range(ELO_PERIODS):
+        ratings = elo_step(pm.filter(F.col("p") == p), ratings)
     return ratings

@@ -31,6 +31,8 @@ __all__ = ["stratified_sample", "source_token_cap",
            "unimax_language_cap", "unimax_enforce", "contamination_report",
            "dup_components"]
 
+_MAX_ROUNDS = 20    # dup_components' label-propagation round cap
+
 
 def stratified_sample(docs: DataFrame, n_per_stratum: int) -> DataFrame:
     """Deterministic per-stratum sample: the ``n_per_stratum`` docs
@@ -187,19 +189,20 @@ def unimax_language_cap(per_doc: DataFrame, budget: int) -> DataFrame:
                 " OR __gcum - __off = __ntok AS kept"))
 
 
-def contamination_report(docs: DataFrame, benchmark: DataFrame,
-                         n: int = 8) -> DataFrame:
+def contamination_report(docs: DataFrame, benchmark: DataFrame
+                         ) -> DataFrame:
     """Benchmark-contamination check: fraction of each corpus
-    document's word ``n``-grams that appear in ANY benchmark document.
+    document's word ``SHINGLE_N``-grams (its shingles) that appear in
+    ANY benchmark document.
 
     Returns (doc_id, n_grams, n_contaminated, contamination) for
     contaminated docs only. The benchmark shingle set is distinct and
     broadcast; the corpus side streams through one join + one
     aggregation — never a cross join.
     """
-    corpus_sh = shingle(docs, n=n)
+    corpus_sh = shingle(docs)
     bench_sh = (
-        shingle(benchmark, n=n)
+        shingle(benchmark)
         .select("shingle").distinct()
     )
     totals = corpus_sh.groupBy("doc_id").agg(
@@ -241,12 +244,11 @@ def _dsu_components(edge_rows, spark) -> DataFrame:
     return spark.createDataFrame(out, "doc_id LONG, component LONG")
 
 
-def dup_components(pairs: DataFrame, max_rounds: int = 20,
-                   id_a: str = "id_a", id_b: str = "id_b",
+def dup_components(pairs: DataFrame,
                    local_threshold: int = 2_000_000) -> DataFrame:
-    """Resolve near-duplicate pairs into clusters: connected
-    components by min-label propagation, returning (doc_id, component)
-    with component = the smallest doc id in the cluster.
+    """Resolve near-duplicate (id_a, id_b) pairs into clusters:
+    connected components by min-label propagation, returning (doc_id,
+    component) with component = the smallest doc id in the cluster.
 
     Hybrid strategy (the GraphFrames/GraphX pattern): the symmetric
     edge list is materialized once (localCheckpoint), and if it is
@@ -259,14 +261,16 @@ def dup_components(pairs: DataFrame, max_rounds: int = 20,
     (label <- label of the label), so convergence needs O(log
     diameter) rounds instead of O(diameter). Iteration stops when a
     round changes nothing (checked with a 1-row aggregate — the only
-    driver-side state, like Lloyd's centroids). Both paths produce the
+    driver-side state, like Lloyd's centroids) or after
+    ``_MAX_ROUNDS`` rounds. Both paths produce the
     identical (doc_id, min-id) labeling.
     """
     edges = materialize(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        pairs.select(F.col("id_a").alias("src"),
+                     F.col("id_b").alias("dst"))
         .unionAll(
-            pairs.select(F.col(id_b).alias("src"),
-                         F.col(id_a).alias("dst")))
+            pairs.select(F.col("id_b").alias("src"),
+                         F.col("id_a").alias("dst")))
         .distinct()
     )
     if edges.count() <= local_threshold:
@@ -280,7 +284,7 @@ def dup_components(pairs: DataFrame, max_rounds: int = 20,
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         neigh = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from xsarsea_spark.pipeline.dedup import hyperplanes
+from xsarsea_spark.pipeline.linalg import EMB_DIM
 
 __all__ = ["with_norm", "cosine_topk", "icp_order",
            "nearest_in_reference",
@@ -35,18 +36,17 @@ _DOT = (
 )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn(
-        "__norm", F.expr(f"sqrt({_DOT.format(a=vec_col, b=vec_col)})")
-    )
+KNN_K = 5                 # neighbours per query of the exact top-k
+MP_PLANES, MP_PROBES = 8, 4   # lsh_ann_multiprobe: sign bits, bit flips
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+def with_norm(df: DataFrame) -> DataFrame:
+    norm = _DOT.format(a="embedding", b="embedding")
+    return df.withColumn("__norm", F.expr(f"sqrt({norm})"))
+
+
+def cosine_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Exact top-``KNN_K`` cosine neighbors for each query vector.
 
     Returns (query_id, rank, neighbor_id, cosine). Excludes self-match.
     """
@@ -71,7 +71,7 @@ def cosine_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("query_id", "rank", "neighbor_id", "cosine")
     )
 
@@ -128,39 +128,36 @@ _BQ_WORD = (
 )
 
 
-def binary_quantize(df: DataFrame, dim: int = 64) -> DataFrame:
+def binary_quantize(df: DataFrame) -> DataFrame:
     """1-bit (sign) quantization of an embedding column — the extreme
     compression point of the quantized-retrieval family (PQ keeps m
     bytes, this keeps dim bits): component d contributes bit d iff it
-    is strictly positive, packed into ``dim/32`` BIGINT words. At
+    is strictly positive, packed into ``EMB_DIM/32`` BIGINT words. At
     100 TB the packed codes are a 32x smaller scan than float32
     vectors and Hamming ranking needs only xor + popcount per pair.
 
     Returns (id, w0..w{dim/32 - 1}). Deterministic and all-integer.
     """
-    if dim % 32 != 0:
-        raise ValueError("binary_quantize requires dim % 32 == 0")
     words = [
         F.expr(_BQ_WORD.format(v="embedding", off=w * 32)).alias(f"w{w}")
-        for w in range(dim // 32)
+        for w in range(EMB_DIM // 32)
     ]
     return df.select(F.col("vec_id"), *words)
 
 
-def hamming_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                 dim: int = 64) -> DataFrame:
-    """Exact top-k by Hamming distance over sign-quantized codes:
-    the query code block is broadcast, the corpus codes stream, each
-    pair costs ``dim/32`` xor+popcount ops (all JVM built-ins, whole-
+def hamming_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Exact top-``KNN_K`` by Hamming distance over sign-quantized
+    codes: the query code block is broadcast, the corpus codes stream,
+    each pair costs ``EMB_DIM/32`` xor+popcount ops (all JVM built-ins, whole-
     stage codegen). Ties break on neighbor id ascending — fully
     deterministic. Returns (query_id, rank, neighbor_id, hamming).
     """
 
-    nw = dim // 32
-    qc = binary_quantize(queries, dim).select(
+    nw = EMB_DIM // 32
+    qc = binary_quantize(queries).select(
         F.col("vec_id").alias("query_id"),
         *[F.col(f"w{w}").alias(f"q{w}") for w in range(nw)])
-    cc = binary_quantize(corpus, dim).select(
+    cc = binary_quantize(corpus).select(
         F.col("vec_id").alias("neighbor_id"),
         *[F.col(f"w{w}") for w in range(nw)])
     ham = " + ".join(
@@ -174,59 +171,60 @@ def hamming_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
         F.col("hamming").asc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("query_id", "rank", "neighbor_id", "hamming")
     )
 
 
-def _projection_matrix(dim: int, n_planes: int, seed: int):
-    """(dim, n_planes) float64 hyperplane matrix — the same integer
+def _projection_matrix(n_planes: int):
+    """(EMB_DIM, n_planes) float64 hyperplane matrix — the same integer
     LCG constants as pipeline.dedup.hyperplanes, so SQL oracles can be
     generated from the identical planes."""
 
-    return np.array(hyperplanes(n_planes, dim, seed=seed),
+    return np.array(hyperplanes(n_planes, EMB_DIM),
                     dtype=np.float64).T / 1001.0
 
 
-def _project(emb, K, dim: int, n_planes: int):
+def _project(emb, K):
     """Projections with column-at-a-time (left-to-right over i)
     accumulation — bit-identical to the unrolled-SQL fold order."""
     V = np.asarray(list(emb.to_numpy()), dtype=np.float64)
-    acc = np.zeros((V.shape[0], n_planes), dtype=np.float64)
-    for i in range(dim):
+    acc = np.zeros((V.shape[0], K.shape[1]), dtype=np.float64)
+    for i in range(EMB_DIM):
         acc += V[:, i:i + 1] * K[i]
     return acc
 
 
-def _sig_udf(dim: int, n_planes: int, seed: int):
-    K = _projection_matrix(dim, n_planes, seed)
+def _sig_udf(n_planes: int):
+    K = _projection_matrix(n_planes)
     w = np.array([1 << j for j in range(n_planes)], dtype=np.int64)
 
     def _sig(emb: pd.Series) -> pd.Series:
-        acc = _project(emb, K, dim, n_planes)
+        acc = _project(emb, K)
         return pd.Series((acc > 0.0) @ w)
 
     return pandas_udf(_sig, "bigint")
 
 
-def _probe_udf(dim: int, n_planes: int, n_probe: int, seed: int):
-    """Multi-probe signatures: the exact bucket plus single-bit flips
-    of the ``n_probe`` lowest-margin (|projection|) bits — the bits a
+def _probe_udf():
+    """Multi-probe signatures over ``MP_PLANES`` bits: the exact bucket
+    plus single-bit flips of the ``MP_PROBES`` lowest-margin
+    (|projection|) bits — the bits a
     near-duplicate on the other side of a hyperplane would differ in.
     Ties rank by bit index (stable argsort == SQL ORDER BY margin,
     bit)."""
 
-    K = _projection_matrix(dim, n_planes, seed)
-    w = np.array([1 << j for j in range(n_planes)], dtype=np.int64)
+    K = _projection_matrix(MP_PLANES)
+    w = np.array([1 << j for j in range(MP_PLANES)], dtype=np.int64)
 
     def _probes(emb: pd.Series) -> pd.Series:
-        acc = _project(emb, K, dim, n_planes)
+        acc = _project(emb, K)
         sig = (acc > 0.0) @ w
         order = np.argsort(np.abs(acc), axis=1, kind="stable")
         out = []
         for r in range(len(sig)):
             probes = [int(sig[r])]
-            for t in range(n_probe):
+            for t in range(MP_PROBES):
                 probes.append(int(sig[r]) ^ (1 << int(order[r, t])))
             out.append(probes)
         return pd.Series(out)
@@ -265,8 +263,6 @@ def lsh_ann(
     corpus: DataFrame,
     k: int = 5,
     n_planes: int = 12,
-    dim: int | None = None,
-    seed: int = 0xC0FFEE,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane signature bucket join, then
     exact cosine within buckets only.
@@ -276,9 +272,7 @@ def lsh_ann(
     raised by lowering n_planes or with ``lsh_ann_multiprobe`` — this
     is the bucketed scale path, not the exactness baseline.
     """
-    if dim is None:
-        dim = len(queries.select("embedding").first()[0])
-    sig = _sig_udf(dim, n_planes, seed)
+    sig = _sig_udf(n_planes)
     qs = queries.select(F.col("vec_id").alias("query_id"),
                         sig(F.col("embedding")).alias("sig"))
     cs = corpus.select(F.col("vec_id").alias("neighbor_id"),
@@ -295,23 +289,17 @@ def lsh_ann_multiprobe(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    n_planes: int = 8,
-    n_probe: int = 4,
-    dim: int | None = None,
-    seed: int = 0xC0FFEE,
 ) -> DataFrame:
-    """Multi-probe LSH ANN: each query searches its own bucket plus
-    the ``n_probe`` buckets one low-margin bit-flip away, recovering
-    most of the recall lost to hyperplane quantization at ~(n_probe+1)
-    x the candidate cost — still never all-pairs.
+    """Multi-probe LSH ANN: each query searches its own ``MP_PLANES``-bit
+    bucket plus the ``MP_PROBES`` buckets one low-margin bit-flip away,
+    recovering most of the recall lost to hyperplane quantization at
+    ~(probes+1) x the candidate cost — still never all-pairs.
 
     Scale: the corpus is signed once and shuffled once on sig; the
     probe explosion multiplies only the (small) query side.
     """
-    if dim is None:
-        dim = len(queries.select("embedding").first()[0])
-    sig = _sig_udf(dim, n_planes, seed)
-    probes = _probe_udf(dim, n_planes, n_probe, seed)
+    sig = _sig_udf(MP_PLANES)
+    probes = _probe_udf()
     qs = (
         queries.select(F.col("vec_id").alias("query_id"),
                        probes(F.col("embedding")).alias("__probes"))

@@ -302,20 +302,17 @@ def adjacent_lcp(pairs: DataFrame, tables: list[DataFrame],
     )
 
 
-def longest_dup_span(docs: DataFrame, rounds: int = 7,
-                     cached: bool = False) -> DataFrame:
+def longest_dup_span(docs: DataFrame, rounds: int = 7) -> DataFrame:
     """Per document: the token length and text of the longest token
     span that also occurs elsewhere in the corpus (any other
     position, any doc — within-doc repeats count). Ties resolve to
     the smallest starting position. Docs whose every position has
-    LCP 0 report (0, ''). ``cached=True`` routes the rank-table
-    build through the content-keyed persisted ladder cache."""
+    LCP 0 report (0, ''). The rank tables come from the content-keyed
+    persisted ladder cache (:func:`suffix_rank_tables_cached`)."""
 
     lens = docs.filter(F.col("text").isNotNull()).selectExpr(
         "doc_id", "size(split(text, ' ')) AS __len")
-    build = suffix_rank_tables_cached if cached \
-        else suffix_rank_tables
-    tables = build(docs, rounds)
+    tables = suffix_rank_tables_cached(docs, rounds)
     pairs = sa_adjacent_pairs(tables[-1])
     # consumed twice below (one union branch per pair side): without
     # the barrier the whole 2*(rounds+1)-join ladder walk runs twice
@@ -339,8 +336,7 @@ def longest_dup_span(docs: DataFrame, rounds: int = 7,
     )
 
 
-def cross_doc_lcp(docs: DataFrame, rounds: int,
-                  cached: bool = False) -> DataFrame:
+def cross_doc_lcp(docs: DataFrame, rounds: int) -> DataFrame:
     """(id, pos, cross_lcp): for EVERY token position, the EXACT
     length of the longest prefix its suffix shares with a suffix of
     a DIFFERENT document — the block range-min over the adjacent-LCP
@@ -348,7 +344,8 @@ def cross_doc_lcp(docs: DataFrame, rounds: int,
     (``doc_source_crossdup_matrix``) to exact per-position values:
     adjacency alone only scores positions that happen to sit next to
     a foreign suffix in SA order; the range-min scores all of them,
-    which is what cross-document duplication COVERAGE needs.
+    which is what cross-document duplication COVERAGE needs. The rank
+    tables come from :func:`suffix_rank_tables_cached`.
 
     Construction (the classic nearest-different-document argument):
     in SA order, maximal same-document runs partition the entries.
@@ -373,9 +370,7 @@ def cross_doc_lcp(docs: DataFrame, rounds: int,
 
     lens = docs.filter(F.col("text").isNotNull()).selectExpr(
         "doc_id", "size(split(text, ' ')) AS __len")
-    build = suffix_rank_tables_cached if cached \
-        else suffix_rank_tables
-    tables = build(docs, rounds)
+    tables = suffix_rank_tables_cached(docs, rounds)
     # ordered feeds three consumers (both pair sides + the entry
     # table) and lcps two (prev/next attach): barriers keep the
     # two-pass rank and the 2*(rounds+1)-join ladder walk at ONE

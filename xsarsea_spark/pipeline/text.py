@@ -36,6 +36,9 @@ HASH40_SQL = "CAST(conv(substring(md5({x}), 1, 10), 16, 10) AS BIGINT)"
 
 # tiny deterministic stopword list for ratio features
 STOPWORDS = ("a", "the")
+LINE_WORDS, LINE_MIN_COUNT = 10, 3   # line_dedup: words per line, repeats
+CHUNK_TOKENS = 64                    # chunk_documents' window
+XDUP_N = 8                           # crossdoc_ngram_dup's n-gram length
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -238,15 +241,14 @@ def pii_signals(docs: DataFrame) -> DataFrame:
     ).withColumn("redacted", red)
 
 
-def line_dedup(docs: DataFrame, line_words: int = 10,
-               min_count: int = 3) -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """C4-style line-level dedup: any line occurring at least
-    ``min_count`` times ACROSS THE CORPUS (within-doc repeats count)
+    ``LINE_MIN_COUNT`` times ACROSS THE CORPUS (within-doc repeats count)
     is removed from every document — the boilerplate-removal stage of
     the C4 pipeline (nav bars, cookie banners, license footers).
 
     The synthetic corpus has no newlines, so "lines" are consecutive
-    ``line_words``-token windows (the splitter a real corpus would
+    ``LINE_WORDS``-token windows (the splitter a real corpus would
     replace with ``split(text, '\\n')`` — the counting/removal
     machinery is identical). Returns one row per line:
     (id, line_no, line, removed).
@@ -259,7 +261,7 @@ def line_dedup(docs: DataFrame, line_words: int = 10,
     Collisions of the 40-bit hash are deterministic and
     engine-identical (both sides group by the same hash).
     """
-    w = line_words
+    w = LINE_WORDS
     h40 = HASH40_SQL.format(x="line")
     lines = (
         docs.filter(F.col("text").isNotNull())
@@ -274,7 +276,7 @@ def line_dedup(docs: DataFrame, line_words: int = 10,
     repeated = (
         lines.groupBy("__h")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= F.lit(min_count))
+        .filter(F.col("__n") >= F.lit(LINE_MIN_COUNT))
         .select("__h", F.lit(True).alias("__rm"))
     )
     return (
@@ -302,9 +304,8 @@ def bigrams(docs: DataFrame) -> DataFrame:
     )
 
 
-def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
-                    stride: int = 48) -> DataFrame:
-    """RAG-style overlapping chunking: fixed ``chunk_tokens``-token
+def chunk_documents(docs: DataFrame, stride: int = 48) -> DataFrame:
+    """RAG-style overlapping chunking: fixed ``CHUNK_TOKENS``-token
     windows every ``stride`` tokens (overlap = chunk - stride), plus
     a tail chunk for the remainder. Pure array SQL (sequence ->
     slice -> array_join), one explode — no UDF, no per-doc Python.
@@ -319,13 +320,13 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
             # number of stride starts: ceil(max(size-chunk, 0)/stride)
             # + 1 covers the tail
             f"sequence(0, CAST(CEIL(CAST(GREATEST("
-            f"size(__l) - {chunk_tokens}, 0) AS DOUBLE)"
+            f"size(__l) - {CHUNK_TOKENS}, 0) AS DOUBLE)"
             f" / {stride}) AS INT)) AS __starts",
         )
         .selectExpr(
             "doc_id",
             f"posexplode(transform(__starts,"
-            f" s -> slice(__l, s * {stride} + 1, {chunk_tokens})))"
+            f" s -> slice(__l, s * {stride} + 1, {CHUNK_TOKENS})))"
             " AS (chunk_id, __chunk)",
         )
         .filter(F.expr("size(__chunk) > 0"))
@@ -337,7 +338,7 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
     )
 
 
-def chunk_dedup(docs: DataFrame, chunk_tokens: int = 64) -> DataFrame:
+def chunk_dedup(docs: DataFrame) -> DataFrame:
     """Chunk-level exact dedup — the RAG-index ingest step: cut every
     document into NON-overlapping fixed-token chunks, hash each
     chunk's content, and keep one canonical copy per hash (lowest
@@ -350,8 +351,7 @@ def chunk_dedup(docs: DataFrame, chunk_tokens: int = 64) -> DataFrame:
     + one per-doc hash agg. No pairwise work anywhere.
     """
 
-    ch = chunk_documents(docs, chunk_tokens=chunk_tokens,
-                         stride=chunk_tokens)
+    ch = chunk_documents(docs, stride=CHUNK_TOKENS)
     h = ch.select("doc_id", "chunk_id",
                   F.md5(F.col("chunk_text")).alias("__h"))
     w = Window.partitionBy("__h").orderBy("doc_id", "chunk_id")
@@ -466,10 +466,10 @@ def gopher_quality(docs: DataFrame) -> DataFrame:
     )
 
 
-def crossdoc_ngram_dup(docs: DataFrame, n: int = 8) -> DataFrame:
+def crossdoc_ngram_dup(docs: DataFrame) -> DataFrame:
     """Cross-document n-gram duplication: for each document, the
-    fraction of its n-gram positions whose n-gram also occurs in at
-    least one OTHER document (the boilerplate/contamination signal
+    fraction of its ``XDUP_N``-gram positions whose n-gram also occurs
+    in at least one OTHER document (the boilerplate/contamination signal
     behind paragraph-dedup in C4/RefinedWeb).
 
     Plan shape: project 40-bit n-gram hashes (never the gram strings
@@ -478,6 +478,7 @@ def crossdoc_ngram_dup(docs: DataFrame, n: int = 8) -> DataFrame:
     same hash partitioning, per-doc ratio. Two shuffles total, both
     on the hash key.
     """
+    n = XDUP_N
     gram = (
         f"transform(sequence(1, size(__toks) - {n - 1}),"
         f" i -> {HASH40_SQL.format(x=_GRAM_CONCAT)})"
@@ -575,14 +576,13 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
     return sel
 
 
-def duplicate_spans(docs: DataFrame, n: int = 8,
-                    min_docs: int = 2) -> DataFrame:
+def duplicate_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """Maximal cross-document duplicated token spans — the exact
     substring-dedup primitive of Lee et al. 2021 ("Deduplicating
     Training Data Makes Language Models Better"), re-expressed
     relationally: every maximal run of consecutive n-gram start
-    positions whose n-gram occurs in >= ``min_docs`` distinct
-    documents becomes ONE span row (doc_id, span_start, span_end,
+    positions whose n-gram occurs in >= 2 distinct documents becomes
+    ONE span row (doc_id, span_start, span_end,
     n_dup_grams, span_tokens), token indices 0-based inclusive.
 
     The paper builds a corpus-wide suffix array; the relational
@@ -615,7 +615,7 @@ def duplicate_spans(docs: DataFrame, n: int = 8,
     dup = (
         grams.groupBy("__h")
         .agg(F.countDistinct("doc_id").alias("__nd"))
-        .filter(F.col("__nd") >= min_docs)
+        .filter(F.col("__nd") >= 2)
         .select("__h")
     )
 
@@ -642,12 +642,11 @@ def duplicate_spans(docs: DataFrame, n: int = 8,
     )
 
 
-def duplicate_spans_maximal(docs: DataFrame, n: int = 8,
-                            min_count: int = 2) -> DataFrame:
+def duplicate_spans_maximal(docs: DataFrame, n: int = 8) -> DataFrame:
     """FULL Lee et al. 2021 maximal-match span semantics: maximal
     contiguous token ranges covered by some duplicated substring of
     length >= ``n`` tokens, where "duplicated" counts TOTAL corpus
-    occurrences (>= ``min_count``) — including repeats WITHIN one
+    occurrences (>= 2) — including repeats WITHIN one
     document, which the cross-document variant
     (:func:`duplicate_spans`) deliberately ignores.
 
@@ -680,7 +679,7 @@ def duplicate_spans_maximal(docs: DataFrame, n: int = 8,
     dup = (
         grams.groupBy("__h")
         .agg(F.count(F.lit(1)).alias("__nc"))
-        .filter(F.col("__nc") >= min_count)
+        .filter(F.col("__nc") >= 2)
         .select("__h")
     )
 
@@ -895,11 +894,11 @@ NORM_DUCK_SQL = ("trim(regexp_replace(regexp_replace(lower({x}),"
                  " '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))")
 
 
-def normalize_text(docs: DataFrame, out_col: str = "norm_text") -> DataFrame:
+def normalize_text(docs: DataFrame) -> DataFrame:
     """C4-style text normalization: lowercase, non-[a-z0-9 ] to
     space, whitespace collapse, trim — the canonical form exact
     dedup and shingling run on when the raw corpus carries
-    punctuation/case noise.
+    punctuation/case noise. Adds the column ``norm_text``.
 
     Cross-engine: Spark's ``regexp_replace`` replaces every match by
     default; the DuckDB replay (``NORM_DUCK_SQL``) passes the ``'g'``
@@ -909,5 +908,5 @@ def normalize_text(docs: DataFrame, out_col: str = "norm_text") -> DataFrame:
     parity is pytest-pinned on adversarial text (unicode, tabs,
     doubled spaces, empties).
     """
-    return docs.withColumn(out_col,
+    return docs.withColumn("norm_text",
                            F.expr(NORM_SPARK_SQL.format(x="text")))

@@ -53,27 +53,27 @@ ULM_ROUNDS = 2    # EM rounds
 ULM_MAXW = 12     # word-length contract (oracle DP chain depth)
 
 
-def word_freqs(docs: DataFrame, max_len: int = ULM_MAXW) -> DataFrame:
+def word_freqs(docs: DataFrame) -> DataFrame:
     """(w, f): corpus word frequencies over words of length <=
-    ``max_len`` (the DP-depth contract, applied identically in the
+    ``ULM_MAXW`` (the DP-depth contract, applied identically in the
     oracle) — one hash aggregation, output is vocabulary-scale."""
     return (docs.filter(F.col("text").isNotNull())
             .selectExpr("explode(split(text, ' ')) AS w")
-            .filter(F.length("w").between(1, max_len))
+            .filter(F.length("w").between(1, ULM_MAXW))
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("f")))
 
 
-def seed_vocab(wf: DataFrame, max_piece: int = ULM_MAXP,
-               k: int = ULM_K) -> DataFrame:
-    """(piece, cnt): all single characters plus the top-``k``
-    multi-char substrings by frequency-weighted occurrence count
+def seed_vocab(wf: DataFrame) -> DataFrame:
+    """(piece, cnt): all single characters plus the top-``ULM_K``
+    multi-char substrings (up to ``ULM_MAXP`` characters) by
+    frequency-weighted occurrence count
     (ties to the lexicographically smaller piece). The substring
     explode is over DISTINCT words — bounded by vocabulary size,
     never the corpus."""
     sub = wf.selectExpr(
         "f",
-        f"""explode(flatten(transform(sequence(1, {max_piece}), l ->
+        f"""explode(flatten(transform(sequence(1, {ULM_MAXP}), l ->
           transform(
             slice(sequence(1, length(w)), 1,
                   greatest(length(w) - l + 1, 0)),
@@ -83,7 +83,7 @@ def seed_vocab(wf: DataFrame, max_piece: int = ULM_MAXP,
     chars = sc.filter(F.length("piece") == 1)
     multi = (sc.filter(F.length("piece") >= 2)
              .orderBy(F.col("cnt").desc(), F.col("piece").asc())
-             .limit(k))
+             .limit(ULM_K))
     return chars.unionAll(multi)
 
 
@@ -102,11 +102,10 @@ def piece_costs(vocab: DataFrame) -> dict[str, int]:
     return {r["piece"]: r["ik"] for r in rows}
 
 
-def viterbi_segment(wf: DataFrame,
-                    costs: dict[str, int],
-                    max_piece: int = ULM_MAXP) -> DataFrame:
+def viterbi_segment(wf: DataFrame, costs: dict[str, int]) -> DataFrame:
     """(w, f, cost_ns, path, n_pieces): the Viterbi-best unigram
-    segmentation of each word. DP state per position is the struct
+    segmentation of each word into pieces of at most ``ULM_MAXP``
+    characters. DP state per position is the struct
     (total int-cost, space-joined piece path); the argmin tuple
     compare (int, ASCII str) is byte-identical to the oracle's
     struct order. Arrow-batched, per-row independent, no shuffle."""
@@ -130,7 +129,7 @@ def viterbi_segment(wf: DataFrame,
                 dp = [(0, "")] + [None] * n
                 for i in range(1, n + 1):
                     best = None
-                    for length in range(1, min(max_piece, i) + 1):
+                    for length in range(1, min(ULM_MAXP, i) + 1):
                         piece = w[i - length:i]
                         c = ik.get(piece)
                         prev = dp[i - length]
@@ -151,12 +150,11 @@ def viterbi_segment(wf: DataFrame,
     return wf.select("w", "f").mapInPandas(gen, schema)
 
 
-def em_round(wf: DataFrame, vocab: DataFrame,
-             max_piece: int = ULM_MAXP) -> DataFrame:
+def em_round(wf: DataFrame, vocab: DataFrame) -> DataFrame:
     """One EM round: Viterbi E-step over the distinct words, then
     add-one-smoothed frequency-weighted count re-estimation over the
     FIXED vocabulary. Returns the new (piece, cnt) table."""
-    seg = viterbi_segment(wf, piece_costs(vocab), max_piece)
+    seg = viterbi_segment(wf, piece_costs(vocab))
     raw = (seg.selectExpr("f", "explode(split(path, ' ')) AS piece")
            .groupBy("piece")
            .agg(F.expr("CAST(SUM(f) AS BIGINT)").alias("__raw")))
@@ -167,17 +165,15 @@ def em_round(wf: DataFrame, vocab: DataFrame,
                         " AS cnt"))
 
 
-def train_unigram(docs: DataFrame, rounds: int = ULM_ROUNDS,
-                  max_piece: int = ULM_MAXP, k: int = ULM_K,
-                  max_len: int = ULM_MAXW):
+def train_unigram(docs: DataFrame):
     """Full train: returns (wf, seed, final vocab counts, final
-    segmentation DataFrame) after ``rounds`` EM rounds. Each stage
+    segmentation DataFrame) after ``ULM_ROUNDS`` EM rounds. Each stage
     is materialized by the caller as needed."""
 
-    wf = materialize(word_freqs(docs, max_len=max_len))
-    vocab = materialize(seed_vocab(wf, max_piece=max_piece, k=k))
+    wf = materialize(word_freqs(docs))
+    vocab = materialize(seed_vocab(wf))
     seed = vocab
-    for _ in range(rounds):
-        vocab = materialize(em_round(wf, vocab, max_piece=max_piece))
-    seg = viterbi_segment(wf, piece_costs(vocab), max_piece)
+    for _ in range(ULM_ROUNDS):
+        vocab = materialize(em_round(wf, vocab))
+    seg = viterbi_segment(wf, piece_costs(vocab))
     return wf, seed, vocab, seg

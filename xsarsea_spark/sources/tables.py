@@ -28,12 +28,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Dimension tables small enough to broadcast at ANY scale factor
-# (O(1) row counts). customer/supplier/part/orders grow with sf and
-# must NOT be force-broadcast — AQE picks broadcast when actually small.
-BROADCAST_TABLES = {"region", "nation"}
-
-
 def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Canonicalize ``events.ts`` to BIGINT **nanoseconds** since epoch.
 

@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 
 from xsarsea_spark.expr import double_lit
 from xsarsea_spark.operators.exactsum import QTRUNC
+from xsarsea_spark.pipeline.multimodal import (PND_BANDS, PND_BITS,
+                                               PND_MAX_HAMMING)
 from xsarsea_spark.sources.registry import default_catalog
 from xsarsea_spark.sources.tables import load
 from xsarsea_spark.suite.base import spec
@@ -403,16 +405,15 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counts and min Hamming. All-integer.
 # ----------------------------------------------------------------------
 
-_PND_BANDS, _PND_BITS, _PND_MAXH = 4, 8, 3
 
 
 def _mm_phash_neardup_oracle() -> str:
     return f"""
 WITH ph AS ({_mm_phash_oracle()}),
 bands AS (SELECT doc_id, phash,
-            unnest(range(0, {_PND_BANDS})) AS b FROM ph),
+            unnest(range(0, {PND_BANDS})) AS b FROM ph),
 k AS (SELECT doc_id, phash, b,
-        (phash >> ({_PND_BITS} * b)) & {(1 << _PND_BITS) - 1} AS key
+        (phash >> ({PND_BITS} * b)) & {(1 << PND_BITS) - 1} AS key
       FROM bands),
 cand AS (SELECT DISTINCT a.doc_id AS da, x.doc_id AS db,
            a.phash AS pa, x.phash AS pb
@@ -420,7 +421,7 @@ cand AS (SELECT DISTINCT a.doc_id AS da, x.doc_id AS db,
            AND x.doc_id != a.doc_id),
 agg AS (SELECT da,
     CAST(COUNT(*) AS BIGINT) AS n_candidates,
-    CAST(SUM(CASE WHEN bit_count(xor(pa, pb)) <= {_PND_MAXH}
+    CAST(SUM(CASE WHEN bit_count(xor(pa, pb)) <= {PND_MAX_HAMMING}
          THEN 1 ELSE 0 END) AS BIGINT) AS n_neardups,
     CAST(MIN(bit_count(xor(pa, pb))) AS BIGINT) AS min_hamming
   FROM cand GROUP BY da)
@@ -452,8 +453,7 @@ def q_multimodal_phash_neardup(spark: SparkSession,
     docs = load(spark, sf_dir, "documents")
     ph = phash_features(attach_image_payload(docs)).select(
         "doc_id", "phash")
-    return phash_neardup(ph, n_bands=_PND_BANDS,
-                         band_bits=_PND_BITS, max_hamming=_PND_MAXH)
+    return phash_neardup(ph)
 
 
 # ----------------------------------------------------------------------
@@ -477,7 +477,7 @@ def _mm_paired_dedup_oracle() -> str:
     from xsarsea_spark.suite.pipeline_suite import _minhash_oracle
 
     full = _IMG_W * _IMG_H * 3
-    mask = (1 << _PND_BITS) - 1
+    mask = (1 << PND_BITS) - 1
     return f"""
 WITH np AS ({_minhash_oracle()}),
 ph AS ({_mm_phash_oracle()}),
@@ -487,16 +487,16 @@ tp AS (SELECT np.id_a, np.id_b, np.jaccard FROM np
        JOIN paired a ON a.doc_id = np.id_a
        JOIN paired b ON b.doc_id = np.id_b),
 bands AS (SELECT doc_id, phash,
-            unnest(range(0, {_PND_BANDS})) AS b FROM ph),
+            unnest(range(0, {PND_BANDS})) AS b FROM ph),
 k AS (SELECT doc_id, phash, b,
-        (phash >> ({_PND_BITS} * b)) & {mask} AS key FROM bands),
+        (phash >> ({PND_BITS} * b)) & {mask} AS key FROM bands),
 cand AS (SELECT DISTINCT a.doc_id AS id_a, x.doc_id AS id_b,
            a.phash AS pa, x.phash AS pb
          FROM k a JOIN k x ON x.b = a.b AND x.key = a.key
            AND a.doc_id < x.doc_id),
 ip AS (SELECT id_a, id_b,
          CAST(bit_count(xor(pa, pb)) AS BIGINT) AS hamming
-       FROM cand WHERE bit_count(xor(pa, pb)) <= {_PND_MAXH}),
+       FROM cand WHERE bit_count(xor(pa, pb)) <= {PND_MAX_HAMMING}),
 bo AS (SELECT t.id_a, t.id_b, t.jaccard, i.hamming
        FROM tp t JOIN ip i ON i.id_a = t.id_a AND i.id_b = t.id_b),
 ts AS (SELECT id_a AS doc_id FROM tp
@@ -548,7 +548,6 @@ def q_multimodal_paired_dedup(spark: SparkSession,
                                                    attach_image_payload,
                                                    phash_features,
                                                    phash_pairs)
-    from xsarsea_spark.suite.pipeline_suite import _MH_K, _MH_N, _MH_T
 
     full = _IMG_W * _IMG_H * 3
     docs = load(spark, sf_dir, "documents")
@@ -561,13 +560,11 @@ def q_multimodal_paired_dedup(spark: SparkSession,
     # MinHash chain and the image-decoding pHash chain re-executed
     # per consumer (41 documents scans, 86 exchanges in the executed
     # plan). The pair tables are near-dup-bounded — truncate once.
-    tp = materialize(minhash_lsh_dedup(paired, n=_MH_N, k=_MH_K,
-                                       threshold=_MH_T))
+    tp = materialize(minhash_lsh_dedup(paired))
     ph = phash_features(attach_image_payload(docs)).select(
         "doc_id", "phash")
     ip = materialize(
-        phash_pairs(ph, n_bands=_PND_BANDS, band_bits=_PND_BITS,
-                    max_hamming=_PND_MAXH))
+        phash_pairs(ph))
     bo = tp.join(ip, on=["id_a", "id_b"])
     ts = tp.selectExpr("id_a AS doc_id").unionByName(
         tp.selectExpr("id_b AS doc_id"))

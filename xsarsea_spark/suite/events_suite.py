@@ -19,6 +19,8 @@ from pyspark.sql.window import Window
 
 from xsarsea_spark.engine import materialize
 from xsarsea_spark.operators.exactsum import DAVG, DSUM, QTRUNC
+from xsarsea_spark.operators.sketch import (BLOOM_K, CM_DEPTH, CM_WIDTH,
+                                            HLL_B, HLL_W)
 from xsarsea_spark.sources.tables import load
 from xsarsea_spark.streaming.harness import (latest_version,
                                              run_available_now,
@@ -346,8 +348,7 @@ def q_events_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = ev.groupBy("user_id").agg(
         F.expr("MIN(ts DIV 1000)").alias("reg_us"))
     joined = salted_join(ev.select("user_id", "event_type", "ts"),
-                         dim, on="user_id", n_salts=8,
-                         hot_threshold=20)
+                         dim, on="user_id")
     return (
         joined.groupBy("user_id", "event_type")
         .agg(
@@ -642,18 +643,15 @@ def q_events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the classic e/width overestimate bound.
 # ----------------------------------------------------------------------
 
-_CM_D, _CM_W = 4, 64
-
-
 def _cm_hash_duck(row: int) -> str:
     return (f"(CAST('0x' || substr(md5('{row}#' ||"
             f" CAST(user_id AS VARCHAR)), 1, 10) AS BIGINT)"
-            f" % {_CM_W})")
+            f" % {CM_WIDTH})")
 
 
 def _countmin_oracle() -> str:
-    bl = ", ".join(_cm_hash_duck(j) for j in range(_CM_D))
-    rl = ", ".join(str(j) for j in range(_CM_D))
+    bl = ", ".join(_cm_hash_duck(j) for j in range(CM_DEPTH))
+    rl = ", ".join(str(j) for j in range(CM_DEPTH))
     return f"""
 WITH ex AS (
   SELECT unnest([{bl}]) AS bucket, unnest([{rl}]) AS rw FROM events),
@@ -685,9 +683,9 @@ def q_events_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load(spark, sf_dir, "events")
     v = "CAST(user_id AS STRING)"
-    sk = countmin_sketch(ev, v, depth=_CM_D, width=_CM_W)
+    sk = countmin_sketch(ev, v)
     items = ev.select("user_id").distinct()
-    est = countmin_estimate(items, sk, v, depth=_CM_D, width=_CM_W)
+    est = countmin_estimate(items, sk, v)
     true = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("true_count"))
     return true.join(est, on="user_id").select(
@@ -770,7 +768,7 @@ def q_events_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count so the (deterministic) false-positive overhead is visible.
 # ----------------------------------------------------------------------
 
-_BLOOM_M, _BLOOM_K, _BLOOM_THR = 4096, 3, 18
+_BLOOM_M, _BLOOM_THR = 4096, 18
 
 
 def _bloom_pos_duck(j: int) -> str:
@@ -780,13 +778,13 @@ def _bloom_pos_duck(j: int) -> str:
 
 
 def _bloom_oracle() -> str:
-    poss = ", ".join(_bloom_pos_duck(j) for j in range(_BLOOM_K))
+    poss = ", ".join(_bloom_pos_duck(j) for j in range(BLOOM_K))
     probes = " AND ".join(
         f"""EXISTS (SELECT 1 FROM bits b
       WHERE b.word = ({_bloom_pos_duck(j)}) // 63
         AND (b.bits & (1::BIGINT << (({_bloom_pos_duck(j)}) % 63)))
             != 0)"""
-        for j in range(_BLOOM_K))
+        for j in range(BLOOM_K))
     return f"""
 WITH hot AS (
   SELECT user_id FROM events WHERE event_type = 'error'
@@ -824,11 +822,10 @@ def q_events_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__n") > _BLOOM_THR)
         .select("user_id")
     )
-    bloom = bloom_build(hot, v, m_bits=_BLOOM_M, k=_BLOOM_K)
+    bloom = bloom_build(hot, v, m_bits=_BLOOM_M)
     cand = ev.filter(F.col("event_type") == "purchase") \
         .select("user_id")
-    passed = bloom_filter(cand, bloom, v, m_bits=_BLOOM_M,
-                          k=_BLOOM_K)
+    passed = bloom_filter(cand, bloom, v, m_bits=_BLOOM_M)
     exact = cand.join(hot, on="user_id", how="left_semi")
     a = passed.agg(F.count(F.lit(1)).alias("n_bloom_pass"))
     b = exact.agg(F.count(F.lit(1)).alias("n_exact_pass"))
@@ -1158,22 +1155,22 @@ def _hll_oracle() -> str:
     from xsarsea_spark.operators.sketch import (hll_estimate_sql,
                                                 hll_rank_sql)
 
-    rank = hll_rank_sql("__rest", 40)
-    est = hll_estimate_sql("s", "c", 6, 40)
+    rank = hll_rank_sql("__rest")
+    est = hll_estimate_sql("s", "c")
     return f"""
 WITH h AS (
   SELECT event_type,
     CAST('0x' || substr(md5({_HLL_VAL_DUCK}), 1, 15) AS BIGINT) AS h
   FROM events),
 r0 AS (
-  SELECT event_type, h % 64 AS reg,
-    (h // 64) % {1 << 40} AS __rest FROM h),
+  SELECT event_type, h % {1 << HLL_B} AS reg,
+    (h // {1 << HLL_B}) % {1 << HLL_W} AS __rest FROM h),
 r AS (SELECT event_type, reg, {rank} AS rnk FROM r0),
 s AS (
   SELECT event_type, reg, MAX(rnk) AS m_reg FROM r GROUP BY 1, 2),
 e AS (
   SELECT event_type,
-    SUM(CAST(1 AS BIGINT) << (41 - m_reg)) AS s,
+    SUM(CAST(1 AS BIGINT) << ({HLL_W + 1} - m_reg)) AS s,
     COUNT(*) AS c
   FROM s GROUP BY 1),
 t AS (
@@ -1200,8 +1197,8 @@ def q_events_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.operators.sketch import hll_estimate, hll_sketch
 
     ev = load(spark, sf_dir, "events")
-    sk = hll_sketch(ev, ["event_type"], _HLL_VAL_SPARK, b=6, w=40)
-    est = hll_estimate(sk, ["event_type"], b=6, w=40)
+    sk = hll_sketch(ev, ["event_type"], _HLL_VAL_SPARK)
+    est = hll_estimate(sk, ["event_type"])
     true = ev.groupBy("event_type").agg(
         F.expr(f"COUNT(DISTINCT {_HLL_VAL_SPARK})")
         .alias("true_distinct"))

@@ -17,8 +17,24 @@ from xsarsea_spark.engine import (load_kv_json, materialize,
                                   save_kv_json, scratch_path)
 from xsarsea_spark.expr import spark_str_lit
 from xsarsea_spark.operators.exactsum import DSUM, QTRUNC
+from xsarsea_spark.pipeline.classifier import GRAD_SCALE as _LOGREG_SCALE
+from xsarsea_spark.pipeline.classifier import LR as _LOGREG_LR
+from xsarsea_spark.pipeline.classifier import QK as _LOGREG_QK
+from xsarsea_spark.pipeline.classifier import ROUNDS as _LOGREG_ROUNDS
 from xsarsea_spark.pipeline.clustering import KM_SCALE
-from xsarsea_spark.pipeline.dedup import MINHASH_P, _BAND_MULT, _perm_params
+from xsarsea_spark.pipeline.dedup import (COSINE_BANDS, COSINE_PLANES,
+                                          COSINE_T, JACCARD_T, MINHASH_K,
+                                          MINHASH_P, SHINGLE_N, SIMHASH_BITS,
+                                          _BAND_MULT, _perm_params)
+from xsarsea_spark.pipeline.ivf import IVF_ITERS, IVF_PROBE
+from xsarsea_spark.pipeline.linalg import (EMB_DIM, OUTLIER_THRESHOLD,
+                                           PCA_COMPONENTS, PCA_ROUNDS)
+from xsarsea_spark.pipeline.multimodal import FRAME_BYTES, FRAME_STRIDE
+from xsarsea_spark.pipeline.packing import MAX_SPAN
+from xsarsea_spark.pipeline.similarity import KNN_K as _KNN_K
+from xsarsea_spark.pipeline.similarity import MP_PLANES, MP_PROBES
+from xsarsea_spark.pipeline.text import (CHUNK_TOKENS, LINE_MIN_COUNT,
+                                         LINE_WORDS, XDUP_N)
 from xsarsea_spark.sources.tables import load
 from xsarsea_spark.streaming.harness import (latest_version,
                                              run_available_now,
@@ -263,18 +279,15 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + banded LSH near-dedup (never all-pairs)
 # ----------------------------------------------------------------------
 
-_MH_N, _MH_K, _MH_T = 3, 16, 0.2
-
-
 def _minhash_oracle() -> str:
     perms = ", ".join(f"({k}, {a}, {b})" for k, (a, b) in
-                      ((k, _perm_params(k)) for k in range(_MH_K)))
+                      ((k, _perm_params(k)) for k in range(MINHASH_K)))
     h40 = _H40_DUCK.format(x="shingle")
     return f"""
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
 sh AS (
   SELECT DISTINCT doc_id,
-    unnest(list_transform(range(len(l) - {_MH_N - 1}),
+    unnest(list_transform(range(len(l) - {SHINGLE_N - 1}),
       i -> l[i + 1] || ' ' || l[i + 2] || ' ' || l[i + 3])) AS shingle
   FROM t),
 perms AS (SELECT * FROM (VALUES {perms}) p(k, a, b)),
@@ -306,7 +319,7 @@ LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
 JOIN sizes sa ON sa.doc_id = c.id_a
 JOIN sizes sb ON sb.doc_id = c.id_b
 WHERE COALESCE(i.n_inter, 0) / CAST(sa.n + sb.n - COALESCE(i.n_inter, 0)
-                                    AS DOUBLE) >= {_MH_T!r}
+                                    AS DOUBLE) >= {JACCARD_T!r}
 """
 
 
@@ -321,7 +334,7 @@ def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.dedup import minhash_lsh_dedup
 
     docs = load(spark, sf_dir, "documents")
-    return minhash_lsh_dedup(docs, n=_MH_N, k=_MH_K, threshold=_MH_T)
+    return minhash_lsh_dedup(docs)
 
 
 # ----------------------------------------------------------------------
@@ -373,10 +386,8 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = d.filter("doc_id < c").drop("c")
     batch = d.filter("doc_id >= c").drop("c")
     # the persisted state of a production ingest, built once here
-    state = lsh_bands(
-        minhash_signatures(shingle(hist, n=_MH_N), k=_MH_K))
-    return minhash_lsh_incremental(
-        batch, state, hist, n=_MH_N, k=_MH_K, threshold=_MH_T)
+    state = lsh_bands(minhash_signatures(shingle(hist)))
+    return minhash_lsh_incremental(batch, state, hist)
 
 
 # ----------------------------------------------------------------------
@@ -455,14 +466,13 @@ def q_minhash_cross_snapshot(spark: SparkSession,
     from xsarsea_spark.engine import materialize
 
     tagged_bands = materialize(
-        lsh_bands(minhash_signatures(shingle(hist, n=_MH_N), k=_MH_K))
+        lsh_bands(minhash_signatures(shingle(hist)))
         .crossJoin(F.broadcast(cuts))
         .selectExpr("doc_id", "band", "bandhash", snap_tag))
     snap_docs = d.filter("doc_id < c").selectExpr(
         *[c for c in docs.columns], snap_tag)
     return minhash_lsh_cross_snapshot(
-        batch, tagged_bands, snap_docs,
-        n=_MH_N, k=_MH_K, threshold=_MH_T, batch_snapshot=3)
+        batch, tagged_bands, snap_docs, batch_snapshot=3)
 
 
 # ----------------------------------------------------------------------
@@ -492,7 +502,7 @@ def _band_fold_sql(r: int) -> str:
 
 def _band_sweep_oracle() -> str:
     perms = ", ".join(f"({k}, {a}, {b})" for k, (a, b) in
-                      ((k, _perm_params(k)) for k in range(_MH_K)))
+                      ((k, _perm_params(k)) for k in range(MINHASH_K)))
     h40 = _H40_DUCK.format(x="shingle")
     parts = [
         f"t AS (SELECT doc_id, string_split(text, ' ') AS l"
@@ -500,7 +510,7 @@ def _band_sweep_oracle() -> str:
         f" AND doc_id % {_BSW_MOD} = 0)",
         f"""sh AS (
   SELECT DISTINCT doc_id,
-    unnest(list_transform(range(len(l) - {_MH_N - 1}),
+    unnest(list_transform(range(len(l) - {SHINGLE_N - 1}),
       i -> l[i + 1] || ' ' || l[i + 2] || ' ' || l[i + 3])) AS shingle
   FROM t)""",
         f"perms AS (SELECT * FROM (VALUES {perms}) p(k, a, b))",
@@ -519,7 +529,7 @@ def _band_sweep_oracle() -> str:
   JOIN sizes sa ON sa.doc_id = p.id_a
   JOIN sizes sb ON sb.doc_id = p.id_b
   WHERE p.n_inter / CAST(sa.n + sb.n - p.n_inter AS DOUBLE)
-    >= {_MH_T!r})""",
+    >= {JACCARD_T!r})""",
         "nt AS (SELECT count(*) AS n_true FROM truth)",
     ]
     metrics = []
@@ -537,7 +547,7 @@ def _band_sweep_oracle() -> str:
         parts.append(
             f"""m{r} AS (
   SELECT CAST({r} AS BIGINT) AS rows_per_band,
-    CAST({_MH_K // r} AS BIGINT) AS n_bands,
+    CAST({MINHASH_K // r} AS BIGINT) AS n_bands,
     CAST(COUNT(*) AS BIGINT) AS n_candidates,
     CAST(COALESCE(SUM(CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0
          END), 0) AS BIGINT) AS n_hits
@@ -576,8 +586,8 @@ def q_minhash_band_sweep(spark: SparkSession,
 
     docs = load(spark, sf_dir, "documents").filter(
         f"text IS NOT NULL AND doc_id % {_BSW_MOD} = 0")
-    sh = shingle(docs, n=_MH_N)
-    sig = materialize(minhash_signatures(sh, k=_MH_K))
+    sh = shingle(docs)
+    sig = materialize(minhash_signatures(sh))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     pairs = (
         sh.selectExpr("doc_id AS id_a", "shingle")
@@ -591,7 +601,7 @@ def q_minhash_band_sweep(spark: SparkSession,
         .join(sizes.selectExpr("doc_id AS id_a", "n AS n_a"), on="id_a")
         .join(sizes.selectExpr("doc_id AS id_b", "n AS n_b"), on="id_b")
         .filter(f"n_inter / CAST(n_a + n_b - n_inter AS DOUBLE)"
-                f" >= {_MH_T!r}")
+                f" >= {JACCARD_T!r}")
         .select("id_a", "id_b"))
     nt = truth.groupBy().agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_true_pairs"))
@@ -608,7 +618,7 @@ def q_minhash_band_sweep(spark: SparkSession,
                         " AS BIGINT)")
                  .alias("n_hits"))
             .selectExpr(f"CAST({r} AS BIGINT) AS rows_per_band",
-                        f"CAST({_MH_K // r} AS BIGINT) AS n_bands",
+                        f"CAST({MINHASH_K // r} AS BIGINT) AS n_bands",
                         "n_candidates", "n_hits"))
     swept = outs[0]
     for o in outs[1:]:
@@ -635,7 +645,7 @@ _SIMHASH_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
 h AS (SELECT doc_id, {_H40_DUCK.format(x='tok')} AS hh FROM toks),
-bits AS (SELECT CAST(range AS INT) AS bit FROM range(16)),
+bits AS (SELECT CAST(range AS INT) AS bit FROM range({SIMHASH_BITS})),
 per_bit AS (
   SELECT doc_id, bit,
     SUM(CASE WHEN CAST(FLOOR(hh / POW(2, bit)) AS BIGINT) % 2 = 1
@@ -658,15 +668,14 @@ FROM per_bit GROUP BY doc_id
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.dedup import simhash
 
-    return simhash(load(spark, sf_dir, "documents"), bits=16)
+    return simhash(load(spark, sf_dir, "documents"))
 
 
 # ----------------------------------------------------------------------
 # Brute-force cosine top-k (exactness baseline for ANN)
 # ----------------------------------------------------------------------
 
-_KNN_NQ, _KNN_K = 20, 5
-_CND_DIM = 64          # embeddings table vector dim (all sfs)
+_KNN_NQ = 20
 
 _KNN_ORACLE = f"""
 WITH e AS (
@@ -704,7 +713,7 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _KNN_NQ)
-    return cosine_topk(queries, emb, k=_KNN_K)
+    return cosine_topk(queries, emb)
 
 
 # ----------------------------------------------------------------------
@@ -779,7 +788,6 @@ def q_embedding_benchmark_leakage(spark: SparkSession,
 # ----------------------------------------------------------------------
 
 _LSH_PLANES = 10
-_MP_PLANES, _MP_PROBE = 8, 4
 
 
 def _lsh_oracle_parts(n_planes: int):
@@ -787,11 +795,11 @@ def _lsh_oracle_parts(n_planes: int):
                                               hyperplanes, norm_sql,
                                               projection_sql)
 
-    planes = hyperplanes(n_planes, _CND_DIM)
+    planes = hyperplanes(n_planes, EMB_DIM)
     proj_sqls = [projection_sql(p, lambda i: f"v[{i}]") for p in planes]
     sig_expr = band_bucket_sql(proj_sqls, 0, n_planes)
-    nrm = norm_sql(lambda i: f"v[{i}]", _CND_DIM)
-    dot = dot_sql(lambda i: f"x.v[{i}]", lambda i: f"y.v[{i}]", _CND_DIM)
+    nrm = norm_sql(lambda i: f"v[{i}]", EMB_DIM)
+    dot = dot_sql(lambda i: f"x.v[{i}]", lambda i: f"y.v[{i}]", EMB_DIM)
     return proj_sqls, sig_expr, nrm, dot
 
 
@@ -837,19 +845,18 @@ def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _KNN_NQ)
-    return lsh_ann(queries, emb, k=_KNN_K, n_planes=_LSH_PLANES,
-                   dim=_CND_DIM)
+    return lsh_ann(queries, emb, k=_KNN_K, n_planes=_LSH_PLANES)
 
 
 def _lsh_multiprobe_oracle() -> str:
-    proj_sqls, sig_expr, nrm, dot = _lsh_oracle_parts(_MP_PLANES)
+    proj_sqls, sig_expr, nrm, dot = _lsh_oracle_parts(MP_PLANES)
     bitvals = "\n  UNION ALL ".join(
         f"SELECT vec_id, {j} AS bit, {proj_sqls[j]} AS pr"
         f" FROM corpus WHERE vec_id < {_KNN_NQ}"
-        for j in range(_MP_PLANES)
+        for j in range(MP_PLANES)
     )
     pow2 = ("CASE r.bit " + " ".join(
-        f"WHEN {j} THEN {1 << j}" for j in range(_MP_PLANES)) + " END")
+        f"WHEN {j} THEN {1 << j}" for j in range(MP_PLANES)) + " END")
     return f"""
 WITH corpus AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -868,7 +875,7 @@ probes AS (
   SELECT r.vec_id,
     s.sig + CASE WHEN r.pr > 0e0 THEN -({pow2}) ELSE ({pow2}) END
   FROM ranked r JOIN sig s ON s.vec_id = r.vec_id
-  WHERE r.rk <= {_MP_PROBE}),
+  WHERE r.rk <= {MP_PROBES}),
 cand AS (
   SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id
   FROM probes p JOIN sig c ON c.sig = p.psig
@@ -890,9 +897,7 @@ def q_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _KNN_NQ)
-    return lsh_ann_multiprobe(queries, emb, k=_KNN_K,
-                              n_planes=_MP_PLANES, n_probe=_MP_PROBE,
-                              dim=_CND_DIM)
+    return lsh_ann_multiprobe(queries, emb, k=_KNN_K)
 
 
 # ----------------------------------------------------------------------
@@ -1014,7 +1019,7 @@ def q_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # force stays pytest-asserted on top.
 # ----------------------------------------------------------------------
 
-_IVF_NC, _IVF_ITERS, _IVF_PROBE = 16, 3, 4
+_IVF_NC = 16
 
 
 def _ddot(a: str, b: str) -> str:
@@ -1042,7 +1047,7 @@ def _ivf_train_parts(train_where: str = "") -> list[str]:
         f" AS cell, e AS cent FROM v ORDER BY vec_id LIMIT {_IVF_NC})",
     ]
     sim = f"({_ddot('nv.e', 'k.cent')} / nv.vn) / k.cn"
-    for r in range(_IVF_ITERS):
+    for r in range(IVF_ITERS):
         parts.append(
             f"k{r} AS (SELECT cell, cent,"
             f" CASE WHEN nr = 0 THEN 1.0 ELSE nr END AS cn FROM"
@@ -1076,7 +1081,7 @@ def _ivf_train_parts(train_where: str = "") -> list[str]:
             f" FROM o{r} o LEFT JOIN m{r} m"
             f" ON m.cell = o.cell AND m.d = o.d GROUP BY o.cell)"
         )
-    rf = _IVF_ITERS
+    rf = IVF_ITERS
     parts.append(
         f"kf AS (SELECT cell, cent,"
         f" CASE WHEN nr = 0 THEN 1.0 ELSE nr END AS cn FROM"
@@ -1099,7 +1104,7 @@ def _ivf_oracle() -> str:
         f" nv.vec_id, k.cell, ROW_NUMBER() OVER (PARTITION BY"
         f" nv.vec_id ORDER BY {sim} DESC, k.cell) AS rn"
         f" FROM nv CROSS JOIN kf k WHERE nv.vec_id < {_KNN_NQ})"
-        f" WHERE rn <= {_IVF_PROBE})",
+        f" WHERE rn <= {IVF_PROBE})",
         # search norms: with_norm has no zero guard
         f"sn AS (SELECT vec_id, e, sqrt({_ddot('e', 'e')}) AS nrm"
         f" FROM v)",
@@ -1136,11 +1141,10 @@ def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                                             train_ivf)
 
     emb = load(spark, sf_dir, "embeddings")
-    centroids = train_ivf(emb, n_centroids=_IVF_NC, iters=_IVF_ITERS)
+    centroids = train_ivf(emb, n_centroids=_IVF_NC)
     indexed = assign_cells(emb, centroids)
     queries = emb.filter(F.col("vec_id") < _KNN_NQ)
-    return ivf_search(queries, indexed, centroids, k=_KNN_K,
-                      n_probe=_IVF_PROBE)
+    return ivf_search(queries, indexed, centroids)
 
 
 # ----------------------------------------------------------------------
@@ -1206,7 +1210,7 @@ def q_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = d.filter("vec_id < c").drop("c")
     batch = d.filter("vec_id >= c").drop("c")
     # the persisted quantizer of a production index, trained once
-    centroids = train_ivf(hist, n_centroids=_IVF_NC, iters=_IVF_ITERS)
+    centroids = train_ivf(hist, n_centroids=_IVF_NC)
     idx_hist = assign_cells(hist, centroids) \
         .withColumn("__new", F.lit(False))
     idx_new = assign_cells(batch, centroids) \
@@ -1234,8 +1238,7 @@ def q_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identical candidate set, never all-pairs.
 # ----------------------------------------------------------------------
 
-_CND_PLANES, _CND_BANDS, _CND_T = 32, 4, 0.95
-_CND_R = _CND_PLANES // _CND_BANDS
+_CND_R = COSINE_PLANES // COSINE_BANDS
 
 _CND_PERTURB = "2e-2 * ((((vec_id * 31 + {i0} * 17) % 21) - 10) / 10e0)"
 
@@ -1247,15 +1250,15 @@ def _cnd_oracle() -> str:
                                               hyperplanes, norm_sql,
                                               projection_sql)
 
-    planes = hyperplanes(_CND_PLANES, _CND_DIM)
+    planes = hyperplanes(COSINE_PLANES, EMB_DIM)
     proj_sqls = [projection_sql(p, lambda i: f"v[{i}]") for p in planes]
     sig_selects = "\n  UNION ALL ".join(
         f"SELECT vec_id, {b} AS band,"
         f" {band_bucket_sql(proj_sqls, b, _CND_R)} AS bucket FROM corpus"
-        for b in range(_CND_BANDS)
+        for b in range(COSINE_BANDS)
     )
-    nrm = norm_sql(lambda i: f"v[{i}]", _CND_DIM)
-    dot = dot_sql(lambda i: f"x.v[{i}]", lambda i: f"y.v[{i}]", _CND_DIM)
+    nrm = norm_sql(lambda i: f"v[{i}]", EMB_DIM)
+    dot = dot_sql(lambda i: f"x.v[{i}]", lambda i: f"y.v[{i}]", EMB_DIM)
     pert = _CND_PERTURB.format(i0="(i - 1)")
     return f"""
 WITH base AS (
@@ -1281,7 +1284,7 @@ SELECT id_a, id_b, cosine FROM (
     {dot} / (x.n * y.n) AS cosine
   FROM cand JOIN nrm x ON x.vec_id = id_a
             JOIN nrm y ON y.vec_id = id_b)
-WHERE cosine >= {_CND_T}
+WHERE cosine >= {COSINE_T}
 """
 
 
@@ -1306,9 +1309,7 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" (x, i) -> CAST(x AS DOUBLE) + {pert}) AS embedding",
     )
     corpus = base.unionAll(clones)
-    return cosine_neardup(corpus, threshold=_CND_T,
-                          n_planes=_CND_PLANES, bands=_CND_BANDS,
-                          dim=_CND_DIM)
+    return cosine_neardup(corpus)
 
 
 # ----------------------------------------------------------------------
@@ -1344,13 +1345,11 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source")
 
 
-_CONTAM_N = 3
-
 _CONTAM_ORACLE = f"""
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
 sh AS (
   SELECT DISTINCT doc_id,
-    unnest(list_transform(range(len(l) - {_CONTAM_N - 1}),
+    unnest(list_transform(range(len(l) - {SHINGLE_N - 1}),
       i -> l[i + 1] || ' ' || l[i + 2] || ' ' || l[i + 3])) AS shingle
   FROM t),
 bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
@@ -1380,7 +1379,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    return contamination_report(corpus, bench, n=_CONTAM_N)
+    return contamination_report(corpus, bench)
 
 
 def _components_oracle() -> str:
@@ -1417,7 +1416,7 @@ def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.sampling import dup_components
 
     docs = load(spark, sf_dir, "documents")
-    pairs = minhash_lsh_dedup(docs, n=_MH_N, k=_MH_K, threshold=_MH_T)
+    pairs = minhash_lsh_dedup(docs)
     return dup_components(pairs)
 
 
@@ -1473,7 +1472,7 @@ def q_neardup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.sampling import dup_components
 
     docs = load(spark, sf_dir, "documents")
-    pairs = minhash_lsh_dedup(docs, n=_MH_N, k=_MH_K, threshold=_MH_T)
+    pairs = minhash_lsh_dedup(docs)
     comp = dup_components(pairs)
     t = docs.select(
         "doc_id", F.expr("size(split(text, ' '))").alias("n_tokens"))
@@ -1576,7 +1575,7 @@ laid AS (
       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n
       AS cum_before
   FROM toks),
-spans AS (SELECT CAST(range AS BIGINT) AS k FROM range(8))
+spans AS (SELECT CAST(range AS BIGINT) AS k FROM range({MAX_SPAN}))
 SELECT doc_id,
   CAST(cum_before // {_PACK_LEN} + k AS BIGINT) AS seq_id,
   CAST(GREATEST(cum_before, (cum_before // {_PACK_LEN} + k)
@@ -1887,16 +1886,16 @@ def q_doc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").filter(
         "text IS NOT NULL")
-    n = normalize_text(docs, out_col="__norm")
+    n = normalize_text(docs)
     p = n.selectExpr(
         "doc_id",
         "CAST(length(text) AS BIGINT) AS n_chars_raw",
-        "CAST(length(__norm) AS BIGINT) AS n_chars_norm",
+        "CAST(length(norm_text) AS BIGINT) AS n_chars_norm",
         "CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens_raw",
-        "CAST(CASE WHEN __norm = '' THEN 0"
-        " ELSE size(split(__norm, ' ')) END AS BIGINT)"
+        "CAST(CASE WHEN norm_text = '' THEN 0"
+        " ELSE size(split(norm_text, ' ')) END AS BIGINT)"
         " AS n_tokens_norm",
-        "md5(__norm) AS norm_digest")
+        "md5(norm_text) AS norm_digest")
     g = p.groupBy("norm_digest").agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("norm_dup_count"))
     return p.join(g, on="norm_digest").select(
@@ -2214,7 +2213,7 @@ tots AS (SELECT CAST(SUM(cr) AS BIGINT) AS nr,
     CAST(SUM(COALESCE(ct, 0)) AS BIGINT) AS nt
   FROM cr LEFT JOIN ct USING (bucket)),
 terms AS (SELECT bucket,
-    CAST({dsir_term_sql(DSIR_B)} AS DECIMAL(38,9)) AS __term
+    CAST({dsir_term_sql()} AS DECIMAL(38,9)) AS __term
   FROM cr LEFT JOIN ct USING (bucket) CROSS JOIN tots),
 sc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
     SUM(__term) AS logw_d
@@ -2759,7 +2758,7 @@ tots AS (SELECT CAST(SUM(cr) AS BIGINT) AS nr,
     CAST(SUM(COALESCE(ct, 0)) AS BIGINT) AS nt
   FROM cr LEFT JOIN ct USING (bucket)),
 terms AS (SELECT bucket,
-    CAST({dsir_term_sql(DSIR_B)} AS DECIMAL(38,9)) AS t
+    CAST({dsir_term_sql()} AS DECIMAL(38,9)) AS t
   FROM cr LEFT JOIN ct USING (bucket) CROSS JOIN tots),
 af AS (SELECT doc_id, {h40} % {DSIR_B} AS bucket FROM (
     SELECT doc_id, {feats} FROM d)),
@@ -3076,7 +3075,7 @@ def q_stream_unimax_ingest(spark: SparkSession,
 
 
 def _decontam_oracle() -> str:
-    n = _CONTAM_N
+    n = SHINGLE_N
     # DuckDB lists are 1-based and range() is 0-based here, so the
     # k-th gram token is l[i + k + 1] (l[i + 0] would be the NULL
     # zero index and silently drop every doc's first gram)
@@ -3141,7 +3140,7 @@ JOIN corp c ON c.doc_id = cl.doc_id"""
 def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    n = _CONTAM_N
+    n = SHINGLE_N
     docs = (load(spark, sf_dir, "documents")
             .filter("text IS NOT NULL")
             .selectExpr("doc_id", "split(text, ' ') AS __l",
@@ -3502,7 +3501,7 @@ def q_ccnet_perlang_buckets(spark: SparkSession,
 
 
 _PQ_M, _PQ_K, _PQ_ITERS = 8, 16, 3
-_PQ_SUB = _CND_DIM // _PQ_M
+_PQ_SUB = EMB_DIM // _PQ_M
 _PQ_SHORT = 10 * _KNN_K
 
 
@@ -3594,7 +3593,7 @@ def _pq_oracle(k: int = _KNN_K, prelude: list | None = None,
         # derived source: e is already DOUBLE, the subtraction is
         # double in both engines (Spark's zip_with over the
         # double-cast permuted arrays)
-        ex = (f"list_reduce(list_transform(range(1, {_CND_DIM} + 1),"
+        ex = (f"list_reduce(list_transform(range(1, {EMB_DIM} + 1),"
               " i -> (q.e[i] - c.e[i]) * (q.e[i] - c.e[i])),"
               " (p, t) -> p + t)")
         ex_q, ex_c = f"{src} q", f"{src} c"
@@ -3674,7 +3673,7 @@ def _opq_prelude() -> list:
         "v AS (SELECT vec_id,"
         " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e"
         " FROM embeddings)",
-        f"xd AS (SELECT vec_id, unnest(range(1, {_CND_DIM} + 1))"
+        f"xd AS (SELECT vec_id, unnest(range(1, {EMB_DIM} + 1))"
         f" AS d, unnest(e) AS x FROM v)",
         # stats-input contract (mirrors train_allocation): rows with
         # a non-finite or out-of-domain coordinate are dropped from
@@ -3811,7 +3810,7 @@ _IVFPQ_NC, _IVFPQ_ITERS, _IVFPQ_PROBE = 8, 2, 3
 
 
 def _ivfpq_oracle(k: int = _KNN_K) -> str:
-    dim, sub = _CND_DIM, _PQ_SUB
+    dim, sub = EMB_DIM, _PQ_SUB
     it, npr = _IVFPQ_ITERS, _IVFPQ_PROBE
     sqd_full = _pq_sqd(dim)
     sqd_sub = _pq_sqd(sub)
@@ -4022,7 +4021,7 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_incremental_oracle() -> str:
-    dim, sub = _CND_DIM, _PQ_SUB
+    dim, sub = EMB_DIM, _PQ_SUB
     it = _IVFPQ_ITERS
     sqd_full = _pq_sqd(dim)
     sqd_sub = _pq_sqd(sub)
@@ -4177,8 +4176,7 @@ def q_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.dedup import minhash_lsh_dedup
 
     docs = load(spark, sf_dir, "documents")
-    pairs = minhash_lsh_dedup(docs, n=_MH_N, k=_MH_K,
-                              threshold=_MH_T)
+    pairs = minhash_lsh_dedup(docs)
     texts = docs.selectExpr(
         "doc_id", f"substring(text, 1, {_ED_PREFIX}) AS __t")
     return (
@@ -4245,8 +4243,7 @@ def q_dup_graph_triangles(spark: SparkSession,
     from xsarsea_spark.operators.pagerank import triangle_counts
     from xsarsea_spark.pipeline.dedup import minhash_lsh_dedup
 
-    pairs = minhash_lsh_dedup(load(spark, sf_dir, "documents"),
-                              n=_MH_N, k=_MH_K, threshold=_MH_T)
+    pairs = minhash_lsh_dedup(load(spark, sf_dir, "documents"))
     # the wedge join consumes the edge list on FOUR plan branches
     # (degrees, e1, e2, closing edge); checkpoint the tiny verified
     # pair set so the LSH candidate pipeline runs once, not four
@@ -4306,7 +4303,7 @@ def q_hof_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identical token array at the identical offsets.
 # ----------------------------------------------------------------------
 
-_CH_TOK, _CH_STRIDE = 64, 48
+_CH_STRIDE = 48
 
 
 def _chunk_sql(tok: int, stride: int) -> str:
@@ -4335,7 +4332,7 @@ FROM ex WHERE len(chunk) > 0
 """
 
 
-_CHUNK_ORACLE = _chunk_sql(_CH_TOK, _CH_STRIDE)
+_CHUNK_ORACLE = _chunk_sql(CHUNK_TOKENS, _CH_STRIDE)
 
 
 @spec(
@@ -4350,8 +4347,7 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.text import chunk_documents
 
     docs = load(spark, sf_dir, "documents")
-    return chunk_documents(docs, chunk_tokens=_CH_TOK,
-                           stride=_CH_STRIDE)
+    return chunk_documents(docs, stride=_CH_STRIDE)
 
 
 # ----------------------------------------------------------------------
@@ -4366,7 +4362,7 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _chunk_dedup_oracle() -> str:
     return f"""
-WITH ch AS ({_chunk_sql(_CH_TOK, _CH_TOK).strip()}),
+WITH ch AS ({_chunk_sql(CHUNK_TOKENS, CHUNK_TOKENS).strip()}),
 h AS (SELECT doc_id, chunk_id, md5(chunk_text) AS h FROM ch),
 r AS (SELECT doc_id, chunk_id, h,
         ROW_NUMBER() OVER (PARTITION BY h
@@ -4394,7 +4390,7 @@ def q_doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.text import chunk_dedup
 
     docs = load(spark, sf_dir, "documents")
-    return chunk_dedup(docs, chunk_tokens=_CH_TOK)
+    return chunk_dedup(docs)
 
 
 # ----------------------------------------------------------------------
@@ -4499,19 +4495,18 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the media-kernel batch shape is value-checked, not just rows-only.
 # ----------------------------------------------------------------------
 
-_FR_BYTES, _FR_STRIDE = 256, 2
 
 _FRAME_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, text, length(text) // {_FR_BYTES} AS n_frames
+  SELECT doc_id, text, length(text) // {FRAME_BYTES} AS n_frames
   FROM documents),
 f AS (
   SELECT doc_id,
-    unnest(range(0, n_frames, {_FR_STRIDE})) AS frame_idx, text
+    unnest(range(0, n_frames, {FRAME_STRIDE})) AS frame_idx, text
   FROM t WHERE n_frames > 0)
 SELECT doc_id, frame_idx,
-  md5(substr(text, CAST(frame_idx * {_FR_BYTES} + 1 AS INT),
-             {_FR_BYTES})) AS frame_digest
+  md5(substr(text, CAST(frame_idx * {FRAME_BYTES} + 1 AS INT),
+             {FRAME_BYTES})) AS frame_digest
 FROM f
 """
 
@@ -4529,8 +4524,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                    sample_frames)
 
     docs = load(spark, sf_dir, "documents")
-    return sample_frames(attach_payload(docs),
-                         frame_bytes=_FR_BYTES, stride=_FR_STRIDE)
+    return sample_frames(attach_payload(docs))
 
 
 # ----------------------------------------------------------------------
@@ -4658,18 +4652,17 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signal): hash-only shuffle stream, two exchanges on the gram hash.
 # ----------------------------------------------------------------------
 
-_XD_N = 8
 
 _XDUP_ORACLE = f"""
 WITH t AS (
   SELECT doc_id, string_split(text, ' ') AS l FROM documents),
 g AS (
   SELECT doc_id,
-    unnest(list_transform(range(1, len(l) - {_XD_N} + 2),
+    unnest(list_transform(range(1, len(l) - {XDUP_N} + 2),
       i -> {_H40_DUCK.format(
-          x=f"array_to_string(l[i:i + {_XD_N} - 1], ' ')")}))
+          x=f"array_to_string(l[i:i + {XDUP_N} - 1], ' ')")}))
       AS h
-  FROM t WHERE len(l) >= {_XD_N}),
+  FROM t WHERE len(l) >= {XDUP_N}),
 d AS (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM g GROUP BY h)
 SELECT doc_id, COUNT(*) AS n_grams,
   CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT)
@@ -4692,8 +4685,7 @@ GROUP BY doc_id
 def q_ngram_crossdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.text import crossdoc_ngram_dup
 
-    return crossdoc_ngram_dup(load(spark, sf_dir, "documents"),
-                              n=_XD_N)
+    return crossdoc_ngram_dup(load(spark, sf_dir, "documents"))
 
 
 # ----------------------------------------------------------------------
@@ -4760,10 +4752,6 @@ def q_doc_shard_assignment(spark: SparkSession,
 # chained-CTE replay of every round matches weights, predictions AND
 # accuracy value-exactly.
 # ----------------------------------------------------------------------
-
-_LOGREG_ROUNDS, _LOGREG_LR = 8, 1.0
-_LOGREG_QK, _LOGREG_SCALE = 12, 12
-
 
 def _logreg_train_ctes(train_where: str = "TRUE",
                        round_wheres: list | None = None
@@ -4868,8 +4856,7 @@ def q_doc_quality_classifier(spark: SparkSession,
 
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs)
-    w = train_logreg(xy, rounds=_LOGREG_ROUNDS, lr=_LOGREG_LR,
-                     qk=_LOGREG_QK, scale=_LOGREG_SCALE)
+    w = train_logreg(xy)
     acc = xy.select("y", F.expr(z_expr(w)).alias("z")).agg(
         F.expr("CAST(SUM(CASE WHEN (z >= CAST(0.0 AS DOUBLE))"
                " = (y = CAST(1.0 AS DOUBLE)) THEN 1 ELSE 0 END)"
@@ -4939,13 +4926,11 @@ def q_doc_classifier_score(spark: SparkSession,
 
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs)
-    w = train_logreg(xy.filter(_CLF_TRAIN_WHERE),
-                     rounds=_LOGREG_ROUNDS, lr=_LOGREG_LR,
-                     qk=_LOGREG_QK, scale=_LOGREG_SCALE)
+    w = train_logreg(xy.filter(_CLF_TRAIN_WHERE))
     path = scratch_path(spark, "clf_weights", sf_dir)
     save_weights(spark, w, path)
     return score_docs(xy.filter(_CLF_BATCH_WHERE),
-                      load_weights(spark, path), qk=_LOGREG_QK)
+                      load_weights(spark, path))
 
 
 # ----------------------------------------------------------------------
@@ -5012,9 +4997,7 @@ def q_doc_classifier_auc(spark: SparkSession,
 
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs)
-    w = train_logreg(xy.filter(_CLF_TRAIN_WHERE),
-                     rounds=_LOGREG_ROUNDS, lr=_LOGREG_LR,
-                     qk=_LOGREG_QK, scale=_LOGREG_SCALE)
+    w = train_logreg(xy.filter(_CLF_TRAIN_WHERE))
     h = (xy.filter(_CLF_BATCH_WHERE)
          .select("y", F.expr(z_expr(w)).alias("z")))
     g = h.groupBy("z").agg(
@@ -5097,9 +5080,7 @@ def q_doc_classifier_calibration(spark: SparkSession,
 
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs)
-    w = train_logreg(xy.filter(_CLF_TRAIN_WHERE),
-                     rounds=_LOGREG_ROUNDS, lr=_LOGREG_LR,
-                     qk=_LOGREG_QK, scale=_LOGREG_SCALE)
+    w = train_logreg(xy.filter(_CLF_TRAIN_WHERE))
     pr = (xy.filter(_CLF_BATCH_WHERE)
           .select("y", F.expr(z_expr(w)).alias("z"))
           .selectExpr("y", _clf_prob_sql() + " AS prob"))
@@ -5177,9 +5158,7 @@ def q_doc_classifier_select(spark: SparkSession,
 
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs)
-    w = train_logreg(xy.filter(_CLF_TRAIN_WHERE),
-                     rounds=_LOGREG_ROUNDS, lr=_LOGREG_LR,
-                     qk=_LOGREG_QK, scale=_LOGREG_SCALE)
+    w = train_logreg(xy.filter(_CLF_TRAIN_WHERE))
     pp = (xy.select("doc_id", F.expr(z_expr(w)).alias("z"))
           .selectExpr("doc_id", "z", _clf_prob_sql() + " AS prob"))
     qt = ntile_distributed(
@@ -5282,10 +5261,7 @@ def q_doc_classifier_perlang(spark: SparkSession,
 
     docs = load(spark, sf_dir, "documents")
     xy = doc_features(docs, extra=("lang",))
-    wmap = train_logreg_grouped(
-        xy.filter(_CLF_TRAIN_WHERE),
-        rounds=_LOGREG_ROUNDS, lr=_LOGREG_LR,
-        qk=_LOGREG_QK, scale=_LOGREG_SCALE)
+    wmap = train_logreg_grouped(xy.filter(_CLF_TRAIN_WHERE))
     groups = sorted(wmap)
     wdf = spark.createDataFrame(
         [(g, wmap[g]) for g in groups],
@@ -5389,8 +5365,7 @@ def q_stream_classifier_train(spark: SparkSession,
     def step(df: DataFrame, batch_id: int) -> None:
         prev = version_below(spark, state, batch_id)
         w = list(load_kv_json(spark, prev)) if prev else [0.0] * N_FEATURES
-        w2 = gd_step(doc_features(df), w, lr=_LOGREG_LR,
-                     qk=_LOGREG_QK, scale=_LOGREG_SCALE)
+        w2 = gd_step(doc_features(df), w)
         save_kv_json(spark, w2, os.path.join(state, f"v{batch_id}"))
 
     src = spark.readStream.schema(schema).parquet(watch)
@@ -5787,8 +5762,8 @@ def _semdedup_oracle() -> str:
     ]
     km = _kmeans_ctes(_SD_K_SQL, _SD_ROUNDS,
                       "SELECT vec_id, v AS e FROM corpus")
-    nrm = norm_sql(lambda i: f"v[{i}]", _CND_DIM)
-    dot = dot_sql(lambda i: f"x.v[{i}]", lambda i: f"y.v[{i}]", _CND_DIM)
+    nrm = norm_sql(lambda i: f"v[{i}]", EMB_DIM)
+    dot = dot_sql(lambda i: f"x.v[{i}]", lambda i: f"y.v[{i}]", EMB_DIM)
     tail = [
         f"asg AS (SELECT vec_id, cluster FROM a{_SD_ROUNDS - 1})",
         f"nrm AS (SELECT vec_id, v, {nrm} AS n FROM corpus)",
@@ -5831,12 +5806,12 @@ def q_embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nrm = corpus.select(
         "vec_id", F.col("embedding").alias("__v"),
         F.expr(norm_sql(lambda i: f"element_at(embedding, {i})",
-                        _CND_DIM)).alias("__n"))
+                        EMB_DIM)).alias("__n"))
     a = asg.select(F.col("vec_id").alias("id_a"), "cluster")
     b = asg.select(F.col("vec_id").alias("id_b"),
                    F.col("cluster").alias("__cb"))
     dot = dot_sql(lambda i: f"element_at(__va, {i})",
-                  lambda i: f"element_at(__vb, {i})", _CND_DIM)
+                  lambda i: f"element_at(__vb, {i})", EMB_DIM)
     pairs = (
         a.join(b, (F.col("cluster") == F.col("__cb"))
                & (F.col("id_a") < F.col("id_b")))
@@ -5967,7 +5942,7 @@ _RRF_K, _RRF_POOL, _RRF_TOPK = 60, 50, 20
 
 
 def _rrf_oracle() -> str:
-    d = _CND_DIM
+    d = EMB_DIM
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
 
     dot = (f"list_reduce(list_transform(range(1, {d + 1}),"
@@ -6039,7 +6014,7 @@ WHERE fr <= {_RRF_TOPK}"""
 def q_doc_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _CND_DIM
+    d = EMB_DIM
     docs = load(spark, sf_dir, "documents")
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     toks = docs.selectExpr(
@@ -6216,8 +6191,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     wmd5 = Window.partitionBy(F.expr("md5(text)")).orderBy("doc_id")
     exact_keep = (docs.withColumn("__rn", F.row_number().over(wmd5))
                   .filter("__rn = 1").select("doc_id"))
-    near_drop = (minhash_lsh_dedup(docs, n=_MH_N, k=_MH_K,
-                                   threshold=_MH_T)
+    near_drop = (minhash_lsh_dedup(docs)
                  .select(F.col("id_b").alias("doc_id")).distinct()
                  .withColumn("__nd", F.lit(True)))
     qual = quality_score(language_id(docs)).select(
@@ -6251,9 +6225,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines, like graph_pagerank's rounds.
 # ----------------------------------------------------------------------
 
-_PCA_D, _PCA_ROUNDS = 64, 12
-
-
 def _pca_iter_ctes(src: str, sfx: str) -> list[str]:
     """One power-iteration chain over the Gram in CTE ``src`` — the
     twin of the engine kernel's scalar loop, same generator leaves,
@@ -6263,17 +6234,17 @@ def _pca_iter_ctes(src: str, sfx: str) -> list[str]:
                                                power_step_sql,
                                                rayleigh_sql, scale_sql)
 
-    d = _PCA_D
+    d = EMB_DIM
     its = [f"i{sfx}_0 AS (SELECT G, {power_init_sql(d, 'duck')} AS v"
            f" FROM {src})"]
-    for r in range(_PCA_ROUNDS):
+    for r in range(PCA_ROUNDS):
         its.append(
             f"i{sfx}_{r + 1} AS (SELECT G,"
             f" {power_step_sql('G', 'v', d, 'duck')} AS v"
             f" FROM i{sfx}_{r})")
     its.append(
         f"fin{sfx} AS (SELECT G, v, {norm_sql('v', d, 'duck')} AS n"
-        f" FROM i{sfx}_{_PCA_ROUNDS})")
+        f" FROM i{sfx}_{PCA_ROUNDS})")
     its.append(
         f"un{sfx} AS (SELECT G, {scale_sql('v', 'n', d, 'duck')} AS v"
         f" FROM fin{sfx})")
@@ -6287,7 +6258,7 @@ def _pca_gram_ctes() -> str:
     """Corpus guard -> grid means -> grid covariance -> gm(G)."""
     from xsarsea_spark.pipeline.linalg import G_SCALE, MU_SCALE
 
-    d = _PCA_D
+    d = EMB_DIM
     return f"""
 f AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -6323,7 +6294,7 @@ def _pca_ctes() -> str:
 
 
 def _pca_oracle() -> str:
-    d = _PCA_D
+    d = EMB_DIM
     return f"""
 WITH {_pca_ctes()}
 SELECT k AS dim, v[k] AS loading, ev AS eigval
@@ -6344,12 +6315,11 @@ FROM it, (SELECT unnest(range(1, {d + 1})) AS k) t
 def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.linalg import pca_power
 
-    return pca_power(load(spark, sf_dir, "embeddings"),
-                     d=_PCA_D, rounds=_PCA_ROUNDS)
+    return pca_power(load(spark, sf_dir, "embeddings"))
 
 
 def _pca_project_oracle() -> str:
-    d = _PCA_D
+    d = EMB_DIM
     return f"""
 WITH {_pca_ctes()}
 SELECT f.vec_id,
@@ -6374,19 +6344,17 @@ def q_embedding_pca_project(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.linalg import pca_project
 
-    return pca_project(load(spark, sf_dir, "embeddings"),
-                       d=_PCA_D, rounds=_PCA_ROUNDS)
+    return pca_project(load(spark, sf_dir, "embeddings"))
 
 
-_PCA_K = 3
 
 
 def _pca_topk_oracle() -> str:
     from xsarsea_spark.pipeline.linalg import deflate_sql
 
-    d = _PCA_D
+    d = EMB_DIM
     parts = [_pca_gram_ctes()] + _pca_iter_ctes("gm", "0")
-    for c in range(1, _PCA_K):
+    for c in range(1, PCA_COMPONENTS):
         # Hotelling deflation of the previous chain's matrix, then a
         # fresh iteration chain over the residual — the CTE twin of
         # the kernel's per-component loop
@@ -6399,7 +6367,7 @@ def _pca_topk_oracle() -> str:
         f"SELECT CAST({c} AS INTEGER) AS component, k AS dim,"
         f" v[k] AS loading, ev AS eigval"
         f" FROM it{c}, (SELECT unnest(range(1, {d + 1})) AS k) t{c}"
-        for c in range(_PCA_K))
+        for c in range(PCA_COMPONENTS))
     return "WITH " + ",\n".join(parts) + "\n" + finals
 
 
@@ -6416,16 +6384,15 @@ def q_embedding_pca_topk(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.linalg import pca_topk
 
-    return pca_topk(load(spark, sf_dir, "embeddings"),
-                    d=_PCA_D, rounds=_PCA_ROUNDS, n_comp=_PCA_K)
+    return pca_topk(load(spark, sf_dir, "embeddings"))
 
 
 def _pca_whiten_oracle() -> str:
     from xsarsea_spark.pipeline.linalg import deflate_sql
 
-    d = _PCA_D
+    d = EMB_DIM
     parts = [_pca_gram_ctes()] + _pca_iter_ctes("gm", "0")
-    for c in range(1, _PCA_K):
+    for c in range(1, PCA_COMPONENTS):
         parts.append(
             f"gd{c} AS (SELECT"
             f" {deflate_sql('G', 'v', 'ev', d, 'duck')} AS G"
@@ -6433,7 +6400,7 @@ def _pca_whiten_oracle() -> str:
         parts += _pca_iter_ctes(f"gd{c}", str(c))
     st = "\nUNION ALL\n".join(
         f"SELECT CAST({c} AS INTEGER) AS component, v, ev FROM it{c}"
-        for c in range(_PCA_K))
+        for c in range(PCA_COMPONENTS))
     parts.append(f"st AS ({st})")
     return ("WITH " + ",\n".join(parts) + f"""
 SELECT f.vec_id, st.component,
@@ -6461,8 +6428,7 @@ def q_embedding_pca_whiten(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.linalg import pca_whiten
 
-    return pca_whiten(load(spark, sf_dir, "embeddings"),
-                      d=_PCA_D, rounds=_PCA_ROUNDS, n_comp=_PCA_K)
+    return pca_whiten(load(spark, sf_dir, "embeddings"))
 
 
 def _pca_outlier_oracle() -> str:
@@ -6472,7 +6438,7 @@ SELECT vec_id,
   CAST(SUM(CAST((CAST(FLOOR((whitened * whitened) * 1e9) AS DOUBLE)
                  / 1e9) AS DECIMAL(38,9))) AS DOUBLE) AS maha2,
   CAST(SUM(CAST((CAST(FLOOR((whitened * whitened) * 1e9) AS DOUBLE)
-                 / 1e9) AS DECIMAL(38,9))) AS DOUBLE) > 9.0
+                 / 1e9) AS DECIMAL(38,9))) AS DOUBLE) > {OUTLIER_THRESHOLD}
     AS is_outlier
 FROM w GROUP BY vec_id
 """
@@ -6492,8 +6458,7 @@ def q_embedding_pca_outliers(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.linalg import pca_outliers
 
-    return pca_outliers(load(spark, sf_dir, "embeddings"),
-                        d=_PCA_D, rounds=_PCA_ROUNDS, n_comp=_PCA_K)
+    return pca_outliers(load(spark, sf_dir, "embeddings"))
 
 
 # ----------------------------------------------------------------------
@@ -6515,7 +6480,7 @@ def q_embedding_pca_outliers(spark: SparkSession,
 def _pca_incremental_oracle() -> str:
     from xsarsea_spark.pipeline.linalg import G_SCALE, MU_SCALE
 
-    d = _PCA_D
+    d = EMB_DIM
     gram = f"""
 f AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -6575,12 +6540,12 @@ def q_embedding_pca_incremental(spark: SparkSession,
     prev = None
     for b in range(3):
         batch = emb.filter(F.expr(f"vec_id % 3 = {b}"))
-        part = moment_state(batch, d=_PCA_D)
+        part = moment_state(batch, d=EMB_DIM)
         cur = part if prev is None else moment_merge([prev, part])
         path = f"{base}/v{b}"
         cur.write.mode("overwrite").parquet(path)
         prev = spark.read.parquet(path)
-    return pca_from_moments(prev, d=_PCA_D, rounds=_PCA_ROUNDS)
+    return pca_from_moments(prev)
 
 
 # ----------------------------------------------------------------------
@@ -6597,7 +6562,7 @@ def q_embedding_pca_incremental(spark: SparkSession,
 def _drift_oracle() -> str:
     from xsarsea_spark.pipeline.linalg import G_SCALE, MU_SCALE
 
-    d = _PCA_D
+    d = EMB_DIM
     return f"""
 WITH f AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -6648,8 +6613,8 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     return drift_report(
-        moment_state(emb.filter("vec_id % 3 < 2"), d=_PCA_D),
-        moment_state(emb.filter("vec_id % 3 = 2"), d=_PCA_D))
+        moment_state(emb.filter("vec_id % 3 < 2"), d=EMB_DIM),
+        moment_state(emb.filter("vec_id % 3 = 2"), d=EMB_DIM))
 
 
 # ----------------------------------------------------------------------
@@ -6694,7 +6659,7 @@ def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     # the baseline a production gate compares against, persisted once
-    moment_state(emb.filter("vec_id % 3 < 2"), d=_PCA_D) \
+    moment_state(emb.filter("vec_id % 3 < 2"), d=EMB_DIM) \
         .repartition(1).write.parquet(hist_path)
 
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
@@ -6706,7 +6671,7 @@ def q_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = {(int(r["i"]), int(r["j"])):
                 (int(r["q"]), int(r["r"]), int(r["n"]))
                 for r in moment_state(
-                    df.filter("vec_id % 3 = 2"), d=_PCA_D).collect()}
+                    df.filter("vec_id % 3 = 2"), d=EMB_DIM).collect()}
         prev = version_below(spark, state_dir, batch_id)
         if prev:
             for (i, j, q, r, n) in load_kv_json(spark, prev):
@@ -7928,7 +7893,7 @@ def q_doc_longest_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").filter(
         f"text IS NOT NULL AND doc_id % {_SFX_MOD} = 0")
-    return longest_dup_span(docs, rounds=_SFX_ROUNDS, cached=True)
+    return longest_dup_span(docs, rounds=_SFX_ROUNDS)
 
 
 # ----------------------------------------------------------------------
@@ -8077,8 +8042,7 @@ def q_doc_crossdup_exact(spark: SparkSession,
         f"text IS NOT NULL AND doc_id % {_SFX_MOD} = 0")
     # cx feeds the per-doc rollup AND the argmax-position join: the
     # barrier keeps the whole range-min pipeline at one execution
-    cx = materialize(cross_doc_lcp(docs, rounds=_SFX_ROUNDS,
-                                   cached=True))
+    cx = materialize(cross_doc_lcp(docs, rounds=_SFX_ROUNDS))
     agg = cx.groupBy("doc_id").agg(
         F.expr("CAST(MAX(cross_lcp) AS BIGINT)")
         .alias("max_cross_tokens"),
@@ -8106,20 +8070,19 @@ def q_doc_crossdup_exact(spark: SparkSession,
 # text by digest.
 # ----------------------------------------------------------------------
 
-_LD_W, _LD_MIN = 10, 3
 
 _LINE_DEDUP_ORACLE = f"""
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS l
            FROM documents WHERE text IS NOT NULL),
 ln AS (SELECT doc_id, s.j AS line_no, s.line AS line FROM (
   SELECT doc_id, unnest(list_transform(
-    range(0, (len(l) - 1) // {_LD_W} + 1),
+    range(0, (len(l) - 1) // {LINE_WORDS} + 1),
     j -> struct_pack(j := j, line := array_to_string(
-      l[j * {_LD_W} + 1 : j * {_LD_W} + {_LD_W}], ' ')))) AS s
+      l[j * {LINE_WORDS} + 1 : j * {LINE_WORDS} + {LINE_WORDS}], ' ')))) AS s
   FROM t)),
 h AS (SELECT *, {_H40_DUCK.format(x='line')} AS hh FROM ln),
 c AS (SELECT hh, count(*) AS n FROM h GROUP BY hh),
-k AS (SELECT h.*, c.n >= {_LD_MIN} AS removed
+k AS (SELECT h.*, c.n >= {LINE_MIN_COUNT} AS removed
       FROM h JOIN c ON c.hh = h.hh)
 SELECT doc_id,
   CAST(COUNT(*) AS BIGINT) AS n_lines,
@@ -8146,8 +8109,7 @@ FROM k GROUP BY doc_id
 def q_doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.text import line_dedup
 
-    d = line_dedup(load(spark, sf_dir, "documents"),
-                   line_words=_LD_W, min_count=_LD_MIN)
+    d = line_dedup(load(spark, sf_dir, "documents"))
     return (
         d.groupBy("doc_id")
         .agg(
@@ -8183,13 +8145,13 @@ WITH t AS (SELECT doc_id, string_split(text, ' ') AS l
            FROM documents WHERE text IS NOT NULL),
 ln AS (SELECT doc_id, s.j AS line_no, s.line AS line FROM (
   SELECT doc_id, unnest(list_transform(
-    range(0, (len(l) - 1) // {_LD_W} + 1),
+    range(0, (len(l) - 1) // {LINE_WORDS} + 1),
     j -> struct_pack(j := j, line := array_to_string(
-      l[j * {_LD_W} + 1 : j * {_LD_W} + {_LD_W}], ' ')))) AS s
+      l[j * {LINE_WORDS} + 1 : j * {LINE_WORDS} + {LINE_WORDS}], ' ')))) AS s
   FROM t)),
 h AS (SELECT *, {_H40_DUCK.format(x='line')} AS hh FROM ln),
 c AS (SELECT hh, count(*) AS n FROM h GROUP BY hh),
-k AS (SELECT h.*, c.n >= {_LD_MIN} AS removed
+k AS (SELECT h.*, c.n >= {LINE_MIN_COUNT} AS removed
       FROM h JOIN c ON c.hh = h.hh),
 j AS (SELECT k.*, d.source FROM k
       JOIN documents d ON d.doc_id = k.doc_id)
@@ -8220,7 +8182,7 @@ def q_doc_source_boilerplate(spark: SparkSession,
     from xsarsea_spark.pipeline.text import line_dedup
 
     docs = load(spark, sf_dir, "documents")
-    d = line_dedup(docs, line_words=_LD_W, min_count=_LD_MIN)
+    d = line_dedup(docs)
     j = d.join(docs.select("doc_id", "source"), on="doc_id")
     return j.groupBy("source").agg(
         F.countDistinct("doc_id").alias("n_docs"),
@@ -8457,11 +8419,11 @@ WITH t AS (
   SELECT doc_id, string_split(text, ' ') AS l FROM documents),
 g AS (
   SELECT doc_id,
-    unnest(list_transform(range(1, len(l) - {_XD_N} + 2),
+    unnest(list_transform(range(1, len(l) - {XDUP_N} + 2),
       i -> {_H40_DUCK.format(
-          x=f"array_to_string(l[i:i + {_XD_N} - 1], ' ')")}))
+          x=f"array_to_string(l[i:i + {XDUP_N} - 1], ' ')")}))
       AS h
-  FROM t WHERE len(l) >= {_XD_N}),
+  FROM t WHERE len(l) >= {XDUP_N}),
 first AS (SELECT h, MIN(doc_id) AS introducer FROM g GROUP BY h)
 SELECT doc_id, COUNT(*) AS n_grams,
   CAST(SUM(CASE WHEN introducer = doc_id THEN 1 ELSE 0 END)
@@ -8487,12 +8449,12 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     gram = (
-        f"transform(sequence(1, size(__toks) - {_XD_N - 1}),"
-        f" i -> {HASH40_SQL.format(x=_GRAM_CONCAT.format(n=_XD_N))})"
+        f"transform(sequence(1, size(__toks) - {XDUP_N - 1}),"
+        f" i -> {HASH40_SQL.format(x=_GRAM_CONCAT.format(n=XDUP_N))})"
     )
     grams = (
         docs.withColumn("__toks", F.split(F.col("text"), " "))
-        .filter(F.expr(f"size(__toks) >= {_XD_N}"))
+        .filter(F.expr(f"size(__toks) >= {XDUP_N}"))
         .select("doc_id", F.explode(F.expr(gram)).alias("__h"))
     )
     first = grams.groupBy("__h").agg(
@@ -8831,8 +8793,7 @@ def q_stream_neardup_ingest(spark: SparkSession,
     def ingest(df: DataFrame, batch_id: int) -> None:
         ingest_neardup_batch(
             spark, df.select("doc_id", "lang", "n_chars", "text"),
-            seen_dir, bands_dir, marker_path,
-            n=_MH_N, k=_MH_K, threshold=_MH_T)
+            seen_dir, bands_dir, marker_path)
 
     src = _file_stream(spark, sf_dir, "documents", schema)
     run_available_now(src, ingest, ckpt_dir)
@@ -9178,8 +9139,7 @@ def q_pipeline_curation_report(spark: SparkSession,
     # stage yields 0/NULL exactly like the oracle's scalar
     # aggregates; per-row token counts are unchanged integers.
     wmd5 = Window.partitionBy(F.expr("md5(text)")).orderBy("doc_id")
-    near_drop = (minhash_lsh_dedup(docs, n=_MH_N, k=_MH_K,
-                                   threshold=_MH_T)
+    near_drop = (minhash_lsh_dedup(docs)
                  .select(F.col("id_b").alias("doc_id")).distinct())
     qual = quality_score(language_id(docs)).select(
         "doc_id", F.col("quality").alias("__q"))
@@ -9344,7 +9304,7 @@ def _binary_quant_oracle() -> str:
                 f" THEN (1::BIGINT << CAST(b AS INT))"
                 f" ELSE 0::BIGINT END), (a, x) -> a + x)")
 
-    nw = _CND_DIM // 32
+    nw = EMB_DIM // 32
     words = ", ".join(f"{word(w * 32)} AS w{w}" for w in range(nw))
     ham = " + ".join(
         f"CAST(bit_count(xor(q.q{w}, c.w{w})) AS BIGINT)"
@@ -9392,9 +9352,9 @@ def q_embedding_binary_quant(spark: SparkSession,
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _KNN_NQ)
-    ex = cosine_topk(queries, emb, k=_KNN_K) \
+    ex = cosine_topk(queries, emb) \
         .select("query_id", "neighbor_id")
-    bt = hamming_topk(queries, emb, k=_KNN_K, dim=_CND_DIM) \
+    bt = hamming_topk(queries, emb) \
         .select("query_id", "neighbor_id")
     m = (ex.join(bt, on=["query_id", "neighbor_id"])
          .groupBy("query_id")
@@ -9431,7 +9391,7 @@ def q_embedding_binary_quant(spark: SparkSession,
 
 
 def _sq8_oracle() -> str:
-    d = _CND_DIM
+    d = EMB_DIM
     code = (f"list_transform(range(1, {d + 1}), d ->"
             f" CASE WHEN mm.mx[d] > mm.mn[d]"
             f" THEN CAST(FLOOR((CAST(embedding[d] AS DOUBLE)"
@@ -9485,7 +9445,7 @@ def q_embedding_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.similarity import cosine_topk
     from pyspark.sql.window import Window
 
-    d = _CND_DIM
+    d = EMB_DIM
     emb = load(spark, sf_dir, "embeddings")
     mm = emb.agg(
         F.array(*[
@@ -9519,8 +9479,8 @@ def q_embedding_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = (scored.withColumn("rank", F.row_number().over(w))
           .filter(F.col("rank") <= _KNN_K)
           .select("query_id", "neighbor_id"))
-    ex = cosine_topk(emb.filter(F.col("vec_id") < _KNN_NQ), emb,
-                     k=_KNN_K).select("query_id", "neighbor_id")
+    ex = cosine_topk(emb.filter(F.col("vec_id") < _KNN_NQ),
+                     emb).select("query_id", "neighbor_id")
     m = (ex.join(st, on=["query_id", "neighbor_id"])
          .groupBy("query_id")
          .agg(F.count(F.lit(1)).alias("n_matched")))
@@ -9594,7 +9554,7 @@ FROM nq LEFT JOIN mt ON mt.query_id = nq.query_id
 @spec(
     "embedding_matryoshka_recall",
     _matryoshka_oracle(),
-    description=f"Recall@k of {_MAT_DIM}-of-{_CND_DIM}-dim truncated "
+    description=f"Recall@k of {_MAT_DIM}-of-{EMB_DIM}-dim truncated "
                 "cosine retrieval vs full-dim ground truth (the MRL "
                 "serve-fewer-dims tradeoff), both exact rankings "
                 "replayed by the oracle — recall values themselves "
@@ -9608,10 +9568,10 @@ def q_embedding_matryoshka(spark: SparkSession,
     emb = load(spark, sf_dir, "embeddings")
     tr = emb.selectExpr(
         "vec_id", f"slice(embedding, 1, {_MAT_DIM}) AS embedding")
-    full_t = cosine_topk(emb.filter(F.col("vec_id") < _KNN_NQ), emb,
-                         k=_KNN_K).select("query_id", "neighbor_id")
-    mat_t = cosine_topk(tr.filter(F.col("vec_id") < _KNN_NQ), tr,
-                        k=_KNN_K).select("query_id", "neighbor_id")
+    full_t = cosine_topk(emb.filter(F.col("vec_id") < _KNN_NQ),
+                         emb).select("query_id", "neighbor_id")
+    mat_t = cosine_topk(tr.filter(F.col("vec_id") < _KNN_NQ),
+                        tr).select("query_id", "neighbor_id")
     m = (full_t.join(mat_t, on=["query_id", "neighbor_id"])
          .groupBy("query_id")
          .agg(F.count(F.lit(1)).alias("n_matched")))
@@ -9685,7 +9645,7 @@ def q_doc_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.dedup import shingle
 
     docs = load(spark, sf_dir, "documents")
-    sh = shingle(docs, n=3)
+    sh = shingle(docs)
     df = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("__ndocs"))
     d = (sh.join(df, on="shingle")
@@ -9729,7 +9689,7 @@ def _rp_proj_exprs(elem: str) -> list[str]:
     out = []
     for j in range(_RP_DIM):
         parts = []
-        for i in range(1, _CND_DIM + 1):
+        for i in range(1, EMB_DIM + 1):
             term = f"CAST({elem.format(i=i)} AS DOUBLE)"
             if not parts:
                 parts.append(f"(- {term})" if _rp_sign(i, j) < 0
@@ -9811,8 +9771,8 @@ def q_embedding_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (n_matched join and the n_exact rollup) consume it —
     # unmaterialized, the scoring scan executes twice.
     ex = materialize(
-        cosine_topk(emb.filter(F.col("vec_id") < _KNN_NQ), emb,
-                    k=_KNN_K).select("query_id", "neighbor_id"))
+        cosine_topk(emb.filter(F.col("vec_id") < _KNN_NQ),
+                    emb).select("query_id", "neighbor_id"))
     m = (ex.join(rt, on=["query_id", "neighbor_id"])
          .groupBy("query_id")
          .agg(F.count(F.lit(1)).alias("n_matched")))
@@ -10291,7 +10251,7 @@ _ICP_NB = 8
 
 
 def _icp_oracle() -> str:
-    d = _CND_DIM
+    d = EMB_DIM
     d2 = (f"list_reduce(list_transform(range(1, {d + 1}),"
           f" i -> CAST(FLOOR((r.emb[i] - cur_emb[i])"
           f" * (r.emb[i] - cur_emb[i]) * 1e9) AS BIGINT)),"
@@ -10443,7 +10403,7 @@ def q_doc_icp_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _icp_coherence_oracle() -> str:
-    d = _CND_DIM
+    d = EMB_DIM
     d2 = (f"list_reduce(list_transform(range(1, {d + 1}),"
           f" i -> CAST(FLOOR((a.emb[i] - b.emb[i])"
           f" * (a.emb[i] - b.emb[i]) * 1e9) AS BIGINT)),"
@@ -10479,7 +10439,7 @@ def q_embedding_icp_coherence(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     from xsarsea_spark.pipeline.similarity import icp_order
 
-    d = _CND_DIM
+    d = EMB_DIM
     emb = load(spark, sf_dir, "embeddings").select("vec_id",
                                                    "embedding")
     chain = icp_order(emb, n_buckets=_ICP_NB)
@@ -10523,7 +10483,7 @@ def q_embedding_icp_coherence(spark: SparkSession,
 
 
 def _mips_oracle() -> str:
-    d = _CND_DIM
+    d = EMB_DIM
     nrm2 = (f"list_reduce(list_transform(range(1, {d + 1}),"
             f" i -> CAST(embedding[i] AS DOUBLE)"
             f" * CAST(embedding[i] AS DOUBLE)), (a, b) -> a + b)")
@@ -10564,7 +10524,7 @@ WHERE rank <= {_KNN_K}
 def q_embedding_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _CND_DIM
+    d = EMB_DIM
     emb = load(spark, sf_dir, "embeddings")
     nrm2 = (f"aggregate(transform(sequence(1, {d}),"
             f" i -> CAST(element_at(embedding, i) AS DOUBLE)"
@@ -10790,7 +10750,7 @@ _FPS_K = 5
 
 
 def _fps_dist_duck(a: str, b: str) -> str:
-    return (f"list_reduce(list_transform(range(1, {_CND_DIM + 1}),"
+    return (f"list_reduce(list_transform(range(1, {EMB_DIM + 1}),"
             f" i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
             f" * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))),"
             f" (x, y) -> x + y)")
@@ -10845,7 +10805,7 @@ def _fps_oracle() -> str:
 )
 def q_embedding_fps_coreset(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
-    d = _CND_DIM
+    d = EMB_DIM
     emb = load(spark, sf_dir, "embeddings").select("vec_id",
                                                    "embedding")
     seed_id = emb.agg(F.min("vec_id")).collect()[0][0]
@@ -11863,7 +11823,7 @@ def q_doc_infinigram_sa_continuation(spark: SparkSession,
 
 
 def _dsp_oracle() -> str:
-    n = _CONTAM_N
+    n = SHINGLE_N
     return f"""
 WITH tk AS (SELECT doc_id, string_split(text, ' ') AS l
        FROM documents WHERE text IS NOT NULL
@@ -11912,7 +11872,7 @@ def q_doc_decontam_sa_probe(spark: SparkSession,
     from xsarsea_spark.pipeline.suffix import (
         suffix_probe_index_cached)
 
-    n = _CONTAM_N
+    n = SHINGLE_N
     corpus = load(spark, sf_dir, "documents").filter(
         f"text IS NOT NULL AND doc_id % {_SFX_MOD} = 0")
     bench = (load(spark, sf_dir, "documents")
@@ -12877,7 +12837,7 @@ def q_doc_tokenizer_compare(spark: SparkSession,
 # margins one shared division, argmax by struct order.
 # ----------------------------------------------------------------------
 
-_BTX_NQ, _BTX_K = 20, 5
+_BTX_NQ = 20
 
 
 def _bitext_oracle() -> str:
@@ -12906,9 +12866,9 @@ fr AS (SELECT query_id, neighbor_id, {qcos} AS qcos,
            ORDER BY cosine DESC, neighbor_id ASC) AS rk
        FROM fs),
 fk AS MATERIALIZED (SELECT query_id, neighbor_id, qcos FROM fr
-                    WHERE rk <= {_BTX_K}),
+                    WHERE rk <= {_KNN_K}),
 favg AS (SELECT query_id, {DSUM('qcos', 12)}
-           / CAST({_BTX_K} AS DOUBLE) AS fa
+           / CAST({_KNN_K} AS DOUBLE) AS fa
          FROM fk GROUP BY query_id),
 cand AS (SELECT DISTINCT neighbor_id FROM fk),
 qb AS (SELECT e.vec_id AS query_id, e.embedding AS qv, e.nr AS qn
@@ -12921,8 +12881,8 @@ br AS (SELECT query_id, {qcos} AS qcos,
            ORDER BY cosine DESC, neighbor_id ASC) AS rk
        FROM bs),
 bavg AS (SELECT query_id AS neighbor_id, {DSUM('qcos', 12)}
-           / CAST({_BTX_K} AS DOUBLE) AS ba
-         FROM br WHERE rk <= {_BTX_K} GROUP BY query_id),
+           / CAST({_KNN_K} AS DOUBLE) AS ba
+         FROM br WHERE rk <= {_KNN_K} GROUP BY query_id),
 mg AS (SELECT fk.query_id, fk.neighbor_id, fk.qcos,
          {QTRUNC("fk.qcos / nullif((favg.fa + bavg.ba)"
                  " / CAST(2.0 AS DOUBLE), CAST(0.0 AS DOUBLE))",
@@ -12957,21 +12917,21 @@ def q_embedding_bitext_margin(spark: SparkSession,
     sb = emb.filter("vec_id % 2 = 1")
     qa = sa.filter(F.col("vec_id") < 2 * _BTX_NQ)
     fk = materialize(
-        cosine_topk(qa, sb, k=_BTX_K)
+        cosine_topk(qa, sb)
         .selectExpr("query_id", "neighbor_id",
                     f"{QTRUNC('cosine', 12)} AS qcos"))
     favg = fk.groupBy("query_id").agg(
-        F.expr(f"{DSUM('qcos', 12)} / CAST({_BTX_K} AS DOUBLE)")
+        F.expr(f"{DSUM('qcos', 12)} / CAST({_KNN_K} AS DOUBLE)")
         .alias("fa"))
     cand = (fk.select(F.col("neighbor_id").alias("vec_id"))
             .distinct()
             .join(emb, on="vec_id"))
-    bavg = (cosine_topk(cand, sa, k=_BTX_K)
+    bavg = (cosine_topk(cand, sa)
             .selectExpr("query_id AS neighbor_id",
                         f"{QTRUNC('cosine', 12)} AS qcos")
             .groupBy("neighbor_id")
             .agg(F.expr(f"{DSUM('qcos', 12)}"
-                        f" / CAST({_BTX_K} AS DOUBLE)").alias("ba")))
+                        f" / CAST({_KNN_K} AS DOUBLE)").alias("ba")))
     mg = (fk.join(favg, on="query_id")
           .join(bavg, on="neighbor_id")
           .selectExpr(
@@ -13042,7 +13002,7 @@ def _rev_fill_metrics(block: str) -> str:
 
 
 def _retrieval_eval_oracle() -> str:
-    d = _CND_DIM
+    d = EMB_DIM
     qids = ", ".join(str(q) for q in _REV_Q)
     dot = (f"list_reduce(list_transform(range(1, {d + 1}),"
            f" i -> CAST(q.qv[i] AS DOUBLE)"
@@ -13143,7 +13103,7 @@ def q_doc_retrieval_eval(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _CND_DIM
+    d = EMB_DIM
     qids = ", ".join(str(q) for q in _REV_Q)
     docs = load(spark, sf_dir, "documents")
     qd = (docs.filter(f"doc_id IN ({qids})")

@@ -540,14 +540,11 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
 # closure oracle checks reachability, not numerics).
 # ----------------------------------------------------------------------
 
-_PR_ITERS = 4
-_PR_DAMP = "0.85"
-
-
 def _pagerank_oracle() -> str:
-    from xsarsea_spark.operators.pagerank import pagerank_contrib_expr
+    from xsarsea_spark.operators.pagerank import (DAMPING, ITERS,
+                                                  pagerank_contrib_expr)
 
-    d = _PR_DAMP
+    d = DAMPING
     contrib = pagerank_contrib_expr("r.rank", "deg")
     sql = f"""
 WITH pairs AS (
@@ -560,7 +557,7 @@ nodes AS (SELECT DISTINCT src AS node FROM e),
 nn AS (SELECT COUNT(*) AS n FROM nodes),
 deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
 r0 AS (SELECT node, 1e0 / n AS rank FROM nodes CROSS JOIN nn)"""
-    for i in range(1, _PR_ITERS + 1):
+    for i in range(1, ITERS + 1):
         sql += f""",
 r{i} AS (
   SELECT nodes.node,
@@ -571,7 +568,7 @@ r{i} AS (
         AS in_sum
     FROM e JOIN deg USING (src) JOIN r{i - 1} r ON r.node = e.src
     GROUP BY e.dst) s ON s.node = nodes.node)"""
-    return sql + f"\nSELECT node, rank FROM r{_PR_ITERS}"
+    return sql + f"\nSELECT node, rank FROM r{ITERS}"
 
 
 @spec(
@@ -595,8 +592,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = pairs.selectExpr("p AS src", "s AS dst").unionAll(
         pairs.selectExpr("s AS src", "p AS dst"))
-    return pagerank(edges, iters=_PR_ITERS,
-                    damping=float(_PR_DAMP), dangling=False)
+    return pagerank(edges, dangling=False)
 
 
 # ----------------------------------------------------------------------

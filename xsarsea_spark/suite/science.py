@@ -391,7 +391,7 @@ def q_nesz(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.operators.nesz import nesz_flattening
 
     px = scene_df(spark, ["incidence", "nesz"])
-    out = nesz_flattening(px, deterministic=True)
+    out = nesz_flattening(px)
     return out.select("line", "sample", "nesz_flat")
 
 
@@ -532,7 +532,6 @@ def q_inv_crosspol(spark: SparkSession, sf_dir: str) -> DataFrame:
         sigma0_cr_col="sigma0_cr",
         dsig_cr_col="dsig_cr",
         keep_cols=["line", "sample"],
-        lut_inc_step=1.0,
         lut_cr_wspd_step=0.1,
     )
     # crosspol-only: phi = 0, so wind_dual_re IS the retrieved speed
@@ -658,7 +657,6 @@ def q_inv_dualpol(spark: SparkSession, sf_dir: str) -> DataFrame:
         anc_re_col="anc_re",
         anc_im_col="anc_im",
         keep_cols=["line", "sample"],
-        lut_inc_step=1.0,
         lut_wspd_step=1.0,
         lut_phi_step=5.0,
         lut_cr_wspd_step=0.3,
@@ -723,7 +721,6 @@ def q_inv_crosspol_dsig(spark: SparkSession, sf_dir: str) -> DataFrame:
         sigma0_cr_col="sigma0_cr",
         dsig_cr_col="dsig_cr",
         keep_cols=["line", "sample"],
-        lut_inc_step=1.0,
         lut_cr_wspd_step=0.1,
     )
     return out.select("line", "sample",

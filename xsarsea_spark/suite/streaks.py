@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from xsarsea_spark.expr import double_lit
 from xsarsea_spark.operators.exactsum import DSUM
-from xsarsea_spark.operators.gradients import CIRC_KERNEL
+from xsarsea_spark.operators.gradients import CIRC_KERNEL, N_ANGLES
 from xsarsea_spark.suite.base import spec
 from xsarsea_spark.suite.science import scene_df, scene_sql
 
@@ -61,9 +61,9 @@ CROSS JOIN (SELECT range AS sample FROM range({_LG_NS}))
 # gradient_histogram — oracle-checked
 # ----------------------------------------------------------------------
 
-_GH_WINDOW, _GH_STEP, _GH_NANG = 16, 8, 72
-_GH_START = float(-np.pi / 2 + (np.pi / _GH_NANG) / 2.0)
-_GH_BSTEP = float(np.pi / _GH_NANG)
+_GH_WINDOW, _GH_STEP = 16, 8
+_GH_START = float(-np.pi / 2 + (np.pi / N_ANGLES) / 2.0)
+_GH_BSTEP = float(np.pi / N_ANGLES)
 
 
 def _gh_oracle() -> str:
@@ -89,7 +89,7 @@ meds AS (
 binned AS (
   SELECT v.wl, v.ws, meds.nvalid,
     CAST(LEAST(GREATEST(FLOOR((atan2(g2_im, g2_re) - ({double_lit(_GH_START)}))
-      / ({double_lit(_GH_BSTEP)}) + 5e-1), 0), {_GH_NANG - 1}) AS INT) AS k,
+      / ({double_lit(_GH_BSTEP)}) + 5e-1), 0), {N_ANGLES - 1}) AS INT) AS k,
     (abs_g2 / (abs_g2 + med)) * c AS wgt
   FROM v JOIN meds ON v.wl = meds.wl AND v.ws = meds.ws)
 SELECT wl AS win_line, ws AS win_sample,
@@ -114,7 +114,7 @@ def q_gradient_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lg = _lg_field_df(spark)
     return gradient_histogram(
-        lg, window=_GH_WINDOW, step=_GH_STEP, n_angles=_GH_NANG,
+        lg, window=_GH_WINDOW, step=_GH_STEP,
         line_col="line", sample_col="sample",
     )
 
@@ -339,7 +339,7 @@ def q_rain_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xsarsea_spark.suite.science import N_LINES, N_SAMPLES
 
     px = scene_df(spark, ["sigma0"])
-    return filtering_parameters(px, N_LINES, N_SAMPLES, tile=64, halo=48)
+    return filtering_parameters(px, N_LINES, N_SAMPLES)
 
 
 # ----------------------------------------------------------------------
