@@ -343,37 +343,3 @@ def test_bytelevel_pretokens_fuzz(spark):
         assert "".join(got) == text
 
     check()
-
-
-def test_sample_frac_one_is_exact(spark):
-    """frac=1.0 must take the exact code path: merges identical to the
-    default (and so to the Python reference)."""
-    from xsarsea_spark.pipeline.bpe import bpe_train
-
-    docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
-    exact = [tuple(r) for r in sorted(
-        bpe_train(docs, n_merges=4).collect(),
-        key=lambda r: r["merge_rank"])]
-    at_one = [tuple(r) for r in sorted(
-        bpe_train(docs, n_merges=4, sample_frac=1.0).collect(),
-        key=lambda r: r["merge_rank"])]
-    assert at_one == exact
-
-
-def test_sample_frac_conf_and_round1_exact(spark):
-    """Sampled training is deterministic (seeded per round), keeps the
-    merge-table schema, and round 1 always matches the exact top pair
-    (it is never sampled)."""
-    from xsarsea_spark.pipeline.bpe import bpe_train
-
-    docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
-    exact = sorted(bpe_train(docs, n_merges=3).collect(),
-                   key=lambda r: r["merge_rank"])
-    s1 = sorted(bpe_train(docs, n_merges=3, sample_frac=0.5).collect(),
-                key=lambda r: r["merge_rank"])
-    s2 = sorted(bpe_train(docs, n_merges=3, sample_frac=0.5).collect(),
-                key=lambda r: r["merge_rank"])
-    assert [tuple(r) for r in s1] == [tuple(r) for r in s2]  # seeded
-    assert tuple(s1[0])[:3] == tuple(exact[0])[:3]  # round 1 exact
-    assert {f for f in s1[0].asDict()} == {
-        "merge_rank", "lhs", "rhs", "pair_count"}

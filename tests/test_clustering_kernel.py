@@ -3,7 +3,9 @@
 The Arrow kernel (``_assign_arrow``), the interpreted SQL argmin fold
 (``_argmin_expr``) and the k-unrolled codegen columns must produce
 IDENTICAL (cluster, dist2) for identical centroids — the oracle
-parity of embedding_kmeans/embedding_semdedup depends on it.
+parity of embedding_kmeans/embedding_semdedup depends on it. The
+Arrow kernel's distances are ``exactsum.seq_sqdist``, so this also pins
+that twin to the SQL fold on inputs where the add order shows.
 """
 
 from __future__ import annotations
@@ -12,11 +14,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from .test_exactsum import fold_inputs
 
-def _vecs(spark, n=400, d=24, seed=3):
+
+def _vecs(spark, n=400, d=24, seed=3, mixed=False):
     rng = np.random.default_rng(seed)
-    rows = [(int(i), [float(x) for x in rng.normal(0, 1, d)])
-            for i in range(n)]
+    x = fold_inputs(n, d, seed) if mixed else rng.normal(0, 1, (n, d))
+    rows = [(int(i), [float(v) for v in x[i]]) for i in range(n)]
     return spark.createDataFrame(
         rows, "vec_id bigint, embedding array<double>")
 
@@ -27,26 +31,30 @@ def _centroids(spark, df, k):
 
 
 def test_arrow_kernel_bitequal_sql_fold(spark):
+    """Unit-normal vectors, then mixed magnitudes with cancellation
+    (``fold_inputs``), where only the same add order gives the same
+    distances."""
     from xsarsea_spark.pipeline.clustering import (_argmin_expr,
                                                    _assign_arrow)
 
-    df = _vecs(spark)
-    base = df.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-        .alias("__v"))
-    cents = _centroids(spark, df, 17)        # > _UNROLL_K_MAX
-    # non-contiguous ids: empty-cluster drop leaves holes in practice
-    cents = {c * 3 + 1: v for c, v in cents.items()}
+    for mixed in (False, True):
+        df = _vecs(spark, mixed=mixed)
+        base = df.select(
+            "vec_id",
+            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
+            .alias("__v"))
+        cents = _centroids(spark, df, 17)        # > _UNROLL_K_MAX
+        # non-contiguous ids: empty-cluster drop leaves holes in practice
+        cents = {c * 3 + 1: v for c, v in cents.items()}
 
-    sql = (base.withColumn("__am", F.expr(_argmin_expr("__v", cents)))
-           .select("vec_id", F.col("__am.c").alias("cluster"),
-                   F.col("__am.d").alias("dist2"))
-           .orderBy("vec_id").collect())
-    arrow = (_assign_arrow(base, cents)
-             .select("vec_id", "cluster", "dist2")
-             .orderBy("vec_id").collect())
-    assert [tuple(r) for r in arrow] == [tuple(r) for r in sql]
+        sql = (base.withColumn("__am", F.expr(_argmin_expr("__v", cents)))
+               .select("vec_id", F.col("__am.c").alias("cluster"),
+                       F.col("__am.d").alias("dist2"))
+               .orderBy("vec_id").collect())
+        arrow = (_assign_arrow(base, cents)
+                 .select("vec_id", "cluster", "dist2")
+                 .orderBy("vec_id").collect())
+        assert [tuple(r) for r in arrow] == [tuple(r) for r in sql], mixed
 
 
 def test_arrow_kernel_bitequal_on_exact_ties(spark):

@@ -1,8 +1,10 @@
 """exact_sum_agg must be bit-identical to the DSUM/DAVG DECIMAL path
 (the representation every DuckDB oracle uses) — including negatives,
 NaN guarding, and sum+avg sharing one accumulator slot; the NumPy grid
-twin must round exactly like both engines' ``ROUND(x * 1e{s})``; and
-the exact-arithmetic module must load without the query suite."""
+twin must round exactly like both engines' ``ROUND(x * 1e{s})``; the
+NumPy vector-fold twins must equal Spark's ``aggregate(zip_with(...))``
+folds bit for bit; and the exact-arithmetic module must load without
+the query suite."""
 
 from __future__ import annotations
 
@@ -17,7 +19,8 @@ from pyspark.sql import functions as F
 
 from xsarsea_spark.operators.exactsum import (DAVG, DSUM, ExactSumSpec,
                                               exact_sum_agg, grid,
-                                              split_qr)
+                                              seq_dot, seq_norm,
+                                              seq_sqdist, split_qr)
 
 from .conftest import SF_DIR
 
@@ -121,3 +124,46 @@ def test_grid_twin_matches_spark_and_duckdb_round(spark):
         q, r = split_qr(twin)
         assert ((r >= 0) & (r < 1 << 20)).all()
         assert (q * (1 << 20) + r == twin).all()
+
+
+def fold_inputs(n: int, d: int, seed: int) -> np.ndarray:
+    """Rows whose fold sums depend on the add order: magnitudes spread
+    over 1e-6 .. 1e6 with random signs, then, every fourth row, the
+    previous row with every other sign flipped (a dot product of the
+    two cancels down to rounding residue)."""
+    rng = np.random.default_rng(seed)
+    x = (rng.choice([-1.0, 1.0], (n, d))
+         * 10.0 ** rng.uniform(-6, 6, (n, d)))
+    flip = np.where(np.arange(d) % 2 == 0, 1.0, -1.0)
+    x[3::4] = x[2::4] * flip
+    return x
+
+
+def test_vector_fold_twins_match_spark_fold(spark):
+    a = fold_inputs(48, 24, 11)
+    b = np.concatenate([a[:6] * (1 + 2.0 ** -40), a[2:8] * -1.0,
+                        fold_inputs(6, 24, 12)])
+    folds = {
+        "dot": ("x * y", seq_dot(a, b)),
+        "sqdist": ("(x - y) * (x - y)", seq_sqdist(a, b)),
+    }
+    left = spark.createDataFrame(
+        [(i, a[i].tolist()) for i in range(len(a))], "i int, a array<double>")
+    right = spark.createDataFrame(
+        [(j, b[j].tolist()) for j in range(len(b))], "j int, b array<double>")
+    pairs = left.crossJoin(right)
+    for name, (term, twin) in folds.items():
+        got = np.zeros_like(twin)
+        for r in pairs.selectExpr(
+                "i", "j", f"aggregate(zip_with(a, b, (x, y) -> {term}),"
+                " 0d, (s, t) -> s + t) AS v").collect():
+            got[r["i"], r["j"]] = r["v"]
+        assert (twin == got).all(), name
+        # the inputs tell fold orders apart: a right-to-left fold differs
+        rev = (seq_dot if name == "dot" else seq_sqdist)(
+            a[:, ::-1], b[:, ::-1])
+        assert (rev != twin).any(), name
+    norms = np.array([r["v"] for r in left.orderBy("i").selectExpr(
+        "sqrt(aggregate(zip_with(a, a, (x, y) -> x * y), 0d,"
+        " (s, t) -> s + t)) AS v").collect()])
+    assert (seq_norm(a) == norms).all()

@@ -40,10 +40,6 @@ EXEMPT = {
     # Data, not tuning.
     "operators/pagerank.py:pagerank(dangling)":
         "its general path is the one correct for nodes without in-edges",
-    "operators/quality.py:dq_report(not_null)": "a data-quality rule set",
-    "operators/quality.py:dq_report(unique)": "a data-quality rule set",
-    "operators/quality.py:dq_report(ranges)": "a data-quality rule set",
-    "operators/quality.py:dq_report(in_set)": "a data-quality rule set",
     "pipeline/dedup.py:minhash_lsh_cross_snapshot(batch_snapshot)":
         "the batch's snapshot tag",
     "pipeline/psl.py:exact_two_level_suffixes(lines)":

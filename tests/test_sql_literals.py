@@ -5,7 +5,8 @@ that only doubles ``'`` turns ``a\\b`` into ``a<backspace>``, ``\\n``
 into a newline, and fails to parse a value that ends in a backslash.
 Each case below is checked through ``expr.spark_str_lit`` and through
 the operators that inline data values as SQL literals (BPE merge
-pairs, grouped-classifier group keys).
+pairs, grouped-classifier group keys, preference arm names and
+data-quality allowed sets).
 """
 
 from __future__ import annotations
@@ -55,3 +56,32 @@ def test_grouped_train_adversarial_group_keys(spark):
     for g in ADVERSARIAL:
         solo = train_logreg(xy.filter(F.col("lang") == g), rounds=1)
         assert wmap[g] == solo, g
+
+
+def test_elo_step_adversarial_arm_names(spark):
+    """Arm names are inlined into the score lookup's CASE: each arm must
+    score its own rating, exactly as under plain names."""
+    from xsarsea_spark.pipeline.preference import elo_step
+
+    n = len(ADVERSARIAL)
+
+    def run(names):
+        pm = spark.createDataFrame(
+            [(names[i], names[(i + 1) % n], i % 2, 1 + i)
+             for i in range(n)],
+            "arm_a string, arm_b string, wins_a bigint, n_matches bigint")
+        out = elo_step(pm, {a: 1400.0 + 37.5 * i
+                            for i, a in enumerate(names)})
+        return [out[a] for a in names]
+
+    assert run(ADVERSARIAL) == run([f"arm{i}" for i in range(n)])
+
+
+def test_dq_in_set_adversarial_values(spark):
+    from xsarsea_spark.operators.quality import dq_report
+
+    df = spark.createDataFrame([(s,) for s in ADVERSARIAL + ["other"]],
+                               "v string")
+    rep = dq_report(df, in_set={"v": ADVERSARIAL}).collect()
+    assert [(r["rule"], r["n_violations"]) for r in rep] == [
+        ("in_set:v", 1)]

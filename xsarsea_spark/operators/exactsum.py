@@ -43,9 +43,22 @@ third) on a different grid point than :func:`grid`, while its
 suite's oracle tests pin the queries that use exact_sum_agg.
 
 :func:`grid` and :func:`split_qr` are the NumPy twin of steps 1-2, for
-Arrow kernels that fold partial sums map-side (``pipeline.linalg``,
-``pipeline.ivf``, ``pipeline.pq``): the same int64 quanta, so a
-kernel's partials recombine to the value the SQL path gives.
+Arrow kernels that fold partial sums map-side (``pipeline.linalg`` and
+the Lloyd round ``pipeline.pq.lloyd_round`` that ``pipeline.ivf``
+trains with): the same int64 quanta, so a kernel's partials recombine
+to the value the SQL path gives.
+
+:func:`seq_dot`, :func:`seq_sqdist` and :func:`seq_norm` are the NumPy
+twins of the SQL vector folds ``aggregate(zip_with(a, b, f), 0d,
+(acc, t) -> acc + t)``: each output element adds its terms in
+ascending dimension order from 0.0, one rounding per product and per
+add, so an Arrow kernel's dot products, squared distances and norms
+equal the SQL fold's (and DuckDB's ``list_reduce``) bit for bit. BLAS
+matmul and NumPy's pairwise ``.sum`` use implementation-defined
+accumulation trees and do not. Users: the IVF/PQ/IVF-PQ kernels, the
+LSH signature kernels (``pipeline.similarity``,
+``pipeline.dedup.cosine_neardup``) and the large-k k-means assignment
+(``pipeline.clustering``).
 
 Scale safety (the reason for the q/r split): with |x| <= 10^9,
 ``SUM(r)`` overflows BIGINT only past ~9e12 rows per group and
@@ -69,8 +82,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["DSUM", "DAVG", "QTRUNC", "decimal_sum", "recombine_sql",
-           "grid", "split_qr", "QR_BASE", "exact_sum_agg",
-           "ExactSumSpec"]
+           "grid", "split_qr", "seq_dot", "seq_sqdist", "seq_norm",
+           "QR_BASE", "exact_sum_agg", "ExactSumSpec"]
 
 # q/r split base: v = q * QR_BASE + r, r in [0, QR_BASE)
 QR_BASE = 1 << 20
@@ -156,6 +169,46 @@ def split_qr(v):
     """(q, r) of int64 quanta ``v = q * 2^20 + r``, ``r in [0, 2^20)``
     — the split ``exact_sum_agg`` accumulates, as int64 arrays."""
     return v // QR_BASE, v % QR_BASE
+
+
+def seq_dot(a, b):
+    """(n, k) dot products of the rows of ``a`` (n, d) with the rows of
+    ``b`` (k, d), each folded left to right over d: the twin of
+    ``aggregate(zip_with(a, b, (x, y) -> x * y), 0d, (s, t) -> s + t)``.
+    One vectorized add per dimension; ~2-4x slower than BLAS dgemm,
+    the price of replicability."""
+    import numpy as np
+
+    acc = np.zeros((a.shape[0], b.shape[0]))
+    for d in range(a.shape[1]):
+        acc += a[:, d, None] * b[None, :, d]
+    return acc
+
+
+def seq_sqdist(a, b):
+    """(n, k) squared L2 distances between the rows of ``a`` (n, d) and
+    of ``b`` (k, d), folded left to right over d: the twin of
+    ``aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0d,
+    (s, t) -> s + t)``."""
+    import numpy as np
+
+    acc = np.zeros((a.shape[0], b.shape[0]))
+    for d in range(a.shape[1]):
+        diff = a[:, d, None] - b[None, :, d]
+        acc += diff * diff
+    return acc
+
+
+def seq_norm(v):
+    """L2 norm of each row of ``v`` (n, d): sqrt of the sum of squares
+    folded left to right over d (``sqrt`` is IEEE-exact in every
+    engine)."""
+    import numpy as np
+
+    acc = np.zeros(v.shape[0])
+    for d in range(v.shape[1]):
+        acc += v[:, d] * v[:, d]
+    return np.sqrt(acc)
 
 
 class ExactSumSpec:

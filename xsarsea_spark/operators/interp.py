@@ -14,8 +14,9 @@ Spark-first physical pattern (SURVEY.md §4), scale-audited:
   dimensionality (the naive per-corner formulation would broadcast the
   LUT 2^d times — a scale-killer at the reference's 4.5e7-row
   high-res copol LUT).
-- ``interp_kernel`` — for LUTs too big to broadcast-join comfortably
-  (> ~10^6 rows), a ``mapInPandas`` kernel with the LUT shipped once
+- ``interp_kernel`` — meant for LUTs too big to broadcast-join
+  comfortably (> ~10^6 rows; no query calls it, and nothing switches
+  to it by LUT size), a ``mapInPandas`` kernel with the LUT shipped once
   per executor as a SparkContext broadcast of NumPy arrays; inside a
   batch the multilinear blend is vectorized NumPy (np.interp-style).
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xsarsea_spark.expr import spark_str_lit
+
 __all__ = ["dq_report"]
 
 
@@ -42,7 +44,7 @@ def dq_report(df: DataFrame,
             f" ({c} < {lo} OR {c} > {hi}) THEN 1 ELSE 0 END)"
         ).alias(f"range:{c}"))
     for c, allowed in (in_set or {}).items():
-        lits = ", ".join(f"'{v}'" for v in allowed)
+        lits = ", ".join(spark_str_lit(str(v)) for v in allowed)
         aggs.append(F.expr(
             f"SUM(CASE WHEN {c} IS NOT NULL AND"
             f" {c} NOT IN ({lits}) THEN 1 ELSE 0 END)"

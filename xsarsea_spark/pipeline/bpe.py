@@ -100,52 +100,50 @@ def apply_merge_expr(col: str, a: str, b: str) -> str:
             f" {rebuild}), 1)), 1)")
 
 
-def _bpe_rounds(docs: DataFrame, n_merges: int, apply_last: bool,
-                sample_frac: float = 1.0,
-                ) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
-    """Shared training loop: returns (final tokenized corpus, merge
-    list). ``apply_last`` controls whether the last learned merge is
-    also applied to the corpus (encode needs it; train's merge table
-    does not, saving one checkpointed rebuild).
-
-    ``sample_frac`` (default 1.0: exact) is the 100-TB knob: with
-    ``0 < frac < 1``, pair counting after the FIRST round runs on a
-    deterministic Bernoulli sample of the corpus — the shape
-    production tokenizer trainers use, since top-pair ranks stabilize
-    after the early rounds while each exact round still scans the
-    full corpus. Round 1 always counts exactly (it fixes the
-    highest-impact merge), merge APPLICATION always rewrites the full
-    corpus (the encode output must be exact), and the default path
-    stays exact for the DuckDB oracle.
-    """
-    cur = (
+def _word_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, __t): each non-null document split on single spaces."""
+    return (
         docs.filter(F.col("text").isNotNull())
         .selectExpr("doc_id", "split(text, ' ') AS __t")
         .filter("size(__t) >= 1")
     )
-    return _merge_rounds(cur, n_merges, ["doc_id"], apply_last,
-                         sample_frac)
 
 
-def _merge_rounds(cur: DataFrame, n_merges: int, keys: list[str],
-                  apply_last: bool, sample_frac: float,
+def _merge_rounds(cur: DataFrame, n_merges: int, weight: str,
+                  apply_last: bool,
                   ) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
-    """The engine-agnostic merge loop: ``cur`` carries ``keys`` +
-    ``__t`` (a token array per row; word-level rows are documents,
-    byte-level rows are pre-tokens — merges never cross a row, which
-    is exactly the no-merges-across-pre-token-boundaries rule)."""
+    """The engine-agnostic merge loop; returns (final ``cur``, merge
+    list). ``cur`` carries ``__t`` (a token array per row) and the
+    columns every round passes through; each adjacent pair counts the
+    SQL expression ``weight`` toward its pair count.
+
+    Word-level rows are documents, each pair weighing ``1``. Byte-level
+    rows are the DISTINCT pre-token table (__t0 the original symbol
+    array, __f its corpus multiplicity), each pair weighing ``__f`` —
+    the weighted form every production BPE trainer uses (Sennrich et
+    al. 2016 train on a word-frequency dict, not the exploded corpus):
+    identical sequences contribute identical pair multisets, so the
+    weighted sum equals the count over the exploded corpus EXACTLY,
+    while each round's scan shrinks to vocabulary rows. Merges never
+    cross a row, which is exactly the no-merges-across-pre-token-
+    boundaries rule.
+
+    ``apply_last`` controls whether the last learned merge is also
+    applied to ``cur`` (encode needs it; a merge table does not,
+    saving one checkpointed rebuild).
+    """
+    keys = [c for c in cur.columns if c != "__t"]
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
-        src = cur
-        if 0.0 < sample_frac < 1.0 and rank > 0:
-            src = cur.sample(fraction=sample_frac, seed=rank)
-        pairs = src.filter("size(__t) >= 2").select(F.explode(F.expr(
-            "transform(sequence(1, size(__t) - 1), p ->"
-            " named_struct('lhs', element_at(__t, p),"
-            " 'rhs', element_at(__t, p + 1)))")).alias("__p"))
+        pairs = cur.filter("size(__t) >= 2").select(
+            F.expr(weight).alias("__w"),
+            F.explode(F.expr(
+                "transform(sequence(1, size(__t) - 1), p ->"
+                " named_struct('lhs', element_at(__t, p),"
+                " 'rhs', element_at(__t, p + 1)))")).alias("__p"))
         top = (
             pairs.groupBy("__p.lhs", "__p.rhs")
-            .agg(F.count(F.lit(1)).alias("__n"))
+            .agg(F.expr("CAST(SUM(__w) AS BIGINT)").alias("__n"))
             .orderBy(F.desc("__n"), F.asc("lhs"), F.asc("rhs"))
             .limit(1)
             .collect()
@@ -162,77 +160,21 @@ def _merge_rounds(cur: DataFrame, n_merges: int, keys: list[str],
     return cur, merges
 
 
-def _merge_rounds_weighted(wf: DataFrame, n_merges: int,
-                           apply_last: bool,
-                           ) -> tuple[DataFrame,
-                                      list[tuple[int, str, str, int]]]:
-    """The merge loop over the DISTINCT-sequence frequency table
-    ``wf`` = (__t0 the original symbol array, __t the evolving one,
-    __f its corpus multiplicity) — the weighted form every
-    production BPE trainer uses (Sennrich et al. 2016 train on a
-    word-frequency dict, not the exploded corpus). Identical
-    sequences contribute identical pair multisets, so SUM(__f) over
-    the distinct table equals COUNT(*) over the exploded corpus
-    EXACTLY — the learned merges (and every tie-break) are unchanged
-    while each round's scan shrinks from corpus positions to
-    vocabulary rows."""
-    merges: list[tuple[int, str, str, int]] = []
-    cur = wf
-    for rank in range(n_merges):
-        pairs = cur.filter("size(__t) >= 2").select(
-            "__f",
-            F.explode(F.expr(
-                "transform(sequence(1, size(__t) - 1), p ->"
-                " named_struct('lhs', element_at(__t, p),"
-                " 'rhs', element_at(__t, p + 1)))")).alias("__p"))
-        top = (
-            pairs.groupBy("__p.lhs", "__p.rhs")
-            .agg(F.expr("CAST(SUM(__f) AS BIGINT)").alias("__n"))
-            .orderBy(F.desc("__n"), F.asc("lhs"), F.asc("rhs"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, n = top[0]["lhs"], top[0]["rhs"], top[0]["__n"]
-        merges.append((rank, a, b, int(n)))
-        if rank < n_merges - 1 or apply_last:
-            cur = materialize(cur.select(
-                "__t0", "__f",
-                F.expr(apply_merge_expr("__t", a, b)).alias("__t"),
-            ))
-    return cur, merges
-
-
-def bpe_train(docs: DataFrame, n_merges: int = 4,
-              sample_frac: float = 1.0) -> DataFrame:
-    """Learn ``n_merges`` BPE merges; returns the merge table
-    (merge_rank, lhs, rhs, pair_count). ``sample_frac`` < 1 counts
-    pairs on a corpus sample after round 1 (see ``_bpe_rounds``)."""
-    _, merges = _bpe_rounds(docs, n_merges,
-                            apply_last=False, sample_frac=sample_frac)
-    return docs.sparkSession.createDataFrame(
+def _merge_table(spark, merges: list) -> DataFrame:
+    return spark.createDataFrame(
         merges,
         schema="merge_rank int, lhs string, rhs string,"
                " pair_count bigint")
 
 
-def bpe_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
-    """Train ``n_merges`` merges AND apply them all: per document the
-    raw/encoded token counts, the compression ratio, and an md5
-    digest of the encoded token stream (tokens joined on chr(31),
-    which no corpus token contains, so the digest is injective over
-    token boundaries — merged tokens themselves contain spaces).
-
-    The encoded corpus IS the training loop's final state — each
-    round's zero-exchange rebuild already materialized via
-    ``localCheckpoint`` — so encode costs one extra rebuild beyond
-    training, not a second pass over the merges.
-    """
-    cur, _ = _bpe_rounds(docs, n_merges, apply_last=True)
-    # raw count recovered from the encoded stream itself (a merged
-    # token expands to its space-separated word count) — no join back
-    # to the source, no second corpus scan
+def _doc_rollup(cur: DataFrame) -> DataFrame:
+    """Per word-level document: raw/encoded token counts, compression
+    and an md5 digest of the encoded token stream (tokens joined on
+    chr(31), which no corpus token contains, so the digest is
+    injective over token boundaries — merged tokens themselves contain
+    spaces). The raw count is recovered from the encoded stream itself
+    (a merged token expands to its space-separated word count) — no
+    join back to the source, no second corpus scan."""
     return cur.select(
         "doc_id",
         F.expr("CAST(aggregate(__t, 0L,"
@@ -245,6 +187,28 @@ def bpe_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
         F.expr("n_tokens_raw / CAST(n_tokens_encoded AS DOUBLE)"),
     ).select("doc_id", "n_tokens_raw", "n_tokens_encoded",
              "compression", "encoded_md5")
+
+
+def bpe_train(docs: DataFrame, n_merges: int = 4) -> DataFrame:
+    """Learn ``n_merges`` BPE merges; returns the merge table
+    (merge_rank, lhs, rhs, pair_count)."""
+    _, merges = _merge_rounds(_word_tokens(docs), n_merges, "1",
+                              apply_last=False)
+    return _merge_table(docs.sparkSession, merges)
+
+
+def bpe_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
+    """Train ``n_merges`` merges AND apply them all; returns the
+    per-document rollup (see ``_doc_rollup``).
+
+    The encoded corpus IS the training loop's final state — each
+    round's zero-exchange rebuild already materialized via
+    ``localCheckpoint`` — so encode costs one extra rebuild beyond
+    training, not a second pass over the merges.
+    """
+    cur, _ = _merge_rounds(_word_tokens(docs), n_merges, "1",
+                           apply_last=True)
+    return _doc_rollup(cur)
 
 
 def bpe_save_merges(merges: DataFrame, path: str) -> None:
@@ -329,25 +293,9 @@ def bpe_apply(docs: DataFrame, merges: DataFrame) -> DataFrame:
     Output schema and values are identical to ``bpe_encode`` run with
     the same merges (tests pin digest equality on the full corpus).
     """
-    cur = (
-        docs.filter(F.col("text").isNotNull())
-        .selectExpr("doc_id", "split(text, ' ') AS __t")
-        .filter("size(__t) >= 1")
-    )
-    enc = cur.mapInPandas(_apply_merges_kernel(_collect_merges(merges)),
-                          schema=cur.schema)
-    return enc.select(
-        "doc_id",
-        F.expr("CAST(aggregate(__t, 0L,"
-               " (a, x) -> a + size(split(x, ' '))) AS BIGINT)")
-        .alias("n_tokens_raw"),
-        F.expr("CAST(size(__t) AS BIGINT)").alias("n_tokens_encoded"),
-        F.expr("md5(array_join(__t, char(31)))").alias("encoded_md5"),
-    ).withColumn(
-        "compression",
-        F.expr("n_tokens_raw / CAST(n_tokens_encoded AS DOUBLE)"),
-    ).select("doc_id", "n_tokens_raw", "n_tokens_encoded",
-             "compression", "encoded_md5")
+    cur = _word_tokens(docs)
+    return _doc_rollup(cur.mapInPandas(
+        _apply_merges_kernel(_collect_merges(merges)), schema=cur.schema))
 
 
 def bpe_apply_bytelevel(docs: DataFrame, merges: DataFrame) -> DataFrame:
@@ -366,28 +314,8 @@ def bpe_apply_bytelevel(docs: DataFrame, merges: DataFrame) -> DataFrame:
     enc_vocab = vocab.mapInPandas(
         _apply_merges_kernel(_collect_merges(merges)),
         schema=vocab.schema)
-    enc = pre.join(enc_vocab, on="__tok").select(
-        "doc_id", "__pt", "__t")
-    return (
-        enc.groupBy("doc_id")
-        .agg(
-            F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_pretokens"),
-            F.expr("CAST(SUM(aggregate(__t, 0L, (a, x) ->"
-                   " a + size(split(x, ' ')))) AS BIGINT)")
-            .alias("n_bytes"),
-            F.expr("CAST(SUM(size(__t)) AS BIGINT)")
-            .alias("n_tokens_encoded"),
-            F.expr("md5(array_join(transform(array_sort("
-                   "collect_list(named_struct('pt', __pt, 's',"
-                   " array_join(__t, char(31))))), e -> e.s),"
-                   " char(30)))").alias("encoded_md5"),
-        )
-        .withColumn("compression",
-                    F.expr("n_bytes / CAST(n_tokens_encoded"
-                           " AS DOUBLE)"))
-        .select("doc_id", "n_pretokens", "n_bytes", "n_tokens_encoded",
-                "compression", "encoded_md5")
-    )
+    return _bytelevel_rollup(
+        pre.join(enc_vocab, on="__tok").select("doc_id", "__pt", "__t"))
 
 
 # the byte-symbol expansion of one pre-token string: its UTF-8 bytes
@@ -446,11 +374,8 @@ def bpe_bytelevel_train(docs: DataFrame, n_merges: int) -> DataFrame:
     wf = materialize(
         _bytelevel_vocab(pre)
         .select("__t0", "__f", F.col("__t0").alias("__t")))
-    _, merges = _merge_rounds_weighted(wf, n_merges, apply_last=False)
-    return docs.sparkSession.createDataFrame(
-        merges,
-        schema="merge_rank int, lhs string, rhs string,"
-               " pair_count bigint")
+    _, merges = _merge_rounds(wf, n_merges, "__f", apply_last=False)
+    return _merge_table(docs.sparkSession, merges)
 
 
 def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
@@ -459,10 +384,7 @@ def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
     the same distributed merge loop as word-level BPE — the tokenizer
     shape every production LLM data pipeline actually ships.
 
-    Per document: pre-token count, UTF-8 byte count, encoded token
-    count, compression, and an injective digest of the encoded stream
-    (symbols joined by chr(31) within a pre-token, pre-tokens by
-    chr(30) — neither occurs in hex-pair symbols or merge separators).
+    Returns the per-document rollup of ``_bytelevel_rollup``.
 
     Scale: pre-tokenization + byte mapping is a zero-exchange per-row
     projection; the explode to pre-token rows enforces the boundary
@@ -479,7 +401,7 @@ def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
     pre = _bytelevel_pre(docs)
     vocab = materialize(_bytelevel_vocab(pre))
     wf = vocab.select("__t0", "__f", F.col("__t0").alias("__t"))
-    seg, _ = _merge_rounds_weighted(wf, n_merges, apply_last=True)
+    seg, _ = _merge_rounds(wf, n_merges, "__f", apply_last=True)
     # segment each corpus pre-token by joining back on the RAW
     # pre-token string (mapped to its segmentation through the
     # __tok <-> __t0 bijection) — vocabulary-scale right side, so
@@ -491,8 +413,18 @@ def bpe_bytelevel_encode(docs: DataFrame, n_merges: int = 4) -> DataFrame:
               .join(seg.select("__t0", F.col("__t").alias("__tf")),
                     on="__t0")
               .select("__tok", "__tf"))
-    cur = (pre.join(tokseg, on="__tok")
-           .select("doc_id", "__pt", F.col("__tf").alias("__t")))
+    return _bytelevel_rollup(
+        pre.join(tokseg, on="__tok")
+        .select("doc_id", "__pt", F.col("__tf").alias("__t")))
+
+
+def _bytelevel_rollup(cur: DataFrame) -> DataFrame:
+    """Per document of the (doc_id, __pt, __t) segmented pre-token
+    frame: pre-token count, UTF-8 byte count, encoded token count,
+    compression, and an injective digest of the encoded stream
+    (symbols joined by chr(31) within a pre-token, pre-tokens by
+    chr(30) in position order — neither occurs in hex-pair symbols or
+    merge separators). One hash agg."""
     return (
         cur.groupBy("doc_id")
         .agg(

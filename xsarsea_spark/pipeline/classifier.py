@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xsarsea_spark.expr import spark_str_lit
+from xsarsea_spark.expr import double_lit, spark_str_lit
 from xsarsea_spark.operators.exactsum import DSUM, QTRUNC
 
 __all__ = ["doc_features", "gd_step", "train_logreg",
@@ -79,11 +79,9 @@ def doc_features(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
 
 
 def _w_lit(w: list[float]) -> str:
-    """Weight vector as an exact SQL literal array — Python float
-    repr is the shortest round-tripping decimal, so the parsed
-    double is bit-identical to the driver value."""
-    return ("array(" + ", ".join(
-        f"CAST({x!r} AS DOUBLE)" for x in w) + ")")
+    """Weight vector as an exact SQL literal array (``double_lit``
+    parses to the driver's double bit for bit)."""
+    return "array(" + ", ".join(double_lit(x) for x in w) + ")"
 
 
 def z_expr(w: list[float]) -> str:

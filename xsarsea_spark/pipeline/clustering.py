@@ -36,7 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from xsarsea_spark.operators.exactsum import ExactSumSpec, exact_sum_agg
+from xsarsea_spark.expr import double_lit
+from xsarsea_spark.operators.exactsum import (ExactSumSpec, exact_sum_agg,
+                                              seq_sqdist)
 
 __all__ = ["kmeans_embeddings", "KM_SCALE"]
 
@@ -57,9 +59,9 @@ def _assign_arrow(base: DataFrame, centroids: dict[int, list[float]]):
     BIT-IDENTICAL to the SQL fold paths:
 
     - distance accumulates dimension-by-dimension left-to-right
-      (``acc += (x_d - c_d)^2`` over a python loop on the dim axis),
-      the exact op order of ``aggregate(zip_with(...))`` and of the
-      oracle's ``list_reduce(list_transform(...))``;
+      (``exactsum.seq_sqdist``), the exact op order of
+      ``aggregate(zip_with(...))`` and of the oracle's
+      ``list_reduce(list_transform(...))``;
     - argmin scans centroids in ascending cluster id keeping the
       strict first minimum (``np.argmin``), the fold's
       ``IF(dd < a.d, ...)`` tie-break.
@@ -87,10 +89,7 @@ def _assign_arrow(base: DataFrame, centroids: dict[int, list[float]]):
             if not len(pdf):
                 continue
             v = np.asarray(list(pdf["__v"]), dtype=np.float64)
-            acc = np.zeros((len(v), len(keys)))
-            for d in range(v.shape[1]):       # dim-sequential like the fold
-                diff = v[:, d, None] - cmat[None, :, d]
-                acc += diff * diff
+            acc = seq_sqdist(v, cmat)
             pos = np.argmin(acc, axis=1)      # first min, ascending id
             out = pdf[["vec_id", "__v"]].copy()
             out["cluster"] = kid[pos].astype(np.int32)
@@ -106,7 +105,7 @@ def _dist_expr(vec_col: str, centroid: list[float]) -> str:
     # sides of the pair self-join, and duplicated 256-term codegen
     # methods overwhelm the JIT), while barely moving plain k-means.
     # The lambda fold stays.
-    lits = ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in centroid)
+    lits = ", ".join(double_lit(v) for v in centroid)
     return (
         f"aggregate(zip_with({vec_col}, array({lits}),"
         f" (x, c) -> (x - c) * (x - c)),"
@@ -137,8 +136,7 @@ def _argmin_expr(vec_col: str, centroids: dict[int, list[float]]) -> str:
     cents = ", ".join(
         "named_struct('c', {c}, 'v', array({lits}))".format(
             c=c,
-            lits=", ".join(f"CAST('{v!r}' AS DOUBLE)"
-                           for v in centroids[c]))
+            lits=", ".join(double_lit(v) for v in centroids[c]))
         for c in sorted(centroids))
     dist = (
         f"aggregate(zip_with({vec_col}, ct.v,"

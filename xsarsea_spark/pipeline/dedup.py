@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from xsarsea_spark.engine import materialize
+from xsarsea_spark.operators.exactsum import seq_dot
 from xsarsea_spark.pipeline.linalg import EMB_DIM
 from xsarsea_spark.pipeline.text import HASH40_SQL
 
@@ -394,6 +395,13 @@ def hyperplanes(n_planes: int, dim: int) -> list:
     return planes
 
 
+def plane_matrix(n_planes: int) -> np.ndarray:
+    """(n_planes, EMB_DIM) float64 ``hyperplanes`` — each k/1001 is one
+    IEEE division, identical to the SQL literal ``{k}e0/1001e0``."""
+    return np.array(hyperplanes(n_planes, EMB_DIM),
+                    dtype=np.float64) / 1001.0
+
+
 def projection_sql(plane: list, elem) -> str:
     """Flat unrolled dot product ``sum_i v[i] * k_i/1001`` — plain
     left-to-right double adds (codegen-able, no interpreted lambdas,
@@ -455,27 +463,20 @@ def cosine_neardup(vecs: DataFrame) -> DataFrame:
 
     n_planes, bands, dim = COSINE_PLANES, COSINE_BANDS, EMB_DIM
     r = n_planes // bands
-    planes = hyperplanes(n_planes, dim)
-    # (dim, n_planes) float64 constants — each k/1001 is one IEEE
-    # division, identical to the SQL literal `{k}e0/1001e0`
-    K = np.array(planes, dtype=np.float64).T / 1001.0
+    P = plane_matrix(n_planes)
     weights = np.array([1 << j for j in range(r)], dtype=np.int64)
 
     # Signatures via an Arrow-batched pandas UDF: 2048+ unrolled
     # multiply-adds per row exceed the JVM 64KB method limit (and
     # whole-stage codegen cannot split expressions over columnar input
     # vars), so the flat-SQL form de-optimizes to interpreted eval.
-    # The accumulation below is column-at-a-time — left-to-right over
-    # vector index i, exactly the SQL sum order, so projections are
-    # bit-identical to the unrolled-SQL oracle (NumPy does not fuse
-    # a*b+c into FMA here; each term is two IEEE-rounded ops in both
-    # engines).
+    # seq_dot accumulates left-to-right over vector index i, exactly
+    # the SQL sum order, so projections are bit-identical to the
+    # unrolled-SQL oracle (NumPy does not fuse a*b+c into FMA here;
+    # each term is two IEEE-rounded ops in both engines).
     def _bucket_batches(emb: pd.Series) -> pd.Series:
         V = np.asarray(list(emb.to_numpy()), dtype=np.float64)
-        acc = np.zeros((V.shape[0], n_planes), dtype=np.float64)
-        for i in range(dim):
-            acc += V[:, i:i + 1] * K[i]
-        bits = acc > 0.0
+        bits = seq_dot(V, P) > 0.0
         out = np.empty((V.shape[0], bands), dtype=np.int32)
         for b in range(bands):
             out[:, b] = bits[:, b * r:(b + 1) * r] @ weights

@@ -26,7 +26,7 @@ on the driver. The exact-refine stage joins original vectors back
 for the shortlist only (n_q * shortlist rows).
 
 Determinism and oracle parity: every float reduction is the
-fold-ordered ``pq._seq_sqdist``; ADC accumulates ascending subspace
+fold-ordered ``exactsum.seq_sqdist``; ADC accumulates ascending subspace
 index (zero-init += — bit-equal to the SQL ``list_reduce`` over
 ``ORDER BY s``); all tie-breaks resolve on (distance, cell/id
 ascending). The full coarse-train -> residual-train -> encode ->
@@ -44,10 +44,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from xsarsea_spark.engine import materialize
-from xsarsea_spark.pipeline.pq import _seq_sqdist, train_pq
+from xsarsea_spark.operators.exactsum import seq_sqdist
+from xsarsea_spark.pipeline.pq import (_adc_lookup, _adc_tables, _codes,
+                                       _refine, _topk, train_pq)
 
 __all__ = ["train_ivfpq", "encode_ivfpq", "ivfpq_search"]
 
@@ -74,7 +75,7 @@ def _residuals(corpus: DataFrame, coarse: np.ndarray) -> DataFrame:
             # same argmin as encode_pq with m=1 (ties -> lowest cell);
             # float32 -> float64 is exact, and the elementwise double
             # subtraction is the zip_with CAST(a AS DOUBLE) - b op
-            cell = np.argmin(_seq_sqdist(v, co), axis=1)
+            cell = np.argmin(seq_sqdist(v, co), axis=1)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
                 "cell": cell.astype(np.int32),
@@ -107,8 +108,6 @@ def encode_ivfpq(corpus: DataFrame, coarse: np.ndarray,
     re-joined two corpus-wide frames on id just to glue cell and
     codes back together)."""
     co = np.ascontiguousarray(coarse, dtype=np.float64)
-    m, _, sub = books.shape
-    slices = [slice(i * sub, (i + 1) * sub) for i in range(m)]
     schema = T.StructType([
         corpus.schema["vec_id"],
         T.StructField("cell", T.IntegerType()),
@@ -121,16 +120,11 @@ def encode_ivfpq(corpus: DataFrame, coarse: np.ndarray,
                 continue
             v = np.stack([np.asarray(x, dtype=np.float64)
                           for x in pdf["embedding"]])
-            cell = np.argmin(_seq_sqdist(v, co), axis=1)
-            r = v - co[cell]
-            codes = np.empty((v.shape[0], m), dtype=np.int32)
-            for s_i, sl in enumerate(slices):
-                codes[:, s_i] = np.argmin(
-                    _seq_sqdist(r[:, sl], books[s_i]), axis=1)
+            cell = np.argmin(seq_sqdist(v, co), axis=1)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
                 "cell": cell.astype(np.int32),
-                "codes": list(codes),
+                "codes": list(_codes(v - co[cell], books)),
             })
 
     return corpus.select("vec_id", "embedding").mapInPandas(
@@ -156,36 +150,11 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
     (query_id, rank, neighbor_id, adc_dist).
     """
     if corpus is not None:
-        r = shortlist or 10 * k
-        cand = ivfpq_search(queries, index, coarse, books, k=r,
-                            n_probe=n_probe)
-        qv = queries.select(F.col("vec_id").alias("query_id"),
-                            F.col("embedding").alias("__qv"))
-        cv = corpus.select(F.col("vec_id").alias("neighbor_id"),
-                           F.col("embedding").alias("__cv"))
-        # the shortlist is batch-bounded (n_q * shortlist rows):
-        # broadcast it so the corpus vectors stream through the
-        # refine join instead of being shuffled by neighbor_id
-        cand = F.broadcast(cand)
-        exact = (
-            cand.join(cv, on="neighbor_id")
-            .join(F.broadcast(qv), on="query_id")
-            .withColumn(
-                "adc_dist",
-                F.expr("aggregate(zip_with(__qv, __cv,"
-                       " (a, b) -> CAST(a - b AS DOUBLE)"
-                       " * CAST(a - b AS DOUBLE)),"
-                       " 0d, (acc, x) -> acc + x)"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").asc(), F.col("neighbor_id").asc())
-        return (
-            exact.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "adc_dist")
-        )
+        cand = ivfpq_search(queries, index, coarse, books,
+                            k=shortlist or 10 * k, n_probe=n_probe)
+        return _refine(cand, queries, corpus, k)
 
-    m, kk, sub = books.shape
+    m, kk, _ = books.shape
     co = np.ascontiguousarray(coarse)
 
     tab_schema = T.StructType([
@@ -206,20 +175,15 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
             qv = np.stack([np.asarray(x, dtype=np.float64)
                            for x in pdf["embedding"]])
             qid = pdf["vec_id"].to_numpy()
-            d2c = _seq_sqdist(qv, co)
+            d2c = seq_sqdist(qv, co)
             # ascending stable argsort: a tie keeps the lowest cell,
             # matching the oracle's ORDER BY d2 ASC, cell ASC
             probed = np.argsort(d2c, axis=1, kind="stable")[:, :n_probe]
             out_q, out_c, out_t = [], [], []
             for j in range(n_probe):
-                r = qv - co[probed[:, j]]
-                tabs = np.empty((len(qid), m, kk))
-                for s_i in range(m):
-                    sl = slice(s_i * sub, (s_i + 1) * sub)
-                    tabs[:, s_i, :] = _seq_sqdist(r[:, sl], books[s_i])
                 out_q.append(qid)
                 out_c.append(probed[:, j].astype(np.int32))
-                out_t.extend(tabs.reshape(len(qid), m * kk))
+                out_t.extend(_adc_tables(qv - co[probed[:, j]], books))
             yield pd.DataFrame({
                 "query_id": np.concatenate(out_q),
                 "cell": np.concatenate(out_c),
@@ -232,25 +196,9 @@ def ivfpq_search(queries: DataFrame, index: DataFrame,
     # equi-join on cell: a posting row meets exactly the queries that
     # probe its cell — the IVF pruning IS the join key, so with
     # cell-partitioned postings a probe reads only its cells' files.
-    # JVM-side ADC: m lookups folded ascending-s with a 0d init (the
-    # oracle's list_reduce order, bit-equal to the old Arrow kernel);
-    # the codes never cross into Python.
-    adc = F.expr(
-        f"aggregate(sequence(0, {m - 1}), 0d, (acc, s) -> acc"
-        f" + element_at(__tab, CAST(s * {kk}"
-        " + element_at(codes, s + 1) + 1 AS INT)))")
     cand = (index.withColumn("cell", F.col("cell").cast("int"))
             .join(qtab, on="cell")
             .select("query_id",
                     F.col("vec_id").alias("neighbor_id"),
-                    adc.alias("adc_dist")))
-    # rank <= k collapses to WindowGroupLimit: each probed partition
-    # pre-selects its own top-k per query map-side (ties resolved by
-    # neighbor_id), bounding the exchange like the old preselect
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc_dist")
-    )
+                    _adc_lookup(m, kk).alias("adc_dist")))
+    return _topk(cand, k)

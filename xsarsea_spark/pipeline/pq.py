@@ -10,8 +10,8 @@ exact subspace distances, then every corpus distance is M table
 lookups — no float math against the corpus at all.
 
 Scale design (100 TB): training folds map-side partial sums through
-one bounded (M*K*sub) reduction per Lloyd round (same shape as
-pipeline.ivf.train_ivf); encoding is one mapInPandas pass; search
+one bounded (M*K*sub) reduction per Lloyd round (``train_lloyd``, which
+pipeline.ivf.train_ivf runs too); encoding is one mapInPandas pass; search
 builds the per-query distance TABLES (M * K doubles each —
 independent of corpus size) in one O(batch) Arrow pass over the
 DISTRIBUTED query frame, broadcast-joins them against the codes
@@ -22,9 +22,9 @@ corpus OR the query batch.
 
 Determinism and oracle parity: centroid init is the first K vectors
 in id order; every subspace distance accumulates left-to-right over
-the dimension index (``_seq_sqdist`` — bit-identical to a SQL fold,
-unlike NumPy's pairwise ``.sum``); Lloyd sums go through the
-scale-``PQ_SCALE`` integer grid so reduction order can't perturb
+the dimension index (``exactsum.seq_sqdist`` — bit-identical to a SQL
+fold, unlike NumPy's pairwise ``.sum``); Lloyd sums go through the
+scale-``LLOYD_SCALE`` integer grid so reduction order can't perturb
 them; and all tie-breaks (code assignment, shortlist, top-k) resolve
 on (distance, id). The full train → encode → ADC → refine chain is
 value-replicable by the chained-CTE DuckDB oracle in
@@ -40,49 +40,37 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from xsarsea_spark.operators.exactsum import grid
+from xsarsea_spark.operators.exactsum import grid, seq_sqdist
 
-__all__ = ["train_pq", "encode_pq", "pq_search", "PQ_SCALE"]
+__all__ = ["train_pq", "encode_pq", "pq_search", "train_lloyd",
+           "LLOYD_SCALE"]
 
-# Codebook-sum quantization grid (matches the oracle's DECIMAL(38,9)).
-PQ_SCALE = 9
+# Codebook-sum quantization grid of every Lloyd round (matches the
+# IVF and PQ oracles' DECIMAL(38,9)).
+LLOYD_SCALE = 9
 
+def train_lloyd(corpus: DataFrame, vec_col: str, m: int, k: int,
+                iters: int, assign) -> np.ndarray:
+    """Deterministic Lloyd training from the first ``k`` vectors by id;
+    returns (m, k, dim/m) codebooks, one k-cell codebook per subspace.
 
-def _seq_sqdist(vs: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Squared L2 from each row of ``vs`` (n, sub) to each row of
-    ``b`` (k, sub), accumulated left-to-right over the sub-dimension —
-    the SQL ``list_reduce`` fold order, one rounding per step."""
-    acc = np.zeros((vs.shape[0], b.shape[0]))
-    for d in range(vs.shape[1]):
-        diff = vs[:, d, None] - b[None, :, d]
-        acc += diff * diff
-    return acc
-
-
-def _split(dim: int, m: int) -> list:
-    """Subspace column slices; dim must divide evenly into m."""
+    ``assign(v, books)`` maps a float64 batch (n, dim) to the (n, m)
+    cell of each row in each subspace. The assign kernel already holds
+    the vectors, so each Arrow batch emits per-(subspace, cell, dim)
+    partial sums directly (map-side combine): scale-``LLOYD_SCALE``
+    integer quanta, so neither the batch grouping nor the Spark SUM
+    order can perturb them, and only the bounded m x k x sub reduction
+    reaches the driver. A cell's new codeword is double(q)/10^s then
+    /n — the oracle's CAST(SUM(DECIMAL) AS DOUBLE) / COUNT, rounding
+    for rounding; a cell no row chose keeps its codeword.
+    """
+    init = corpus.orderBy("vec_id").limit(k).select(vec_col).collect()
+    first = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
+    dim = first.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
-    return [slice(i * sub, (i + 1) * sub) for i in range(m)]
-
-
-def train_pq(corpus: DataFrame, m: int = 8, k: int = 16, iters: int = 5,
-             vec_col: str = "embedding") -> np.ndarray:
-    """Deterministic per-subspace Lloyd training.
-
-    Returns codebooks of shape (m, k, dim/m). All m subspaces train in
-    the SAME pass over the corpus each round: the kernel emits
-    per-(subspace, cell) partial sums, so one corpus scan + one
-    bounded reduction per iteration regardless of m.
-    """
-    dim = len(corpus.select(vec_col).first()[0])
-    slices = _split(dim, m)
-    sub = dim // m
-    init = corpus.orderBy("vec_id").limit(k).select(vec_col).collect()
-    first = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
-    books = np.stack([first[:, sl] for sl in slices])     # (m, k, sub)
-
+    books = np.stack(np.split(first, m, axis=1))           # (m, k, sub)
     part_schema = T.StructType([
         T.StructField("sub", T.IntegerType()),
         T.StructField("cell", T.IntegerType()),
@@ -91,26 +79,23 @@ def train_pq(corpus: DataFrame, m: int = 8, k: int = 16, iters: int = 5,
         T.StructField("n", T.LongType()),
     ])
     for _ in range(iters):
-        b = np.ascontiguousarray(books)
 
-        def partial_gen(batches, b=b):
+        def partial_gen(batches, b=books):
             for pdf in batches:
                 v = np.stack([np.asarray(x, dtype=np.float64)
                               for x in pdf[vec_col]])
+                cells = assign(v, b)
+                quanta = grid(v, LLOYD_SCALE)
                 rows = []
-                for s_i, sl in enumerate(slices):
-                    vs = v[:, sl]                          # (n, sub)
-                    # squared L2 to each of the k centroids; ties ->
-                    # lowest cell (oracle: ORDER BY d2, cell)
-                    cell = np.argmin(_seq_sqdist(vs, b[s_i]), axis=1)
-                    quanta = grid(vs, PQ_SCALE)
+                for s_i in range(m):
+                    cell = cells[:, s_i]
+                    qs = quanta[:, s_i * sub:(s_i + 1) * sub]
                     for cid in np.unique(cell):
                         msk = cell == cid
-                        ssum = quanta[msk].sum(axis=0)
+                        ssum = qs[msk].sum(axis=0)
                         n = int(msk.sum())
-                        rows.extend(
-                            (s_i, int(cid), i, int(ssum[i]), n)
-                            for i in range(sub))
+                        rows.extend((s_i, int(cid), i, int(ssum[i]), n)
+                                    for i in range(sub))
                 yield pd.DataFrame(
                     rows, columns=["sub", "cell", "i", "q", "n"])
 
@@ -124,26 +109,42 @@ def train_pq(corpus: DataFrame, m: int = 8, k: int = 16, iters: int = 5,
         new = books.copy()
         for r in sums:
             new[r["sub"], r["cell"], r["i"]] = (
-                float(r["q"]) / 10.0 ** PQ_SCALE) / r["n"]
+                float(r["q"]) / 10.0 ** LLOYD_SCALE) / r["n"]
         books = new
     return books
 
 
-def _encode_kernel(books: np.ndarray):
+def _codes(v: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) int32 nearest codeword of each row per subspace:
+    fold-ordered squared L2, ties -> lowest cell (the oracle's
+    ORDER BY d2, cell)."""
     m, _, sub = books.shape
-    slices = [slice(i * sub, (i + 1) * sub) for i in range(m)]
+    return np.stack(
+        [np.argmin(seq_sqdist(v[:, s_i * sub:(s_i + 1) * sub],
+                              books[s_i]), axis=1)
+         for s_i in range(m)], axis=1).astype(np.int32)
 
+
+def train_pq(corpus: DataFrame, m: int = 8, k: int = 16, iters: int = 5,
+             vec_col: str = "embedding") -> np.ndarray:
+    """Deterministic per-subspace Lloyd training.
+
+    Returns codebooks of shape (m, k, dim/m). All m subspaces train in
+    the SAME pass over the corpus each round: the kernel emits
+    per-(subspace, cell) partial sums, so one corpus scan + one
+    bounded reduction per iteration regardless of m.
+    """
+    return train_lloyd(corpus, vec_col, m, k, iters, _codes)
+
+
+def _encode_kernel(books: np.ndarray):
     def gen(batches):
         for pdf in batches:
             v = np.stack([np.asarray(x, dtype=np.float64)
                           for x in pdf["embedding"]])
-            codes = np.empty((v.shape[0], m), dtype=np.int32)
-            for s_i, sl in enumerate(slices):
-                codes[:, s_i] = np.argmin(
-                    _seq_sqdist(v[:, sl], books[s_i]), axis=1)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
-                "codes": list(codes),
+                "codes": list(_codes(v, books)),
             })
 
     return gen
@@ -187,34 +188,9 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
     distance.
     """
     if corpus is not None:
-        r = shortlist or 10 * k
-        cand = pq_search(queries, codes, books, k=r)
-        qv = queries.select(F.col("vec_id").alias("query_id"),
-                            F.col("embedding").alias("__qv"))
-        cv = corpus.select(F.col("vec_id").alias("neighbor_id"),
-                           F.col("embedding").alias("__cv"))
-        # the shortlist is batch-bounded (n_q * shortlist rows):
-        # broadcast it so the corpus vectors stream through the
-        # refine join instead of being shuffled by neighbor_id
-        cand = F.broadcast(cand)
-        exact = (
-            cand.join(cv, on="neighbor_id")
-            .join(F.broadcast(qv), on="query_id")
-            .withColumn(
-                "adc_dist",
-                F.expr("aggregate(zip_with(__qv, __cv,"
-                       " (a, b) -> CAST(a - b AS DOUBLE)"
-                       " * CAST(a - b AS DOUBLE)),"
-                       " 0d, (acc, x) -> acc + x)"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").asc(), F.col("neighbor_id").asc())
-        return (
-            exact.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "adc_dist")
-        )
-    m, kk, sub = books.shape
+        cand = pq_search(queries, codes, books, k=shortlist or 10 * k)
+        return _refine(cand, queries, corpus, k)
+    m, kk, _ = books.shape
 
     tab_schema = T.StructType([
         T.StructField("query_id", T.LongType()),
@@ -229,34 +205,50 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
                 continue
             qv = np.stack([np.asarray(x, dtype=np.float64)
                            for x in pdf["embedding"]])
-            tabs = np.empty((len(pdf), m, kk))
-            for s_i in range(m):
-                sl = slice(s_i * sub, (s_i + 1) * sub)
-                tabs[:, s_i, :] = _seq_sqdist(qv[:, sl], books[s_i])
             yield pd.DataFrame({
                 "query_id": pdf["vec_id"].to_numpy(),
-                "__tab": list(tabs.reshape(len(pdf), m * kk)),
+                "__tab": list(_adc_tables(qv, books)),
             })
 
     qtab = queries.select("vec_id", "embedding").mapInPandas(
         q_tables, schema=tab_schema)
     qtab = F.broadcast(qtab)
-    # JVM-side ADC: m table lookups folded ascending-s with a 0d
-    # init — the same add order as the oracle's list_reduce and the
-    # old Arrow kernel, so values are bit-identical. The codes table
-    # itself never crosses into Python.
-    adc = F.expr(
-        f"aggregate(sequence(0, {m - 1}), 0d, (acc, s) -> acc"
-        f" + element_at(__tab, CAST(s * {kk}"
-        " + element_at(codes, s + 1) + 1 AS INT)))")
     cand = (codes.crossJoin(qtab)
             .select("query_id",
                     F.col("vec_id").alias("neighbor_id"),
-                    adc.alias("adc_dist")))
-    # rank <= k collapses to WindowGroupLimit: each scan partition
-    # pre-selects its own top-k per query map-side (ties resolved by
-    # neighbor_id), bounding the exchange to k rows per (query,
-    # partition) — the same bound the old Python preselect enforced
+                    _adc_lookup(m, kk).alias("adc_dist")))
+    return _topk(cand, k)
+
+
+def _adc_tables(qv: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m * K) per-query ADC tables, flattened (subspace, codeword)
+    row-major: the exact fold-ordered squared distance of each query
+    subvector to each codeword."""
+    m, kk, sub = books.shape
+    tabs = np.empty((len(qv), m, kk))
+    for s_i in range(m):
+        tabs[:, s_i, :] = seq_sqdist(qv[:, s_i * sub:(s_i + 1) * sub],
+                                     books[s_i])
+    return tabs.reshape(len(qv), m * kk)
+
+
+def _adc_lookup(m: int, kk: int):
+    """JVM-side ADC of a ``codes`` row against its ``__tab``: m table
+    lookups folded ascending-s with a 0d init — the oracle's
+    list_reduce order, so values are bit-identical. The codes never
+    cross into Python."""
+    return F.expr(
+        f"aggregate(sequence(0, {m - 1}), 0d, (acc, s) -> acc"
+        f" + element_at(__tab, CAST(s * {kk}"
+        " + element_at(codes, s + 1) + 1 AS INT)))")
+
+
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id, adc_dist): the ``k`` nearest per
+    query, ties by neighbor_id. rank <= k collapses to
+    WindowGroupLimit: each scan partition pre-selects its own top-k
+    per query map-side, bounding the exchange to k rows per (query,
+    partition)."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id").asc())
     return (
@@ -264,3 +256,27 @@ def pq_search(queries: DataFrame, codes: DataFrame, books: np.ndarray,
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "adc_dist")
     )
+
+
+def _refine(cand: DataFrame, queries: DataFrame, corpus: DataFrame,
+           k: int) -> DataFrame:
+    """FAISS-style refine of an ADC shortlist ``cand``: exact squared L2
+    (the SQL fold ``seq_sqdist`` twins) on the original vectors, top-k.
+    The shortlist is batch-bounded (n_q * shortlist rows): it is
+    broadcast so the corpus vectors stream through the refine join
+    instead of being shuffled by neighbor_id."""
+    qv = queries.select(F.col("vec_id").alias("query_id"),
+                        F.col("embedding").alias("__qv"))
+    cv = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                       F.col("embedding").alias("__cv"))
+    exact = (
+        F.broadcast(cand).join(cv, on="neighbor_id")
+        .join(F.broadcast(qv), on="query_id")
+        .withColumn(
+            "adc_dist",
+            F.expr("aggregate(zip_with(__qv, __cv,"
+                   " (a, b) -> CAST(a - b AS DOUBLE)"
+                   " * CAST(a - b AS DOUBLE)),"
+                   " 0d, (acc, x) -> acc + x)"))
+    )
+    return _topk(exact, k)

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xsarsea_spark.expr import double_lit, spark_str_lit
 from xsarsea_spark.operators.exactsum import DSUM, QTRUNC
 
 __all__ = ["preference_matrix", "bt_step", "train_bradley_terry",
@@ -86,24 +87,18 @@ def preference_matrix(events: DataFrame) -> DataFrame:
             .filter(F.col("n_matches") > 0))
 
 
-def _s_lit(x: float) -> str:
-    # Python float repr is the shortest round-tripping decimal, so
-    # the parsed double is bit-identical to the driver value (the
-    # classifier._w_lit precedent).
-    return f"CAST({x!r} AS DOUBLE)"
-
-
 def _score_case(scores: dict[str, float], col: str,
                 default: float | None = None) -> str:
     """Exact score-literal lookup; ``default`` adds an ELSE branch
     so arms first seen in a batch score at the init value without a
     prior discovery pass."""
     arms = sorted(scores)
-    cases = " ".join(f"WHEN '{a}' THEN {_s_lit(scores[a])}"
-                     for a in arms)
-    tail = f" ELSE {_s_lit(default)}" if default is not None else ""
+    cases = " ".join(
+        f"WHEN {spark_str_lit(a)} THEN {double_lit(scores[a])}"
+        for a in arms)
+    tail = f" ELSE {double_lit(default)}" if default is not None else ""
     if not arms:
-        return _s_lit(default if default is not None else 0.0)
+        return double_lit(default if default is not None else 0.0)
     return f"CASE {col} {cases}{tail} END"
 
 

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from xsarsea_spark.pipeline.dedup import hyperplanes
+from xsarsea_spark.operators.exactsum import seq_dot
+from xsarsea_spark.pipeline.dedup import plane_matrix
 from xsarsea_spark.pipeline.linalg import EMB_DIM
 
 __all__ = ["with_norm", "cosine_topk", "icp_order",
@@ -176,31 +177,19 @@ def hamming_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     )
 
 
-def _projection_matrix(n_planes: int):
-    """(EMB_DIM, n_planes) float64 hyperplane matrix — the same integer
-    LCG constants as pipeline.dedup.hyperplanes, so SQL oracles can be
-    generated from the identical planes."""
-
-    return np.array(hyperplanes(n_planes, EMB_DIM),
-                    dtype=np.float64).T / 1001.0
-
-
-def _project(emb, K):
-    """Projections with column-at-a-time (left-to-right over i)
-    accumulation — bit-identical to the unrolled-SQL fold order."""
-    V = np.asarray(list(emb.to_numpy()), dtype=np.float64)
-    acc = np.zeros((V.shape[0], K.shape[1]), dtype=np.float64)
-    for i in range(EMB_DIM):
-        acc += V[:, i:i + 1] * K[i]
-    return acc
+def _project(emb, P):
+    """Projections onto the ``plane_matrix`` rows, folded left to right
+    over the vector index — bit-identical to the unrolled-SQL fold
+    order."""
+    return seq_dot(np.asarray(list(emb.to_numpy()), dtype=np.float64), P)
 
 
 def _sig_udf(n_planes: int):
-    K = _projection_matrix(n_planes)
+    P = plane_matrix(n_planes)
     w = np.array([1 << j for j in range(n_planes)], dtype=np.int64)
 
     def _sig(emb: pd.Series) -> pd.Series:
-        acc = _project(emb, K)
+        acc = _project(emb, P)
         return pd.Series((acc > 0.0) @ w)
 
     return pandas_udf(_sig, "bigint")
@@ -214,11 +203,11 @@ def _probe_udf():
     Ties rank by bit index (stable argsort == SQL ORDER BY margin,
     bit)."""
 
-    K = _projection_matrix(MP_PLANES)
+    P = plane_matrix(MP_PLANES)
     w = np.array([1 << j for j in range(MP_PLANES)], dtype=np.int64)
 
     def _probes(emb: pd.Series) -> pd.Series:
-        acc = _project(emb, K)
+        acc = _project(emb, P)
         sig = (acc > 0.0) @ w
         order = np.argsort(np.abs(acc), axis=1, kind="stable")
         out = []

@@ -19,9 +19,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from xsarsea_spark.operators.exactsum import decimal_sum
+from xsarsea_spark.sources.tables import normalize_event_ts
 
 __all__ = ["events_stream", "stream_hourly_counts",
            "stream_attribution",
@@ -46,11 +46,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if not isinstance(schema["ts"].dataType, T.LongType):
-        raw = raw.withColumn(
-            "ts", F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
-        )
-    return raw.withColumn(
+    return normalize_event_ts(raw).withColumn(
         "event_time", F.expr("timestamp_micros(ts DIV 1000)")
     )
 

@@ -1033,7 +1033,7 @@ def _ivf_train_parts(train_where: str = "") -> list[str]:
     ``embeddings [train_where]`` — ends at ``kf`` (the final
     norm-guarded centroids). Shared by the full-index and the
     incremental-maintenance oracles."""
-    from xsarsea_spark.pipeline.ivf import IVF_SCALE
+    from xsarsea_spark.pipeline.pq import LLOYD_SCALE
 
     parts = [
         f"v AS (SELECT vec_id,"
@@ -1066,7 +1066,7 @@ def _ivf_train_parts(train_where: str = "") -> list[str]:
         )
         parts.append(
             f"m{r} AS (SELECT cell, d,"
-            f" CAST(SUM(CAST(x AS DECIMAL(38,{IVF_SCALE}))) AS DOUBLE)"
+            f" CAST(SUM(CAST(x AS DECIMAL(38,{LLOYD_SCALE}))) AS DOUBLE)"
             f" / COUNT(x) AS m FROM x{r} GROUP BY cell, d)"
         )
         parts.append(
@@ -3507,7 +3507,7 @@ _PQ_SHORT = 10 * _KNN_K
 
 def _pq_sqd(sub: int) -> str:
     """Fold-ordered subspace squared-L2 between sv (vector slice) and
-    bc (codebook row) — the pq._seq_sqdist twin. Expects the FROM
+    bc (codebook row) — the exactsum.seq_sqdist twin. Expects the FROM
     aliases ``sv`` and ``b``."""
     return (f"list_reduce(list_transform(range(1, {sub} + 1),"
             f" i -> (sv.sv[i] - b.bc[i]) * (sv.sv[i] - b.bc[i])),"
@@ -3521,7 +3521,7 @@ def _pq_lloyd_ctes(pfx: str, src: str, m: int, kq: int, iters: int,
     (subspace slices) and ``{pfx}b0..b{iters}`` (codebooks). With
     m=1 and sub=dim this is plain L2 k-means — the IVF-PQ coarse
     quantizer rides the same builder as the PQ codebooks."""
-    from xsarsea_spark.pipeline.pq import PQ_SCALE
+    from xsarsea_spark.pipeline.pq import LLOYD_SCALE
 
     sqd = _pq_sqd(sub)
     parts = [
@@ -3548,7 +3548,7 @@ def _pq_lloyd_ctes(pfx: str, src: str, m: int, kq: int, iters: int,
         )
         parts.append(
             f"{pfx}m{r} AS (SELECT s, cell, d,"
-            f" CAST(SUM(CAST(x AS DECIMAL(38,{PQ_SCALE}))) AS DOUBLE)"
+            f" CAST(SUM(CAST(x AS DECIMAL(38,{LLOYD_SCALE}))) AS DOUBLE)"
             f" / COUNT(x) AS m FROM {pfx}x{r} GROUP BY s, cell, d)"
         )
         parts.append(
